@@ -29,8 +29,6 @@ no all-pairs work.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -44,8 +42,9 @@ from pyspark.sql import functions as F
 # precedent for every other bounded collect in the repo; at 100 TB the
 # distributed rounds run until star contraction shrinks the remnant
 # under the cap (it shrinks monotonically toward one star per
-# component), so the driver never sees an unbounded relation. Override
-# with RDPE_CC_DRIVER_FINISH_MAX_EDGES; 0 disables (pure distributed).
+# component), so the driver never sees an unbounded relation. Callers
+# override it with ``driver_finish_max_edges``; 0 disables (pure
+# distributed).
 DRIVER_FINISH_MAX_EDGES = 100_000
 
 
@@ -68,16 +67,10 @@ def connected_components(
     the residual edge count handed to the union-find finish (absent when
     the distributed fixed point completed first).
     ``driver_finish_max_edges`` gates the bounded driver finish (None ->
-    env ``RDPE_CC_DRIVER_FINISH_MAX_EDGES`` -> module default; 0
-    disables).
+    ``DRIVER_FINISH_MAX_EDGES``; 0 disables).
     """
     if driver_finish_max_edges is None:
-        driver_finish_max_edges = int(
-            os.environ.get(
-                "RDPE_CC_DRIVER_FINISH_MAX_EDGES",
-                str(DRIVER_FINISH_MAX_EDGES),
-            )
-        )
+        driver_finish_max_edges = DRIVER_FINISH_MAX_EDGES
     if algorithm == "label":
         return _cc_label(
             edges, src, dst, max_iterations, stats, driver_finish_max_edges

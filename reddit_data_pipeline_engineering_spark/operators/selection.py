@@ -1,60 +1,52 @@
-"""Distributed exact order statistics by iterative bucket bisection.
+"""Exact rank selection by iterative bucket bisection.
 
-The window-rank formulation of an exact per-group median or percentile
-(plans/queries_ext.py `grouped_median`, `exact_percentiles`) funnels
-each group through one task's sort — the documented SCALE.md §10
-weakness for LOW-cardinality groups, exactly the regime (5 event types,
-country codes, source tags) a warehouse rollup hits. This module
-computes the same exact order statistics with NOTHING but mergeable
-conditional aggregates:
+A rank that is a constant fraction of the group (median, p90, MAD) is
+answered by Spark's own exact ``percentile``/``percentile_disc``
+aggregates (plans/queries_ext.py ``grouped_median``,
+``exact_percentiles``, ``mad_outliers``). This module serves the ranks
+those aggregates cannot express: arbitrary integer ranks per group
+(``winsorized_scalable``'s ``floor(n/10)`` and ``floor(0.9n)+1``
+clamp bounds), exact equi-depth edges (``equi_depth_edges``) and NTILE
+boundary pairs with a tie column (``ntile_boundary_pairs``). It uses
+NOTHING but mergeable conditional aggregates:
 
-1. one profile pass per group: count / min / max;
-2. repeated bucket passes: partition each group's live value range
-   [lo, hi] into B equal sub-ranges, count rows per (group, bucket)
-   map-side (a conditional aggregation — fully partial-aggregated, one
-   keyed shuffle of G*B counters), then narrow [lo, hi] to the bucket
-   whose cumulative count crosses the target rank. With many live
-   brackets the crossing bucket is selected IN THE PLAN
-   (cumulative-count window per bracket + broadcast rank join), so the
-   driver receives one row per live bracket rather than the
+1. one profile pass per group: count / min / max (``_profile``);
+2. repeated bucket passes (``_select_ranks``): partition each group's
+   live value range [lo, hi] into B equal sub-ranges, count rows per
+   (group, bucket) map-side (a conditional aggregation — fully
+   partial-aggregated, one keyed shuffle of G*B counters), then narrow
+   [lo, hi] to the bucket whose cumulative count crosses the target
+   rank. With many live brackets the crossing bucket is selected IN THE
+   PLAN (cumulative-count window per bracket + broadcast rank join), so
+   the driver receives one row per live bracket rather than the
    O(G * occupied-buckets) counter relation; with few brackets the
    counters are small and are scanned driver-side (the hybrid cutover
-   is PLAN_SIDE_NARROW_MIN). Width shrinks by B per round, and a
-   bracket RETIRES as soon as its chosen bucket's population drops to
-   FINAL_PASS_MAX_ROWS (the final pass resolves the k-th exactly at
-   any width, so uniform-ish data exits after ONE round with ~n/B rows
-   per bucket; r05 — this turned the typical ~6-round loop into 1-2
-   rounds and halved the whole family's bench times) or collapses to a
-   few ulps (B^6 = 2^60 > 2^52 ulps bounds the worst case); ranks of a
-   group sharing a bracket (all of them in round 1) are counted once
-   per bracket, not once per rank;
-3. one final pass aggregating the few DISTINCT values left in [lo, hi]
-   per group (after step 2 the bracket spans a handful of ulps — a
-   single distinct value unless two neighbors straddle the boundary),
-   from which the k-th value is read off directly.
+   is PLAN_SIDE_NARROW_MIN). A bracket RETIRES as soon as its chosen
+   bucket's population drops to FINAL_PASS_MAX_ROWS, so uniform-ish
+   data exits after ONE round, or when it collapses to a few ulps
+   (B^6 = 2^60 > 2^52 ulps bounds the worst case); ranks of a group
+   sharing a bracket are counted once per bracket, not once per rank;
+3. one final pass aggregating the few values left in each bracket, from
+   which the k-th value is read off directly.
 
-Every pass is a map-side-combinable aggregate over the FULL input (no
-cross-round set consistency to maintain; bounds are recomputed against
-the raw values each round), so the plan scales like any groupBy — no
-single task ever sorts a group. Driver state is G * (lo, hi, rank)
-bounds — model-sized for the low-cardinality regime this targets; for
-high-cardinality groups use the window variant, whose per-group sorts
-are then small.
+Every pass is a map-side-combinable aggregate over the FULL input
+(bounds are recomputed against the raw values each round), so no single
+task ever sorts a group, and the state does not grow with the number of
+distinct values per group. Driver state is G * (lo, hi, rank) bounds,
+which suits the low-cardinality groups (event types, metrics) the
+callers use; each pass is one Spark job at construction time.
 
 Determinism: bucket edges are pure double arithmetic from (lo, hi)
 computed identically on the driver; ranks select VALUES (multiset order
 statistics), so id tiebreaks cannot change the result. The selected
 values are exact input doubles — the same values a rank-window oracle
-selects — so downstream arithmetic (median mean, percentile
-interpolation) matches the SQL replay bit-for-bit when it mirrors the
-engine's expression shape.
+selects.
 """
 
 from __future__ import annotations
 
 import math
 from collections import Counter
-from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -67,8 +59,7 @@ MAX_ROUNDS = 8
 # no point paying more full-input narrowing rounds just to shrink the
 # range to ulps. Uniform-ish data retires after ONE round (n/B rows per
 # bucket), turning the typical ~6-round loop into 1-2 rounds; driver
-# (or executor, for the plan-state variant) final-pass state stays
-# bounded by this constant per bracket.
+# final-pass state stays bounded by this constant per bracket.
 FINAL_PASS_MAX_ROWS = 4096
 # At or above this many live brackets, the per-round crossing-bucket
 # selection runs in the plan (cumulative window + broadcast rank join,
@@ -82,14 +73,6 @@ PLAN_SIDE_NARROW_MIN = 64
 # fan-out); above it, the column count would bloat codegen, so the
 # bracket-join form runs instead (one corpus scan per group-bracket).
 FINAL_PASS_WIDE_MAX = 64
-
-
-def _kth_targets(n: int) -> list[int]:
-    """1-based middle ranks: one for odd n, two for even n (the rows the
-    rank-window median formulation selects)."""
-    if n % 2:
-        return [(n + 1) // 2]
-    return [n // 2, n // 2 + 1]
 
 
 def _gtype(sample) -> str:
@@ -376,283 +359,6 @@ def _select_ranks(
     return resolved
 
 
-def _select_ranks_plan(
-    src: DataFrame,
-    targets_df: DataFrame,
-    buckets: int,
-    max_rounds: int,
-) -> DataFrame:
-    """Bracket-state-as-DataFrame twin of :func:`_select_ranks`: the
-    per-round (lo, hi) brackets live in a G-row DataFrame that joins
-    back as a broadcast dim each round — the driver holds ONE integer
-    (the live-bracket count used for early stop), removing the
-    O(G) driver-memory ceiling of the collect path at extreme group
-    cardinality. Same narrowing arithmetic, same per-round pass shape
-    (conditional counts keyed by bracket, crossing bucket by cumulative
-    window); ulp-scale constants are expressed as ``m * 2^-50`` /
-    ``m * 2^-49`` (a 2-4x-ulp band like the collect path's
-    ``4*math.ulp`` / ``8*math.ulp``) — retirement timing may differ by
-    a round, the resolved VALUES cannot (they are exact data values
-    read off by the final in-plan pass; equality is property-tested
-    against the collect path in tests/test_selection.py).
-
-    ``targets_df``: (g, k long, lo double, hi double) — one row per
-    wanted rank with the group's initial [min, max] bracket.
-    Returns (g, k long, v double).
-    """
-    state = (
-        targets_df.withColumn(
-            "v", F.when(F.col("lo") == F.col("hi"), F.col("lo"))
-        )
-        .withColumn("conv", F.lit(False))
-        .localCheckpoint(eager=True)
-    )
-    B = buckets
-    for _ in range(max_rounds):
-        live = state.filter(F.col("v").isNull() & ~F.col("conv"))
-        # The ONLY driver-side state: one scalar for the stop check.
-        if live.count() == 0:
-            break
-        bounds = live.select("g", "lo", "hi").distinct()
-        width = F.col("hi") - F.col("lo")
-        bucket = F.least(
-            F.lit(B - 1),
-            F.greatest(
-                F.lit(0),
-                F.floor((F.col("v") - F.col("lo")) / width * B).cast("int"),
-            ),
-        )
-        counts = (
-            src.join(F.broadcast(bounds), "g")
-            .select(
-                "g",
-                "lo",
-                "hi",
-                F.when(F.col("v") < F.col("lo"), F.lit(-1))
-                .when(F.col("v") > F.col("hi"), F.lit(B))
-                .otherwise(bucket)
-                .alias("b"),
-            )
-            .groupBy("g", "lo", "hi", "b")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        cw = (
-            Window.partitionBy("g", "lo", "hi")
-            .orderBy("b")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        crossed = (
-            counts.withColumn("cum", F.sum("c").over(cw))
-            .join(
-                F.broadcast(live.select("g", "k", "lo", "hi")),
-                ["g", "lo", "hi"],
-            )
-            .filter(
-                (F.col("cum") >= F.col("k"))
-                & (F.col("cum") - F.col("c") < F.col("k"))
-            )
-            .select("g", "k", "lo", "hi", "b", "c")
-        )
-        w = F.col("hi") - F.col("lo")
-        new_lo = F.col("lo") + (w * F.col("b")) / B
-        new_hi = F.when(
-            F.col("b") < B - 1, F.col("lo") + (w * (F.col("b") + 1)) / B
-        ).otherwise(F.col("hi"))
-        m = F.greatest(F.abs(new_lo), F.abs(new_hi), F.lit(1e-300))
-        delta = m * F.lit(2.0**-50)
-        eps = w / F.lit(float(1 << 30))
-        collapsed = new_lo >= new_hi
-        nlo = F.when(
-            collapsed,
-            F.greatest(F.col("lo"), F.least(new_lo, new_hi) - delta),
-        ).otherwise(F.greatest(F.col("lo"), new_lo - eps))
-        nhi = F.when(
-            collapsed,
-            F.least(F.greatest(new_lo, new_hi) + delta, F.col("hi")),
-        ).otherwise(F.least(new_hi + eps, F.col("hi")))
-        conv = (
-            collapsed
-            | (F.col("c") <= FINAL_PASS_MAX_ROWS)
-            | (
-                (nhi - nlo)
-                <= F.greatest(F.abs(nlo), F.abs(nhi), F.lit(1e-300))
-                * F.lit(2.0**-49)
-            )
-        )
-        narrowed = crossed.select(
-            "g",
-            "k",
-            nlo.alias("lo"),
-            nhi.alias("hi"),
-            F.lit(None).cast("double").alias("v"),
-            conv.alias("conv"),
-        )
-        settled = state.filter(F.col("v").isNotNull() | F.col("conv"))
-        state = settled.unionByName(narrowed).localCheckpoint(eager=True)
-
-    # Final pass, fully in-plan: count values below lo and walk the few
-    # distinct values inside each residual bracket by cumulative count.
-    rem = state.filter(F.col("v").isNull()).select("g", "k", "lo", "hi")
-    joined = src.join(
-        F.broadcast(rem.withColumnRenamed("k", "kk")), "g"
-    )
-    below = joined.groupBy("g", "kk", "lo", "hi").agg(
-        F.sum(F.when(F.col("v") < F.col("lo"), 1).otherwise(0)).alias(
-            "below"
-        )
-    )
-    vals = (
-        joined.filter(
-            (F.col("v") >= F.col("lo")) & (F.col("v") <= F.col("hi"))
-        )
-        .groupBy("g", "kk", "lo", "hi", "v")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    vw = (
-        Window.partitionBy("g", "kk", "lo", "hi")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    resolved_final = (
-        vals.withColumn("cum", F.sum("c").over(vw))
-        .join(below, ["g", "kk", "lo", "hi"])
-        .filter(
-            (F.col("below") + F.col("cum") >= F.col("kk"))
-            & (F.col("below") + F.col("cum") - F.col("c") < F.col("kk"))
-        )
-        .select("g", F.col("kk").alias("k"), "v")
-    )
-    return state.filter(F.col("v").isNotNull()).select(
-        "g", "k", "v"
-    ).unionByName(resolved_final)
-
-
-def _median_targets_df(prof_df: DataFrame) -> DataFrame:
-    """(g, n, lo, hi) -> one row per middle rank (both for even n)."""
-    ks = F.when(
-        F.col("n") % 2 == 1,
-        F.array(((F.col("n") + 1) / 2).cast("long")),
-    ).otherwise(
-        F.array(
-            (F.col("n") / 2).cast("long"),
-            (F.col("n") / 2 + 1).cast("long"),
-        )
-    )
-    return prof_df.select(
-        "g", F.explode(ks).alias("k"), "lo", "hi"
-    )
-
-
-def grouped_median_selection_plan(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    buckets: int = BUCKETS,
-    max_rounds: int = MAX_ROUNDS,
-) -> DataFrame:
-    """Plan-side-state twin of :func:`grouped_median_selection` — same
-    rows, same schema, no per-group driver state (the SCALE.md high-
-    cardinality caveat closed). The median mean replays the collect
-    path's ``(vals[0] + vals[-1]) / 2``: exactly 1-2 resolved rows per
-    group, so ``sum/count`` is the identical IEEE expression."""
-    src = (
-        df.select(F.col(group_col).alias("g"), F.col(value_col).alias("v"))
-        .filter(F.col("v").isNotNull())
-        .persist()
-    )
-    prof_df = src.groupBy("g").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("v").alias("lo"),
-        F.max("v").alias("hi"),
-    )
-    resolved = _select_ranks_plan(
-        src, _median_targets_df(prof_df), buckets, max_rounds
-    )
-    out = (
-        resolved.groupBy("g")
-        .agg((F.sum("v") / F.count(F.lit(1))).alias("median_value"))
-        .join(prof_df.select("g", F.col("n").alias("n_values")), "g")
-        .select(
-            F.col("g").alias(group_col),
-            F.col("n_values").cast("long"),
-            "median_value",
-        )
-    )
-    # Materialize before releasing the cached source the plan reads.
-    out = out.localCheckpoint(eager=True)
-    src.unpersist()
-    return out
-
-
-def grouped_percentiles_selection_plan(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    percentiles: tuple = (0.5, 0.9, 0.99),
-    names: tuple = ("p50", "p90", "p99"),
-    buckets: int = BUCKETS,
-    max_rounds: int = MAX_ROUNDS,
-) -> DataFrame:
-    """Plan-side-state twin of :func:`grouped_percentiles_selection`:
-    identical values (the interpolation replays the same IEEE
-    expression tree — ``lower*(crn-rn) + upper*(rn-frn)`` with
-    ``rn = p*(n-1)`` — and ``F.round(.., 6)`` IS the HALF_UP rounding
-    ``_spark_round6`` replicates), zero per-group driver state."""
-    src = (
-        df.select(F.col(group_col).alias("g"), F.col(value_col).alias("v"))
-        .filter(F.col("v").isNotNull())
-        .persist()
-    )
-    prof_df = src.groupBy("g").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("v").alias("lo"),
-        F.max("v").alias("hi"),
-    )
-    pcts = F.array(*[F.lit(float(p)) for p in percentiles])
-    rn = F.col("p") * (F.col("n") - 1)
-    tgt = prof_df.select(
-        "g", "n", "lo", "hi", F.explode(pcts).alias("p")
-    ).select(
-        "g",
-        "n",
-        "lo",
-        "hi",
-        "p",
-        rn.alias("rn"),
-        (F.floor(rn) + 1).cast("long").alias("kf"),
-        (F.ceil(rn) + 1).cast("long").alias("kc"),
-    )
-    ks = (
-        tgt.select("g", F.explode(F.array("kf", "kc")).alias("k"), "lo", "hi")
-        .distinct()
-    )
-    resolved = _select_ranks_plan(src, ks, buckets, max_rounds)
-    a = resolved.select(
-        "g", F.col("k").alias("kf"), F.col("v").alias("va")
-    )
-    b = resolved.select(
-        "g", F.col("k").alias("kc"), F.col("v").alias("vb")
-    )
-    interp = F.when(F.col("kf") == F.col("kc"), F.col("va")).otherwise(
-        F.col("va") * (F.ceil("rn") - F.col("rn"))
-        + F.col("vb") * (F.col("rn") - F.floor("rn"))
-    )
-    per_p = (
-        tgt.join(a, ["g", "kf"])
-        .join(b, ["g", "kc"])
-        .select("g", "p", F.round(interp, 6).alias("val"))
-    )
-    out = per_p.groupBy("g").agg(
-        *[
-            F.max(F.when(F.col("p") == float(p), F.col("val"))).alias(nm)
-            for p, nm in zip(percentiles, names)
-        ]
-    ).select(F.col("g").alias(group_col), *names)
-    out = out.localCheckpoint(eager=True)
-    src.unpersist()
-    return out
-
-
 def _profile(df: DataFrame, group_col: str, value_col: str) -> tuple:
     src = (
         df.select(F.col(group_col).alias("g"), F.col(value_col).alias("v"))
@@ -670,99 +376,6 @@ def _profile(df: DataFrame, group_col: str, value_col: str) -> tuple:
         .collect()
     }
     return src, prof
-
-
-def grouped_median_selection(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    buckets: int = BUCKETS,
-    max_rounds: int = MAX_ROUNDS,
-) -> DataFrame:
-    """Exact per-group median via bucket bisection; returns a DataFrame
-    (group, n_values BIGINT, median_value DOUBLE) matching the
-    rank-window formulation row-for-row.
-
-    Null values are ignored (matching ``WHERE value IS NOT NULL``).
-    """
-    spark = df.sparkSession
-    src, prof = _profile(df, group_col, value_col)
-    want = {g: _kth_targets(n) for g, (n, _, _) in prof.items()}
-    resolved = _select_ranks(src, want, prof, buckets, max_rounds)
-    src.unpersist()
-    # Mean of the 1-2 middle values with plain IEEE a+b (commutative for
-    # two terms), mirroring the rank-window oracle's SUM/COUNT.
-    out = []
-    for g, (n, _, _) in sorted(prof.items(), key=lambda x: str(x[0])):
-        vals = [resolved[(g, k)] for k in want[g]]
-        med = (vals[0] + vals[-1]) / 2 if len(vals) == 2 else vals[0]
-        out.append((g, n, med))
-    return spark.createDataFrame(
-        out,
-        f"{group_col} {_gtype(out[0][0]) if out else 'string'}, "
-        "n_values bigint, median_value double",
-    )
-
-
-def _spark_round6(v: float) -> float:
-    """Replicate Spark's ``F.round(double, 6)``: HALF_UP on the shortest
-    round-trip decimal representation (Scala BigDecimal(double) goes
-    through Double.toString; Python's repr is the same shortest
-    round-trip string)."""
-    return float(
-        Decimal(repr(v)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP)
-    )
-
-
-def grouped_percentiles_selection(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    percentiles: tuple = (0.5, 0.9, 0.99),
-    names: tuple = ("p50", "p90", "p99"),
-    buckets: int = BUCKETS,
-    max_rounds: int = MAX_ROUNDS,
-) -> DataFrame:
-    """Exact interpolated per-group percentiles via bucket bisection,
-    bit-matching ``F.round(F.percentile(v, p), 6)``: the two bracketing
-    order statistics come from the mergeable selection core, and the
-    interpolation mirrors Spark's percentile expression exactly —
-    ``lower*(ceil(rn)-rn) + upper*(rn-floor(rn))`` with
-    ``rn = p*(n-1)`` — followed by Spark's HALF_UP round-to-6.
-
-    Returns (group, <name> DOUBLE ...) ordered by group.
-    """
-    spark = df.sparkSession
-    src, prof = _profile(df, group_col, value_col)
-    want: dict[object, list[int]] = {}
-    for g, (n, _, _) in prof.items():
-        ks = set()
-        for p in percentiles:
-            rn = p * (n - 1)
-            ks.add(int(math.floor(rn)) + 1)
-            ks.add(int(math.ceil(rn)) + 1)
-        want[g] = sorted(ks)
-    resolved = _select_ranks(src, want, prof, buckets, max_rounds)
-    src.unpersist()
-    out = []
-    for g, (n, _, _) in sorted(prof.items(), key=lambda x: str(x[0])):
-        row = [g]
-        for p in percentiles:
-            rn = p * (n - 1)
-            frn, crn = math.floor(rn), math.ceil(rn)
-            a = resolved[(g, int(frn) + 1)]
-            if frn == crn:
-                v = a
-            else:
-                b = resolved[(g, int(crn) + 1)]
-                v = a * (crn - rn) + b * (rn - frn)
-            row.append(_spark_round6(v))
-        out.append(tuple(row))
-    cols = ", ".join(f"{nm} double" for nm in names)
-    return spark.createDataFrame(
-        out,
-        f"{group_col} {_gtype(out[0][0]) if out else 'string'}, {cols}",
-    )
 
 
 def _ntile_boundary_ranks(n: int, n_buckets: int) -> list[int]:
@@ -1027,7 +640,7 @@ def equi_depth_edges(
     the ``(k*n) // n_buckets``-th smallest value (1-based, multiset
     order statistic) for k = 1..n_buckets-1, resolved by the bucket-
     bisection core — mergeable conditional aggregates only, the same
-    machinery as ``grouped_median_selection``. Returned in rank order,
+    machinery as ``ntile_boundary_pairs``. Returned in rank order,
     duplicates preserved (mass-tied data legitimately repeats an edge;
     bucket assignment ``1 + #{edges < x}`` then skips the starved
     buckets identically in any engine). Rows then bucket by comparison

@@ -40,15 +40,11 @@ from pyspark.sql import functions as F
 # 16) bits/edge halves the bitmap-build stage for a still-7x wedge
 # reduction (measured: build 1.0 s vs 1.5 s at 1.2M edges, filtered
 # wedge rows 5.6M vs 3.3M of 41M). Below the edge floor the wedge set
-# is too small for the two bitmap stages to pay for themselves.
-# Env-overridable so tests can force the device on tiny graphs.
-import os as _os
-
+# is too small for the two bitmap stages to pay for themselves. Tests
+# force the device on tiny graphs by patching the module constant.
 _BLOOM_BITS_PER_EDGE = 8
 _BLOOM_K = 1
-_BLOOM_MIN_EDGES = int(
-    _os.environ.get("RDPE_TRI_BLOOM_MIN_EDGES", "500000")
-)
+_BLOOM_MIN_EDGES = 500_000
 _WORD_BITS = 64
 
 # Exchange-free closure (guide §3.1 "broadcast the side that fits"):
@@ -59,10 +55,8 @@ _WORD_BITS = 64
 # takes over (its bitmap is O(|E|) BITS, ~30x smaller state than the
 # adjacency, so it survives graphs whose adjacency cannot broadcast).
 # 4M entries ~ 64 MB of broadcast arrays — conservative for the
-# default driver heap; env-overridable (0 disables the path).
-_ADJ_BCAST_MAX_EDGES = int(
-    _os.environ.get("RDPE_TRI_ADJ_BCAST_MAX_EDGES", "4000000")
-)
+# default driver heap (0 disables the path).
+_ADJ_BCAST_MAX_EDGES = 4_000_000
 
 
 def _bloom_positions(u: Column, v: Column, m_bits: int) -> list[Column]:
@@ -273,7 +267,7 @@ def per_node_triangles(
 
     Two closure strategies behind one size gate (both exact, pinned
     equal by ``tests/test_graph.py``): at or below
-    ``RDPE_TRI_ADJ_BCAST_MAX_EDGES`` the oriented adjacency is
+    ``_ADJ_BCAST_MAX_EDGES`` the oriented adjacency is
     broadcast and each edge intersects its endpoints' out-neighbor
     arrays map-side (zero closure exchanges); above it, wedge
     generation + bloom prefilter + shuffled-hash closure join (bitmap

@@ -831,6 +831,13 @@ ORDER BY event_type
 
 
 @query(
+    "exact_percentiles_scalable",
+    _PCTL_ORACLE,
+    "Alias of exact_percentiles (same function, same oracle), kept so "
+    "the registered name and its bench history stay",
+    tags=("relational", "stats", "scale", "bench"),
+)
+@query(
     "exact_percentiles",
     _PCTL_ORACLE,
     "Exact interpolated percentiles per group (Spark percentile == SQL "
@@ -1679,9 +1686,12 @@ def q_ratio_to_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Exact per-group median — no interpolation-formula parity risk: median =
-# mean of the middle one/two values selected by row_number against the
-# group count, with the two-value mean done in mirrored double ops.
+# Exact per-group median. The oracle selects the middle one/two values by
+# row_number against the group count and averages them; Spark's exact
+# `percentile(value, 0.5)` returns the same double (odd n: the middle
+# value; even n: 0.5*a + 0.5*b, which rounds exactly like (a+b)/2). It is
+# a mergeable partial aggregate (a value->count map per group), so no
+# task ever sorts a whole group.
 # --------------------------------------------------------------------------
 
 _MEDIAN_ORACLE = """
@@ -1703,32 +1713,34 @@ ORDER BY event_type
 
 
 @query(
+    "grouped_median_plan_state",
+    _MEDIAN_ORACLE,
+    "Alias of grouped_median (same function, same oracle), kept so the "
+    "registered name and its bench history stay",
+    tags=("relational", "stats", "scale", "bench"),
+)
+@query(
+    "grouped_median_scalable",
+    _MEDIAN_ORACLE,
+    "Alias of grouped_median (same function, same oracle), kept so the "
+    "registered name and its bench history stay",
+    tags=("relational", "stats", "scale", "bench"),
+)
+@query(
     "grouped_median",
     _MEDIAN_ORACLE,
-    "Exact per-group median by rank selection (middle one/two rows via "
-    "row_number vs group count — no engine interpolation formula in "
-    "play), deterministic event_id tiebreak; one keyed window + rollup",
+    "Exact per-group median via Spark's percentile(value, 0.5): a "
+    "mergeable partial aggregate, one keyed shuffle, no per-group sort; "
+    "equals the oracle's mean of the middle one/two rank-selected rows",
     tags=("relational", "stats"),
 )
 def q_grouped_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    w = Window.partitionBy("event_type").orderBy("value", "event_id")
-    wc = Window.partitionBy("event_type")
-    ranked = ev.select(
-        "event_type",
-        "value",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(wc).alias("n"),
-    )
-    rn2 = F.col("rn") * 2
-    mid = ranked.filter(
-        (rn2 == F.col("n")) | (rn2 == F.col("n") + 1) | (rn2 == F.col("n") + 2)
-    )
     return (
-        mid.groupBy("event_type")
+        ev.groupBy("event_type")
         .agg(
-            F.min("n").cast("long").alias("n_values"),
-            (F.sum("value") / F.count(F.lit(1))).alias("median_value"),
+            F.count(F.lit(1)).alias("n_values"),
+            F.percentile("value", F.lit(0.5)).alias("median_value"),
         )
         .orderBy("event_type")
     )
@@ -1812,12 +1824,12 @@ def q_hll_union_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Scale-safe approximate order statistics (VERDICT r02 #4). The exact
-# variants (grouped_median, exact_percentiles) funnel each group through
-# one task's sort — fine for correctness baselines, weak at 100 TB with
-# low-cardinality groups. These twins use percentile_approx (Greenwald-
-# Khanna sketch: partial-aggregated map-side, mergeable, one ordinary
-# keyed shuffle — the 100 TB path).
+# Bounded-state approximate order statistics (VERDICT r02 #4). The exact
+# variants (grouped_median, exact_percentiles) merge a value->count map
+# per group, whose size grows with the group's DISTINCT values. These
+# twins use percentile_approx (Greenwald-Khanna sketch: partial-
+# aggregated map-side, mergeable, state bounded by the accuracy
+# parameter, one ordinary keyed shuffle).
 #
 # Oracle strategy: a sketch value cannot be mirrored in DuckDB, so the
 # oracle pins the sketch's RANK-ERROR CONTRACT instead. The Spark side
@@ -1934,81 +1946,6 @@ def q_percentiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ],
     ).orderBy("event_type")
-
-
-# --------------------------------------------------------------------------
-# Scale-safe EXACT median (operators/selection.py): same relation as
-# grouped_median — same oracle, hash-for-hash — but computed with
-# mergeable conditional aggregates only (iterative bucket bisection),
-# so no task ever sorts a whole group. This closes the SCALE.md §10
-# exact-order-statistics weakness without changing semantics.
-# --------------------------------------------------------------------------
-
-
-@query(
-    "grouped_median_scalable",
-    _MEDIAN_ORACLE,
-    "Exact per-group median by iterative bucket bisection (~6 rounds of "
-    "map-side-combinable conditional counts narrow each group's bracket "
-    "past double precision; final pass reads the few distinct values "
-    "left) — identical relation and oracle as grouped_median, but no "
-    "per-group single-task sort anywhere: the scale-safe EXACT path",
-    tags=("relational", "stats", "scale", "bench"),
-)
-def q_grouped_median_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from reddit_data_pipeline_engineering_spark.operators.selection import (
-        grouped_median_selection,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    return grouped_median_selection(ev, "event_type", "value").orderBy(
-        "event_type"
-    )
-
-
-@query(
-    "grouped_median_plan_state",
-    _MEDIAN_ORACLE,
-    "Exact per-group median by bucket bisection with the bracket state "
-    "held IN THE PLAN (operators/selection.grouped_median_selection_plan, "
-    "r05): brackets broadcast-join back each round, crossing buckets and "
-    "the final value read-off resolve via cumulative windows, and the "
-    "driver holds one integer — identical relation and oracle as "
-    "grouped_median/grouped_median_scalable, with zero per-group driver "
-    "state (the extreme-group-cardinality path)",
-    tags=("relational", "stats", "scale", "bench"),
-)
-def q_grouped_median_plan_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from reddit_data_pipeline_engineering_spark.operators.selection import (
-        grouped_median_selection_plan,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    return grouped_median_selection_plan(ev, "event_type", "value").orderBy(
-        "event_type"
-    )
-
-
-@query(
-    "exact_percentiles_scalable",
-    _PCTL_ORACLE,
-    "Exact interpolated p50/p90/p99 per group via bucket bisection "
-    "(operators/selection.py): bracketing order statistics from "
-    "mergeable conditional counts — no per-group sort — then Spark's "
-    "own percentile interpolation replayed bit-for-bit; identical "
-    "relation and oracle as exact_percentiles, the scale-safe EXACT "
-    "percentile path",
-    tags=("relational", "stats", "scale", "bench"),
-)
-def q_exact_percentiles_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from reddit_data_pipeline_engineering_spark.operators.selection import (
-        grouped_percentiles_selection,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    return grouped_percentiles_selection(ev, "event_type", "value").orderBy(
-        "event_type"
-    )
 
 
 # --------------------------------------------------------------------------
@@ -2306,9 +2243,10 @@ def q_grouped_linreg_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 # skew-immune twin of zscore_outliers. Both medians are LOWER-MIDDLE rank
 # selections (rn = (n+1) div 2), so they are actual data values and no
 # interpolation formula enters; |x - med| and 3*mad are single mirrored
-# IEEE ops. Two keyed windows (bounded group count, same documented
-# caveat as grouped_median; the bisection core in operators/selection.py
-# is the unbounded-cardinality path) + one broadcast-joined rollup.
+# IEEE ops. Spark's percentile_disc(0.5) selects exactly that row, as a
+# mergeable partial aggregate: one per-group aggregate for med, one for
+# the MAD over the broadcast-med deviations, then one broadcast-joined
+# rollup. No window, no per-group sort.
 # --------------------------------------------------------------------------
 
 _MAD_ORACLE = """
@@ -2344,38 +2282,37 @@ ORDER BY e.event_type
 """
 
 
+def _lower_median(order_by: str):
+    """Lower-middle order statistic (1-based rank (n+1) div 2) of a SQL
+    expression: an actual data value, no interpolation."""
+    return F.expr(f"percentile_disc(0.5) WITHIN GROUP (ORDER BY {order_by})")
+
+
+@query(
+    "mad_outliers_scalable",
+    _MAD_ORACLE,
+    "Alias of mad_outliers (same function, same oracle), kept so the "
+    "registered name and its bench history stay",
+    tags=("relational", "stats", "scale", "bench"),
+)
 @query(
     "mad_outliers",
     _MAD_ORACLE,
     "Median/MAD robust outlier audit per event type: two lower-middle "
-    "rank selections (actual data values, no interpolation), broadcast "
-    "5-row med/mad dim back onto the fact scan, |x-med| > 3*MAD flag — "
-    "the heavy-tail-safe alternative to z-scores",
+    "percentile_disc(0.5) aggregates (actual data values, no "
+    "interpolation, no per-group sort), broadcast 5-row med/mad dim back "
+    "onto the fact scan, |x-med| > 3*MAD flag — the heavy-tail-safe "
+    "alternative to z-scores",
     tags=("relational", "stats", "bench"),
 )
 def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-
-    def lower_middle(df: DataFrame, order_col, out_name: str) -> DataFrame:
-        w = Window.partitionBy("event_type").orderBy(order_col, "event_id")
-        wc = Window.partitionBy("event_type")
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .withColumn("__n", F.count(F.lit(1)).over(wc))
-            .filter(F.col("__rn") == F.floor((F.col("__n") + 1) / 2))
-            .select("event_type", order_col.alias(out_name))
-        )
-
-    med = lower_middle(
-        ev.select("event_type", "value", "event_id"), F.col("value"), "med"
+    med = ev.groupBy("event_type").agg(_lower_median("value").alias("med"))
+    mdim = (
+        ev.join(F.broadcast(med), "event_type")
+        .groupBy("event_type", "med")
+        .agg(_lower_median("abs(value - med)").alias("mad"))
     )
-    dev = ev.join(F.broadcast(med), "event_type").withColumn(
-        "adev", F.abs(F.col("value") - F.col("med"))
-    )
-    mad = lower_middle(
-        dev.select("event_type", "adev", "event_id"), F.col("adev"), "mad"
-    )
-    mdim = med.join(mad, "event_type")
     return (
         ev.join(F.broadcast(mdim), "event_type")
         .groupBy("event_type", "med", "mad")
@@ -2397,8 +2334,9 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # [p10, p90] rank-selected bounds, then a decimal-exact mean of the
 # clamped column. Bounds are ACTUAL data values (row_number selection,
 # no interpolation); the clamp is least/greatest (exact); the mean is an
-# exact decimal sum / count. Same bounded-group-window caveat and the
-# same bisection escape hatch as the median family.
+# exact decimal sum / count. The rank windows sort each group in one
+# task; winsorized_scalable below resolves the same bounds with the
+# bisection core.
 # --------------------------------------------------------------------------
 
 _WINSOR_ORACLE = """
@@ -2884,88 +2822,6 @@ def q_nested_order_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Scalable twin of mad_outliers — SAME oracle, hash-for-hash — with both
-# medians resolved by the bucket-bisection selection core instead of
-# rank windows: ~6 rounds of mergeable conditional counts per median, no
-# per-group sort, driver state = G brackets. The pattern that already
-# covers grouped_median/exact_percentiles extended to the two-level
-# median-of-deviations statistic.
-# --------------------------------------------------------------------------
-
-
-@query(
-    "mad_outliers_scalable",
-    _MAD_ORACLE,
-    "mad_outliers computed scale-safe: med and MAD each resolved by the "
-    "bisection selection core (mergeable conditional counts, no "
-    "per-group sort) then the identical broadcast rollup — same oracle, "
-    "same hash as the rank-window variant",
-    tags=("relational", "stats", "scale", "bench"),
-)
-def q_mad_outliers_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from reddit_data_pipeline_engineering_spark.operators import selection as sel
-
-    ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-
-    def lower_middle_ranks(prof):
-        return {g: [(n + 1) // 2] for g, (n, _, _) in prof.items()}
-
-    src, prof = sel._profile(ev, "event_type", "value")
-    targets = lower_middle_ranks(prof)
-    med = sel._select_ranks(src, targets, prof, sel.BUCKETS, sel.MAX_ROUNDS)
-    med_rows = [
-        (g, med[(g, (prof[g][0] + 1) // 2)]) for g in sorted(prof)
-    ]
-    med_df = spark.createDataFrame(med_rows, "event_type string, med double")
-
-    # Phase 2 shares phase 1's work instead of rescanning (r05 rework,
-    # VERDICT r04 #6): the deviation relation derives from the CACHED
-    # phase-1 projection (broadcast med attach + abs — no second parquet
-    # scan), and its profile needs no aggregate pass at all — the count
-    # is identical (same non-null rows) and max|v-med| is attained at an
-    # endpoint, so the bracket is exactly [0, max(hi-med, med-lo)].
-    src2 = (
-        src.join(
-            F.broadcast(med_df.withColumnRenamed("event_type", "g")), "g"
-        )
-        .select("g", F.abs(F.col("v") - F.col("med")).alias("v"))
-        .persist()
-    )
-    prof2 = {}
-    for g, (n, lo, hi) in prof.items():
-        m = med[(g, (n + 1) // 2)]
-        prof2[g] = (n, 0.0, max(hi - m, m - lo))
-    targets2 = lower_middle_ranks(prof2)
-    madr = sel._select_ranks(src2, targets2, prof2, sel.BUCKETS, sel.MAX_ROUNDS)
-    src.unpersist()
-    src2.unpersist()
-    mdim_rows = [
-        (
-            g,
-            med[(g, (prof[g][0] + 1) // 2)],
-            madr[(g, (prof2[g][0] + 1) // 2)],
-        )
-        for g in sorted(prof2)
-    ]
-    mdim = spark.createDataFrame(
-        mdim_rows, "event_type string, med double, mad double"
-    )
-    return (
-        ev.join(F.broadcast(mdim), "event_type")
-        .groupBy("event_type", "med", "mad")
-        .agg(
-            F.sum(
-                F.when(
-                    F.abs(F.col("value") - F.col("med")) > 3 * F.col("mad"), 1
-                ).otherwise(0)
-            ).alias("n_outliers"),
-            F.count(F.lit(1)).alias("n_values"),
-        )
-        .orderBy("event_type")
-    )
-
-
-# --------------------------------------------------------------------------
 # Scalable twin of winsorized_stats — SAME oracle, hash-for-hash: the
 # [p10, p90] clamp bounds are two rank selections per group, resolved
 # together in ONE bisection run (the core tracks every (group, k)
@@ -3205,12 +3061,10 @@ def q_join_cardinality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# The bisection core in its TARGET regime — hundreds of groups: exact
-# interpolated p90 of line price per ship WEEK (~350 groups at sf0.1).
-# This is where the rank-window formulation's per-group sorts multiply
-# while the bisection's cost stays ~rounds x one conditional-count pass
-# whose key space is (weeks x brackets) — driver state is bounded by
-# group count, not row count.
+# Exact interpolated p90 of line price per ship WEEK — hundreds of groups
+# (~350 at sf0.1). Spark's exact percentile is a mergeable partial
+# aggregate (a value->count map per group), so the cost is one keyed
+# shuffle whatever the group count.
 # --------------------------------------------------------------------------
 
 _WEEKLY_P90_ORACLE = """
@@ -3227,29 +3081,21 @@ FROM weekly GROUP BY week_idx ORDER BY week_idx
 @query(
     "weekly_p90_scalable",
     _WEEKLY_P90_ORACLE,
-    "Exact interpolated p90 of line price per ship week via bucket "
-    "bisection — the selection core at hundreds of groups, its target "
-    "regime (driver state = per-group brackets; no per-group sorts "
-    "anywhere)",
+    "Exact interpolated p90 of line price per ship week via Spark's "
+    "percentile partial aggregate — hundreds of groups, one keyed "
+    "shuffle, no per-group sorts anywhere",
     tags=("relational", "stats", "scale", "bench"),
 )
 def q_weekly_p90_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from reddit_data_pipeline_engineering_spark.operators.selection import (
-        grouped_percentiles_selection,
-    )
-
     li = load_table(spark, sf_dir, "lineitem")
-    weekly = li.select(
-        F.floor(
-            F.datediff(F.col("l_shipdate"), F.lit("1992-01-01").cast("date"))
-            / 7
-        ).alias("week_idx"),
-        "l_extendedprice",
+    week_idx = F.floor(
+        F.datediff(F.col("l_shipdate"), F.lit("1992-01-01").cast("date")) / 7
     )
-    return grouped_percentiles_selection(
-        weekly, "week_idx", "l_extendedprice",
-        percentiles=(0.9,), names=("p90",),
-    ).orderBy("week_idx")
+    return (
+        li.groupBy(week_idx.alias("week_idx"))
+        .agg(F.round(F.percentile("l_extendedprice", F.lit(0.9)), 6).alias("p90"))
+        .orderBy("week_idx")
+    )
 
 
 # --------------------------------------------------------------------------

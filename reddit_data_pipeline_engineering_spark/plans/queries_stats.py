@@ -2347,7 +2347,7 @@ def q_bh_fdr_nation_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     thr = spark.createDataFrame(_bh_thresholds(), "i int, thr_bp long")
     # checkpoint the 25-row flagged relation: both consumers (the k
     # scalar and the output join) would otherwise replay the whole
-    # upstream subtree (the grouped_median_plan_state device)
+    # upstream subtree
     flagged = (
         ranked.join(F.broadcast(thr), "i")
         .withColumn(

@@ -289,6 +289,10 @@ def run_stream_to_completion(query, timeout_s: float = 120.0) -> None:
         raise TimeoutError(f"stream did not finish within {timeout_s}s")
 
 
+# Staged bytes per stateful-shuffle partition (see below).
+STATE_TARGET_BYTES = 1 << 20
+
+
 def scaled_state_partition_count(
     spark: SparkSession, staged_path: str, target_bytes: int | None = None
 ) -> int:
@@ -308,22 +312,18 @@ def scaled_state_partition_count(
 
         partitions = clamp(ceil(staged_bytes / target), 1, 3 * cores)
 
-    - ``target`` defaults to 1 MiB of staged NDJSON per partition — the
-      measured crossover on the bench data shape where per-partition
-      fixed cost exceeds the compute-parallelism gain; override with
-      ``RDPE_STREAM_STATE_TARGET_BYTES`` for production tuning (at a
-      real horizon volume the cap, not the target, binds).
+    - ``target`` defaults to ``STATE_TARGET_BYTES`` (1 MiB of staged
+      NDJSON per partition) — the measured crossover on the bench data
+      shape where per-partition fixed cost exceeds the
+      compute-parallelism gain; callers pass ``target_bytes`` to tune it
+      (at a real horizon volume the cap, not the target, binds).
     - the cap is 3x ``defaultParallelism`` — the same multiple the
       cluster profile uses for batch shuffle partitions
       (session.cluster_profile), so at 100 TB this degrades to the
       standard sizing rather than a local constant; it also scales with
       the driver's lower-core bench legs automatically.
     """
-    target = int(
-        os.environ.get(
-            "RDPE_STREAM_STATE_TARGET_BYTES", target_bytes or (1 << 20)
-        )
-    )
+    target = target_bytes or STATE_TARGET_BYTES
     staged = 0
     for dirpath, _, filenames in os.walk(staged_path):
         for name in filenames:

@@ -202,23 +202,15 @@ sel_groups_st = st.dictionaries(
 @example(groups={"a": [-0.5, -2.225073858507e-311, 1.5]})
 @WIDE
 def _prop_selection_median_property(spark, groups):
-    """Bucket-bisection median == sorted-middle median for arbitrary
-    group contents (duplicates, negatives, single values)."""
-    from reddit_data_pipeline_engineering_spark.operators.selection import (
-        grouped_median_selection,
-    )
+    """Bucket-bisection selection: the k-th selected value equals
+    sorted(vs)[k-1] at the middle rank(s) of arbitrary group contents
+    (duplicates, negatives, single values)."""
+    from .test_selection import _assert_kth_sorted, _middle_ranks, select_ranks
 
     data = [(g, v) for g, vs in groups.items() for v in vs]
     df = spark.createDataFrame(data, "g string, v double")
-    got = {
-        r["g"]: (r["n_values"], r["median_value"])
-        for r in grouped_median_selection(df, "g", "v").collect()
-    }
-    for g, vs in groups.items():
-        s = sorted(vs)
-        n = len(s)
-        exp = s[(n - 1) // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
-        assert got[g] == (n, exp), (g, got[g], (n, exp))
+    prof, got = select_ranks(df, _middle_ranks)
+    _assert_kth_sorted(groups, prof, got, _middle_ranks)
 
 
 _cc_subgraph_st = st.lists(

@@ -1,18 +1,36 @@
-"""Bucket-bisection exact median vs the straight sorted-middle answer."""
+"""Bucket-bisection rank selection vs the straight sorted answer."""
 
 import random
 
-from reddit_data_pipeline_engineering_spark.operators.selection import (
-    grouped_median_selection,
-)
+from reddit_data_pipeline_engineering_spark.operators import selection
 
 
-def _expected(vals):
-    s = sorted(vals)
-    n = len(s)
-    if n % 2:
-        return s[(n + 1) // 2 - 1]
-    return (s[n // 2 - 1] + s[n // 2]) / 2
+def _middle_ranks(n):
+    """1-based middle rank(s): one for odd n, two for even n."""
+    return [(n + 1) // 2] if n % 2 else [n // 2, n // 2 + 1]
+
+
+def select_ranks(df, ranks_of):
+    """Run the bisection core on (g, v): ``ranks_of(n)`` lists the
+    1-based ranks wanted from a group of n non-null values. Returns
+    (profile, {(g, k): k-th smallest value})."""
+    src, prof = selection._profile(df, "g", "v")
+    try:
+        want = {g: ranks_of(n) for g, (n, _, _) in prof.items()}
+        got = selection._select_ranks(
+            src, want, prof, selection.BUCKETS, selection.MAX_ROUNDS
+        )
+    finally:
+        src.unpersist()
+    return prof, got
+
+
+def _assert_kth_sorted(groups, prof, got, ranks_of):
+    for g, vs in groups.items():
+        s = sorted(vs)
+        assert prof[g][0] == len(s)
+        for k in ranks_of(len(s)):
+            assert got[(g, k)] == s[k - 1], (g, k, got[(g, k)], s[k - 1])
 
 
 def _case_selection_median_matches_sorted_middle(spark):
@@ -29,148 +47,24 @@ def _case_selection_median_matches_sorted_middle(spark):
         data += [(g, v) for v in vs]
     data += [("a", None), ("b", None)]  # nulls ignored
     df = spark.createDataFrame(data, "g string, v double")
-    got = {
-        r["g"]: (r["n_values"], r["median_value"])
-        for r in grouped_median_selection(df, "g", "v").collect()
-    }
-    for g, vs in groups.items():
-        assert got[g][0] == len(vs)
-        assert got[g][1] == _expected(vs), (g, got[g][1], _expected(vs))
+    prof, got = select_ranks(df, _middle_ranks)
+    _assert_kth_sorted(groups, prof, got, _middle_ranks)
 
 
 def _case_selection_median_long_groups(spark):
     rng = random.Random(5)
     vals = [rng.uniform(-1e6, 1e6) for _ in range(2000)]
     df = spark.createDataFrame([(1, v) for v in vals], "g bigint, v double")
-    (row,) = grouped_median_selection(df, "g", "v").collect()
-    assert row["median_value"] == _expected(vals)
-    assert row["n_values"] == 2000
-
-
-def _case_selection_percentiles_bit_match_spark_percentile(spark):
-    from pyspark.sql import functions as F
-
-    from reddit_data_pipeline_engineering_spark.operators.selection import (
-        grouped_percentiles_selection,
-    )
-
-    rng = random.Random(23)
-    data = []
-    for g, n in (("a", 501), ("b", 640), ("c", 40), ("d", 1), ("e", 333)):
-        vals = (
-            [3.25] * n
-            if g == "c"
-            else [rng.uniform(-1000, 1000) for _ in range(n)]
-        )
-        data += [(g, v) for v in vals]
-    df = spark.createDataFrame(data, "g string, v double")
-
-    want = {
-        r["g"]: (r["p50"], r["p90"], r["p99"])
-        for r in df.groupBy("g")
-        .agg(
-            *[
-                F.round(F.percentile("v", F.lit(p)), 6).alias(nm)
-                for p, nm in ((0.5, "p50"), (0.9, "p90"), (0.99, "p99"))
-            ]
-        )
-        .collect()
-    }
-    got = {
-        r["g"]: (r["p50"], r["p90"], r["p99"])
-        for r in grouped_percentiles_selection(df, "g", "v").collect()
-    }
-    assert got == want
-
-
-def _case_plan_state_variant_matches_collect_path(spark):
-    """The bracket-state-as-DataFrame variant (driver holds one integer,
-    not G brackets — VERDICT r04 #7) must resolve medians identical to
-    the collect path on every regime the collect-path test covers: odd /
-    even n, all-equal, singleton, heavy duplicates, nulls, plus a wide
-    many-group relation (the high-cardinality regime the variant exists
-    for)."""
-    from reddit_data_pipeline_engineering_spark.operators.selection import (
-        grouped_median_selection_plan,
-    )
-
-    rng = random.Random(11)
-    groups = {
-        "a": [rng.uniform(-100, 100) for _ in range(501)],
-        "b": [rng.uniform(0, 1) for _ in range(500)],
-        "c": [3.25] * 40,
-        "d": [7.5],
-        "e": [rng.choice([1.0, 2.0, 5.0]) for _ in range(333)],
-    }
-    data = [(g, v) for g, vs in groups.items() for v in vs]
-    data += [("a", None), ("b", None)]
-    df = spark.createDataFrame(data, "g string, v double")
-    driver = {
-        tuple(r) for r in grouped_median_selection(df, "g", "v").collect()
-    }
-    plan = {
-        tuple(r)
-        for r in grouped_median_selection_plan(df, "g", "v").collect()
-    }
-    assert plan == driver
-
-    rng = random.Random(31)
-    wide = [
-        (g, rng.uniform(-1e6, 1e6))
-        for g in range(200)
-        for _ in range(rng.randint(1, 40))
-    ]
-    dfw = spark.createDataFrame(wide, "g long, v double")
-    driver = {
-        tuple(r) for r in grouped_median_selection(dfw, "g", "v").collect()
-    }
-    plan = {
-        tuple(r)
-        for r in grouped_median_selection_plan(dfw, "g", "v").collect()
-    }
-    assert plan == driver
-
-
-def _case_plan_state_percentiles_match_collect_path(spark):
-    """grouped_percentiles_selection_plan must be value-identical to the
-    collect path (which itself bit-matches F.round(F.percentile(...),6))
-    across odd/even/all-equal/singleton/heavy-dup groups."""
-    from reddit_data_pipeline_engineering_spark.operators.selection import (
-        grouped_percentiles_selection,
-        grouped_percentiles_selection_plan,
-    )
-
-    rng = random.Random(23)
-    data = []
-    for g, n in (("a", 501), ("b", 640), ("c", 40), ("d", 1), ("e", 333)):
-        vals = (
-            [3.25] * n
-            if g == "c"
-            else [rng.uniform(-1000, 1000) for _ in range(n)]
-        )
-        data += [(g, v) for v in vals]
-    df = spark.createDataFrame(data, "g string, v double")
-    driver = {
-        tuple(r)
-        for r in grouped_percentiles_selection(df, "g", "v").collect()
-    }
-    plan = {
-        tuple(r)
-        for r in grouped_percentiles_selection_plan(df, "g", "v").collect()
-    }
-    assert plan == driver
+    prof, got = select_ranks(df, _middle_ranks)
+    _assert_kth_sorted({1: vals}, prof, got, _middle_ranks)
 
 
 def test_plan_side_and_driver_side_narrowing_agree(spark, monkeypatch):
     """The hybrid cutover (PLAN_SIDE_NARROW_MIN) is a pure performance
     choice: forcing EVERY round through the plan-side cumulative-window
     path and forcing every round through the driver-side counter scan
-    must resolve identical medians on a dataset with enough groups to
-    exercise both regimes."""
-    import random
-
-    from reddit_data_pipeline_engineering_spark.operators import selection
-
+    must resolve identical middle ranks on a dataset with enough groups
+    to exercise both regimes."""
     rng = random.Random(7)
     data = [
         (g, rng.uniform(-50, 50))
@@ -182,12 +76,9 @@ def test_plan_side_and_driver_side_narrowing_agree(spark, monkeypatch):
     results = {}
     for label, cutover in (("plan", 1), ("driver", 10**9)):
         monkeypatch.setattr(selection, "PLAN_SIDE_NARROW_MIN", cutover)
-        results[label] = {
-            r["g"]: (r["n_values"], r["median_value"])
-            for r in selection.grouped_median_selection(df, "g", "v").collect()
-        }
+        results[label] = select_ranks(df, _middle_ranks)[1]
     assert results["plan"] == results["driver"]
-    assert len(results["plan"]) == 80
+    assert len({g for g, _ in results["plan"]}) == 80
 
 
 # Concurrency harness (VERDICT r05 #5): the cases above are independent
@@ -200,9 +91,6 @@ from concurrent.futures import ThreadPoolExecutor as _TPE
 _SEL_CASES = {
     "selection_median_matches_sorted_middle": _case_selection_median_matches_sorted_middle,
     "selection_median_long_groups": _case_selection_median_long_groups,
-    "selection_percentiles_bit_match_spark_percentile": _case_selection_percentiles_bit_match_spark_percentile,
-    "plan_state_variant_matches_collect_path": _case_plan_state_variant_matches_collect_path,
-    "plan_state_percentiles_match_collect_path": _case_plan_state_percentiles_match_collect_path,
 }
 
 
@@ -215,7 +103,7 @@ def selection_outcomes(spark):
         except BaseException as exc:  # noqa: BLE001 - surfaced per test
             return exc
 
-    with _TPE(max_workers=5) as ex:
+    with _TPE(max_workers=len(_SEL_CASES)) as ex:
         return dict(zip(_SEL_CASES, ex.map(run, _SEL_CASES.values())))
 
 

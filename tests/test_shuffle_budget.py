@@ -149,11 +149,10 @@ BUDGETS = {
     "event_rate_cusum": 3,
     "exact_dedup": 1,
     "exact_percentiles": 2,
-    # Bisection queries: the heavy work (profile + ~6 conditional-count
-    # rounds + distinct-in-bracket pass, each one keyed shuffle of
-    # G*B counters) runs during construction like the kmeans/pq fits;
-    # the returned plan is the final sort of G literal rows.
-    "exact_percentiles_scalable": 1,
+    # Alias of exact_percentiles: percentile partial aggregate + sort.
+    # Was 1, but that count excluded the 8 jobs the bisection ran at
+    # construction.
+    "exact_percentiles_scalable": 2,
     # r08: edge selection runs during construction (profile + one
     # bisection round + wide final pass — all mergeable aggregates);
     # the returned plan is the broadcast-edge bucket aggregate + sort.
@@ -169,11 +168,11 @@ BUDGETS = {
     "freq_itemset_pairs": 5,
     "funnel_conversion": 2,
     "grouped_median_approx": 3,
-    # Bisection rounds run in-plan during construction (bracket-state-
-    # as-DataFrame); the returned plan reads the checkpointed G-row
-    # result and sorts it.
-    "grouped_median_plan_state": 1,
-    "grouped_median_scalable": 1,
+    # Aliases of grouped_median: percentile partial aggregate + sort.
+    # Were 1, but that count excluded the 22 (plan_state) and 8
+    # (scalable) jobs the bisection ran at construction.
+    "grouped_median_plan_state": 2,
+    "grouped_median_scalable": 2,
     "grouping_sets_report": 2,
     # spread + (source, token) count + source rollup + token re-agg
     # (ALL row) off the checkpoint.
@@ -284,8 +283,12 @@ BUDGETS = {
     # broadcast anchor dims; movement = bucket aggregate, struct-max
     # argmax rollup, output sort.
     "lttb_downsample": 4,
-    "mad_outliers": 5,
-    "mad_outliers_scalable": 2,
+    # med aggregate + MAD aggregate (percentile_disc partials) + the
+    # broadcast rollup + sort; the scalable name is an alias. The
+    # alias's old 2 excluded the 15 jobs its bisection ran at
+    # construction.
+    "mad_outliers": 4,
+    "mad_outliers_scalable": 4,
     # daily count shuffle (checkpointed once for all four consumers) +
     # the priority-keyed pair join, sign/tie/day aggregates and the
     # 5-row stat joins — all over the calendar-bounded daily relation.
@@ -578,7 +581,9 @@ BUDGETS = {
     "value_stats": 2,
     "vocab_topk": 2,
     "waiting_suppliers": 3,
-    "weekly_p90_scalable": 1,
+    # percentile partial aggregate + sort. Was 1, but that count
+    # excluded the 11 jobs the bisection ran at construction.
+    "weekly_p90_scalable": 2,
     # ONE conditional-aggregate pass; single-row rollup.
     "welch_cohen_effect": 1,
     "weighted_median_price": 2,

@@ -24,8 +24,7 @@ HEADLINE = [
     "setsim_prefix_join",
     "setsim_containment_join",
     "ivfpq_topk",
-    "grouped_median_scalable",
-    "exact_percentiles_scalable",
+    "winsorized_scalable",
     "weekly_p90_scalable",
     "pagerank_topk",
     "kcore_peel_counts",
