@@ -14,9 +14,10 @@ Float-determinism policy (so value-hashes match bit-for-bit):
 - every ORDER BY ... LIMIT carries a unique tiebreak key;
 - DuckDB `SUM(int)` returns HUGEINT and `year()` BIGINT — oracles cast to
   BIGINT/INTEGER to match Spark's types;
-- `events.ts` is TIMESTAMP(NANOS) in parquet: Spark reads it via
-  nanosAsLong + `timestamp_micros(ts div 1000)` (sources/tables.py);
-  oracles emit `CAST(ts AS TIMESTAMP)` (ns->µs truncation — identical).
+- `events.ts` is TIMESTAMP(MICROS, isAdjustedToUTC=false) in parquet:
+  Spark reads it as TIMESTAMP_NTZ under its pinned schema
+  (schemas.TABLES, sources/tables.py); oracles emit `CAST(ts AS
+  TIMESTAMP)`, DuckDB's zone-less µs timestamp — identical.
 """
 
 from __future__ import annotations

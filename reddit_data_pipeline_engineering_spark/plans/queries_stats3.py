@@ -50,8 +50,8 @@ def _dec(col) -> F.Column:
 
 
 def _epoch_us() -> F.Column:
-    """events.ts is TIMESTAMP_NTZ (nanosAsLong read path,
-    sources/tables.py): epoch micros via timestampdiff against the NTZ
+    """events.ts is TIMESTAMP_NTZ (pinned read schema,
+    schemas.TABLES): epoch micros via timestampdiff against the NTZ
     epoch — instant-exact in any session timezone (the r07 streaming
     lesson); DuckDB mirror is epoch_us(CAST(ts AS TIMESTAMP)). Lazy (a
     module-level F.expr would need an active SparkContext at import)."""

@@ -85,3 +85,96 @@ MULTIMODAL_ASSET = T.StructType(
         T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
     ]
 )
+
+# Registry tables (sources/tables.load_table) — exactly the schemas Spark
+# infers from the parquet footers, pinned so opening a table launches no
+# inference job. Dates and events.ts are INT64 TIMESTAMP(MICROS,
+# isAdjustedToUTC=false), i.e. TIMESTAMP_NTZ.
+_F = T.StructField
+_LONG, _INT, _DOUBLE, _STR, _NTZ = (
+    T.LongType(), T.IntegerType(), T.DoubleType(), T.StringType(), T.TimestampNTZType()
+)
+TABLES: dict[str, T.StructType] = {
+    "region": T.StructType([_F("r_regionkey", _INT), _F("r_name", _STR)]),
+    "nation": T.StructType(
+        [_F("n_nationkey", _INT), _F("n_name", _STR), _F("n_regionkey", _INT)]
+    ),
+    "customer": T.StructType(
+        [
+            _F("c_custkey", _LONG),
+            _F("c_name", _STR),
+            _F("c_nationkey", _INT),
+            _F("c_acctbal", _DOUBLE),
+            _F("c_mktsegment", _STR),
+        ]
+    ),
+    "supplier": T.StructType(
+        [
+            _F("s_suppkey", _LONG),
+            _F("s_name", _STR),
+            _F("s_nationkey", _INT),
+            _F("s_acctbal", _DOUBLE),
+        ]
+    ),
+    "part": T.StructType(
+        [
+            _F("p_partkey", _LONG),
+            _F("p_name", _STR),
+            _F("p_brand", _STR),
+            _F("p_type", _STR),
+            _F("p_size", _INT),
+            _F("p_retailprice", _DOUBLE),
+        ]
+    ),
+    "orders": T.StructType(
+        [
+            _F("o_orderkey", _LONG),
+            _F("o_custkey", _LONG),
+            _F("o_orderstatus", _STR),
+            _F("o_totalprice", _DOUBLE),
+            _F("o_orderdate", _NTZ),
+            _F("o_orderpriority", _STR),
+        ]
+    ),
+    "lineitem": T.StructType(
+        [
+            _F("l_orderkey", _LONG),
+            _F("l_partkey", _LONG),
+            _F("l_suppkey", _LONG),
+            _F("l_linenumber", _INT),
+            _F("l_quantity", _DOUBLE),
+            _F("l_extendedprice", _DOUBLE),
+            _F("l_discount", _DOUBLE),
+            _F("l_tax", _DOUBLE),
+            _F("l_returnflag", _STR),
+            _F("l_linestatus", _STR),
+            _F("l_shipdate", _NTZ),
+        ]
+    ),
+    "events": T.StructType(
+        [
+            _F("event_id", _LONG),
+            _F("ts", _NTZ),
+            _F("user_id", _LONG),
+            _F("event_type", _STR),
+            _F("value", _DOUBLE),
+            _F("props", _STR),
+        ]
+    ),
+    "documents": T.StructType(
+        [
+            _F("doc_id", _LONG),
+            _F("text", _STR),
+            _F("lang", _STR),
+            _F("source", _STR),
+            _F("n_chars", _LONG),
+        ]
+    ),
+    "embeddings": T.StructType(
+        [
+            _F("vec_id", _LONG),
+            _F("embedding", T.ArrayType(T.FloatType())),
+            _F("label", _INT),
+        ]
+    ),
+}

@@ -21,8 +21,10 @@ from pyspark.sql import SparkSession
 # behaves identically under a SparkSession it did not build (e.g. the
 # verification driver's).
 RUNTIME_CONFS = {
-    # testdata events.parquet stores TIMESTAMP(NANOS) which Spark's parquet
-    # reader rejects; read as long ns-since-epoch and convert (sources.tables).
+    # Lets ns-precision parquet the engine did not pin (e.g. a sink read
+    # back without a schema) read as long ns-since-epoch instead of failing
+    # with PARQUET_TYPE_ILLEGAL. Registry tables carry pinned schemas
+    # (schemas.TABLES), so a NANOS column there still fails at the read.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",

@@ -4,43 +4,29 @@ Parquet scans go through ``spark.read.parquet`` so Catalyst gets predicate
 pushdown + column pruning for free (the reference instead re-reads raw JSON
 through a Glue DynamicFrame per consumer — SURVEY.md §3.2 anti-pattern).
 
-``events.parquet`` stores TIMESTAMP(NANOS), which Spark's parquet reader
-rejects outright ([PARQUET_TYPE_ILLEGAL]). We read it with
-``spark.sql.legacy.parquet.nanosAsLong`` and rebuild a proper
-``TimestampType`` with integer division (``ts div 1000``) — lossless here
-(the generator's values are µs-grained) and identical to DuckDB's
-ns->µs truncation semantics.
+Every read carries its pinned schema (``schemas.TABLES``), so opening a
+table launches no footer-inference Spark job. Dates and ``events.ts`` are
+stored as INT64 TIMESTAMP(MICROS, isAdjustedToUTC=false) and read as
+``TIMESTAMP_NTZ``. A file whose column types differ from the pin (e.g. an
+``events.ts`` written as TIMESTAMP(NANOS)) fails at the first action with
+``FAILED_READ_FILE.PARQUET_COLUMN_DATA_TYPE_MISMATCH``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark import schemas
 from reddit_data_pipeline_engineering_spark.session import apply_runtime_confs
 
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+TABLE_NAMES = tuple(schemas.TABLES)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table; normalizes the events ns-timestamp column."""
+    """Load one testdata table with its pinned schema (no inference job)."""
     apply_runtime_confs(spark)
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-    df = spark.read.parquet(path)
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    return df
+    return spark.read.schema(schemas.TABLES[name]).parquet(path)
 
 
 def register_views(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> None:
