@@ -24,6 +24,9 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from reddit_data_pipeline_engineering_spark.schemas import LEDGER, RAW_MEASUREMENT
 
 _INFER_KEY = "spark.sql.sources.partitionColumnTypeInference.enabled"
 
@@ -44,6 +47,33 @@ def _no_partition_type_inference(spark: SparkSession):
         yield
     finally:
         spark.conf.set(_INFER_KEY, old)
+
+
+def _data_files(spark: SparkSession, path: str):
+    """Recursive listing of the data files under ``path`` (Hadoop
+    FileStatus objects), through the Hadoop FileSystem API so it works on
+    HDFS/S3A/local alike. Hidden names are skipped, directories included,
+    by Spark's own rule: ``.*``, and ``_*`` unless it is a ``k=v``
+    partition directory (``_SUCCESS``, a crashed write's ``_temporary/``).
+    A missing path yields nothing."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        return
+    stack = [root]
+    while stack:
+        for st in fs.listStatus(stack.pop()):
+            name = st.getPath().getName()
+            if name.startswith(".") or (name.startswith("_") and "=" not in name):
+                continue
+            if st.isDirectory():
+                stack.append(st.getPath())
+            else:
+                yield st
+
+
+def _has_data_files(spark: SparkSession, path: str) -> bool:
+    return next(_data_files(spark, path), None) is not None
 
 
 def compact_partitions(
@@ -136,6 +166,19 @@ def merge_upsert(
     Idempotent: replaying the same update batch rewrites the same
     partitions to the same contents (the reference's append-mode job
     double-counted on retries — SURVEY.md §7.3 "Append idempotency").
+
+    An empty batch touches no partition, so it is a no-op: 0 is returned
+    and the table is neither read nor written. A missing ``path``, or one
+    holding no data files, is an empty table; any other read error (a
+    corrupt part file, say) propagates before anything is written, never
+    degrading to "no existing rows" — that would overwrite the touched
+    partitions with the update rows alone.
+
+    The staging read is pinned to the survivors' schema and the returned
+    count is observed on the final write: the only jobs are the
+    touched-partition collect, the existing table's schema inference
+    (left inferred so ``unionByName`` fails loudly on a column the batch
+    lacks) and the two writes.
     """
     with _no_partition_type_inference(spark):
         return _merge_upsert(
@@ -151,15 +194,13 @@ def _merge_upsert(
     partition_cols: Sequence[str],
     order_col: str | None,
 ) -> int:
-    upd = updates.withColumn("__prec", F.lit(1))
     touched = [
         tuple(r) for r in updates.select(*partition_cols).distinct().collect()
     ]
-    try:
-        existing = spark.read.parquet(path)
-    except Exception:
-        existing = None
-    if existing is not None:
+    if not touched:
+        return 0
+    upd = updates.withColumn("__prec", F.lit(1))
+    if _has_data_files(spark, path):
         part_filter = None
         for combo in touched:
             clause = None
@@ -167,12 +208,12 @@ def _merge_upsert(
                 p = F.col(c) == F.lit(v)
                 clause = p if clause is None else clause & p
             part_filter = clause if part_filter is None else part_filter | clause
-        scoped = existing.filter(part_filter) if part_filter is not None else existing
+        scoped = spark.read.parquet(path).filter(part_filter)
         merged = upd.unionByName(scoped.withColumn("__prec", F.lit(0)))
     else:
         merged = upd
 
-    from pyspark.sql import Window
+    from pyspark.sql import Observation, Window
 
     order = [F.col("__prec").desc()]
     if order_col is not None:
@@ -187,23 +228,27 @@ def _merge_upsert(
     # writing straight back would be an overwrite-while-reading (same
     # reason _compact swaps through tmp).
     tmp = tempfile.mkdtemp(prefix="rdpe_merge_")
-    (
-        survivors.repartition(*[F.col(c) for c in partition_cols])
-        .write.mode("overwrite")
-        .partitionBy(*partition_cols)
-        .parquet(tmp)
-    )
-    staged = spark.read.parquet(tmp)
-    n = staged.count()
-    (
-        staged.repartition(*[F.col(c) for c in partition_cols])
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .parquet(path)
-    )
-    shutil.rmtree(tmp, ignore_errors=True)
-    return n
+    try:
+        (
+            survivors.repartition(*[F.col(c) for c in partition_cols])
+            .write.mode("overwrite")
+            .partitionBy(*partition_cols)
+            .parquet(tmp)
+        )
+        written = Observation()
+        (
+            spark.read.schema(survivors.schema)
+            .parquet(tmp)
+            .observe(written, F.count(F.lit(1)).alias("rows"))
+            .repartition(*[F.col(c) for c in partition_cols])
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(*partition_cols)
+            .parquet(path)
+        )
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return written.get["rows"]
 
 
 def incremental_rollup(
@@ -395,38 +440,44 @@ def read_join_view(spark: SparkSession, view_path: str):
 # At 100 TB: the listing is driver-side file METADATA only — the same
 # cost class as Spark's own FileIndex, which lists every scan anyway —
 # via the Hadoop FileSystem API so it works on HDFS/S3A/local alike. The
-# ledger diff is an IN-PLAN left-anti join of the listing against the
-# ledger's per-path latest commit (VERDICT r06 #4): the ledger — the one
-# input that grows with HISTORY rather than with the batch — is never
-# collected; only the new-files result (bounded by the current listing)
-# reaches the driver. For zones with millions of historical files, list
-# only recent prefixes and let old partitions age out of consideration.
+# listing reaches the JVM as one Arrow table (a LocalTableScan: no Python
+# worker task), and the ledger is read through its pinned schema
+# (schemas.LEDGER: no footer-inference job). The ledger diff is an
+# IN-PLAN left-anti join of the listing against the ledger's per-path
+# latest commit (VERDICT r06 #4): the ledger — the one input that grows
+# with HISTORY rather than with the batch — is still never collected;
+# only the new-files result (bounded by the current listing) reaches the
+# driver. For zones with millions of historical files, list only recent
+# prefixes and let old partitions age out of consideration.
 # --------------------------------------------------------------------------
 
 
 def _list_data_files(spark: SparkSession, path: str) -> list[dict]:
     """Recursive (path, mtime, size) listing of non-hidden data files."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return []
-    out = []
-    it = fs.listFiles(hpath, True)
-    while it.hasNext():
-        f = it.next()
-        p = f.getPath()
-        name = p.getName()
-        if name.startswith(("_", ".")):  # _SUCCESS, hidden, temp
-            continue
-        out.append(
-            {
-                "path": p.toString(),
-                "mtime": f.getModificationTime(),
-                "size": f.getLen(),
-            }
-        )
+    out = [
+        {
+            "path": f.getPath().toString(),
+            "mtime": f.getModificationTime(),
+            "size": f.getLen(),
+        }
+        for f in _data_files(spark, path)
+    ]
     return sorted(out, key=lambda d: d["path"])
+
+
+def _local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType):
+    """Driver-side rows (tuples in ``schema`` order) as a DataFrame.
+
+    The rows travel as one Arrow table, which plans as a LocalTableScan;
+    ``createDataFrame(list)`` would instead pickle them through a
+    PythonRDD and run a Python-worker task on every action."""
+    import pyarrow as pa
+
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c) for c in columns], names=schema.fieldNames()
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def new_raw_files(
@@ -452,19 +503,15 @@ def new_raw_files(
     every file as new on every batch).
     """
     listing = _list_data_files(spark, path)
-    if not listing:
-        return []
-    jvm = spark._jvm
-    lpath = jvm.org.apache.hadoop.fs.Path(ledger_path)
-    lfs = lpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not lfs.exists(lpath):
+    if not listing or not _has_data_files(spark, ledger_path):
         return listing
 
-    cur = spark.createDataFrame(
+    cur = _local_frame(
+        spark,
         [(f["path"], f["mtime"], f["size"]) for f in listing],
-        "path string, mtime long, size long",
+        LEDGER[:3],
     )
-    ledger = spark.read.parquet(ledger_path).select(
+    ledger = spark.read.schema(LEDGER).parquet(ledger_path).select(
         F.col("path").alias("l_path"),
         F.col("mtime").alias("l_mtime"),
         F.col("size").alias("l_size"),
@@ -502,9 +549,9 @@ def commit_processed(
     rows = [
         (f["path"], f["mtime"], f["size"], n_rows, batch_id) for f in files
     ]
-    spark.createDataFrame(
-        rows, "path string, mtime long, size long, n_rows long, batch_id string"
-    ).coalesce(1).write.mode("append").parquet(ledger_path)
+    _local_frame(spark, rows, LEDGER).coalesce(1).write.mode("append").parquet(
+        ledger_path
+    )
 
 
 def read_raw_zone_incremental(
@@ -519,8 +566,6 @@ def read_raw_zone_incremental(
     DataFrame when nothing is new); ``commit(n_rows, batch_id)`` appends
     the manifest — call it only after the downstream write succeeds.
     """
-    from reddit_data_pipeline_engineering_spark.schemas import RAW_MEASUREMENT
-
     schema = schema or RAW_MEASUREMENT
     files = new_raw_files(spark, path, ledger_path)
     if files:
@@ -530,7 +575,7 @@ def read_raw_zone_incremental(
             .load([f["path"] for f in files])
         )
     else:
-        df = spark.createDataFrame([], schema)
+        df = _local_frame(spark, [], schema)
 
     def commit(n_rows: int, batch_id: str) -> None:
         commit_processed(spark, ledger_path, files, n_rows, batch_id)

@@ -178,3 +178,16 @@ TABLES: dict[str, T.StructType] = {
         ]
     ),
 }
+
+# Raw-zone source ledger (maintenance.new_raw_files / commit_processed):
+# one row per processed file per committed batch. Written and read through
+# this pin, so the bookmark diff never infers the ledger's footers.
+LEDGER = T.StructType(
+    [
+        _F("path", _STR),
+        _F("mtime", _LONG),
+        _F("size", _LONG),
+        _F("n_rows", _LONG),
+        _F("batch_id", _STR),
+    ]
+)

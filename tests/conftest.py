@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -9,6 +10,20 @@ if REPO_DIR not in sys.path:
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MEDIUM = "/root/testdata/sf0.01"
+
+
+def jobs_launched(spark, fn):
+    """``(fn(), number of Spark jobs it submitted from this thread)``."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc._jsc.sc().clearJobGroup()
+    # The status tracker is fed by the listener bus: drain it first.
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

@@ -6,7 +6,6 @@ building any dashboard query's DataFrame, launches no Spark job.
 """
 
 import os
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -16,7 +15,7 @@ from reddit_data_pipeline_engineering_spark import schemas
 from reddit_data_pipeline_engineering_spark.plans.queries import REGISTRY, queries
 from reddit_data_pipeline_engineering_spark.sources.tables import TABLE_NAMES, load_table
 
-from .conftest import SF_MEDIUM, SF_SMALL
+from .conftest import SF_MEDIUM, SF_SMALL, jobs_launched
 
 SF_DIRS = (SF_SMALL, SF_MEDIUM, os.path.join(os.path.dirname(SF_SMALL), "sf0.1"))
 
@@ -35,20 +34,6 @@ DASHBOARD = (
 )
 
 
-def _jobs_launched(spark, fn):
-    """``(fn(), number of Spark jobs it submitted from this thread)``."""
-    sc = spark.sparkContext
-    group = f"pin-check-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        result = fn()
-    finally:
-        sc._jsc.sc().clearJobGroup()
-    # The status tracker is fed by the listener bus: drain it first.
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("sf_dir", SF_DIRS, ids=os.path.basename)
 def test_every_table_is_pinned(sf_dir):
     on_disk = {f.removesuffix(".parquet") for f in os.listdir(sf_dir)}
@@ -64,7 +49,7 @@ def test_pinned_schema_matches_inference(spark, sf_dir, name):
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS, ids=os.path.basename)
 def test_load_table_launches_no_job(spark, sf_dir):
-    dfs, jobs = _jobs_launched(
+    dfs, jobs = jobs_launched(
         spark, lambda: [load_table(spark, sf_dir, n) for n in TABLE_NAMES]
     )
     assert jobs == 0
@@ -74,7 +59,7 @@ def test_load_table_launches_no_job(spark, sf_dir):
 @pytest.mark.parametrize("name", DASHBOARD)
 def test_dashboard_query_builds_without_jobs(spark, name):
     queries()  # force registration
-    _, jobs = _jobs_launched(spark, lambda: REGISTRY[name].fn(spark, SF_SMALL))
+    _, jobs = jobs_launched(spark, lambda: REGISTRY[name].fn(spark, SF_SMALL))
     assert jobs == 0
 
 
