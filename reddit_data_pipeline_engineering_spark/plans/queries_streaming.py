@@ -1,37 +1,42 @@
-"""Streaming kernel as a driver-registry query.
+"""Structured Streaming queries of the query registry.
 
-Materializes a raw NDJSON zone from the events table, drains it through
-the Structured Streaming marts kernel (watermarked cross-batch dedup,
-windowed static pivot, stream-static broadcast enrich, checkpointed
-parquet sink), and returns the sink contents.
+Each query stages a deterministic slice of the events table as an NDJSON
+raw zone, drains a streaming plan over it with ``availableNow`` into a
+checkpointed parquet sink, and returns the sink or a rollup of it. One
+private harness, :func:`_drain`, built from ``streaming/kernel.py``
+(``read_raw_stream``, ``write_marts_stream``, ``run_scaled_drain``),
+does the staging, the stream read, the sink and the drain for every
+query; a query says only what to stage and what to build on the stream.
+The stream schema is the staged frame's own schema. Two staging shapes:
 
-Both queries carry REAL ``oracle_sql`` entries even though the stateful
-EXECUTION is not SQL-expressible — the final RELATIONS are:
+- **one batch** (marts kernel, sessions, interval joins, HLL, window
+  top-k, point-in-time enrich): the slice drains as ONE micro-batch.
+  The watermarked queries append far-future sentinel rows, whose event
+  time closes every real window, session or join interval before the
+  drain stops; the sink read drops them.
+- **several batches** (the applyInPandasWithState folds and the dedup):
+  each batch is one file, drained by its own trigger in order, so the
+  answer depends on state carried across triggers.
 
-- the marts kernel's drained output is the windowed decimal-exact pivot
-  + broadcast enrich of a deterministic input slice (the availableNow
-  drain with a far-future sentinel closes every real window; the dedup
-  stage is vacuous on this dataset — zero duplicate
-  (user_id, ts, event_type) keys at every sf, verified — so the oracle
-  models it as a plain aggregate);
-- the EMA recurrence folds per-key in (batch, ts, value) order, which
-  DuckDB replays exactly with a sequential ``list_reduce`` over the
-  per-key value sequence — same left-to-right IEEE float64 fold the
-  pandas loop performs. (Ordering among equal (ts, value) rows cannot
-  change the value sequence, so both engines emit the same multiset.)
-
-The batch-equivalence property is additionally asserted in
-tests/test_streaming.py::test_streaming_matches_batch.
+Every query carries a REAL ``oracle_sql`` even though the stateful
+EXECUTION is not SQL-expressible — the final RELATIONS are: a windowed
+aggregate, join or session relation is the batch relation of the same
+slice once the sentinel has closed it; an order-dependent fold (EMA,
+CUSUM, TWA) is replayed in the fold's own (batch, ts, value) order; an
+order-independent fold (KMV, medians) is replayed per batch prefix. Each
+oracle's comment below says how. The batch-equivalence property is
+additionally asserted in tests/test_streaming.py.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from reddit_data_pipeline_engineering_spark.config import EVENT_TYPES
 from reddit_data_pipeline_engineering_spark.plans.queries import (
@@ -40,15 +45,79 @@ from reddit_data_pipeline_engineering_spark.plans.queries import (
     query,
 )
 from reddit_data_pipeline_engineering_spark.sources.tables import load_table
-from reddit_data_pipeline_engineering_spark.streaming.kernel import (
-    read_raw_stream,
-    run_scaled_drain,
-    streaming_marts,
-    write_marts_stream,
-)
+from reddit_data_pipeline_engineering_spark.streaming import kernel
 from reddit_data_pipeline_engineering_spark.streaming.pit import (
     pit_enrich_stream,
 )
+
+# Staged bytes per state partition for the applyInPandasWithState folds
+# (kernel.scaled_state_partition_count; the kernel default is 1 MiB).
+# Per-row pandas cost dominates a fold and each partition holds only ONE
+# state store, so the fold wants more partitions than the fixed store
+# cost alone would pick: at 1 MiB the EMA fold ran on one partition and
+# took 9.8 s (OPTIMIZATION_r11.md).
+_FOLD_TARGET_BYTES = 32 << 10
+
+_SENTINEL_TS = "2030-01-01T00:00:00.000000"
+_EPOCH = "TIMESTAMP_NTZ'1970-01-01 00:00:00'"
+
+
+def _drain(
+    spark: SparkSession,
+    batches: list[DataFrame],
+    build,
+    target_bytes: int | None = None,
+) -> DataFrame:
+    """Stage ``batches`` as a raw zone, drain ``build(stream)`` into a
+    checkpointed parquet sink, and return ``spark.read.parquet(sink)``.
+
+    The stream reads the staged files with the first batch's schema (all
+    batches share it). The staging shape follows the batch count:
+
+    - one batch is written as is and drains as ONE micro-batch:
+      ``maxFilesPerTrigger`` stays far above any part-file count. If the
+      source ever split the drain, a far-future sentinel landing in an
+      early batch would advance the watermark and silently drop the
+      remaining real events as late.
+    - several batches are written one file each, with increasing pinned
+      mtimes, and drain one file per trigger in that order.
+
+    ``target_bytes`` sizes the stateful shuffle from the staged bytes
+    (kernel.run_scaled_drain). Only the sink outlives the call: the raw
+    zone, the staging files and the checkpoint are removed after the
+    drain.
+    """
+    tmp = tempfile.mkdtemp(prefix="rdpe_stream_")
+    sink, work = os.path.join(tmp, "sink"), os.path.join(tmp, "work")
+    raw, ckpt = os.path.join(work, "raw"), os.path.join(work, "ckpt")
+    try:
+        if len(batches) == 1:
+            batches[0].write.json(raw)
+            per_trigger = 1_000_000
+        else:
+            os.makedirs(raw)
+            for i, batch in enumerate(batches):
+                stage = os.path.join(work, f"stage{i}")
+                batch.coalesce(1).write.json(stage)
+                (part,) = glob.glob(os.path.join(stage, "part-*.json"))
+                path = os.path.join(raw, f"b{i}.json")
+                os.rename(part, path)
+                os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+            per_trigger = 1
+        stream = kernel.read_raw_stream(
+            spark, raw, batches[0].schema, max_files_per_trigger=per_trigger
+        )
+        out = build(stream)
+        kernel.run_scaled_drain(
+            spark,
+            raw,
+            lambda: kernel.write_marts_stream(out, sink, ckpt),
+            target_bytes=target_bytes,
+        )
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    return spark.read.parquet(sink)
+
 
 def _with_min_ts(ev: DataFrame) -> DataFrame:
     """Attach the global ``min(ts)`` as a broadcast 1-row scalar column
@@ -58,20 +127,66 @@ def _with_min_ts(ev: DataFrame) -> DataFrame:
     return ev.crossJoin(F.broadcast(ev.agg(F.min("ts").alias("t0"))))
 
 
-_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType(), True),
-        T.StructField("user_id", T.LongType(), True),
-        T.StructField("ts", T.StringType(), True),
-        T.StructField("event_type", T.StringType(), True),
-        T.StructField("value", T.DoubleType(), True),
+def _event_slice(spark: SparkSession, sf_dir: str, days: int) -> DataFrame:
+    """Events of the first ``days`` days, ``[t0, t0 + days)``, with ``t0``
+    attached (see :func:`_with_min_ts`)."""
+    ev = _with_min_ts(load_table(spark, sf_dir, "events"))
+    return ev.filter(F.col("ts") < F.col("t0") + F.expr(f"INTERVAL {days} DAYS"))
+
+
+def _fold_drain(
+    spark: SparkSession, sf_dir: str, non_null: str, cols, build
+) -> DataFrame:
+    """Drain a stateful fold over the first day's events with a non-null
+    ``non_null``, staged as two 12-hour batches of ``cols``: the second
+    batch folds onto the state the first one left."""
+    day = _event_slice(spark, sf_dir, 1).filter(F.col(non_null).isNotNull())
+    cut = F.col("t0") + F.expr("INTERVAL 12 HOURS")
+    halves = [
+        day.filter(cond).select(*cols)
+        for cond in (F.col("ts") < cut, F.col("ts") >= cut)
     ]
-)
+    return _drain(spark, halves, build, _FOLD_TARGET_BYTES)
+
+
+def _with_sentinels(frame: DataFrame, *rows) -> DataFrame:
+    """``frame`` plus far-future ``rows`` in ``frame``'s own schema."""
+    return frame.union(frame.sparkSession.createDataFrame(list(rows), frame.schema))
+
+
+def _ts_text():
+    """``ts`` staged as microsecond ISO text; :func:`_parse_ts` reads it
+    back as a session-time ``timestamp``."""
+    return F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts")
+
+
+def _parse_ts(stream: DataFrame) -> DataFrame:
+    return stream.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def _ts_micros():
+    """``ts`` staged as epoch micros (long) against the TIMESTAMP_NTZ
+    epoch; :func:`_from_micros` decodes it — no string parsing, no
+    session-timezone dependence."""
+    return F.expr(f"timestampdiff(MICROSECOND, {_EPOCH}, ts)").alias("ts_us")
+
+
+def _from_micros(stream: DataFrame) -> DataFrame:
+    return stream.withColumn(
+        "ts", F.expr(f"timestampadd(MICROSECOND, ts_us, {_EPOCH})")
+    ).drop("ts_us")
+
+
+def _events_text(frame: DataFrame) -> DataFrame:
+    return frame.select("event_id", "user_id", _ts_text(), "event_type", "value")
 
 
 # Hourly tumbling window via epoch arithmetic (same idiom as the
 # time_bucket oracle); the decimal-exact pivot columns come from the
 # shared _pivot_cols_sql so Spark and SQL stay mirrored by construction.
+# The kernel's dedup stage is vacuous on this dataset — zero duplicate
+# (user_id, ts, event_type) keys at every sf, verified — so the oracle
+# models it as a plain aggregate.
 _STREAM_KERNEL_ORACLE = f"""
 WITH week AS (
   SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type, value
@@ -109,58 +224,37 @@ LEFT JOIN customer c ON CAST(c.c_custkey AS VARCHAR) = CAST(w.user_id AS VARCHAR
     tags=("streaming", "kernel"),
 )
 def q_streaming_marts_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    # First week of events keeps the raw-zone materialization cheap at any
-    # sf; the sentinel (far-future event) advances the watermark so every
-    # real window is emitted before the availableNow drain stops.
-    week = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 7 DAYS")
-    ).select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
-        "event_type",
-        "value",
-    )
-    sentinel = spark.createDataFrame(
-        [(-1, -1, "2030-01-01T00:00:00.000000", "sentinel", 0.0)], _STREAM_SCHEMA
-    )
-
-    tmp = tempfile.mkdtemp(prefix="rdpe_streamq_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    week.unionByName(sentinel).write.mode("overwrite").json(raw)
-
-    # Pin the availableNow drain to ONE micro-batch (maxFilesPerTrigger
-    # far above any part-file count): if the source ever split the drain,
-    # a far-future sentinel landing in an early batch would advance the
-    # watermark and silently drop the remaining real events as late.
-    stream = read_raw_stream(
-        spark, raw, _STREAM_SCHEMA, max_files_per_trigger=1_000_000
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    # First week of events keeps the raw-zone materialization cheap at any sf.
+    week = _events_text(_event_slice(spark, sf_dir, 7))
     cust = load_table(spark, sf_dir, "customer")
-    wide = streaming_marts(
-        stream,
-        cust,
-        entity_col="user_id",
-        ts_col="ts",
-        param_col="event_type",
-        value_col="value",
-        param_values=list(EVENT_TYPES),
-        dim_key="c_custkey",
-        dim_cols={"city_name": "c_name", "mktsegment": "c_mktsegment"},
-        watermark="2 hours",
-        window_duration="1 hour",
-        exact_decimal=DEC_VALUE,
+    sink = _drain(
+        spark,
+        [_with_sentinels(week, (-1, -1, _SENTINEL_TS, "sentinel", 0.0))],
+        lambda stream: kernel.streaming_marts(
+            _parse_ts(stream),
+            cust,
+            entity_col="user_id",
+            ts_col="ts",
+            param_col="event_type",
+            value_col="value",
+            param_values=list(EVENT_TYPES),
+            dim_key="c_custkey",
+            dim_cols={"city_name": "c_name", "mktsegment": "c_mktsegment"},
+            watermark="2 hours",
+            window_duration="1 hour",
+            exact_decimal=DEC_VALUE,
+        ),
     )
-    run_scaled_drain(spark, raw, lambda: write_marts_stream(wide, out, ckpt))
-    return spark.read.parquet(out).filter(F.col("location_id") != "-1")
+    return sink.filter(F.col("location_id") != "-1")
 
 
 # The recurrence replayed in SQL: per-user value sequence in the exact
 # fold order (micro-batch, then (ts, value) within a batch), prefix-folded
 # with a sequential list_reduce — the same left-to-right float64 ops as
 # the pandas loop, so EMAs are bit-identical. The lambda mirrors
-# `a*v + (1.0-a)*ema` with a=0.3 literally.
+# `a*v + (1.0-a)*ema` with a=0.3 literally. (Ordering among equal
+# (ts, value) rows cannot change the value sequence, so both engines emit
+# the same multiset.)
 _EMA_ORACLE = """
 WITH bounds AS (
   SELECT MIN(CAST(ts AS TIMESTAMP)) AS t0 FROM events
@@ -203,62 +297,13 @@ def q_stateful_ema_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         ema_stream,
     )
 
-    import glob
-
-    ev = load_table(spark, sf_dir, "events")
-    day = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 1 DAYS")
-    ).filter(F.col("value").isNotNull())
-    tmp = tempfile.mkdtemp(prefix="rdpe_emaq_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    os.makedirs(raw)
-    # Two time-split micro-batch files built with SPARK writes (no rows
-    # ever reach the driver — the fold operator sorts by ts within each
-    # batch, so only the file split matters): first/second 12 hours of
-    # the day, each written as one JSON part and moved into the raw zone
-    # with a pinned mtime so maxFilesPerTrigger=1 drains them in order
-    # and the query itself exercises cross-batch state carry.
-    cut = F.col("t0") + F.expr("INTERVAL 12 HOURS")
-    for i, cond in enumerate(
-        (F.col("ts") < cut, F.col("ts") >= cut)
-    ):
-        stage = os.path.join(tmp, f"stage{i}")
-        (
-            day.filter(cond)
-            .select(
-                "user_id",
-                F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias(
-                    "ts"
-                ),
-                "value",
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .json(stage)
-        )
-        (part,) = glob.glob(os.path.join(stage, "part-*.json"))
-        p = os.path.join(raw, f"b{i}.json")
-        os.rename(part, p)
-        os.utime(p, (1700000000 + i, 1700000000 + i))
-
-    stream = (
-        spark.readStream.format("json")
-        .schema("user_id long, ts string, value double")
-        .option("maxFilesPerTrigger", "1")
-        .load(raw)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
+    return _fold_drain(
+        spark,
+        sf_dir,
+        "value",
+        ("user_id", _ts_text(), "value"),
+        lambda s: ema_stream(_parse_ts(s), "user_id", "ts", "value", alpha=0.3),
     )
-    q = lambda: (
-        ema_stream(stream, "user_id", "ts", "value", alpha=0.3)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    run_scaled_drain(spark, raw, q, target_bytes=32 << 10)
-    return spark.read.parquet(out)
 
 
 # Streaming sessionization replayed in SQL: Spark's session_window merges
@@ -307,40 +352,15 @@ GROUP BY user_id, sid
     tags=("streaming", "stateful"),
 )
 def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from reddit_data_pipeline_engineering_spark.streaming.kernel import (
-        sessionize_stream,
+    week = _events_text(_event_slice(spark, sf_dir, 7))
+    sink = _drain(
+        spark,
+        [_with_sentinels(week, (-1, -1, _SENTINEL_TS, "sentinel", 0.0))],
+        lambda s: kernel.sessionize_stream(
+            _parse_ts(s), "user_id", "ts", gap="30 minutes", watermark="2 hours"
+        ),
     )
-
-    ev = load_table(spark, sf_dir, "events")
-    week = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 7 DAYS")
-    ).select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
-        "event_type",
-        "value",
-    )
-    sentinel = spark.createDataFrame(
-        [(-1, -1, "2030-01-01T00:00:00.000000", "sentinel", 0.0)],
-        _STREAM_SCHEMA,
-    )
-    tmp = tempfile.mkdtemp(prefix="rdpe_sessq_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    week.unionByName(sentinel).write.mode("overwrite").json(raw)
-
-    # Pin the availableNow drain to ONE micro-batch (maxFilesPerTrigger
-    # far above any part-file count): if the source ever split the drain,
-    # a far-future sentinel landing in an early batch would advance the
-    # watermark and silently drop the remaining real events as late.
-    stream = read_raw_stream(
-        spark, raw, _STREAM_SCHEMA, max_files_per_trigger=1_000_000
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    sessions = sessionize_stream(
-        stream, "user_id", "ts", gap="30 minutes", watermark="2 hours"
-    )
-    run_scaled_drain(spark, raw, lambda: write_marts_stream(sessions, out, ckpt))
-    return spark.read.parquet(out).filter(F.col("user_id") != -1)
+    return sink.filter(F.col("user_id") != -1)
 
 
 # Stream-stream interval join replayed in SQL: the drained inner-join
@@ -372,65 +392,42 @@ FROM e JOIN c ON e.user_id = c.user_id
 def _interval_join_query(
     spark: SparkSession, sf_dir: str, how: str
 ) -> DataFrame:
-    from reddit_data_pipeline_engineering_spark.streaming.kernel import (
-        stream_stream_interval_join,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    week = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 7 DAYS")
-    ).select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
-        "event_type",
-        "value",
-    )
+    week = _events_text(_event_slice(spark, sf_dir, 7))
     # One sentinel PER SIDE: each filtered stream needs its own
     # max-event-time row to advance its watermark past every real pair.
-    sentinels = spark.createDataFrame(
-        [
-            (-1, -1, "2030-01-01T00:00:00.000000", "error", 0.0),
-            (-2, -1, "2030-01-01T00:00:00.000000", "click", 0.0),
-        ],
-        _STREAM_SCHEMA,
+    staged = _with_sentinels(
+        week,
+        (-1, -1, _SENTINEL_TS, "error", 0.0),
+        (-2, -1, _SENTINEL_TS, "click", 0.0),
     )
-    tmp = tempfile.mkdtemp(prefix="rdpe_ssjq_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    week.unionByName(sentinels).write.mode("overwrite").json(raw)
 
-    # Pin the availableNow drain to ONE micro-batch (maxFilesPerTrigger
-    # far above any part-file count): if the source ever split the drain,
-    # a far-future sentinel landing in an early batch would advance the
-    # watermark and silently drop the remaining real events as late.
-    stream = read_raw_stream(
-        spark, raw, _STREAM_SCHEMA, max_files_per_trigger=1_000_000
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    left = stream.filter(F.col("event_type") == "error").select(
-        "user_id",
-        F.col("event_id").alias("error_id"),
-        F.col("ts").alias("error_ts"),
-    )
-    right = stream.filter(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-        F.col("value").alias("click_value"),
-    )
-    joined = stream_stream_interval_join(
-        left, right, key="user_id", left_ts="error_ts",
-        right_ts="click_ts", watermark="2 hours", within="24 hours",
-        how=how,
-    ).select(
-        F.col("l.user_id").alias("user_id"),
-        "error_id",
-        "error_ts",
-        "click_id",
-        "click_ts",
-        "click_value",
-    )
-    run_scaled_drain(spark, raw, lambda: write_marts_stream(joined, out, ckpt))
-    return spark.read.parquet(out).filter(F.col("user_id") != -1)
+    def build(stream):
+        stream = _parse_ts(stream)
+        left = stream.filter(F.col("event_type") == "error").select(
+            "user_id",
+            F.col("event_id").alias("error_id"),
+            F.col("ts").alias("error_ts"),
+        )
+        right = stream.filter(F.col("event_type") == "click").select(
+            "user_id",
+            F.col("event_id").alias("click_id"),
+            F.col("ts").alias("click_ts"),
+            F.col("value").alias("click_value"),
+        )
+        return kernel.stream_stream_interval_join(
+            left, right, key="user_id", left_ts="error_ts",
+            right_ts="click_ts", watermark="2 hours", within="24 hours",
+            how=how,
+        ).select(
+            F.col("l.user_id").alias("user_id"),
+            "error_id",
+            "error_ts",
+            "click_id",
+            "click_ts",
+            "click_value",
+        )
+
+    return _drain(spark, [staged], build).filter(F.col("user_id") != -1)
 
 
 @query(
@@ -524,64 +521,20 @@ def q_streaming_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         cusum_stream,
     )
 
-    import glob
-
-    ev = load_table(spark, sf_dir, "events")
-    day = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 1 DAYS")
-    ).filter(F.col("value").isNotNull())
-    tmp = tempfile.mkdtemp(prefix="rdpe_cusumq_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    os.makedirs(raw)
-    # Two time-split micro-batch files, pinned mtimes so
-    # maxFilesPerTrigger=1 drains them in order (cross-batch state carry
-    # is exercised by construction — same staging as the EMA query).
-    cut = F.col("t0") + F.expr("INTERVAL 12 HOURS")
-    for i, cond in enumerate((F.col("ts") < cut, F.col("ts") >= cut)):
-        stage = os.path.join(tmp, f"stage{i}")
-        (
-            day.filter(cond)
-            .select(
-                "user_id",
-                F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias(
-                    "ts"
-                ),
-                "value",
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .json(stage)
-        )
-        (part,) = glob.glob(os.path.join(stage, "part-*.json"))
-        p = os.path.join(raw, f"b{i}.json")
-        os.rename(part, p)
-        os.utime(p, (1700000000 + i, 1700000000 + i))
-
-    stream = (
-        spark.readStream.format("json")
-        .schema("user_id long, ts string, value double")
-        .option("maxFilesPerTrigger", "1")
-        .load(raw)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    q = lambda: (
-        cusum_stream(
-            stream,
+    return _fold_drain(
+        spark,
+        sf_dir,
+        "value",
+        ("user_id", _ts_text(), "value"),
+        lambda s: cusum_stream(
+            _parse_ts(s),
             "user_id",
             "ts",
             "value",
             drift=_CUSUM_DRIFT,
             threshold=_CUSUM_THRESHOLD,
-        )
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
-    run_scaled_drain(spark, raw, q, target_bytes=32 << 10)
-    return spark.read.parquet(out)
 
 
 # --------------------------------------------------------------------------
@@ -665,50 +618,23 @@ ORDER BY c.window_start
     tags=("streaming", "sketch", "approx"),
 )
 def q_streaming_hll_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    week = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 7 DAYS")
-    ).select(
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
-    )
-    sentinel = spark.createDataFrame(
-        [(-1, "2030-01-01T00:00:00.000000")], "user_id long, ts string"
-    )
-    tmp = tempfile.mkdtemp(prefix="rdpe_hllq_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    week.unionByName(sentinel).write.mode("overwrite").json(raw)
+    week = _event_slice(spark, sf_dir, 7).select("user_id", _ts_text())
 
-    stream = (
-        spark.readStream.format("json")
-        .schema("user_id long, ts string")
-        .option("maxFilesPerTrigger", "1000000")  # single-batch drain
-        .load(raw)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "2 hours")
-    )
-    # Project the window first (event-time metadata rides the window
-    # struct), so the register builder can group by a plain column name.
-    swin = stream.select(F.window("ts", "1 hour").alias("window"), "user_id")
-    regs = _hll_registers(swin, "user_id", group_cols=("window",))
-    q = lambda: (
-        regs.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    run_scaled_drain(spark, raw, q)
+    def build(stream):
+        stream = _parse_ts(stream).withWatermark("ts", "2 hours")
+        # Project the window first (event-time metadata rides the window
+        # struct), so _hll_registers can group by a plain column name.
+        swin = stream.select(F.window("ts", "1 hour").alias("window"), "user_id")
+        return _hll_registers(swin, "user_id", group_cols=("window",))
+
     drained = (
-        spark.read.parquet(out)
+        _drain(spark, [_with_sentinels(week, (-1, _SENTINEL_TS))], build)
         .select(F.col("window.start").alias("window_start"), "bucket", "r")
         .filter(F.col("window_start") < F.lit("2029-01-01").cast("timestamp"))
     )
     sketch = drained.groupBy("window_start").agg(*_hll_sketch_aggs())
     exact = (
-        _with_min_ts(ev)
-        .filter(F.col("ts") < F.col("t0") + F.expr("INTERVAL 7 DAYS"))
+        _event_slice(spark, sf_dir, 7)
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.countDistinct("user_id").alias("exact_distinct"))
         .select(F.col("w.start").alias("window_start"), "exact_distinct")
@@ -727,7 +653,7 @@ def q_streaming_hll_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Cross-batch streaming dedup — dropDuplicatesWithinWatermark (§2.9).
 # The raw zone is written DOUBLED: the same one-day event slice lands as
-# two identical micro-batch files (maxFilesPerTrigger=1 -> two triggers),
+# two identical micro-batch files (one trigger each),
 # so every event_id arrives exactly twice, once per batch. The 48-hour
 # watermark exceeds the slice's 24-hour span, so batch 1's keys are all
 # still in state when batch 2 replays them — the dedup is therefore
@@ -764,53 +690,17 @@ FROM day GROUP BY event_type ORDER BY event_type
     tags=("streaming", "stateful"),
 )
 def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-
-    ev = load_table(spark, sf_dir, "events")
-    day = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 1 DAYS")
-    ).select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
-        "event_type",
-        "value",
+    day = _events_text(_event_slice(spark, sf_dir, 1))
+    # Two IDENTICAL micro-batch files: every event is a cross-batch duplicate.
+    sink = _drain(
+        spark,
+        [day, day],
+        lambda s: _parse_ts(s)
+        .withWatermark("ts", "48 hours")
+        .dropDuplicatesWithinWatermark(["event_id"]),
     )
-    tmp = tempfile.mkdtemp(prefix="rdpe_sdedupq_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    os.makedirs(raw)
-    # Two IDENTICAL micro-batch files: every event is a cross-batch
-    # duplicate (pinned mtimes drain them in order).
-    for i in (0, 1):
-        stage = os.path.join(tmp, f"stage{i}")
-        day.coalesce(1).write.mode("overwrite").json(stage)
-        (part,) = glob.glob(os.path.join(stage, "part-*.json"))
-        p = os.path.join(raw, f"b{i}.json")
-        os.rename(part, p)
-        os.utime(p, (1700000000 + i, 1700000000 + i))
-
-    stream = (
-        spark.readStream.format("json")
-        .schema(_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .load(raw)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    deduped = stream.withWatermark("ts", "48 hours").dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-    q = lambda: (
-        deduped.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    run_scaled_drain(spark, raw, q)
     return (
-        spark.read.parquet(out)
-        .groupBy("event_type")
+        sink.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_unique_events"),
             F.sum(F.when(F.col("value").isNotNull(), 1).otherwise(0))
@@ -849,19 +739,6 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # micro-batch resolves versions map-side; the returned relation is the
 # bounded per-(segment, version) rollup of the drained sink.
 # --------------------------------------------------------------------------
-
-# Staged-NDJSON schema for the PIT stream: ts is epoch micros (long),
-# decoded with timestamp_micros() after the read — no string parsing,
-# no session-timezone dependence.
-_PIT_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType(), True),
-        T.StructField("user_id", T.LongType(), True),
-        T.StructField("ts_us", T.LongType(), True),
-        T.StructField("event_type", T.StringType(), True),
-        T.StructField("value", T.DoubleType(), True),
-    ]
-)
 
 _PIT_STREAM_ORACLE = """
 WITH bounds AS (
@@ -929,30 +806,16 @@ def q_streaming_pit_enrich_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pit_enrich_drain(
     spark: SparkSession, sf_dir: str, max_broadcast_rows: int | None
 ) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    week = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 7 DAYS")
-    ).select(
-        "event_id",
-        "user_id",
-        F.expr(
-            "timestampdiff(MICROSECOND,"
-            " TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-        ).alias("ts_us"),
-        "event_type",
-        "value",
+    week = _event_slice(spark, sf_dir, 7).select(
+        "event_id", "user_id", _ts_micros(), "event_type", "value"
     )
-
-    tmp = tempfile.mkdtemp(prefix="rdpe_pitstream_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    week.write.mode("overwrite").json(raw)
 
     # Two-version SCD2 dimension, cut at t0 + 3 days (computed in-plan
     # from the same broadcast scalar the stream slice used).
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    t0 = ev.agg(F.min("ts").alias("t0"))
+    t0 = load_table(spark, sf_dir, "events").agg(F.min("ts").alias("t0"))
     base = cust.crossJoin(F.broadcast(t0)).withColumn(
         "cut", F.col("t0") + F.expr("INTERVAL 3 DAYS")
     )
@@ -983,19 +846,6 @@ def _pit_enrich_drain(
             )
         )
     )
-
-    stream = (
-        spark.readStream.format("json")
-        .schema(_PIT_STREAM_SCHEMA)
-        .load(raw)
-        .withColumn(
-            "ts",
-            F.expr(
-                "timestampadd(MICROSECOND, ts_us,"
-                " TIMESTAMP_NTZ'1970-01-01 00:00:00')"
-            ),
-        )
-    )
     # Dimension-size switch (VERDICT r06 #5): below the broadcast
     # threshold the dimension broadcasts (this scale); past it,
     # pit_enrich_stream tiles the SCD2 versions into (key, epoch-bucket)
@@ -1005,28 +855,23 @@ def _pit_enrich_drain(
     pit_kwargs = {}
     if max_broadcast_rows is not None:
         pit_kwargs["max_broadcast_rows"] = max_broadcast_rows
-    joined = pit_enrich_stream(
-        stream,
-        dim,
-        on="user_id",
-        ts_col="ts",
-        dim_rows=2 * cust.count(),
-        horizon_start="h_start",
-        horizon_end="h_end",
-        **pit_kwargs,
-    ).select("user_id", "value", "mktsegment", "version")
-    q = lambda: (
-        joined.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    dim_rows = 2 * cust.count()
+    sink = _drain(
+        spark,
+        [week],
+        lambda s: pit_enrich_stream(
+            _from_micros(s),
+            dim,
+            on="user_id",
+            ts_col="ts",
+            dim_rows=dim_rows,
+            horizon_start="h_start",
+            horizon_end="h_end",
+            **pit_kwargs,
+        ).select("user_id", "value", "mktsegment", "version"),
     )
-    run_scaled_drain(spark, raw, q)
     return (
-        spark.read.parquet(out)
-        .groupBy("mktsegment", "version")
+        sink.groupBy("mktsegment", "version")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.countDistinct("user_id").alias("n_users"),
@@ -1058,11 +903,10 @@ def _pit_enrich_drain(
 # Streaming time-weighted average (r07) — the third custom
 # applyInPandasWithState operator and the streaming twin of the batch
 # time_weighted_avg: per-(user, type) LOCF mass last_v * (t - last_t)
-# is an order-dependent recurrence over keyed state. Same two-file
-# drain as stateful_ema_stream (12h/12h split of the first day, pinned
-# mtimes, maxFilesPerTrigger=1) so the SECOND batch folds onto state
-# carried from the first — the cross-trigger carry is what the hash
-# verifies. Timestamps stage as EPOCH MICROS (long) against the
+# is an order-dependent recurrence over keyed state. Same two-batch
+# drain as stateful_ema_stream (_fold_drain), so the SECOND batch folds
+# onto state carried from the first — the cross-trigger carry is what
+# the hash verifies. Timestamps stage as EPOCH MICROS (long) against the
 # TIMESTAMP_NTZ epoch (the r07 streaming_pit_enrich lesson — instant-
 # exact in any session timezone). The oracle replays the float fold
 # bit-exactly with a struct-accumulator list_reduce over the per-key
@@ -1129,67 +973,19 @@ FROM ordered o JOIN seqs s USING (user_id, event_type)
     tags=("streaming", "stateful", "timeseries"),
 )
 def q_streaming_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-
     from reddit_data_pipeline_engineering_spark.streaming.stateful import (
         twa_stream,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    day = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 1 DAYS")
-    ).filter(F.col("value").isNotNull())
-    tmp = tempfile.mkdtemp(prefix="rdpe_twaq_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    os.makedirs(raw)
-    cut = F.col("t0") + F.expr("INTERVAL 12 HOURS")
-    for i, cond in enumerate((F.col("ts") < cut, F.col("ts") >= cut)):
-        stage = os.path.join(tmp, f"stage{i}")
-        (
-            day.filter(cond)
-            .select(
-                "user_id",
-                "event_type",
-                F.expr(
-                    "timestampdiff(MICROSECOND, "
-                    "TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-                ).alias("t_us"),
-                "value",
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .json(stage)
-        )
-        (part,) = glob.glob(os.path.join(stage, "part-*.json"))
-        p = os.path.join(raw, f"b{i}.json")
-        os.rename(part, p)
-        os.utime(p, (1700000000 + i, 1700000000 + i))
-
-    stream = (
-        spark.readStream.format("json")
-        .schema("user_id long, event_type string, t_us long, value double")
-        .option("maxFilesPerTrigger", "1")
-        .load(raw)
-        .withColumn(
-            "ts",
-            F.expr(
-                "timestampadd(MICROSECOND, t_us, "
-                "TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-            ),
-        )
-        .drop("t_us")
+    return _fold_drain(
+        spark,
+        sf_dir,
+        "value",
+        ("user_id", "event_type", _ts_micros(), "value"),
+        lambda s: twa_stream(
+            _from_micros(s), ("user_id", "event_type"), "ts", "value"
+        ),
     )
-    q = lambda: (
-        twa_stream(stream, ("user_id", "event_type"), "ts", "value")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    run_scaled_drain(spark, raw, q, target_bytes=32 << 10)
-    return spark.read.parquet(out)
 
 
 # --------------------------------------------------------------------------
@@ -1201,10 +997,9 @@ def q_streaming_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a SET operation, the result is arrival-order-independent — the one
 # stateful operator family whose cross-trigger carry a batch oracle
 # can replay EXACTLY (the EMA/CUSUM/TWA folds need the oracle to
-# replay the order; this one needs only the set). Same two-file drain
-# as stateful_ema_stream/streaming_twa (12h/12h split of the first
-# day, pinned mtimes, maxFilesPerTrigger=1): the batch_seq=2 rows
-# hash-prove that batch 2 folded onto state carried from batch 1.
+# replay the order; this one needs only the set). Same two-batch drain
+# as stateful_ema_stream/streaming_twa (_fold_drain): the batch_seq=2
+# rows hash-prove that batch 2 folded onto state carried from batch 1.
 # The oracle emits a (type, batch) row only for batches where the type
 # has data — applyInPandasWithState without timeouts invokes the fold
 # only for keys present in the micro-batch.
@@ -1261,51 +1056,18 @@ FROM sk ORDER BY event_type, batch_seq
     tags=("streaming", "stateful", "sketch"),
 )
 def q_streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-
     from reddit_data_pipeline_engineering_spark.streaming.stateful import (
         kmv_stream,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    day = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 1 DAYS")
-    ).filter(F.col("user_id").isNotNull())
-    tmp = tempfile.mkdtemp(prefix="rdpe_kmvq_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    os.makedirs(raw)
-    cut = F.col("t0") + F.expr("INTERVAL 12 HOURS")
-    for i, cond in enumerate((F.col("ts") < cut, F.col("ts") >= cut)):
-        stage = os.path.join(tmp, f"stage{i}")
-        (
-            day.filter(cond)
-            .select("event_type", "user_id")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .json(stage)
-        )
-        (part,) = glob.glob(os.path.join(stage, "part-*.json"))
-        p = os.path.join(raw, f"b{i}.json")
-        os.rename(part, p)
-        os.utime(p, (1700000000 + i, 1700000000 + i))
-
-    stream = (
-        spark.readStream.format("json")
-        .schema("event_type string, user_id long")
-        .option("maxFilesPerTrigger", "1")
-        .load(raw)
+    sink = _fold_drain(
+        spark,
+        sf_dir,
+        "user_id",
+        ("event_type", "user_id"),
+        lambda s: kmv_stream(s, "event_type", "user_id", k=8),
     )
-    q = lambda: (
-        kmv_stream(stream, "event_type", "user_id", k=8)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    run_scaled_drain(spark, raw, q, target_bytes=32 << 10)
-    return spark.read.parquet(out).orderBy("event_type", "batch_seq")
+    return sink.orderBy("event_type", "batch_seq")
 
 
 # --------------------------------------------------------------------------
@@ -1363,43 +1125,16 @@ ORDER BY window_start, rnk
 def q_streaming_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    ev = load_table(spark, sf_dir, "events")
-    week = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 7 DAYS")
-    ).select(
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
-    )
-    sentinel = spark.createDataFrame(
-        [(-1, "2030-01-01T00:00:00.000000")], "user_id long, ts string"
-    )
-    tmp = tempfile.mkdtemp(prefix="rdpe_topkq_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    week.unionByName(sentinel).write.mode("overwrite").json(raw)
-
-    stream = (
-        spark.readStream.format("json")
-        .schema("user_id long, ts string")
-        .option("maxFilesPerTrigger", "1000000")  # single-batch drain
-        .load(raw)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "2 hours")
-    )
-    counts = (
-        stream.groupBy(F.window("ts", "1 hour").alias("window"), "user_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-    )
-    q = lambda: (
-        counts.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    run_scaled_drain(spark, raw, q)
+    week = _event_slice(spark, sf_dir, 7).select("user_id", _ts_text())
     drained = (
-        spark.read.parquet(out)
+        _drain(
+            spark,
+            [_with_sentinels(week, (-1, _SENTINEL_TS))],
+            lambda s: _parse_ts(s)
+            .withWatermark("ts", "2 hours")
+            .groupBy(F.window("ts", "1 hour").alias("window"), "user_id")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_events")),
+        )
         .select(
             F.col("window.start").alias("window_start"),
             "user_id",
@@ -1485,56 +1220,25 @@ FROM med ORDER BY event_type, batch_seq
     tags=("streaming", "stateful"),
 )
 def q_streaming_running_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-
     from reddit_data_pipeline_engineering_spark.streaming.stateful import (
         median_stream,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    day = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 1 DAYS")
-    ).filter(F.col("value").isNotNull())
-    tmp = tempfile.mkdtemp(prefix="rdpe_medq_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    os.makedirs(raw)
-    cut = F.col("t0") + F.expr("INTERVAL 12 HOURS")
-    for i, cond in enumerate((F.col("ts") < cut, F.col("ts") >= cut)):
-        stage = os.path.join(tmp, f"stage{i}")
-        (
-            day.filter(cond)
-            .select(
-                "event_type",
-                F.expr(
-                    "CAST(CAST(value AS DECIMAL(14,4)) * 10000 AS BIGINT)"
-                ).alias("v4"),
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .json(stage)
-        )
-        (part,) = glob.glob(os.path.join(stage, "part-*.json"))
-        p = os.path.join(raw, f"b{i}.json")
-        os.rename(part, p)
-        os.utime(p, (1700000000 + i, 1700000000 + i))
+    return _median_drain(spark, sf_dir, median_stream)
 
-    stream = (
-        spark.readStream.format("json")
-        .schema("event_type string, v4 long")
-        .option("maxFilesPerTrigger", "1")
-        .load(raw)
+
+def _median_drain(spark: SparkSession, sf_dir: str, fold) -> DataFrame:
+    """Drain ``fold`` over the per-event_type value stream quantized to
+    the 1e-4 integer grid (v4)."""
+    v4 = F.expr("CAST(CAST(value AS DECIMAL(14,4)) * 10000 AS BIGINT)")
+    sink = _fold_drain(
+        spark,
+        sf_dir,
+        "value",
+        ("event_type", v4.alias("v4")),
+        lambda s: fold(s, "event_type", "v4"),
     )
-    q = lambda: (
-        median_stream(stream, "event_type", "v4")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    run_scaled_drain(spark, raw, q, target_bytes=32 << 10)
-    return spark.read.parquet(out).orderBy("event_type", "batch_seq")
+    return sink.orderBy("event_type", "batch_seq")
 
 
 # --------------------------------------------------------------------------
@@ -1618,53 +1322,8 @@ FROM med ORDER BY event_type, batch_seq
     tags=("streaming", "stateful", "sketch"),
 )
 def q_streaming_median_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-
     from reddit_data_pipeline_engineering_spark.streaming.stateful import (
         median_sketch_stream,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    day = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 1 DAYS")
-    ).filter(F.col("value").isNotNull())
-    tmp = tempfile.mkdtemp(prefix="rdpe_medsk_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    os.makedirs(raw)
-    cut = F.col("t0") + F.expr("INTERVAL 12 HOURS")
-    for i, cond in enumerate((F.col("ts") < cut, F.col("ts") >= cut)):
-        stage = os.path.join(tmp, f"stage{i}")
-        (
-            day.filter(cond)
-            .select(
-                "event_type",
-                F.expr(
-                    "CAST(CAST(value AS DECIMAL(14,4)) * 10000 AS BIGINT)"
-                ).alias("v4"),
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .json(stage)
-        )
-        (part,) = glob.glob(os.path.join(stage, "part-*.json"))
-        p = os.path.join(raw, f"b{i}.json")
-        os.rename(part, p)
-        os.utime(p, (1700000000 + i, 1700000000 + i))
-
-    stream = (
-        spark.readStream.format("json")
-        .schema("event_type string, v4 long")
-        .option("maxFilesPerTrigger", "1")
-        .load(raw)
-    )
-    q = lambda: (
-        median_sketch_stream(stream, "event_type", "v4")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    run_scaled_drain(spark, raw, q, target_bytes=32 << 10)
-    return spark.read.parquet(out).orderBy("event_type", "batch_seq")
+    return _median_drain(spark, sf_dir, median_sketch_stream)

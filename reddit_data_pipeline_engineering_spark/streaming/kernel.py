@@ -29,6 +29,7 @@ batch kernel, so the 100 TB partitioning story is unchanged.
 from __future__ import annotations
 
 import os
+import threading
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -292,6 +293,9 @@ def run_stream_to_completion(query, timeout_s: float = 120.0) -> None:
 # Staged bytes per stateful-shuffle partition (see below).
 STATE_TARGET_BYTES = 1 << 20
 
+# Guards the session's shuffle-partition conf for run_scaled_drain.
+_DRAIN_CONF_LOCK = threading.Lock()
+
 
 def scaled_state_partition_count(
     spark: SparkSession, staged_path: str, target_bytes: int | None = None
@@ -353,13 +357,19 @@ def run_scaled_drain(
     prior conf value is restored after the drain completes — the drain is
     awaited inside the scope, so no concurrently *running* micro-batch
     can observe the restore.
+
+    Drains are serialized by a process-wide lock held over set -> drain
+    -> restore: otherwise a drain that starts while another runs saves
+    that drain's count as its prior value and, finishing last, leaves the
+    session at it.
     """
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(scaled_state_partition_count(spark, staged_path, target_bytes)),
-    )
-    try:
-        run_stream_to_completion(start_query(), timeout_s)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    with _DRAIN_CONF_LOCK:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set(
+            "spark.sql.shuffle.partitions",
+            str(scaled_state_partition_count(spark, staged_path, target_bytes)),
+        )
+        try:
+            run_stream_to_completion(start_query(), timeout_s)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)

@@ -14,9 +14,13 @@ stay inside each case; the parametrized tests re-raise the recorded
 outcome, preserving per-test reporting.
 """
 
+import ast
 import json
 import os
+import tempfile
+import threading
 from concurrent.futures import ThreadPoolExecutor
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
@@ -26,11 +30,14 @@ from reddit_data_pipeline_engineering_spark.schemas import RAW_MEASUREMENT
 from reddit_data_pipeline_engineering_spark.sources.raw_zone import read_raw_zone
 from reddit_data_pipeline_engineering_spark.streaming.kernel import (
     read_raw_stream,
+    run_scaled_drain,
     run_stream_to_completion,
     sessionize_stream,
     streaming_marts,
     write_marts_stream,
 )
+
+from .conftest import SF_SMALL
 
 PARAMS = ["pm25", "pm10", "no2"]
 
@@ -1098,12 +1105,9 @@ def test_scaled_state_partition_count(spark, tmp_path):
 
 def test_run_scaled_drain_sets_and_restores_conf(spark, tmp_path):
     """The drain runs under the derived partition count and the prior
-    session conf is restored afterwards (bench runs queries sequentially,
-    so restore-after-await is exact there)."""
-    from reddit_data_pipeline_engineering_spark.streaming.kernel import (
-        run_scaled_drain,
-    )
-
+    session conf is restored afterwards. Restore-after-await is exact
+    even when drains overlap, because run_scaled_drain serializes them
+    (see test_run_scaled_drain_serializes_overlapping_drains)."""
     staged = tmp_path / "raw"
     staged.mkdir()
     (staged / "a.json").write_bytes(b"x" * (2 * (1 << 20)))
@@ -1118,3 +1122,123 @@ def test_run_scaled_drain_sets_and_restores_conf(spark, tmp_path):
     run_scaled_drain(spark, str(staged), lambda: _Done())
     assert seen["during"] == "2"  # 2 MiB / 1 MiB target
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+def test_run_scaled_drain_serializes_overlapping_drains(spark, tmp_path):
+    """Two drains overlapping on one session each run under their own
+    partition count, and the session conf is back at its prior value
+    once both are done. Unserialized, the drain that finished last
+    restored the count the other drain had set."""
+    staged = {}
+    for name, mib in (("a", 2), ("b", 3)):
+        (tmp_path / name).mkdir()
+        (tmp_path / name / "x.json").write_bytes(b"x" * (mib << 20))
+        staged[name] = str(tmp_path / name)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    assert prev not in ("2", "3")
+    a_draining, b_draining, a_done = (threading.Event() for _ in range(3))
+    seen = {}
+
+    class _Query:
+        """Records the conf it drains under, signals ``started``, then
+        stays draining until ``wait_for`` is set or ``wait_s`` passes."""
+
+        def __init__(self, name, started, wait_for, wait_s):
+            self.name, self.started = name, started
+            self.wait_for, self.wait_s = wait_for, wait_s
+
+        def awaitTermination(self, timeout_s):
+            seen[self.name] = spark.conf.get("spark.sql.shuffle.partitions")
+            self.started.set()
+            self.wait_for.wait(timeout=self.wait_s)
+            return True
+
+    def drain_a():
+        # Waits (at most 1 s) for drain b to start inside it.
+        query = _Query("a", a_draining, b_draining, 1)
+        run_scaled_drain(spark, staged["a"], lambda: query)
+        a_done.set()
+
+    def drain_b():
+        # Starts while a drains, and outlasts it.
+        a_draining.wait(timeout=30)
+        query = _Query("b", b_draining, a_done, 30)
+        run_scaled_drain(spark, staged["b"], lambda: query)
+
+    threads = [threading.Thread(target=f) for f in (drain_a, drain_b)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    assert not any(t.is_alive() for t in threads)
+    assert seen == {"a": "2", "b": "3"}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+def test_streaming_queries_leave_only_the_sink(spark, tmp_path, monkeypatch):
+    """A streaming registry query leaves only its parquet sink on disk:
+    the raw zone, the staging files and the checkpoint are removed once
+    the drain returns, for one-batch and several-batch staging alike,
+    and the returned frame still reads the sink."""
+    from reddit_data_pipeline_engineering_spark.plans.queries import (
+        REGISTRY,
+        queries,
+    )
+
+    queries()  # force registration
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for name in ("streaming_window_topk", "streaming_kmv_distinct"):
+        before = set(os.listdir(tmp_path))
+        df = REGISTRY[name].fn(spark, SF_SMALL)
+        (made,) = set(os.listdir(tmp_path)) - before
+        left = os.listdir(tmp_path / made)
+        assert len(left) == 1, (name, sorted(left))
+        sink = str(tmp_path / made / left[0])
+        assert df.count() > 0
+        assert all(
+            urlparse(f).path.startswith(sink + os.sep) for f in df.inputFiles()
+        ), name
+
+
+def test_streaming_queries_share_one_drain_harness():
+    """Regrowth guard for plans/queries_streaming.py: only ``_drain``
+    creates the temp dir, pins file mtimes, opens the stream, starts the
+    sink and runs the drain, and no stream schema is written by hand —
+    each stream reads its staged frame's own schema."""
+    from reddit_data_pipeline_engineering_spark.plans import queries_streaming
+
+    with open(queries_streaming.__file__) as f:
+        tree = ast.parse(f.read())
+    scaffold = {
+        "mkdtemp", "utime", "readStream", "writeStream",
+        "read_raw_stream", "write_marts_stream", "run_scaled_drain",
+    }
+
+    def names(node):
+        for sub in ast.walk(node):
+            if isinstance(sub, ast.Attribute):
+                yield sub.attr, sub.lineno
+            elif isinstance(sub, ast.Name):
+                yield sub.id, sub.lineno
+
+    outside = [
+        (name, line)
+        for node in tree.body
+        if not (isinstance(node, ast.FunctionDef) and node.name == "_drain")
+        for name, line in names(node)
+        if name in scaffold
+    ]
+    assert not outside, f"scaffold outside _drain: {outside}"
+    assert not [n for n in names(tree) if n[0] == "StructType"]
+    ddl = [
+        call.lineno
+        for call in ast.walk(tree)
+        if isinstance(call, ast.Call)
+        and isinstance(call.func, ast.Attribute)
+        and call.func.attr in ("schema", "createDataFrame")
+        and any(
+            isinstance(a, ast.Constant) and isinstance(a.value, str)
+            for a in [*call.args, *(k.value for k in call.keywords)]
+        )
+    ]
+    assert not ddl, f"hand-written DDL schema at lines {ddl}"
