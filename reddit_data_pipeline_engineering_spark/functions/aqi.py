@@ -1,27 +1,27 @@
-"""EPA AQI as native column expressions — the reference's unshipped plan.
+"""EPA AQI as one SQL expression string — the reference's unshipped plan.
 
 Reference: ``doc/archive/AQI Calculation Implementation Plan.md`` specified
 three row-at-a-time Python UDFs (aqi, dominant_pollutant, aqi_level) that
 were never implemented (``glue_jobs/aqi_calculator.py`` does not exist —
-SURVEY.md §2.10). The engine implements the same semantics as pure
-``when()/greatest()`` expression chains over the EPA breakpoint table:
-Catalyst-optimizable, whole-stage-codegen'd, zero serialization cost — the
-right shape for a 100 TB scan.
+SURVEY.md §2.10). The engine implements the same semantics as CASE /
+GREATEST expressions over the EPA breakpoint table: Catalyst-optimizable,
+whole-stage-codegen'd, zero serialization cost — the right shape for a
+100 TB scan.
 
 Edge-case contract (plan lines 69-73): missing pollutants -> AQI from the
 available ones; all-null -> NULL AQI + 'Unknown' level; negative values
 skipped (treated as missing); > 500 uncapped (last bracket's line
 extrapolates).
 
-Both a Spark ``Column`` and an equivalent ANSI-SQL string are generated
-from the *same* breakpoint table, so oracle verification checks the exact
-expression semantics, not a reimplementation.
+Each quantity is written once, as a SQL string. Spark parses it
+(``selectExpr``/``F.expr``) and the DuckDB oracle runs the same text, so
+oracle verification checks the exact expression, not a reimplementation.
+The string is portable because every number in it is a DOUBLE literal in
+both engines (see :func:`_dbl`) and the string type is ``STRING`` (Spark
+rejects a size-less ``VARCHAR``).
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # pollutant -> [(C_lo, C_hi, I_lo, I_hi)], EPA 2012/2018 tables as cited in
 # the reference plan (breakpoints table, plan lines 41-49).
@@ -66,90 +66,61 @@ LEVELS = [
 HAZARDOUS = "Hazardous"
 
 
-def _linear(c: Column, lo: float, hi: float, ilo: int, ihi: int) -> Column:
-    # Mirrors sql_subindex term-for-term so Spark and DuckDB produce
-    # bit-identical doubles.
-    return (
-        (F.lit(float(ihi)) - F.lit(float(ilo)))
-        / (F.lit(hi) - F.lit(lo))
-        * (c - F.lit(lo))
-        + F.lit(float(ilo))
-    )
+def _dbl(x: float) -> str:
+    """``x`` as a literal that Spark SQL and DuckDB both type as DOUBLE.
 
-
-def subindex(col: Column | str, pollutant: str) -> Column:
-    """Per-pollutant AQI sub-index; NULL for null/negative concentration."""
-    c = (F.col(col) if isinstance(col, str) else col).cast("double")
-    bps = BREAKPOINTS[pollutant]
-    expr = F.when(c.isNull() | (c < 0), F.lit(None).cast("double"))
-    for lo, hi, ilo, ihi in bps[:-1]:
-        expr = expr.when(c <= F.lit(hi), _linear(c, lo, hi, ilo, ihi))
-    lo, hi, ilo, ihi = bps[-1]
-    return expr.otherwise(_linear(c, lo, hi, ilo, ihi))  # >500 uncapped
+    A bare ``12.0`` is DECIMAL in both engines, and they then disagree on
+    a bracket slope: Spark evaluates ``(50.0 - 0.0) / (12.0 - 0.0)`` as
+    ``decimal(10,6)`` 4.166667, DuckDB as the double 4.166666666666667.
+    An exponent literal (``12.0E0``) is DOUBLE in both.
+    """
+    return f"{float(x)!r}E0"
 
 
 def sql_subindex(expr: str, pollutant: str) -> str:
-    """DuckDB/ANSI SQL mirror of :func:`subindex` (same literal order)."""
-    bps = BREAKPOINTS[pollutant]
-    parts = [
-        f"WHEN ({expr} IS NULL OR {expr} < 0) THEN CAST(NULL AS DOUBLE)"
-    ]
-    for lo, hi, ilo, ihi in bps[:-1]:
-        parts.append(
-            f"WHEN {expr} <= {hi!r} THEN "
-            f"({float(ihi)!r} - {float(ilo)!r}) / ({hi!r} - {lo!r})"
-            f" * ({expr} - {lo!r}) + {float(ilo)!r}"
-        )
-    lo, hi, ilo, ihi = bps[-1]
-    parts.append(
-        f"ELSE ({float(ihi)!r} - {float(ilo)!r}) / ({hi!r} - {lo!r})"
-        f" * ({expr} - {lo!r}) + {float(ilo)!r}"
-    )
-    return "CASE " + " ".join(parts) + " END"
+    """Per-pollutant AQI sub-index of the concentration ``expr``.
 
-
-def overall_aqi(sub: dict[str, Column]) -> Column:
-    """Max over available sub-indexes; NULL when all are NULL.
-
-    greatest() ignores NULLs (both Spark and DuckDB), giving the
-    missing-pollutant contract for free.
+    A CASE over the pollutant's brackets; each bracket interpolates
+    linearly between its breakpoints, and the last one extrapolates
+    (uncapped above 500). NULL for a null or negative concentration.
     """
-    return F.greatest(*sub.values()) if len(sub) > 1 else next(iter(sub.values()))
 
+    def line(lo: float, hi: float, ilo: int, ihi: int) -> str:
+        return (
+            f"({_dbl(ihi)} - {_dbl(ilo)}) / ({_dbl(hi)} - {_dbl(lo)})"
+            f" * ({expr} - {_dbl(lo)}) + {_dbl(ilo)}"
+        )
 
-def dominant_pollutant(aqi: Column, sub: dict[str, Column]) -> Column:
-    """First pollutant (table order) whose sub-index equals the overall AQI."""
-    expr = F.when(aqi.isNull(), F.lit(None).cast("string"))
-    for name, c in sub.items():
-        expr = expr.when(c == aqi, F.lit(name))
-    return expr
-
-
-def aqi_level(aqi: Column) -> Column:
-    """Six-category EPA level; 'Unknown' for NULL AQI (plan lines 69-73)."""
-    expr = F.when(aqi.isNull(), F.lit("Unknown"))
-    for bound, label in LEVELS:
-        expr = expr.when(aqi <= F.lit(float(bound)), F.lit(label))
-    return expr.otherwise(F.lit(HAZARDOUS))
+    *brackets, last = BREAKPOINTS[pollutant]
+    parts = [f"CASE WHEN ({expr} IS NULL OR {expr} < 0) THEN CAST(NULL AS DOUBLE)"]
+    parts += [f"WHEN {expr} <= {_dbl(b[1])} THEN {line(*b)}" for b in brackets]
+    parts.append(f"ELSE {line(*last)} END")
+    return " ".join(parts)
 
 
 def sql_aqi_bundle(col_exprs: dict[str, str]) -> dict[str, str]:
-    """SQL mirrors for (sub-indexes, overall, dominant, level).
+    """SQL for the sub-indexes, overall AQI, dominant pollutant and level.
 
     ``col_exprs`` maps pollutant -> SQL expression for its concentration.
     Returns SQL strings keyed 'sub_<p>', 'aqi', 'dominant_pollutant',
-    'aqi_level' (the 'aqi' string must be aliased and the later exprs
-    reference that alias via a wrapping query).
+    'aqi_level'. They are evaluated in three stages: 'aqi' reads the
+    'sub_<p>' columns, and 'dominant_pollutant'/'aqi_level' read 'aqi'.
+
+    - 'aqi' is the GREATEST of the sub-indexes (Spark's needs two or
+      more arguments, so one pollutant is its own AQI). GREATEST skips
+      NULLs in both engines, which gives the missing-pollutant contract;
+      it is NULL only when every sub-index is.
+    - 'dominant_pollutant' is the first pollutant (in ``col_exprs``
+      order) whose sub-index equals the AQI.
+    - 'aqi_level' is the six-category EPA level, 'Unknown' for a NULL AQI.
     """
-    subs = {p: sql_subindex(e, p) for p, e in col_exprs.items()}
-    out = {f"sub_{p}": s for p, s in subs.items()}
-    out["aqi"] = "GREATEST(" + ", ".join(f"sub_{p}" for p in col_exprs) + ")"
-    dom = ["CASE WHEN aqi IS NULL THEN CAST(NULL AS VARCHAR)"]
-    for p in col_exprs:
-        dom.append(f"WHEN sub_{p} = aqi THEN '{p}'")
+    out = {f"sub_{p}": sql_subindex(e, p) for p, e in col_exprs.items()}
+    subs = [f"sub_{p}" for p in col_exprs]
+    out["aqi"] = f"GREATEST({', '.join(subs)})" if len(subs) > 1 else subs[0]
+    dom = ["CASE WHEN aqi IS NULL THEN CAST(NULL AS STRING)"]
+    dom += [f"WHEN sub_{p} = aqi THEN '{p}'" for p in col_exprs]
     out["dominant_pollutant"] = " ".join(dom) + " END"
     lvl = ["CASE WHEN aqi IS NULL THEN 'Unknown'"]
-    for bound, label in LEVELS:
-        lvl.append(f"WHEN aqi <= {float(bound)!r} THEN '{label}'")
+    lvl += [f"WHEN aqi <= {_dbl(bound)} THEN '{label}'" for bound, label in LEVELS]
     out["aqi_level"] = " ".join(lvl) + f" ELSE '{HAZARDOUS}' END"
     return out

@@ -34,14 +34,11 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def sql_dot(a: str, b: str) -> str:
-    """DuckDB mirror of :func:`dot` via positional unnest (order-preserving
-    list_sum over the zipped element products)."""
-    return (
-        f"list_sum(list_transform(list_zip({a}, {b}), "
-        f"p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
+def sql_dot(a: str, b: str, n: int) -> str:
+    """Oracle SQL mirror of :func:`dot` over the first ``n`` elements: an
+    unrolled left-associated sum of DOUBLE element products, the same fold
+    order as Spark's ``aggregate``."""
+    return " + ".join(
+        f"CAST({a}[{i + 1}] AS DOUBLE) * CAST({b}[{i + 1}] AS DOUBLE)"
+        for i in range(n)
     )
-
-
-def sql_cosine(a: str, b: str) -> str:
-    return f"({sql_dot(a, b)} / (sqrt({sql_dot(a, a)}) * sqrt({sql_dot(b, b)})))"

@@ -699,45 +699,46 @@ def q_marts_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The AQI bundle as a chain of SELECT lists over the pivoted daily means:
+# scaled concentrations, sub-indexes, overall AQI, output. Spark runs the
+# chain through selectExpr, the oracle as a chain of CTEs, so both engines
+# evaluate the same SQL text from aqi_fns.sql_aqi_bundle. Numbers are
+# exponent literals, which both engines type as DOUBLE.
+_AQI_CONC = {
+    "pm25": "click",
+    "pm10": "view",
+    "no2": "error",
+    "so2": "signup",
+    "co": "purchase_scaled",
+    "o3": "click_scaled",
+}
+_AQI_SQL = aqi_fns.sql_aqi_bundle(_AQI_CONC)
+_AQI_SUBS = [f"sub_{p}" for p in _AQI_CONC]
+_AQI_STAGES = [
+    ["user_id", "event_date", "click", "view", "error", "signup",
+     "purchase / 5.0E1 AS purchase_scaled", "click / 5.0E0 AS click_scaled"],
+    ["user_id", "event_date", *(f"{_AQI_SQL[c]} AS {c}" for c in _AQI_SUBS)],
+    ["user_id", "event_date", f"{_AQI_SQL['aqi']} AS aqi", *_AQI_SUBS],
+    ["user_id", "event_date", "ROUND(aqi, 4) AS aqi",
+     f"{_AQI_SQL['dominant_pollutant']} AS dominant_pollutant",
+     f"{_AQI_SQL['aqi_level']} AS aqi_level"],
+]
+
+
 def _aqi_oracle() -> str:
-    conc = {
-        "pm25": "click",
-        "pm10": "view",
-        "no2": "error",
-        "so2": "signup",
-        "co": "purchase_scaled",
-        "o3": "click_scaled",
-    }
-    bundle = aqi_fns.sql_aqi_bundle(conc)
-    sub_cols = ",\n    ".join(
-        f"{bundle[f'sub_{p}']} AS sub_{p}" for p in conc
-    )
+    ctes, src = [], "wide"
+    for i, cols in enumerate(_AQI_STAGES[:-1]):
+        ctes.append(f"s{i} AS (SELECT {', '.join(cols)} FROM {src})")
+        src = f"s{i}"
     return f"""
 WITH wide AS (
   SELECT user_id, CAST(ts AS DATE) AS event_date,
     {_pivot_cols_sql("user_id")}
   FROM events
   GROUP BY user_id, CAST(ts AS DATE)
-), conc AS (
-  SELECT user_id, event_date, click, view, error, signup,
-         purchase / 50.0 AS purchase_scaled,
-         click / 5.0 AS click_scaled
-  FROM wide
-), subs AS (
-  SELECT user_id, event_date,
-    {sub_cols}
-  FROM conc
-), with_aqi AS (
-  SELECT user_id, event_date,
-         {bundle['aqi']} AS aqi,
-         sub_pm25, sub_pm10, sub_no2, sub_so2, sub_co, sub_o3
-  FROM subs
-)
-SELECT user_id, event_date,
-       ROUND(aqi, 4) AS aqi,
-       {bundle['dominant_pollutant']} AS dominant_pollutant,
-       {bundle['aqi_level']} AS aqi_level
-FROM with_aqi
+), {", ".join(ctes)}
+SELECT {", ".join(_AQI_STAGES[-1])}
+FROM {src}
 """
 
 
@@ -745,14 +746,15 @@ FROM with_aqi
     "aqi_bundle",
     _aqi_oracle(),
     "EPA AQI (sub-index interpolation, max-combine, dominant pollutant, "
-    "level) as native expressions — the reference's unshipped UDF plan "
+    "level) from one breakpoint-table SQL string that Spark parses and "
+    "the DuckDB oracle runs — the reference's unshipped UDF plan "
     "(doc/archive/AQI Calculation Implementation Plan.md) done the "
     "Catalyst-friendly way (SURVEY.md §2.10)",
     tags=("relational", "aqi", "bench"),
 )
 def q_aqi_bundle(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
-    wide = pivot.pivot_conditional(
+    out = pivot.pivot_conditional(
         ev,
         ["user_id", "event_date"],
         "event_type",
@@ -761,32 +763,9 @@ def q_aqi_bundle(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg="avg",
         exact_decimal=DEC_VALUE,
     )
-    conc = {
-        "pm25": F.col("click"),
-        "pm10": F.col("view"),
-        "no2": F.col("error"),
-        "so2": F.col("signup"),
-        "co": F.col("purchase") / F.lit(50.0),
-        "o3": F.col("click") / F.lit(5.0),
-    }
-    sub = {p: aqi_fns.subindex(c, p) for p, c in conc.items()}
-    with_subs = wide.select(
-        "user_id",
-        "event_date",
-        *[s.alias(f"sub_{p}") for p, s in sub.items()],
-    )
-    sub_cols = {p: F.col(f"sub_{p}") for p in conc}
-    aqi_col = aqi_fns.overall_aqi(sub_cols)
-    with_aqi = with_subs.withColumn("aqi", aqi_col)
-    return with_aqi.select(
-        "user_id",
-        "event_date",
-        F.round(F.col("aqi"), 4).alias("aqi"),
-        aqi_fns.dominant_pollutant(F.col("aqi"), sub_cols).alias(
-            "dominant_pollutant"
-        ),
-        aqi_fns.aqi_level(F.col("aqi")).alias("aqi_level"),
-    )
+    for cols in _AQI_STAGES:
+        out = out.selectExpr(*cols)
+    return out
 
 
 _Q18_ORACLE = """

@@ -348,7 +348,7 @@ ORDER BY event_date
     "aqi_profile",
     _aqi_profile_oracle(),
     "AQI validation profile: COUNT(*)/COUNT(aqi)/AVG/MIN/MAX per day (A9, "
-    "AQI plan lines 132-137) over the native-expression AQI bundle",
+    "AQI plan lines 132-137) over aqi_bundle's SQL-string AQI",
     tags=("relational", "aqi", "bench"),
 )
 def q_aqi_profile(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from reddit_data_pipeline_engineering_spark.functions import text as tx
-from reddit_data_pipeline_engineering_spark.functions.vectors import cosine
+from reddit_data_pipeline_engineering_spark.functions.vectors import cosine, sql_dot
 from reddit_data_pipeline_engineering_spark.operators import (
     components,
     dedup,
@@ -653,22 +653,14 @@ def q_multimodal_decode_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DIM = 64
 
 
-def _sql_dot(a: str, b: str) -> str:
-    """Explicit left-associated element-product sum (matches Spark's fold)."""
-    return " + ".join(
-        f"CAST({a}[{i + 1}] AS DOUBLE) * CAST({b}[{i + 1}] AS DOUBLE)"
-        for i in range(_DIM)
-    )
-
-
 _COSINE_TOPK_ORACLE = f"""
 WITH q AS (
   SELECT embedding AS qe FROM embeddings WHERE vec_id = 0
 )
 SELECT e.vec_id,
-       ROUND(({_sql_dot('e.embedding', 'q.qe')})
-             / (sqrt({_sql_dot('e.embedding', 'e.embedding')})
-                * sqrt({_sql_dot('q.qe', 'q.qe')})), 6) AS cosine
+       ROUND(({sql_dot('e.embedding', 'q.qe', _DIM)})
+             / (sqrt({sql_dot('e.embedding', 'e.embedding', _DIM)})
+                * sqrt({sql_dot('q.qe', 'q.qe', _DIM)})), 6) AS cosine
 FROM embeddings e CROSS JOIN q
 ORDER BY cosine DESC, e.vec_id
 LIMIT 20
@@ -695,9 +687,9 @@ _EMB_PAIR_THRESHOLD = 0.0
 _BLOCKED_PAIRS_ORACLE = f"""
 WITH scored AS (
   SELECT a.label AS blk, a.vec_id AS id_a, b.vec_id AS id_b,
-         ROUND(({_sql_dot('a.embedding', 'b.embedding')})
-               / (sqrt({_sql_dot('a.embedding', 'a.embedding')})
-                  * sqrt({_sql_dot('b.embedding', 'b.embedding')})), 6) AS cosine
+         ROUND(({sql_dot('a.embedding', 'b.embedding', _DIM)})
+               / (sqrt({sql_dot('a.embedding', 'a.embedding', _DIM)})
+                  * sqrt({sql_dot('b.embedding', 'b.embedding', _DIM)})), 6) AS cosine
   FROM embeddings a
   JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
 ), pruned AS (
@@ -751,9 +743,9 @@ WITH q AS (
   SELECT embedding AS qe, label AS ql FROM embeddings WHERE vec_id = 0
 )
 SELECT e.vec_id,
-       ROUND(({_sql_dot('e.embedding', 'q.qe')})
-             / (sqrt({_sql_dot('e.embedding', 'e.embedding')})
-                * sqrt({_sql_dot('q.qe', 'q.qe')})), 6) AS cosine
+       ROUND(({sql_dot('e.embedding', 'q.qe', _DIM)})
+             / (sqrt({sql_dot('e.embedding', 'e.embedding', _DIM)})
+                * sqrt({sql_dot('q.qe', 'q.qe', _DIM)})), 6) AS cosine
 FROM embeddings e CROSS JOIN q
 WHERE e.label = q.ql AND e.vec_id <> 0
 ORDER BY cosine DESC, e.vec_id
@@ -783,9 +775,9 @@ WITH RECURSIVE pairs AS MATERIALIZED (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b
   FROM embeddings a
   JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
-  WHERE ROUND(({_sql_dot('a.embedding', 'b.embedding')})
-              / (sqrt({_sql_dot('a.embedding', 'a.embedding')})
-                 * sqrt({_sql_dot('b.embedding', 'b.embedding')})), 6) >= {_EMB_THRESHOLD}
+  WHERE ROUND(({sql_dot('a.embedding', 'b.embedding', _DIM)})
+              / (sqrt({sql_dot('a.embedding', 'a.embedding', _DIM)})
+                 * sqrt({sql_dot('b.embedding', 'b.embedding', _DIM)})), 6) >= {_EMB_THRESHOLD}
 ), edges AS MATERIALIZED (
   SELECT id_a AS a, id_b AS b FROM pairs
   UNION
@@ -965,9 +957,9 @@ WITH q AS (
   SELECT embedding AS qe, label AS ql FROM embeddings WHERE vec_id = 0
 ), scored AS (
   SELECT e.vec_id, e.label,
-         ROUND(({_sql_dot('e.embedding', 'q.qe')})
-               / (sqrt({_sql_dot('e.embedding', 'e.embedding')})
-                  * sqrt({_sql_dot('q.qe', 'q.qe')})), 6) AS cosine
+         ROUND(({sql_dot('e.embedding', 'q.qe', _DIM)})
+               / (sqrt({sql_dot('e.embedding', 'e.embedding', _DIM)})
+                  * sqrt({sql_dot('q.qe', 'q.qe', _DIM)})), 6) AS cosine
   FROM embeddings e CROSS JOIN q
   WHERE e.vec_id <> 0
 ), exact AS (
@@ -1230,9 +1222,9 @@ def _kmeans_ctes(k: int = _KM_K, iters: int = _KM_ITERS,
 _KMEANS_TOPK_ORACLE = f"""
 WITH {_kmeans_ctes()}
 SELECT e.vec_id,
-       ROUND(({_sql_dot('e.embedding', 'qq.qe')})
-             / (sqrt({_sql_dot('e.embedding', 'e.embedding')})
-                * sqrt({_sql_dot('qq.qe', 'qq.qe')})), 6) AS cosine
+       ROUND(({sql_dot('e.embedding', 'qq.qe', _DIM)})
+             / (sqrt({sql_dot('e.embedding', 'e.embedding', _DIM)})
+                * sqrt({sql_dot('qq.qe', 'qq.qe', _DIM)})), 6) AS cosine
 FROM qv e JOIN cand USING (vec_id) CROSS JOIN qq
 ORDER BY cosine DESC, e.vec_id
 LIMIT 20
@@ -1283,9 +1275,9 @@ _KMEANS_RECALL_ORACLE = f"""
 WITH {_kmeans_ctes()},
 scored AS MATERIALIZED (
   SELECT e.vec_id,
-         ROUND(({_sql_dot('e.embedding', 'qq.qe')})
-               / (sqrt({_sql_dot('e.embedding', 'e.embedding')})
-                  * sqrt({_sql_dot('qq.qe', 'qq.qe')})), 6) AS cosine
+         ROUND(({sql_dot('e.embedding', 'qq.qe', _DIM)})
+               / (sqrt({sql_dot('e.embedding', 'e.embedding', _DIM)})
+                  * sqrt({sql_dot('qq.qe', 'qq.qe', _DIM)})), 6) AS cosine
   FROM qv e CROSS JOIN qq
   WHERE e.vec_id <> 0
 ), exact AS (
@@ -1445,9 +1437,9 @@ def _pq_ctes(m: int = _PQ_M, k: int = _PQ_K, iters: int = _PQ_ITERS,
 _PQ_TOPK_ORACLE = f"""
 WITH {_pq_ctes()}
 SELECT e.vec_id, s.approx_dist,
-       ROUND(({_sql_dot('e.embedding', 'qq.qe')})
-             / (sqrt({_sql_dot('e.embedding', 'e.embedding')})
-                * sqrt({_sql_dot('qq.qe', 'qq.qe')})), 6) AS cosine
+       ROUND(({sql_dot('e.embedding', 'qq.qe', _DIM)})
+             / (sqrt({sql_dot('e.embedding', 'e.embedding', _DIM)})
+                * sqrt({sql_dot('qq.qe', 'qq.qe', _DIM)})), 6) AS cosine
 FROM qv e JOIN short s USING (vec_id) CROSS JOIN qq
 ORDER BY cosine DESC, e.vec_id
 LIMIT 20
@@ -1488,9 +1480,9 @@ _PQ_RECALL_ORACLE = f"""
 WITH {_pq_ctes()},
 scored AS MATERIALIZED (
   SELECT e.vec_id,
-         ROUND(({_sql_dot('e.embedding', 'qq.qe')})
-               / (sqrt({_sql_dot('e.embedding', 'e.embedding')})
-                  * sqrt({_sql_dot('qq.qe', 'qq.qe')})), 6) AS cosine
+         ROUND(({sql_dot('e.embedding', 'qq.qe', _DIM)})
+               / (sqrt({sql_dot('e.embedding', 'e.embedding', _DIM)})
+                  * sqrt({sql_dot('qq.qe', 'qq.qe', _DIM)})), 6) AS cosine
   FROM qv e CROSS JOIN qq
   WHERE e.vec_id <> 0
 ), exact AS (
@@ -1562,9 +1554,9 @@ _IVFPQ_CTES = ",\n".join(
 _IVFPQ_TOPK_ORACLE = f"""
 WITH {_IVFPQ_CTES}
 SELECT e.vec_id, s.approx_dist,
-       ROUND(({_sql_dot('e.embedding', 'qq.qe')})
-             / (sqrt({_sql_dot('e.embedding', 'e.embedding')})
-                * sqrt({_sql_dot('qq.qe', 'qq.qe')})), 6) AS cosine
+       ROUND(({sql_dot('e.embedding', 'qq.qe', _DIM)})
+             / (sqrt({sql_dot('e.embedding', 'e.embedding', _DIM)})
+                * sqrt({sql_dot('qq.qe', 'qq.qe', _DIM)})), 6) AS cosine
 FROM qv e JOIN short s USING (vec_id) CROSS JOIN qq
 ORDER BY cosine DESC, e.vec_id
 LIMIT 20
@@ -1610,9 +1602,9 @@ _IVFPQ_RECALL_ORACLE = f"""
 WITH {_IVFPQ_CTES},
 scored AS MATERIALIZED (
   SELECT e.vec_id,
-         ROUND(({_sql_dot('e.embedding', 'qq.qe')})
-               / (sqrt({_sql_dot('e.embedding', 'e.embedding')})
-                  * sqrt({_sql_dot('qq.qe', 'qq.qe')})), 6) AS cosine
+         ROUND(({sql_dot('e.embedding', 'qq.qe', _DIM)})
+               / (sqrt({sql_dot('e.embedding', 'e.embedding', _DIM)})
+                  * sqrt({sql_dot('qq.qe', 'qq.qe', _DIM)})), 6) AS cosine
   FROM qv e CROSS JOIN qq
   WHERE e.vec_id <> 0
 ), exact AS (
@@ -1786,9 +1778,9 @@ WITH proj AS MATERIALIZED (
   ORDER BY pcos DESC, p.vec_id LIMIT {_JL_SHORTLIST}
 ), scored AS MATERIALIZED (
   SELECT p.vec_id,
-         ROUND(({_sql_dot('p.embedding', 'qp.qe')})
-               / (sqrt({_sql_dot('p.embedding', 'p.embedding')})
-                  * sqrt({_sql_dot('qp.qe', 'qp.qe')})), 6) AS cosine
+         ROUND(({sql_dot('p.embedding', 'qp.qe', _DIM)})
+               / (sqrt({sql_dot('p.embedding', 'p.embedding', _DIM)})
+                  * sqrt({sql_dot('qp.qe', 'qp.qe', _DIM)})), 6) AS cosine
   FROM proj p CROSS JOIN qp
   WHERE p.vec_id <> 0
 ), exact AS (

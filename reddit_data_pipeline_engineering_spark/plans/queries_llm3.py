@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from reddit_data_pipeline_engineering_spark.functions.text import shingles_of, tokens
+from reddit_data_pipeline_engineering_spark.functions.vectors import sql_dot
 from reddit_data_pipeline_engineering_spark.operators import setsim
 from reddit_data_pipeline_engineering_spark.plans.queries import REGISTRY, query
 from reddit_data_pipeline_engineering_spark.sources.tables import load_table, spread
@@ -356,7 +357,7 @@ def q_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_hard_negative_oracle() -> str:
-    from reddit_data_pipeline_engineering_spark.plans.queries_llm import _sql_dot
+    from reddit_data_pipeline_engineering_spark.plans.queries_llm import _DIM
 
     return f"""
 WITH a AS (
@@ -368,9 +369,9 @@ scored AS (
          e.vec_id AS cand_id,
          CASE WHEN e.label = a.al THEN 'positive'
               ELSE 'hard_negative' END AS kind,
-         ROUND(({_sql_dot('e.embedding', 'a.ae')})
-               / (sqrt({_sql_dot('e.embedding', 'e.embedding')})
-                  * sqrt({_sql_dot('a.ae', 'a.ae')})), 6) AS cosine
+         ROUND(({sql_dot('e.embedding', 'a.ae', _DIM)})
+               / (sqrt({sql_dot('e.embedding', 'e.embedding', _DIM)})
+                  * sqrt({sql_dot('a.ae', 'a.ae', _DIM)})), 6) AS cosine
   FROM a JOIN embeddings e ON e.vec_id <> a.anchor_id
 )
 SELECT anchor_id, kind, cand_id, cosine
@@ -453,7 +454,7 @@ _SEMDECON_T = 0.30  # rounded-cosine leakage threshold
 
 
 def _build_semantic_decon_oracle() -> str:
-    from reddit_data_pipeline_engineering_spark.plans.queries_llm import _sql_dot
+    from reddit_data_pipeline_engineering_spark.plans.queries_llm import _DIM
 
     return f"""
 WITH ev AS (
@@ -462,9 +463,9 @@ WITH ev AS (
 ),
 scored AS (
   SELECT ev.eval_id, e.vec_id AS cand,
-         ROUND(({_sql_dot('e.embedding', 'ev.ee')})
-               / (sqrt({_sql_dot('e.embedding', 'e.embedding')})
-                  * sqrt({_sql_dot('ev.ee', 'ev.ee')})), 6) AS cos
+         ROUND(({sql_dot('e.embedding', 'ev.ee', _DIM)})
+               / (sqrt({sql_dot('e.embedding', 'e.embedding', _DIM)})
+                  * sqrt({sql_dot('ev.ee', 'ev.ee', _DIM)})), 6) AS cos
   FROM ev JOIN embeddings e ON e.vec_id % 20 <> 1
 ),
 sel AS (

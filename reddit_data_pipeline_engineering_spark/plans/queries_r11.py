@@ -1429,7 +1429,11 @@ def q_storage_layout_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
 # histogram — the cvm/skyline waiver class), classify each arm above /
 # at-or-below it, and form the 2x2 chi-square (x1e6). The rank-based
 # scale-free companion to ab_conversion_ztest: one histogram shuffle,
-# one bounded cumulative window, division-guarded.
+# one bounded cumulative window, division-guarded. The chi-square's
+# numerator and denominator grow with the purchase count (the numerator
+# passes 2^63 at sf0.1, the four-count denominator near sf1), so they
+# ride DECIMAL(38,0) on the Spark side and HUGEINT in the oracle (the
+# ljung_box/cvm device).
 # --------------------------------------------------------------------------
 
 _MOOD_ORACLE = """
@@ -1468,10 +1472,11 @@ SELECT a_above + a_below AS n_a, b_above + b_below AS n_b, med_cents,
        a_above, b_above,
        CASE WHEN (a_above + b_above) = 0 OR (a_below + b_below) = 0
               OR (a_above + a_below) = 0 OR (b_above + b_below) = 0 THEN 0
-            ELSE CAST((a_above + a_below + b_above + b_below)
+            ELSE CAST(CAST(a_above + a_below + b_above + b_below AS HUGEINT)
                       * (a_above * b_below - b_above * a_below)
                       * (a_above * b_below - b_above * a_below) * 1000000
-                      // ((a_above + b_above) * (a_below + b_below)
+                      // (CAST(a_above + b_above AS HUGEINT)
+                          * (a_below + b_below)
                           * (a_above + a_below) * (b_above + b_below))
                  AS BIGINT)
        END AS mood_chi2_e6
@@ -1539,10 +1544,12 @@ def q_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "CASE WHEN (a_above + b_above) = 0 OR (a_below + b_below) = 0 "
             "OR (a_above + a_below) = 0 OR (b_above + b_below) = 0 THEN 0 "
-            "ELSE CAST((a_above + a_below + b_above + b_below) "
+            "ELSE CAST(CAST(a_above + a_below + b_above + b_below "
+            "AS decimal(38,0)) "
             "* (a_above * b_below - b_above * a_below) "
             "* (a_above * b_below - b_above * a_below) * 1000000 "
-            "div ((a_above + b_above) * (a_below + b_below) "
+            "div (CAST(a_above + b_above AS decimal(38,0)) "
+            "* (a_below + b_below) "
             "* (a_above + a_below) * (b_above + b_below)) AS BIGINT) END"
         ).alias("mood_chi2_e6"),
     )

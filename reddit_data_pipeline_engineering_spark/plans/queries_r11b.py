@@ -1005,10 +1005,24 @@ def q_cronbach_alpha_types(spark: SparkSession, sf_dir: str) -> DataFrame:
 # as a mirrored ROUND(double, 6) on identical integers. Group medians
 # come from a PRI-KEYED cumulative window over the domain-bounded
 # (pri, band) histogram — no global window, no row-level pass: the z
-# sums fold over the same ~5 x 6k cell relation.
+# sums fold over the same ~5 x 6k cell relation. Sums and quotients ride
+# DECIMAL(38,0) on the Spark side and HUGEINT in the oracle (the
+# ljung_box/cvm device): the 1e6-scaled terms pass 2^63 at sf0.1.
 # --------------------------------------------------------------------------
 
 _BF_BAND_CENTS = 1_000  # $10 value bands
+
+
+def _exact_div(x: str, n: str) -> str:
+    """Spark SQL for ``x div n`` over non-negative DECIMAL(38,0) operands,
+    typed DECIMAL(38,0) like the oracle's HUGEINT ``//``.
+
+    Spark's ``div`` returns BIGINT, and the 1e6-scaled per-group and
+    pooled ``s * s`` quotients pass 2^63 at sf0.1. Taking the remainder
+    off first makes the decimal ``/`` exact.
+    """
+    return f"CAST((({x}) - ({x}) % ({n})) / ({n}) AS decimal(38,0))"
+
 
 _BF_ORACLE = f"""
 WITH cells AS (
@@ -1032,8 +1046,8 @@ WITH cells AS (
 ), g AS (
   SELECT pri,
          CAST(SUM(cnt) AS HUGEINT) AS n,
-         CAST(SUM(cnt * z) AS HUGEINT) AS s,
-         CAST(SUM(cnt * z * z) AS HUGEINT) AS q
+         CAST(SUM(CAST(cnt AS HUGEINT) * z) AS HUGEINT) AS s,
+         CAST(SUM(CAST(cnt AS HUGEINT) * z * z) AS HUGEINT) AS q
   FROM z GROUP BY pri
 ), t AS (
   SELECT n, s, q, (s * s * 1000000) // n AS tg FROM g
@@ -1113,11 +1127,11 @@ def q_brown_forsythe_var(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec = "decimal(38,0)"
     g = z.groupBy("pri").agg(
         F.expr(f"CAST(SUM(cnt) AS {dec})").alias("n"),
-        F.expr(f"CAST(SUM(cnt * z) AS {dec})").alias("s"),
-        F.expr(f"CAST(SUM(cnt * z * z) AS {dec})").alias("q"),
+        F.expr(f"CAST(SUM(CAST(cnt AS {dec}) * z) AS {dec})").alias("s"),
+        F.expr(f"CAST(SUM(CAST(cnt AS {dec}) * z * z) AS {dec})").alias("q"),
     )
     t = g.select(
-        "n", "s", "q", F.expr("(s * s * 1000000) div n").alias("tg")
+        "n", "s", "q", F.expr(_exact_div("s * s * 1000000", "n")).alias("tg")
     )
     agg = t.agg(
         F.expr("CAST(COUNT(*) AS BIGINT)").alias("k"),
@@ -1130,7 +1144,8 @@ def q_brown_forsythe_var(spark: SparkSession, sf_dir: str) -> DataFrame:
         "k",
         "nn",
         F.expr(
-            f"GREATEST(tt - (ss * ss * 1000000) div nn, CAST(0 AS {dec}))"
+            f"GREATEST(tt - {_exact_div('ss * ss * 1000000', 'nn')}, "
+            f"CAST(0 AS {dec}))"
         ).alias("ssb"),
         F.expr(f"GREATEST(qq * 1000000 - tt, CAST(0 AS {dec}))").alias(
             "ssw"

@@ -28,11 +28,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from reddit_data_pipeline_engineering_spark.functions.vectors import cosine, dot
+from reddit_data_pipeline_engineering_spark.functions.vectors import cosine, dot, sql_dot
 from reddit_data_pipeline_engineering_spark.plans.queries import REGISTRY, query
 from reddit_data_pipeline_engineering_spark.plans.queries_llm import (
+    _DIM,
     _query_vector,
-    _sql_dot,
 )
 from reddit_data_pipeline_engineering_spark.sources.tables import load_table, spread
 
@@ -155,10 +155,10 @@ _RRF_ORACLE = f"""
 WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
 s AS (
   SELECT e.vec_id,
-         ROUND(({_sql_dot('e.embedding', 'q.qe')})
-               / (sqrt({_sql_dot('e.embedding', 'e.embedding')})
-                  * sqrt({_sql_dot('q.qe', 'q.qe')})), 6) AS cosine,
-         ROUND({_sql_dot('e.embedding', 'q.qe')}, 6) AS dotp
+         ROUND(({sql_dot('e.embedding', 'q.qe', _DIM)})
+               / (sqrt({sql_dot('e.embedding', 'e.embedding', _DIM)})
+                  * sqrt({sql_dot('q.qe', 'q.qe', _DIM)})), 6) AS cosine,
+         ROUND({sql_dot('e.embedding', 'q.qe', _DIM)}, 6) AS dotp
   FROM embeddings e CROSS JOIN q
   WHERE e.vec_id <> 0
 ),
@@ -571,22 +571,15 @@ _MRL_DIM = 8
 _MRL_SHORTLIST = 100
 
 
-def _sql_dot_pre(a: str, b: str, n: int) -> str:
-    return " + ".join(
-        f"CAST({a}[{i + 1}] AS DOUBLE) * CAST({b}[{i + 1}] AS DOUBLE)"
-        for i in range(n)
-    )
-
-
 _MRL_ORACLE = f"""
 WITH q AS MATERIALIZED (
   SELECT embedding AS qe FROM embeddings WHERE vec_id = 0
 ),
 short AS MATERIALIZED (
   SELECT e.vec_id,
-         ROUND(({_sql_dot_pre('e.embedding', 'q.qe', _MRL_DIM)})
-               / (sqrt({_sql_dot_pre('e.embedding', 'e.embedding', _MRL_DIM)})
-                  * sqrt({_sql_dot_pre('q.qe', 'q.qe', _MRL_DIM)})), 6)
+         ROUND(({sql_dot('e.embedding', 'q.qe', _MRL_DIM)})
+               / (sqrt({sql_dot('e.embedding', 'e.embedding', _MRL_DIM)})
+                  * sqrt({sql_dot('q.qe', 'q.qe', _MRL_DIM)})), 6)
            AS pcos
   FROM embeddings e CROSS JOIN q
   WHERE e.vec_id <> 0
@@ -594,9 +587,9 @@ short AS MATERIALIZED (
 ),
 scored AS MATERIALIZED (
   SELECT e.vec_id,
-         ROUND(({_sql_dot('e.embedding', 'q.qe')})
-               / (sqrt({_sql_dot('e.embedding', 'e.embedding')})
-                  * sqrt({_sql_dot('q.qe', 'q.qe')})), 6) AS cosine
+         ROUND(({sql_dot('e.embedding', 'q.qe', _DIM)})
+               / (sqrt({sql_dot('e.embedding', 'e.embedding', _DIM)})
+                  * sqrt({sql_dot('q.qe', 'q.qe', _DIM)})), 6) AS cosine
   FROM embeddings e CROSS JOIN q
   WHERE e.vec_id <> 0
 ),
@@ -702,12 +695,12 @@ WITH q AS MATERIALIZED (
 ),
 scored AS MATERIALIZED (
   SELECT e.vec_id,
-         ROUND(({_sql_dot('e.embedding', 'q.qe')})
-               / (sqrt({_sql_dot('e.embedding', 'e.embedding')})
-                  * sqrt({_sql_dot('q.qe', 'q.qe')})), 6) AS cosine,
-         ROUND(({_sql_dot_pre('e.embedding', 'q.qe', _MRL_DIM)})
-               / (sqrt({_sql_dot_pre('e.embedding', 'e.embedding', _MRL_DIM)})
-                  * sqrt({_sql_dot_pre('q.qe', 'q.qe', _MRL_DIM)})), 6)
+         ROUND(({sql_dot('e.embedding', 'q.qe', _DIM)})
+               / (sqrt({sql_dot('e.embedding', 'e.embedding', _DIM)})
+                  * sqrt({sql_dot('q.qe', 'q.qe', _DIM)})), 6) AS cosine,
+         ROUND(({sql_dot('e.embedding', 'q.qe', _MRL_DIM)})
+               / (sqrt({sql_dot('e.embedding', 'e.embedding', _MRL_DIM)})
+                  * sqrt({sql_dot('q.qe', 'q.qe', _MRL_DIM)})), 6)
            AS pcos
   FROM embeddings e CROSS JOIN q
   WHERE e.vec_id <> 0
@@ -835,12 +828,12 @@ WITH qs AS (
 ),
 scored AS MATERIALIZED (
   SELECT q.qid, e.vec_id AS cand,
-         ROUND(({_sql_dot('e.embedding', 'q.qe')})
-               / (sqrt({_sql_dot('e.embedding', 'e.embedding')})
-                  * sqrt({_sql_dot('q.qe', 'q.qe')})), 6) AS cosf,
-         ROUND(({_sql_dot_pre('e.embedding', 'q.qe', _MRL_DIM)})
-               / (sqrt({_sql_dot_pre('e.embedding', 'e.embedding', _MRL_DIM)})
-                  * sqrt({_sql_dot_pre('q.qe', 'q.qe', _MRL_DIM)})), 6)
+         ROUND(({sql_dot('e.embedding', 'q.qe', _DIM)})
+               / (sqrt({sql_dot('e.embedding', 'e.embedding', _DIM)})
+                  * sqrt({sql_dot('q.qe', 'q.qe', _DIM)})), 6) AS cosf,
+         ROUND(({sql_dot('e.embedding', 'q.qe', _MRL_DIM)})
+               / (sqrt({sql_dot('e.embedding', 'e.embedding', _MRL_DIM)})
+                  * sqrt({sql_dot('q.qe', 'q.qe', _MRL_DIM)})), 6)
            AS cosp
   FROM qs q JOIN embeddings e
     ON NOT (e.vec_id % {_MRR_Q_MOD} = {_MRR_Q_RES}
@@ -988,12 +981,12 @@ WITH qs AS (
 ),
 scored AS MATERIALIZED (
   SELECT q.qid, e.vec_id AS cand,
-         ROUND(({_sql_dot('e.embedding', 'q.qe')})
-               / (sqrt({_sql_dot('e.embedding', 'e.embedding')})
-                  * sqrt({_sql_dot('q.qe', 'q.qe')})), 6) AS cosf,
-         ROUND(({_sql_dot_pre('e.embedding', 'q.qe', _MRL_DIM)})
-               / (sqrt({_sql_dot_pre('e.embedding', 'e.embedding', _MRL_DIM)})
-                  * sqrt({_sql_dot_pre('q.qe', 'q.qe', _MRL_DIM)})), 6)
+         ROUND(({sql_dot('e.embedding', 'q.qe', _DIM)})
+               / (sqrt({sql_dot('e.embedding', 'e.embedding', _DIM)})
+                  * sqrt({sql_dot('q.qe', 'q.qe', _DIM)})), 6) AS cosf,
+         ROUND(({sql_dot('e.embedding', 'q.qe', _MRL_DIM)})
+               / (sqrt({sql_dot('e.embedding', 'e.embedding', _MRL_DIM)})
+                  * sqrt({sql_dot('q.qe', 'q.qe', _MRL_DIM)})), 6)
            AS cosp
   FROM qs q JOIN embeddings e
     ON NOT (e.vec_id % {_MRR_Q_MOD} = {_MRR_Q_RES}

@@ -6,7 +6,6 @@ edge-case matrix (the reference plan's unshipped ~30-test matrix)."""
 import pytest
 from pyspark.sql import functions as F
 
-from reddit_data_pipeline_engineering_spark.functions import aqi
 from reddit_data_pipeline_engineering_spark.functions.datetime_fns import (
     derive_partitions,
     drop_invalid_datetime,
@@ -30,6 +29,8 @@ from reddit_data_pipeline_engineering_spark.operators.pivot import (
     pivot_dynamic,
     unpivot,
 )
+
+from .test_aqi import aqi_both
 
 
 @pytest.fixture(scope="module")
@@ -162,20 +163,14 @@ def test_audit_asserts_and_null_counts(spark):
 
 @pytest.fixture(scope="module")
 def aqi_eval(spark):
-    schema = ", ".join(f"{p} double" for p in aqi.AQI_POLLUTANTS)
+    """``(aqi, dominant pollutant, level)`` of one row of concentrations,
+    from the AQI SQL strings; Spark and DuckDB must agree on the row."""
 
     def ev(**conc):
-        df = spark.createDataFrame(
-            [tuple(conc.get(p) for p in aqi.AQI_POLLUTANTS)], schema
-        )
-        sub = {p: aqi.subindex(F.col(p), p) for p in aqi.AQI_POLLUTANTS}
-        overall = aqi.overall_aqi(sub)
-        row = df.select(
-            overall.alias("aqi"),
-            aqi.dominant_pollutant(overall, sub).alias("dom"),
-            aqi.aqi_level(overall).alias("level"),
-        ).collect()[0]
-        return row["aqi"], row["dom"], row["level"]
+        _, srows, drows = aqi_both(spark, [conc])
+        assert srows == drows
+        *_, a, dom, level = srows[0]
+        return a, dom, level
 
     return ev
 

@@ -23,7 +23,7 @@ import pytest
 from reddit_data_pipeline_engineering_spark import oracle as ora
 from reddit_data_pipeline_engineering_spark.plans.queries import REGISTRY, queries
 
-from .conftest import SF_SMALL
+from .conftest import SF_LARGE, SF_SMALL
 
 queries()  # force registration of all query modules
 
@@ -338,3 +338,15 @@ def test_unsafe_float_output_fails_driver_gate(spark, duck):
 
     res = ora.compare("normzero_out", spark, SF_SMALL, fn_ok, sql, con=duck)
     assert res.ok, res.detail
+
+
+@pytest.mark.parametrize("name", ["mood_median_test", "brown_forsythe_var"])
+def test_grid_products_match_oracle_at_sf01(spark, name):
+    """Both bench queries form 1e6-scaled integer products that pass 2^63
+    at sf0.1, where `count()` prunes the overflowing column away. Through
+    the noop sink, which computes every column, they must run, and then
+    match their oracles."""
+    spec = REGISTRY[name]
+    spec.fn(spark, SF_LARGE).write.format("noop").mode("overwrite").save()
+    res = ora.compare(name, spark, SF_LARGE, spec.fn, spec.oracle)
+    assert res.ok, f"{name}: {res.detail}"

@@ -6,6 +6,7 @@ are kept low because every example builds a Spark job (examples are cheap
 to shrink but expensive to run).
 """
 
+import duckdb
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Window
@@ -112,13 +113,17 @@ def _prop_pivot_unpivot_roundtrip_property(spark, rows):
 @given(conc=st.floats(0, 600, allow_nan=False))
 @SLOW
 def _prop_aqi_subindex_monotone_property(spark, conc):
-    """AQI sub-index is non-negative and monotone in concentration."""
-    df = spark.createDataFrame(
-        [(float(conc),), (float(conc) + 10.0,)], "c double"
-    )
-    vals = [
-        r[0] for r in df.select(aqi.subindex(F.col("c"), "pm25")).collect()
-    ]
+    """AQI sub-index is non-negative and monotone in concentration, and
+    Spark and DuckDB agree on it (one SQL string, two engines)."""
+    sub = aqi.sql_subindex("c", "pm25")
+    pair = [(float(conc),), (float(conc) + 10.0,)]
+    df = spark.createDataFrame(pair, "c double")
+    vals = [r[0] for r in df.select(F.expr(sub)).collect()]
+    with duckdb.connect() as con:
+        duck = con.execute(
+            f"SELECT {sub} FROM (VALUES (?), (?)) t(c)", [v for (v,) in pair]
+        ).fetchall()
+    assert vals == [r[0] for r in duck]
     assert vals[0] >= 0
     assert vals[1] >= vals[0]  # monotone non-decreasing
 
