@@ -15,8 +15,11 @@ registry size) the driver can always parse::
     {"metric": "bench_suite_total", "value": N, "unit": "sec",
      "sf": ..., "n_queries": N, "queries_file": "bench_full.json"}
 
-Each query is forced with a cheap ``count()`` (full plan execution, no
-driver-side result materialization cost) after a warm-up of the input scans.
+Each query is timed by ``profile.run``: one untimed warm-up, then the
+best of two build-plus-write passes through the noop sink, which computes
+every output column (``count()`` would let Catalyst prune columns the
+count never reads). The full dict keeps ``queries`` (name -> seconds) and
+adds ``records``, the run record of every bench query and streaming leg.
 """
 
 from __future__ import annotations
@@ -33,6 +36,7 @@ if _REPO_DIR not in sys.path:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from reddit_data_pipeline_engineering_spark import profile
     from reddit_data_pipeline_engineering_spark.plans.queries import REGISTRY, queries
     from reddit_data_pipeline_engineering_spark.session import get_spark
 
@@ -45,32 +49,14 @@ def main() -> None:
     queries()  # force full registration (imports queries_llm etc.)
     spark = get_spark(app_name="rdpe-bench")
     local_dir = spark.conf.get("spark.local.dir")
+    # The session's task slots, next to the host's cores: local[32] on a
+    # 4-core host and a real 32-core run differ only here.
+    host["parallelism"] = spark.sparkContext.defaultParallelism
 
     bench_names = [n for n, s in sorted(REGISTRY.items()) if "bench" in s.tags]
-
-    # Warm up the JVM + file listing so t0 isn't dominated by session start.
-    from reddit_data_pipeline_engineering_spark.sources.tables import load_table
-
-    for t in ("lineitem", "events", "customer", "documents", "embeddings"):
-        load_table(spark, sf_dir, t).count()
-
-    # One untimed pass first: JIT/codegen warm-up dominates cold first
-    # executions (observed 2-4x inflation on the first run of a query).
-    for name in bench_names:
-        REGISTRY[name].fn(spark, sf_dir).count()
-
-    # Min of two timed runs per query: a single pass occasionally eats a
-    # ~25s stop-the-world GC pause on one arbitrary query, which would
-    # misreport that query by 10-50x.
-    timings: dict[str, float] = {}
-    for name in bench_names:
-        spec = REGISTRY[name]
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            spec.fn(spark, sf_dir).count()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
+    stream_names = [n for n, s in sorted(REGISTRY.items()) if "streaming" in s.tags]
+    records = {n: profile.run(spark, n, sf_dir) for n in bench_names + stream_names}
+    timings = {name: records[name]["wall_s"] for name in bench_names}
 
     # Streaming throughput leg (VERDICT r06 #9): the streaming family
     # asserts correctness and state carry elsewhere; this measures the
@@ -79,9 +65,10 @@ def main() -> None:
     # slice as NDJSON and drains it with availableNow, so
     # rows/s = staged input rows / end-to-end wall (staging + drain +
     # sink rollup) — a conservative LOWER bound on pure drain
-    # throughput. One pass each (the batch loop's warm-up already paid
-    # the JIT cost for the shared scan/codegen paths).
-    streaming = streaming_throughput(spark, sf_dir, REGISTRY)
+    # throughput.
+    streaming = streaming_throughput(
+        spark, sf_dir, {name: records[name]["wall_s"] for name in stream_names}
+    )
 
     # sf from the dir name (e.g. .../sf0.1 -> 0.1); fall back to 0.1.
     base = os.path.basename(sf_dir.rstrip("/"))
@@ -91,7 +78,9 @@ def main() -> None:
         sf = 0.1
 
     host["load1_end"] = round(os.getloadavg()[0], 2)
-    full_line, compact_line = emit_lines(timings, sf, _REPO_DIR, streaming, host)
+    full_line, compact_line = emit_lines(
+        timings, sf, _REPO_DIR, streaming, host, records
+    )
     print(full_line)
     # LAST line: compact summary, bounded size regardless of registry
     # growth — this is what the driver's tail capture records.
@@ -119,8 +108,6 @@ def assert_local_dir_hygiene(
       pointed the session elsewhere via ``RDPE_SPARK_LOCAL_DIR`` (the
       pin protects the *default* placement, not a deliberate override).
     """
-    import time
-
     override = os.environ.get("RDPE_SPARK_LOCAL_DIR")
     if not override:
         assert local_dir and os.path.realpath(local_dir).startswith(
@@ -164,12 +151,14 @@ def assert_local_dir_hygiene(
         os.rmdir(local_dir)  # reclaim the per-pid dir itself
 
 
-def streaming_throughput(spark, sf_dir: str, registry) -> dict[str, dict]:
-    """Drained-rows/s per streaming registry query — best of two passes,
-    the batch loop's min-of-two rationale: a single drain occasionally
-    eats a stop-the-world GC pause or a co-tenant load burst (the r09
-    closing bench breached the 2k floor on four legs under exactly such
-    a burst), which would misreport the leg by up to ~9x."""
+def streaming_throughput(
+    spark, sf_dir: str, seconds: dict[str, float]
+) -> dict[str, dict]:
+    """Drained-rows/s per streaming leg from its ``profile.run`` seconds
+    (the best of two passes: a single drain occasionally eats a
+    stop-the-world GC pause or a co-tenant load burst — the r09 closing
+    bench breached the 2k floor on four legs under exactly such a burst —
+    which would misreport the leg by up to ~9x)."""
     from pyspark.sql import functions as F
 
     from reddit_data_pipeline_engineering_spark.sources.tables import load_table
@@ -180,21 +169,14 @@ def streaming_throughput(spark, sf_dir: str, registry) -> dict[str, dict]:
         .filter(F.col("ts") < F.col("t0") + F.expr("INTERVAL 7 DAYS"))
         .count()
     )
-    out: dict[str, dict] = {}
-    for name, spec in sorted(registry.items()):
-        if "streaming" not in spec.tags:
-            continue
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            spec.fn(spark, sf_dir).count()
-            best = min(best, time.perf_counter() - t0)
-        out[name] = {
-            "sec": round(best, 3),
+    return {
+        name: {
+            "sec": sec,
             "input_rows": week_rows,
-            "drained_rows_per_s": round(week_rows / best, 1),
+            "drained_rows_per_s": round(week_rows / sec, 1),
         }
-    return out
+        for name, sec in seconds.items()
+    }
 
 
 def emit_lines(
@@ -203,6 +185,7 @@ def emit_lines(
     repo_dir: str | None,
     streaming: dict[str, dict] | None = None,
     host: dict | None = None,
+    records: dict[str, dict] | None = None,
 ) -> tuple[str, str]:
     """Build the two output lines and persist the full dict.
 
@@ -224,6 +207,8 @@ def emit_lines(
         full["streaming"] = streaming
     if host:
         full["host"] = host
+    if records:
+        full["records"] = records
     # Full per-query detail: persisted to a file AND printed as an
     # intermediate line (human-visible, but never the line the driver
     # must parse).

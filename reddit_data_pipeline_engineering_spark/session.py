@@ -35,6 +35,17 @@ RUNTIME_CONFS = {
 }
 
 
+# ContextCleaner reaps checkpoint/persist/broadcast blocks only when the JVM
+# collects their RDD handles. On a long-lived session that runs hundreds of
+# queries, dead blocks pile up in the memory store for Spark's default 30 min
+# and every later query's cache insert pays synchronous eviction-to-disk for
+# blocks nothing can ever read again (measured: after a 78 s block of
+# checkpoint-heavy queries, unrelated probe queries ran 3.5x slower; one
+# driven GC restored them exactly). 90 s keeps the reaper ahead of
+# accumulation.
+PERIODIC_GC_INTERVAL = "90s"
+
+
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply engine-required runtime-settable confs to an existing session."""
     for k, v in RUNTIME_CONFS.items():
@@ -191,21 +202,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("RDPE_DRIVER_MEMORY", "8g"))
         .config("spark.local.dir", local_dir)
-        # ContextCleaner reaps checkpoint/persist/broadcast blocks only
-        # when the JVM collects their RDD handles — on a long-lived
-        # session that runs hundreds of queries, dead blocks pile up in
-        # the memory store for the default 30 min and every later
-        # query's cache insert pays synchronous eviction-to-disk for
-        # blocks nothing can ever read again (measured: after a 78 s
-        # block of checkpoint-heavy queries, unrelated probe queries ran
-        # 3.5x slower; one driven GC restored them exactly). 90 s keeps
-        # the reaper ahead of accumulation; env-overridable per
-        # deployment (the conf is Spark's own long-lived-driver hygiene
-        # knob, default 30min).
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("RDPE_PERIODIC_GC_INTERVAL", "90s"),
-        )
+        .config("spark.cleaner.periodicGC.interval", PERIODIC_GC_INTERVAL)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

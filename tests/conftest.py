@@ -1,7 +1,5 @@
 import os
 import sys
-import threading
-import uuid
 
 import pytest
 
@@ -12,46 +10,6 @@ if REPO_DIR not in sys.path:
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MEDIUM = "/root/testdata/sf0.01"
 SF_LARGE = os.path.join(os.path.dirname(SF_SMALL), "sf0.1")
-
-
-def jobs_launched(spark, fn):
-    """``(fn(), number of Spark jobs it submitted from this thread)``."""
-    sc = spark.sparkContext
-    group = f"job-count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        result = fn()
-    finally:
-        sc._jsc.sc().clearJobGroup()
-    # The status tracker is fed by the listener bus: drain it first.
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def py4j_round_trips(spark, fn):
-    """``(fn(), number of Py4J commands this thread sent while fn ran)``.
-
-    Counts ``send_command`` calls on the session's gateway client made
-    from the calling thread only: py4j's finalizer thread also sends
-    object-release commands, at times set by Python's garbage collector.
-    """
-    client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
-    me = threading.get_ident()
-    count = 0
-
-    def counting(*args, **kwargs):
-        nonlocal count
-        if threading.get_ident() == me:
-            count += 1
-        return send(*args, **kwargs)
-
-    client.send_command = counting
-    try:
-        result = fn()
-    finally:
-        client.send_command = send
-    return result, count
 
 
 @pytest.fixture(scope="session")

@@ -16,8 +16,9 @@ import pytest
 
 from reddit_data_pipeline_engineering_spark.functions import aqi
 from reddit_data_pipeline_engineering_spark.plans.queries import REGISTRY, queries
+from reddit_data_pipeline_engineering_spark.profile import py4j_round_trips
 
-from .conftest import SF_SMALL, py4j_round_trips
+from .conftest import SF_SMALL
 
 queries()
 

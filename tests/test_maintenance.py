@@ -19,8 +19,7 @@ from reddit_data_pipeline_engineering_spark.maintenance import (
     merge_upsert,
     new_raw_files,
 )
-
-from .conftest import jobs_launched
+from reddit_data_pipeline_engineering_spark.profile import jobs_launched
 
 # Jobs per call on the fixtures below. Before the Arrow listing and the
 # pinned ledger schema, new_raw_files launched 3; before the pinned

@@ -66,65 +66,3 @@ def test_copy_token_spaces_disjoint(scaled):
     assert not (words0 & words1)
     # n_chars stays consistent with the rewritten text
     assert docs["n_chars"].to_pylist()[n] == len(texts[n])
-
-
-def _load_scale_curve(monkeypatch, only: str | None):
-    """Import tools/scale_curve.py fresh with SCALE_CURVE_ONLY set —
-    the env var is evaluated at import time."""
-    if only is None:
-        monkeypatch.delenv("SCALE_CURVE_ONLY", raising=False)
-    else:
-        monkeypatch.setenv("SCALE_CURVE_ONLY", only)
-    spec = importlib.util.spec_from_file_location(
-        "scale_curve_under_test",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "tools",
-            "scale_curve.py",
-        ),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def test_scale_curve_only_union(monkeypatch):
-    """ADVICE r05: mixing a headline query with a new (non-headline) one
-    must run BOTH — headline matches keep curve order, new names append."""
-    mod = _load_scale_curve(monkeypatch, "pagerank_topk,brand_new_query")
-    assert mod.HEADLINE == ["pagerank_topk", "brand_new_query"]
-    # order preserved for multiple headline names
-    mod = _load_scale_curve(monkeypatch, "kcore_peel_counts,marts_kernel")
-    assert mod.HEADLINE == ["marts_kernel", "kcore_peel_counts"]
-    # pure non-headline set still runs (sorted)
-    mod = _load_scale_curve(monkeypatch, "zzz,aaa")
-    assert mod.HEADLINE == ["aaa", "zzz"]
-
-
-def test_scale_metrics_stage_diff(spark):
-    """The status-store diff must attribute a query's shuffle volume to
-    exactly the stages it ran: a groupBy moves rows (bytes > 0, records
-    == #distinct-ish input rows), and a second snapshot sees nothing."""
-    spec = importlib.util.spec_from_file_location(
-        "scale_metrics_under_test",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "tools",
-            "scale_metrics.py",
-        ),
-    )
-    sm = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(sm)
-
-    def fn(sp, _):
-        return sp.range(10000).selectExpr("id % 13 as k").groupBy("k").count()
-
-    m = sm.measure(spark, fn, "unused")
-    assert m["n_stages"] >= 2  # map + reduce at minimum
-    assert m["shuffle_write_bytes"] > 0
-    assert m["shuffle_write_records"] > 0
-    assert m["wall_sec"] > 0
-    # nothing ran since the last snapshot -> zero attribution
-    before = sm.stage_snapshot(spark)
-    z = sm.stage_metrics_since(spark, before)
-    assert z["n_stages"] == 0 and z["shuffle_write_bytes"] == 0

@@ -13,9 +13,10 @@ import pytest
 
 from reddit_data_pipeline_engineering_spark import schemas
 from reddit_data_pipeline_engineering_spark.plans.queries import REGISTRY, queries
+from reddit_data_pipeline_engineering_spark.profile import jobs_launched
 from reddit_data_pipeline_engineering_spark.sources.tables import TABLE_NAMES, load_table
 
-from .conftest import SF_MEDIUM, SF_SMALL, jobs_launched
+from .conftest import SF_MEDIUM, SF_SMALL
 
 SF_DIRS = (SF_SMALL, SF_MEDIUM, os.path.join(os.path.dirname(SF_SMALL), "sf0.1"))
 
