@@ -30,19 +30,6 @@ def register_parquet_table(
         spark.catalog.recoverPartitions(table)
 
 
-def save_as_table(
-    df: DataFrame,
-    table: str,
-    partition_cols: tuple[str, ...] = (),
-    mode: str = "overwrite",
-) -> None:
-    """Managed-table write + registration in one step."""
-    writer = df.write.mode(mode)
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.saveAsTable(table)
-
-
 def save_bucketed_table(
     df: DataFrame,
     table: str,

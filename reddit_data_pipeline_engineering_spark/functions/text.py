@@ -48,13 +48,6 @@ def distinct_token_count(col: Column | str) -> Column:
     return F.size(F.array_distinct(tokens(col)))
 
 
-def word_count_of(col: Column | str, word: str) -> Column:
-    """Occurrences of an exact word (token-boundary regexp count)."""
-    c = F.col(col) if isinstance(col, str) else col
-    # \b word boundaries; escape nothing — markers are [a-z]+ only.
-    return F.size(F.regexp_extract_all(c, F.lit(rf"\b{word}\b"), F.lit(0)))
-
-
 def stopword_count(col: Column | str, stopwords=STOPWORDS) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     pattern = r"\b(" + "|".join(stopwords) + r")\b"
@@ -90,25 +83,11 @@ def shingles(col: Column | str, n: int) -> Column:
     return shingles_of(tokens(col), n)
 
 
-def char_ngrams(col: Column | str, n: int) -> Column:
-    """Character n-gram array over the raw string."""
-    c = F.col(col) if isinstance(col, str) else col
-    idx = F.when(
-        F.length(c) >= n, F.sequence(F.lit(1), F.length(c) - n + 1)
-    ).otherwise(F.array().cast("array<int>"))
-    return F.transform(idx, lambda i: F.substring(c, i, n))
-
-
 def full_fingerprint_of(toks_col: Column | str) -> Column:
     """Whole-document fingerprint: md5 of the normalized token stream
     (input: a materialized token-array column)."""
     t = F.col(toks_col) if isinstance(toks_col, str) else toks_col
     return F.md5(F.array_join(F.transform(t, lambda x: F.lower(x)), " "))
-
-
-def full_fingerprint(col: Column | str) -> Column:
-    """Whole-document fingerprint straight from a text column."""
-    return full_fingerprint_of(tokens(col))
 
 
 def winnow_fingerprint_of(toks_col: Column | str, window: int = 5) -> Column:
@@ -120,12 +99,6 @@ def winnow_fingerprint_of(toks_col: Column | str, window: int = 5) -> Column:
     """
     hashed = F.transform(shingles_of(toks_col, window), F.md5)
     return F.array_min(hashed)
-
-
-def winnow_fingerprint(col: Column | str, window: int = 5) -> Column:
-    """Winnowing-lite fingerprint straight from a text column (small inputs;
-    hot paths stage tokens() and use winnow_fingerprint_of)."""
-    return winnow_fingerprint_of(tokens(col), window)
 
 
 # --------------------------------------------------------------------------

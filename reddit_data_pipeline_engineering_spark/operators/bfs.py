@@ -19,9 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def bfs_levels(
-    edges: DataFrame, source: int, rounds: int, checkpoint: bool = True
-) -> DataFrame:
+def bfs_levels(edges: DataFrame, source: int, rounds: int) -> DataFrame:
     """(node, dist) for every node within ``rounds`` hops of ``source``.
 
     ``edges`` must be directed (src, dst) — symmetrize first for
@@ -29,20 +27,19 @@ def bfs_levels(
     the probed radius.
     """
     spark = edges.sparkSession
-    if checkpoint:
-        # Cache the edge relation ONCE, PRE-PARTITIONED on the per-round
-        # join key (r07): every round joins the frontier against edges
-        # on ``src``, and each round is its own action (the eager
-        # visited-set checkpoint), so exchange reuse never applies
-        # across rounds — a plainly-persisted cache re-shuffled the
-        # ENTIRE static edge list every round (measured: 4 identical
-        # 11 MB edge exchanges per 4-round probe at sf0.1). The cached
-        # InMemoryTableScan reports hashpartitioning(src), so every
-        # round's join satisfies its distribution exchange-free; only
-        # the (small) frontier moves. persist (not localCheckpoint):
-        # lineage survives eviction. The visited set IS checkpointed
-        # per round: that's where lineage truncation matters.
-        edges = edges.repartition(F.col("src")).persist()
+    # Cache the edge relation ONCE, PRE-PARTITIONED on the per-round
+    # join key (r07): every round joins the frontier against edges on
+    # ``src``, and each round is its own action (the eager visited-set
+    # checkpoint), so exchange reuse never applies across rounds — a
+    # plainly-persisted cache re-shuffled the ENTIRE static edge list
+    # every round (measured: 4 identical 11 MB edge exchanges per
+    # 4-round probe at sf0.1). The cached InMemoryTableScan reports
+    # hashpartitioning(src), so every round's join satisfies its
+    # distribution exchange-free; only the (small) frontier moves.
+    # persist (not localCheckpoint): lineage survives eviction. The
+    # visited set IS checkpointed per round: that's where lineage
+    # truncation matters.
+    edges = edges.repartition(F.col("src")).persist()
     levels = spark.createDataFrame(
         [(source, 0)], "node long, dist int"
     )
@@ -58,15 +55,12 @@ def bfs_levels(
             levels.unionAll(cand)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
+            .localCheckpoint(eager=False)
         )
-        if checkpoint:
-            levels = levels.localCheckpoint(eager=False)
     return levels
 
 
-def sssp_distances(
-    edges: DataFrame, source: int, rounds: int, checkpoint: bool = True
-) -> DataFrame:
+def sssp_distances(edges: DataFrame, source: int, rounds: int) -> DataFrame:
     """Weighted single-source shortest paths, ``rounds`` Bellman-Ford
     relaxations with frontier pruning.
 
@@ -89,9 +83,8 @@ def sssp_distances(
     the visited set (the delta-stepping scale property).
     """
     spark = edges.sparkSession
-    if checkpoint:
-        # Pre-partitioned on the per-round join key — see bfs_levels.
-        edges = edges.repartition(F.col("src")).persist()
+    # Pre-partitioned on the per-round join key — see bfs_levels.
+    edges = edges.repartition(F.col("src")).persist()
     dist = spark.createDataFrame([(source, 0)], "node long, dist long")
     frontier = dist
     for t in range(1, rounds + 1):
@@ -107,9 +100,8 @@ def sssp_distances(
             dist.unionAll(cand)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
+            .localCheckpoint(eager=False)
         )
-        if checkpoint:
-            merged = merged.localCheckpoint(eager=False)
         if t < rounds:  # the last round's frontier is never expanded
             prev = dist.select("node", F.col("dist").alias("old"))
             frontier = (
@@ -122,10 +114,7 @@ def sssp_distances(
 
 
 def multi_bfs_levels(
-    edges: DataFrame,
-    sources: list[int],
-    rounds: int,
-    checkpoint: bool = True,
+    edges: DataFrame, sources: list[int], rounds: int
 ) -> DataFrame:
     """(seed, node, dist) for every node within ``rounds`` hops of each
     seed — K single-source probes fused into ONE frontier per round.
@@ -138,9 +127,8 @@ def multi_bfs_levels(
     directed (src, dst); symmetrize first for undirected semantics.
     """
     spark = edges.sparkSession
-    if checkpoint:
-        # see bfs_levels: cache pre-partitioned on the per-round join key
-        edges = edges.repartition(F.col("src")).persist()
+    # see bfs_levels: cache pre-partitioned on the per-round join key
+    edges = edges.repartition(F.col("src")).persist()
     levels = spark.createDataFrame(
         [(s, s, 0) for s in sources], "seed long, node long, dist int"
     )
@@ -155,7 +143,6 @@ def multi_bfs_levels(
             levels.unionAll(cand)
             .groupBy("seed", "node")
             .agg(F.min("dist").alias("dist"))
+            .localCheckpoint(eager=False)
         )
-        if checkpoint:
-            levels = levels.localCheckpoint(eager=False)
     return levels

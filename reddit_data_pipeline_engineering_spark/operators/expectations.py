@@ -62,13 +62,6 @@ def unique(col: str) -> Rule:
     )
 
 
-def matches_regex(col: str, pattern: str) -> Rule:
-    return Rule(
-        f"{col}_matches_regex",
-        F.sum(F.when(~F.col(col).rlike(pattern), 1).otherwise(0)),
-    )
-
-
 def validate(df: DataFrame, rules: Sequence[Rule]) -> DataFrame:
     """Evaluate every rule in one aggregate pass -> (rule, n_violations,
     passed) rows, in rule order. Null-safe: violation counts over empty

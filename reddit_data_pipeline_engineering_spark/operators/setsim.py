@@ -30,19 +30,6 @@ from pyspark.sql import functions as F
 from reddit_data_pipeline_engineering_spark.functions.text import shingles_of, tokens
 
 
-def shingle_sets(
-    docs: DataFrame, text_col: str, id_col: str, shingle_len: int
-) -> DataFrame:
-    """Distinct (id, shingle) pairs — the set representation."""
-    toked = docs.select(F.col(id_col), tokens(text_col).alias("__toks"))
-    return toked.select(
-        id_col,
-        F.explode(
-            F.array_distinct(shingles_of("__toks", shingle_len))
-        ).alias("s"),
-    )
-
-
 def _shingle_arrays(
     docs: DataFrame, text_col: str, id_col: str, shingle_len: int
 ) -> DataFrame:

@@ -6,9 +6,8 @@ A5/O2) and `ORDER BY avg_pm25 DESC LIMIT 10` (``doc/architecture.md:
 
 Scale notes: a global ``orderBy(...).limit(k)`` is planned by Catalyst as
 TakeOrderedAndProject — per-partition top-k then a k-row merge on the
-driver; no full sort, no full shuffle. Per-group top-k uses a ranking
-window, which shuffles once on the group key. Both survive 100 TB inputs
-as long as k and group cardinality are bounded.
+driver; no full sort, no full shuffle. It survives 100 TB inputs as
+long as k is bounded.
 
 All orderings take explicit tiebreak columns: a bare LIMIT over ties is
 nondeterministic across engines and would fail oracle comparison.
@@ -18,25 +17,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import Column, DataFrame
 
 
 def top_k(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
     """Global deterministic top-k (plans as TakeOrderedAndProject)."""
     return df.orderBy(*order).limit(k)
 
-
-def top_k_per_group(
-    df: DataFrame,
-    group_keys: Sequence[str],
-    order: Sequence[Column],
-    k: int,
-    rank_col: str = "rank",
-) -> DataFrame:
-    """Top-k rows within each group via row_number ranking."""
-    w = Window.partitionBy(*[F.col(c) for c in group_keys]).orderBy(*order)
-    return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= k)
-    )

@@ -659,6 +659,41 @@ PCM_STATS_SCHEMA = T.StructType(
 )
 
 
+def _stat_rows(df: DataFrame, schema: T.StructType, decode) -> DataFrame:
+    """One exact integer stats row per asset via Arrow-batched
+    mapInPandas, reduced INSIDE the UDF so payload bytes never shuffle.
+
+    ``decode(payload)`` returns ``(extra, samples)``: ``extra`` fills the
+    schema's per-format columns (``n_channels``, ``container``); the
+    samples are cast to int64 and the schema's remaining columns after
+    ``asset_id`` receive, in order, n, min, max, sum and sum of squares
+    (the last four NULL when nothing decoded).
+    """
+    import numpy as np
+
+    names = [f.name for f in schema.fields]
+
+    def stat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
+                extra, samples = decode(payload)
+                s = samples.astype(np.int64, copy=False)
+                stats = [s.size, None, None, None, None]
+                if s.size:
+                    stats[1:] = [s.min(), s.max(), s.sum(), (s * s).sum()]
+                row = {"asset_id": int(aid), **extra}
+                rest = [n for n in names if n not in row]
+                row.update(
+                    (n, None if v is None else int(v))
+                    for n, v in zip(rest, stats)
+                )
+                rows.append(row)
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.select("asset_id", "payload").mapInPandas(stat_batches, schema)
+
+
 def pcm_stats(df: DataFrame) -> DataFrame:
     """Per-asset exact PCM statistics via Arrow-batched mapInPandas.
 
@@ -667,30 +702,7 @@ def pcm_stats(df: DataFrame) -> DataFrame:
     INSIDE the UDF, so payload bytes never shuffle and nothing
     corpus-sized leaves the map stage.
     """
-    import numpy as np
-
-    def stat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                s = decode_wav_pcm(payload).astype(np.int64)
-                out.append(
-                    {
-                        "asset_id": int(aid),
-                        "n_values": int(s.size),
-                        "min_sample": int(s.min()) if s.size else None,
-                        "max_sample": int(s.max()) if s.size else None,
-                        "sum_samples": int(s.sum()) if s.size else None,
-                        "sum_squares": int((s * s).sum()) if s.size else None,
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in PCM_STATS_SCHEMA.fields]
-            )
-
-    return df.select("asset_id", "payload").mapInPandas(
-        stat_batches, PCM_STATS_SCHEMA
-    )
+    return _stat_rows(df, PCM_STATS_SCHEMA, lambda p: ({}, decode_wav_pcm(p)))
 
 
 # --------------------------------------------------------------------------
@@ -791,30 +803,8 @@ def png_stats(df: DataFrame) -> DataFrame:
     """Per-asset exact PNG pixel statistics via Arrow-batched
     mapInPandas — same reduce-inside-the-UDF contract as pcm_stats:
     one row per asset, payload bytes never shuffle."""
-    import numpy as np
-
-    def stat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                _, _, px = decode_png_pixels(payload)
-                s = px.astype(np.int64)
-                out.append(
-                    {
-                        "asset_id": int(aid),
-                        "n_pixels": int(s.size),
-                        "min_px": int(s.min()) if s.size else None,
-                        "max_px": int(s.max()) if s.size else None,
-                        "sum_px": int(s.sum()) if s.size else None,
-                        "sum_sq": int((s * s).sum()) if s.size else None,
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in PNG_STATS_SCHEMA.fields]
-            )
-
-    return df.select("asset_id", "payload").mapInPandas(
-        stat_batches, PNG_STATS_SCHEMA
+    return _stat_rows(
+        df, PNG_STATS_SCHEMA, lambda p: ({}, decode_png_pixels(p)[2])
     )
 
 
@@ -1331,32 +1321,12 @@ def jpeg_stats(df: DataFrame) -> DataFrame:
     """Per-asset exact JPEG sample statistics via Arrow-batched
     mapInPandas — same reduce-inside-the-UDF contract as png_stats/
     pcm_stats: one row per asset, payload bytes never shuffle."""
-    import numpy as np
 
-    def stat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                _, _, nc, px = decode_jpeg_pixels(payload)
-                s = px.astype(np.int64)
-                out.append(
-                    {
-                        "asset_id": int(aid),
-                        "n_values": int(s.size),
-                        "n_channels": int(nc),
-                        "min_px": int(s.min()) if s.size else None,
-                        "max_px": int(s.max()) if s.size else None,
-                        "sum_px": int(s.sum()) if s.size else None,
-                        "sum_sq": int((s * s).sum()) if s.size else None,
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in JPEG_STATS_SCHEMA.fields]
-            )
+    def decode(payload: bytes):
+        _, _, nc, px = decode_jpeg_pixels(payload)
+        return {"n_channels": int(nc)}, px
 
-    return df.select("asset_id", "payload").mapInPandas(
-        stat_batches, JPEG_STATS_SCHEMA
-    )
+    return _stat_rows(df, JPEG_STATS_SCHEMA, decode)
 
 
 # --------------------------------------------------------------------------
@@ -1836,32 +1806,12 @@ def flac_stats(df: DataFrame) -> DataFrame:
     """Per-asset exact FLAC sample statistics via Arrow-batched
     mapInPandas — same reduce-inside-the-UDF contract as pcm_stats:
     one row per asset, payload bytes never shuffle."""
-    import numpy as np
 
-    def stat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                nc, _, sm = decode_flac_samples(payload)
-                s = sm.astype(np.int64)
-                out.append(
-                    {
-                        "asset_id": int(aid),
-                        "n_values": int(s.size),
-                        "n_channels": int(nc),
-                        "min_sample": int(s.min()) if s.size else None,
-                        "max_sample": int(s.max()) if s.size else None,
-                        "sum_samples": int(s.sum()) if s.size else None,
-                        "sum_squares": int((s * s).sum()) if s.size else None,
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in FLAC_STATS_SCHEMA.fields]
-            )
+    def decode(payload: bytes):
+        nc, _, samples = decode_flac_samples(payload)
+        return {"n_channels": int(nc)}, samples
 
-    return df.select("asset_id", "payload").mapInPandas(
-        stat_batches, FLAC_STATS_SCHEMA
-    )
+    return _stat_rows(df, FLAC_STATS_SCHEMA, decode)
 
 
 # --------------------------------------------------------------------------
@@ -1948,26 +1898,9 @@ def media_decode_stats(df: DataFrame) -> DataFrame:
     mapInPandas pass (magic dispatch per asset), reducing exact integer
     stats inside the UDF — one row per asset, payload bytes never
     shuffle regardless of format mix."""
-    def stat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                container, s = _decode_any_media(payload)
-                out.append(
-                    {
-                        "asset_id": int(aid),
-                        "container": container,
-                        "n_values": int(s.size),
-                        "min_v": int(s.min()) if s.size else None,
-                        "max_v": int(s.max()) if s.size else None,
-                        "sum_v": int(s.sum()) if s.size else None,
-                        "sum_sq": int((s * s).sum()) if s.size else None,
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in MEDIA_DECODE_ALL_SCHEMA.fields]
-            )
 
-    return df.select("asset_id", "payload").mapInPandas(
-        stat_batches, MEDIA_DECODE_ALL_SCHEMA
-    )
+    def decode(payload: bytes):
+        container, samples = _decode_any_media(payload)
+        return {"container": container}, samples
+
+    return _stat_rows(df, MEDIA_DECODE_ALL_SCHEMA, decode)

@@ -10,24 +10,69 @@ event of that key.
 The worked instance is an exponential moving average (EMA) tracker over a
 sensor/value stream — ``ema_i = alpha*v_i + (1-alpha)*ema_{i-1}`` is a
 recurrence, so no commutative/associative aggregate computes it; it needs
-explicit keyed state. The same skeleton (group -> sort batch -> fold with
-state -> emit + update) carries any per-key online algorithm: anomaly
-scores, CUSUM change detection, rate limiters, per-source Bloom dedup.
+explicit keyed state. CUSUM and the time-weighted average are ordered
+folds of the same kind; KMV and the two running medians fold a multiset.
+
+One skeleton, :func:`_keyed_fold`, runs all six. It is invoked once per
+key and micro-batch, and:
+
+- joins ALL Arrow chunks of the invocation (a key's rows span several
+  chunks once they exceed ``spark.sql.execution.arrow.maxRecordsPerBatch``);
+- drops rows whose value columns are NULL/NaN — one missing reading must
+  not poison a key's state;
+- sorts the whole micro-batch once, stably, on the fold's ``order``
+  columns: ``(ts, value)`` for the ordered folds, none for the multiset
+  folds, whose result does not depend on order;
+- passes the stored state (or the initial one) and the frame to the
+  operator's ``step``, stores the state it returns and emits its output
+  columns behind the key columns. A multiset step emits one row per
+  invocation, even when every value was NULL.
+
+So each operator keeps only its step, its initial state and its two
+schemas. Across micro-batches arrival order governs, as in any online
+fold: a late event does not rewrite history.
 
 Scale notes:
-- state is O(1) per key (the running EMA + count), grouped-shuffled on the
-  key — the same partitioning story as any keyed aggregation;
-- batches arrive as Arrow-backed pandas frames (vectorizable; the fold
-  here is per-row only because the recurrence is inherently sequential);
-- the worker function is SELF-CONTAINED (locals + pandas only) so
-  cloudpickle ships it by value and executors never need this repo on
-  their sys.path.
+- state is per key, grouped-shuffled on the key — the same partitioning
+  story as any keyed aggregation;
+- the EMA, CUSUM and TWA steps loop per row only because their
+  recurrences are inherently sequential;
+- the worker and every step are closures that import numpy/pandas/
+  hashlib themselves, so cloudpickle ships them by value and executors
+  never need this repo on their sys.path.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupStateTimeout
+
+
+def _keyed_fold(df, keys, cols, order, step, init, out_schema, state_schema):
+    """Group ``df`` on ``keys`` and fold each key's micro-batch with
+    ``step(state, frame) -> (state, {column: values})`` (see the
+    module docstring). ``cols`` are the value columns whose NULL/NaN rows
+    are dropped, ``order`` the sort columns (empty for a multiset fold)
+    and ``init`` the state of a key seen for the first time."""
+    subset, by = list(cols), list(order)
+
+    def fold(key, chunks, state):
+        import pandas as pd
+
+        pdf = pd.concat(list(chunks), ignore_index=True).dropna(subset=subset)
+        if by:
+            pdf = pdf.sort_values(by, kind="stable", ignore_index=True)
+        new, out = step(state.get if state.exists else init, pdf)
+        state.update(new)
+        yield pd.DataFrame({**dict(zip(keys, key)), **out})
+
+    return df.groupBy(*keys).applyInPandasWithState(
+        fold,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
 
 def ema_stream(
@@ -54,51 +99,25 @@ def ema_stream(
     NaN.
     """
     a = float(alpha)
-    kc, tc, vc = key_col, ts_col, value_col
+    tc, vc = ts_col, value_col
 
-    def fold(key, pdf_iter, state):
-        import pandas as pd
+    def step(st, pdf):
+        ema, n = st
+        emas = []
+        for v in pdf[vc].tolist():
+            ema = v if ema is None else a * v + (1.0 - a) * ema
+            emas.append(ema)
+        m = n + len(emas)
+        out = {
+            tc: pdf[tc], vc: pdf[vc], "ema": emas, "n_seen": range(n + 1, m + 1)
+        }
+        return (ema, m), out
 
-        if state.exists:
-            ema, n = state.get
-        else:
-            ema, n = None, 0
-        outs = []
-        for pdf in pdf_iter:
-            pdf = pdf[pdf[vc].notna()]
-            pdf = pdf.sort_values([tc, vc], kind="stable").reset_index(
-                drop=True
-            )
-            emas = []
-            for v in pdf[vc]:
-                v = float(v)
-                ema = v if ema is None else a * v + (1.0 - a) * ema
-                n += 1
-                emas.append(ema)
-            outs.append(
-                pd.DataFrame(
-                    {
-                        kc: pdf[kc],
-                        tc: pdf[tc],
-                        vc: pdf[vc],
-                        "ema": emas,
-                        "n_seen": range(n - len(emas) + 1, n + 1),
-                    }
-                )
-            )
-        state.update((ema, n))
-        for out in outs:
-            yield out
-
-    out_schema = (
-        f"{kc} long, {tc} timestamp, {vc} double, ema double, n_seen long"
-    )
-    return df.groupBy(kc).applyInPandasWithState(
-        fold,
-        outputStructType=out_schema,
-        stateStructType="ema double, n long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        df, (key_col,), (vc,), (tc, vc), step, (None, 0),
+        f"{key_col} long, {tc} timestamp, {vc} double, ema double, "
+        "n_seen long",
+        "ema double, n long",
     )
 
 
@@ -130,57 +149,33 @@ def cusum_stream(
     Batch replay (the oracle identity): with ``y_i = v_scaled_i - drift``
     and ``c_i = sum(y_1..y_i)``, the recurrence unrolls to
     ``s_i = c_i - least(0, min(c_1..c_i))`` — two keyed window passes, no
-    recursion. The worker below is the streaming form of exactly that
+    recursion. The step below is the streaming form of exactly that
     fold.
     """
     k, h = int(drift), int(threshold)
-    kc, tc, vc = key_col, ts_col, value_col
+    tc, vc = ts_col, value_col
 
-    def fold(key, pdf_iter, state):
-        import pandas as pd
-
+    def step(st, pdf):
         import numpy as np
 
-        s = state.get[0] if state.exists else 0
-        outs = []
-        for pdf in pdf_iter:
-            pdf = pdf[pdf[vc].notna()]
-            pdf = pdf.sort_values([tc, vc], kind="stable").reset_index(
-                drop=True
-            )
-            y = pdf[vc].to_numpy(dtype="float64") * 100.0
-            scaled = pd.Series(
-                (np.sign(y) * np.floor(np.abs(y) + 0.5)).astype("int64")
-            )
-            ss = []
-            for v in scaled:
-                s = max(0, s + int(v) - k)
-                ss.append(s)
-            outs.append(
-                pd.DataFrame(
-                    {
-                        kc: pdf[kc],
-                        tc: pdf[tc],
-                        "v_scaled": scaled,
-                        "cusum": ss,
-                        "alarm": [x > h for x in ss],
-                    }
-                )
-            )
-        state.update((s,))
-        for out in outs:
-            yield out
+        (s,) = st
+        y = pdf[vc].to_numpy(dtype="float64") * 100.0
+        scaled = (np.sign(y) * np.floor(np.abs(y) + 0.5)).astype("int64")
+        ss = []
+        for v in scaled.tolist():
+            s = max(0, s + v - k)
+            ss.append(s)
+        out = {
+            tc: pdf[tc], "v_scaled": scaled, "cusum": ss,
+            "alarm": [x > h for x in ss],
+        }
+        return (s,), out
 
-    out_schema = (
-        f"{kc} long, {tc} timestamp, v_scaled long, cusum long, "
-        "alarm boolean"
-    )
-    return df.groupBy(kc).applyInPandasWithState(
-        fold,
-        outputStructType=out_schema,
-        stateStructType="s long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        df, (key_col,), (vc,), (tc, vc), step, (0,),
+        f"{key_col} long, {tc} timestamp, v_scaled long, cusum long, "
+        "alarm boolean",
+        "s long",
     )
 
 
@@ -211,58 +206,32 @@ def twa_stream(
     k1, k2 = key_cols
     tc, vc = ts_col, value_col
 
-    def fold(key, pdf_iter, state):
+    def step(st, pdf):
         import pandas as pd
 
-        if state.exists:
-            t0, last_t, last_v, acc = state.get
-        else:
-            t0, last_t, last_v, acc = None, None, None, 0.0
-        outs = []
-        for pdf in pdf_iter:
-            pdf = pdf[pdf[vc].notna()]
-            pdf = pdf.sort_values([tc, vc], kind="stable").reset_index(
-                drop=True
-            )
-            covered, twas = [], []
-            for ts_val, v in zip(pdf[tc], pdf[vc]):
-                t = int(pd.Timestamp(ts_val).value // 1000)  # ns -> us
-                v = float(v)
-                if t0 is None:
-                    t0, last_t, last_v = t, t, v
-                elif t >= last_t:
-                    acc = acc + last_v * float(t - last_t)
-                    last_t, last_v = t, v
-                # else: STALE event — zero mass, holder unchanged
-                c = max(t - t0, 0)
-                covered.append(c)
-                twas.append(acc / float(c) if c > 0 else None)
-            outs.append(
-                pd.DataFrame(
-                    {
-                        k1: pdf[k1],
-                        k2: pdf[k2],
-                        tc: pdf[tc],
-                        vc: pdf[vc],
-                        "covered_micros": covered,
-                        "twa": twas,
-                    }
-                )
-            )
-        state.update((t0, last_t, last_v, acc))
-        for out in outs:
-            yield out
+        t0, last_t, last_v, acc = st
+        covered, twas = [], []
+        for ts_val, v in zip(pdf[tc], pdf[vc].tolist()):
+            t = int(pd.Timestamp(ts_val).value // 1000)  # ns -> us
+            if t0 is None:
+                t0, last_t, last_v = t, t, v
+            elif t >= last_t:
+                acc = acc + last_v * float(t - last_t)
+                last_t, last_v = t, v
+            # else: STALE event — zero mass, holder unchanged
+            c = max(t - t0, 0)
+            covered.append(c)
+            twas.append(acc / float(c) if c > 0 else None)
+        out = {
+            tc: pdf[tc], vc: pdf[vc], "covered_micros": covered, "twa": twas
+        }
+        return (t0, last_t, last_v, acc), out
 
-    out_schema = (
+    return _keyed_fold(
+        df, (k1, k2), (vc,), (tc, vc), step, (None, None, None, 0.0),
         f"{k1} long, {k2} string, {tc} timestamp, {vc} double, "
-        "covered_micros long, twa double"
-    )
-    return df.groupBy(k1, k2).applyInPandasWithState(
-        fold,
-        outputStructType=out_schema,
-        stateStructType="t0 long, last_t long, last_v double, acc double",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        "covered_micros long, twa double",
+        "t0 long, last_t long, last_v double, acc double",
     )
 
 
@@ -289,50 +258,25 @@ def kmv_stream(
     distinct counter; the same sketch merges across keys/nodes by
     union + re-truncation (see the batch query's ALL row).
     """
-    kc, ic = key_col, id_col
     space = 1 << 48
 
-    def fold(key, pdf_iter, state):
+    def step(st, pdf):
         import hashlib
 
-        import pandas as pd
-
-        if state.exists:
-            nb, hs = state.get
-            hs = list(hs)
-        else:
-            nb, hs = 0, []
-        seen = set(hs)
-        for pdf in pdf_iter:
-            for u in pdf[ic]:
-                if pd.isna(u):
-                    continue
-                h = int(
-                    hashlib.md5(str(int(u)).encode()).hexdigest()[:12], 16
-                )
-                seen.add(h)
-        hs = sorted(seen)[:k]
-        nb += 1
-        state.update((nb, hs))
+        nb = st[0] + 1
+        hs = set(st[1])
+        for u in pdf[id_col].tolist():
+            hs.add(int(hashlib.md5(str(int(u)).encode()).hexdigest()[:12], 16))
+        hs = sorted(hs)[:k]
         size = len(hs)
         est = size if size < k else (k - 1) * space // hs[k - 1]
-        yield pd.DataFrame(
-            {
-                kc: [key[0]],
-                "batch_seq": [nb],
-                "sketch_size": [size],
-                "kmv_est": [est],
-            }
-        )
+        out = {"batch_seq": [nb], "sketch_size": [size], "kmv_est": [est]}
+        return (nb, hs), out
 
-    return df.groupBy(kc).applyInPandasWithState(
-        fold,
-        outputStructType=(
-            f"{kc} string, batch_seq long, sketch_size long, kmv_est long"
-        ),
-        stateStructType="nb long, hs array<long>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        df, (key_col,), (id_col,), (), step, (0, []),
+        f"{key_col} string, batch_seq long, sketch_size long, kmv_est long",
+        "nb long, hs array<long>",
     )
 
 
@@ -362,43 +306,19 @@ def median_stream(
     (KLL / t-digest) exactly as streaming_kmv_distinct swaps exact
     distinct for KMV.
     """
-    kc, vc = key_col, value_col
 
-    def fold(key, pdf_iter, state):
-        import pandas as pd
-
-        if state.exists:
-            nb, vals = state.get
-            vals = list(vals)
-        else:
-            nb, vals = 0, []
-        for pdf in pdf_iter:
-            for v in pdf[vc]:
-                if pd.isna(v):
-                    continue
-                vals.append(int(v))
-        vals.sort()
-        nb += 1
-        state.update((nb, vals))
+    def step(st, pdf):
+        nb = st[0] + 1
+        vals = sorted([*st[1], *map(int, pdf[value_col].tolist())])
         n = len(vals)
         med2 = (vals[(n - 1) // 2] + vals[n // 2]) if n else None
-        yield pd.DataFrame(
-            {
-                kc: [key[0]],
-                "batch_seq": [nb],
-                "n_values": [n],
-                "median2": [med2],
-            }
-        )
+        out = {"batch_seq": [nb], "n_values": [n], "median2": [med2]}
+        return (nb, vals), out
 
-    return df.groupBy(kc).applyInPandasWithState(
-        fold,
-        outputStructType=(
-            f"{kc} string, batch_seq long, n_values long, median2 long"
-        ),
-        stateStructType="nb long, vals array<long>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        df, (key_col,), (value_col,), (), step, (0, []),
+        f"{key_col} string, batch_seq long, n_values long, median2 long",
+        "nb long, vals array<long>",
     )
 
 
@@ -435,7 +355,6 @@ def median_sketch_stream(
     non-negative (the quantized-cents domain; raises inside the fold
     otherwise, surfacing as a stream error rather than silent wrap).
     """
-    kc, vc = key_col, value_col
 
     def _bucket_lo(v: int) -> int:
         if v < 16:
@@ -443,61 +362,38 @@ def median_sketch_stream(
         shift = v.bit_length() - 4
         return (v >> shift) << shift
 
-    def fold(key, pdf_iter, state):
-        import pandas as pd
-
-        if state.exists:
-            nb, los, counts = state.get
-            hist = dict(zip(los, counts))
-        else:
-            nb, hist = 0, {}
-        for pdf in pdf_iter:
-            for v in pdf[vc]:
-                if pd.isna(v):
-                    continue
-                v = int(v)
-                if v < 0:
-                    raise ValueError(
-                        f"median_sketch_stream: negative value {v} — "
-                        "log-bucket sketch requires a non-negative domain"
-                    )
-                lo = _bucket_lo(v)
-                hist[lo] = hist.get(lo, 0) + 1
-        nb += 1
+    def step(st, pdf):
+        nb = st[0] + 1
+        hist = dict(zip(st[1], st[2]))
+        for v in map(int, pdf[value_col].tolist()):
+            if v < 0:
+                raise ValueError(
+                    f"median_sketch_stream: negative value {v} — "
+                    "log-bucket sketch requires a non-negative domain"
+                )
+            lo = _bucket_lo(v)
+            hist[lo] = hist.get(lo, 0) + 1
         items = sorted(hist.items())
-        state.update((nb, [lo for lo, _ in items], [c for _, c in items]))
         n = sum(hist.values())
         med_lo = med_hi = None
-        if n:
-            target = (n + 1) // 2
-            cum = 0
-            for lo, c in items:
-                cum += c
-                if cum >= target:
-                    med_lo = lo
-                    med_hi = (
-                        lo if lo < 16
-                        else lo + (1 << (lo.bit_length() - 4)) - 1
-                    )
-                    break
-        yield pd.DataFrame(
-            {
-                kc: [key[0]],
-                "batch_seq": [nb],
-                "n_values": [n],
-                "sketch_size": [len(items)],
-                "med_lo": [med_lo],
-                "med_hi": [med_hi],
-            }
-        )
+        cum = 0
+        for lo, c in items:
+            cum += c
+            if cum >= (n + 1) // 2:
+                med_lo = lo
+                med_hi = (
+                    lo if lo < 16 else lo + (1 << (lo.bit_length() - 4)) - 1
+                )
+                break
+        out = {
+            "batch_seq": [nb], "n_values": [n], "sketch_size": [len(items)],
+            "med_lo": [med_lo], "med_hi": [med_hi],
+        }
+        return (nb, [lo for lo, _ in items], [c for _, c in items]), out
 
-    return df.groupBy(kc).applyInPandasWithState(
-        fold,
-        outputStructType=(
-            f"{kc} string, batch_seq long, n_values long, "
-            "sketch_size long, med_lo long, med_hi long"
-        ),
-        stateStructType="nb long, los array<long>, counts array<long>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        df, (key_col,), (value_col,), (), step, (0, [], []),
+        f"{key_col} string, batch_seq long, n_values long, "
+        "sketch_size long, med_lo long, med_hi long",
+        "nb long, los array<long>, counts array<long>",
     )

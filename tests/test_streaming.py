@@ -1021,6 +1021,65 @@ def test_streaming_case(name, stream_outcomes):
         raise res
 
 
+def test_ordered_folds_sort_the_whole_micro_batch(spark, tmp_path):
+    """One key's four rows land in ONE micro-batch in ts order 3, 1, 4, 2
+    and reach the fold as two-row Arrow chunks. The EMA, CUSUM and TWA
+    folds must still see them in (ts, value) order 1, 2, 3, 4, not
+    sorted chunk by chunk (1, 3, then 2, 4). Runs in its own session so
+    the tiny chunk size does not reach the concurrent cases."""
+    from reddit_data_pipeline_engineering_spark.streaming.stateful import (
+        cusum_stream,
+        ema_stream,
+        twa_stream,
+    )
+
+    s = spark.newSession()
+    s.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+    src = tmp_path / "raw"
+    src.mkdir()
+    _emit(src / "b0.json", [
+        {"user_id": 1, "tag": "a", "datetime": f"2025-02-01T08:0{m}:00",
+         "value": float(m)}
+        for m in (3, 1, 4, 2)
+    ])
+    stream = (
+        s.readStream.format("json")
+        .schema("user_id long, tag string, datetime string, value double")
+        .load(str(src))
+        .withColumn("ts", F.col("datetime").cast("timestamp"))
+        .select("user_id", "tag", "ts", "value")
+    )
+
+    def drain(name, frame):
+        q = (
+            frame.writeStream.format("parquet")
+            .option("path", str(tmp_path / name))
+            .option("checkpointLocation", str(tmp_path / f"{name}_ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        run_stream_to_completion(q)
+        rows = s.read.parquet(str(tmp_path / name)).orderBy("ts").collect()
+        return [r.asDict() for r in rows]
+
+    ema = drain("ema", ema_stream(stream, "user_id", "ts", "value", alpha=0.5))
+    assert [(r["value"], r["ema"], r["n_seen"]) for r in ema] == [
+        (1.0, 1.0, 1), (2.0, 1.5, 2), (3.0, 2.25, 3), (4.0, 3.125, 4)
+    ]
+    # drift 2.5 (250 on the x100 grid): y = -150, -50, 50, 150.
+    cusum = drain("cusum", cusum_stream(
+        stream, "user_id", "ts", "value", drift=250, threshold=100
+    ))
+    assert [(r["v_scaled"], r["cusum"], r["alarm"]) for r in cusum] == [
+        (100, 0, False), (200, 0, False), (300, 50, False), (400, 200, True)
+    ]
+    twa = drain("twa", twa_stream(stream, ("user_id", "tag"), "ts", "value"))
+    minute = 60_000_000
+    assert [(r["covered_micros"], r["twa"]) for r in twa] == [
+        (0, None), (minute, 1.0), (2 * minute, 1.5), (3 * minute, 2.0)
+    ]
+
+
 def test_duckdb_lambda_greatest_bug_workaround_pinned():
     """DuckDB 1.0's list_reduce miscompiles GREATEST over both lambda
     params inside struct_pack (the fold silently keeps only the first
@@ -1198,6 +1257,35 @@ def test_streaming_queries_leave_only_the_sink(spark, tmp_path, monkeypatch):
         assert all(
             urlparse(f).path.startswith(sink + os.sep) for f in df.inputFiles()
         ), name
+
+
+def test_stateful_folds_share_one_skeleton():
+    """Regrowth guard for streaming/stateful.py: only ``_keyed_fold``
+    calls ``applyInPandasWithState`` (exactly once), sorts, or reads and
+    writes the group state; every operator is a step plus schemas."""
+    from reddit_data_pipeline_engineering_spark.streaming import stateful
+
+    with open(stateful.__file__) as f:
+        tree = ast.parse(f.read())
+    scaffold = {"applyInPandasWithState", "sort_values", "exists"}
+
+    def hits(node):
+        for sub in ast.walk(node):
+            if not isinstance(sub, ast.Attribute):
+                continue
+            on_state = isinstance(sub.value, ast.Name) and sub.value.id == "state"
+            if sub.attr in scaffold or (on_state and sub.attr in ("get", "update")):
+                yield sub.attr, sub.lineno
+
+    outside = [
+        hit
+        for node in tree.body
+        if not (isinstance(node, ast.FunctionDef) and node.name == "_keyed_fold")
+        for hit in hits(node)
+    ]
+    assert not outside, f"fold scaffold outside _keyed_fold: {outside}"
+    calls = [h for h in hits(tree) if h[0] == "applyInPandasWithState"]
+    assert len(calls) == 1, calls
 
 
 def test_streaming_queries_share_one_drain_harness():
