@@ -11,6 +11,8 @@ set is carried as a (node, dist) relation and localCheckpointed each
 round so lineage stays flat (same device as components/pagerank). Rounds
 are bounded by the probe depth, not the graph diameter — this is a
 k-hop probe, and the oracle replays every round as unrolled CTEs.
+Single-source BFS is the one-seed case of the multi-seed loop
+(``multi_bfs_levels``); weighted SSSP is its own loop.
 """
 
 from __future__ import annotations
@@ -24,40 +26,9 @@ def bfs_levels(edges: DataFrame, source: int, rounds: int) -> DataFrame:
 
     ``edges`` must be directed (src, dst) — symmetrize first for
     undirected semantics. Distances are exact minimum hop counts within
-    the probed radius.
+    the probed radius. This is :func:`multi_bfs_levels` with one seed.
     """
-    spark = edges.sparkSession
-    # Cache the edge relation ONCE, PRE-PARTITIONED on the per-round
-    # join key (r07): every round joins the frontier against edges on
-    # ``src``, and each round is its own action (the eager visited-set
-    # checkpoint), so exchange reuse never applies across rounds — a
-    # plainly-persisted cache re-shuffled the ENTIRE static edge list
-    # every round (measured: 4 identical 11 MB edge exchanges per
-    # 4-round probe at sf0.1). The cached InMemoryTableScan reports
-    # hashpartitioning(src), so every round's join satisfies its
-    # distribution exchange-free; only the (small) frontier moves.
-    # persist (not localCheckpoint): lineage survives eviction. The
-    # visited set IS checkpointed per round: that's where lineage
-    # truncation matters.
-    edges = edges.repartition(F.col("src")).persist()
-    levels = spark.createDataFrame(
-        [(source, 0)], "node long, dist int"
-    )
-    for t in range(1, rounds + 1):
-        frontier = levels.filter(F.col("dist") == t - 1).select(
-            F.col("node").alias("src")
-        )
-        cand = (
-            frontier.join(edges, "src")
-            .select(F.col("dst").alias("node"), F.lit(t).alias("dist"))
-        )
-        levels = (
-            levels.unionAll(cand)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-    return levels
+    return multi_bfs_levels(edges, [source], rounds).drop("seed")
 
 
 def sssp_distances(edges: DataFrame, source: int, rounds: int) -> DataFrame:
@@ -83,7 +54,7 @@ def sssp_distances(edges: DataFrame, source: int, rounds: int) -> DataFrame:
     the visited set (the delta-stepping scale property).
     """
     spark = edges.sparkSession
-    # Pre-partitioned on the per-round join key — see bfs_levels.
+    # Pre-partitioned on the per-round join key — see multi_bfs_levels.
     edges = edges.repartition(F.col("src")).persist()
     dist = spark.createDataFrame([(source, 0)], "node long, dist long")
     frontier = dist
@@ -119,15 +90,26 @@ def multi_bfs_levels(
     """(seed, node, dist) for every node within ``rounds`` hops of each
     seed — K single-source probes fused into ONE frontier per round.
 
-    Same per-round scale shape as ``bfs_levels`` (one keyed join of the
-    current frontier against the pre-partitioned edge cache + one
-    min-merge groupBy, now keyed on (seed, node)), but the K probes
-    share every round's join instead of paying K sequential passes —
-    the multi-seed form centrality sampling needs. ``edges`` must be
-    directed (src, dst); symmetrize first for undirected semantics.
+    Per round: one keyed join of the current frontier against the
+    pre-partitioned edge cache + one min-merge groupBy keyed on (seed,
+    node); the K probes share every round's join instead of paying K
+    sequential passes — the multi-seed form centrality sampling needs.
+    ``edges`` must be directed (src, dst); symmetrize first for
+    undirected semantics.
     """
     spark = edges.sparkSession
-    # see bfs_levels: cache pre-partitioned on the per-round join key
+    # Cache the edge relation ONCE, PRE-PARTITIONED on the per-round
+    # join key (r07): every round joins the frontier against edges on
+    # ``src``, and each round's visited set is its own checkpointed
+    # plan, so exchange reuse never applies across rounds — a
+    # plainly-persisted cache re-shuffled the ENTIRE static edge list
+    # every round (measured: 4 identical 11 MB edge exchanges per
+    # 4-round probe at sf0.1). The cached InMemoryTableScan reports
+    # hashpartitioning(src), so every round's join satisfies its
+    # distribution exchange-free; only the (small) frontier moves.
+    # persist (not localCheckpoint): lineage survives eviction. The
+    # visited set IS checkpointed per round: that's where lineage
+    # truncation matters.
     edges = edges.repartition(F.col("src")).persist()
     levels = spark.createDataFrame(
         [(s, s, 0) for s in sources], "seed long, node long, dist int"

@@ -4,27 +4,22 @@ Training-data pipelines need the step AFTER near-dup candidate generation:
 grouping pairs into duplicate clusters and electing one canonical document
 per cluster. That is connected components on the pair graph.
 
-Two interchangeable implementations behind one API:
+One algorithm: the large-star/small-star edge contraction (Kiveris et
+al., "Connected Components in MapReduce and Beyond", SoCC'14 — public
+algorithm). Each round rewires edges toward local minima (large-star
+moves every larger neighbor to the neighborhood min, small-star then
+flattens the remaining down-edges), which provably converges in
+O(log n) rounds REGARDLESS of diameter — a chain of length L costs
+~log L rounds, where min-label propagation needs ~L. This is the 100 TB
+path for long-chain graphs (>10^9 edges; SCALE.md §10). Below a bounded
+edge count the remaining rounds are replaced by a driver union-find
+(``DRIVER_FINISH_MAX_EDGES``), which every registry graph reaches before
+the first round.
 
-- ``label`` (default): iterative minimum-label propagation — every vertex
-  starts labeled with itself; each round takes the min label over its
-  neighborhood; stop when no label changes. Rounds = graph DIAMETER
-  (near-dup clusters are dense, so typically 2-4). Each round is one join
-  + one aggregate.
-- ``star``: the large-star/small-star edge-contraction algorithm
-  (Kiveris et al., "Connected Components in MapReduce and Beyond",
-  SoCC'14 — public algorithm). Each round rewires edges toward local
-  minima (large-star moves every larger neighbor to the neighborhood
-  min, small-star then flattens the remaining down-edges), which
-  provably converges in O(log n) rounds REGARDLESS of diameter. This is
-  the 100 TB path for long-chain graphs (>10^9 edges; SCALE.md §10):
-  a chain of length L costs the label variant ~L rounds but the star
-  variant ~log L.
-
-Both cut lineage with localCheckpoint every round so the plan doesn't
-grow across iterations (the classic Spark iterative-algorithm trap), and
-both shuffle only on vertex ids — one keyed exchange per join/aggregate,
-no all-pairs work.
+Each round cuts lineage with a localCheckpoint so the plan doesn't grow
+across iterations (the classic Spark iterative-algorithm trap), and
+shuffles only on vertex ids — one keyed exchange per join/aggregate, no
+all-pairs work.
 """
 
 from __future__ import annotations
@@ -48,47 +43,13 @@ from pyspark.sql import functions as F
 DRIVER_FINISH_MAX_EDGES = 100_000
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    max_iterations: int = 25,
-    algorithm: str = "label",
-    stats: dict | None = None,
-    driver_finish_max_edges: int | None = None,
-) -> DataFrame:
-    """Return (id, component) with component = min vertex id reachable.
-
-    ``edges`` is an undirected pair list (each pair once, either order).
-    ``algorithm`` is ``"label"`` (min-label propagation, rounds = graph
-    diameter) or ``"star"`` (large-star/small-star contraction, rounds =
-    O(log n)). If ``stats`` is a dict, ``stats["rounds"]`` records the
-    number of iterations executed and ``stats["driver_finish_edges"]``
-    the residual edge count handed to the union-find finish (absent when
-    the distributed fixed point completed first).
-    ``driver_finish_max_edges`` gates the bounded driver finish (None ->
-    ``DRIVER_FINISH_MAX_EDGES``; 0 disables).
-    """
-    if driver_finish_max_edges is None:
-        driver_finish_max_edges = DRIVER_FINISH_MAX_EDGES
-    if algorithm == "label":
-        return _cc_label(
-            edges, src, dst, max_iterations, stats, driver_finish_max_edges
-        )
-    if algorithm == "star":
-        return _cc_star(
-            edges, src, dst, max_iterations, stats, driver_finish_max_edges
-        )
-    raise ValueError(f"unknown algorithm {algorithm!r} (label|star)")
-
-
 def _id_type(edges: DataFrame, src: str) -> str:
     return edges.schema[src].dataType.simpleString()
 
 
 def _driver_union_find(spark, rows, id_type: str) -> DataFrame:
     """Min-id union-find over a BOUNDED collected edge list — the exact
-    fixed-point labeling both distributed variants converge to: every
+    fixed-point labeling the distributed contraction converges to: every
     node labeled with the minimum node id reachable from it. Root choice
     is 'smaller id wins', so the root of every set is its min id under
     any union order; path compression keeps it near-linear."""
@@ -118,115 +79,23 @@ def _driver_union_find(spark, rows, id_type: str) -> DataFrame:
     )
 
 
-def _cc_label(
+def connected_components(
     edges: DataFrame,
     src: str,
     dst: str,
-    max_iterations: int,
-    stats: dict | None,
-    driver_finish_max_edges: int = 0,
+    max_iterations: int = 25,
+    stats: dict | None = None,
+    driver_finish_max_edges: int | None = None,
 ) -> DataFrame:
-    # Symmetrize in ONE pass over the (possibly expensive, unpersisted)
-    # pair-generation subtree: union(edges, edges.swap) would evaluate
-    # that subtree twice — LSH candidate generation is the typical
-    # input — while explode(array(fwd, rev)) reads it once for the
-    # same rows.
-    sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(src).alias("a"), F.col(dst).alias("b")
-                    ),
-                    F.struct(
-                        F.col(dst).alias("a"), F.col(src).alias("b")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.a", "e.b")
-        .distinct()
-        .persist()
-    )
-    if driver_finish_max_edges:
-        # One upfront count materializes the persisted symmetric relation
-        # (the pair-generation subtree runs exactly once) and gates the
-        # bounded driver finish: |sym| = 2|E|, so compare against 2x the
-        # edge cap. Collected rows are bounded by the gate itself.
-        n_sym = sym.count()
-        if n_sym <= 2 * driver_finish_max_edges:
-            if stats is not None:
-                stats["rounds"] = 0
-                stats["driver_finish_edges"] = n_sym // 2
-            rows = [(r["a"], r["b"]) for r in sym.collect()]
-            out = _driver_union_find(
-                edges.sparkSession, rows, _id_type(edges, src)
-            )
-            sym.unpersist()
-            return out
-    labels = (
-        sym.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-        .persist()
-    )
-    rounds = 0
-    converged = False
-    for _ in range(max_iterations):
-        rounds += 1
-        neighbor_min = (
-            sym.join(labels, sym.b == labels.id)
-            .groupBy(F.col("a").alias("id"))
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        # Carry the changed flag through the (already materializing)
-        # checkpoint so convergence costs a scan of checkpointed rows, not
-        # an extra join against the previous labels.
-        stepped = (
-            labels.join(neighbor_min, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_min", "component")
-                ).alias("component"),
-                (
-                    F.coalesce("nbr_min", "component") < F.col("component")
-                ).alias("__changed"),
-            )
-            .localCheckpoint(eager=True)  # cut lineage each round
-        )
-        labels.unpersist()
-        labels = stepped.drop("__changed")
-        if stepped.filter(F.col("__changed")).limit(1).count() == 0:
-            converged = True
-            break
-    sym.unpersist()
-    if stats is not None:
-        stats["rounds"] = rounds
-    if not converged:
-        # Silent truncation returns WRONG components (split clusters) —
-        # found the hard way: grid-DBSCAN's core-core graph at sf0.1
-        # has diameter > 25, and the capped labels reported 30 clusters
-        # where the true closure has 28. Min-label rounds track graph
-        # DIAMETER; for long-chain graphs use algorithm="star"
-        # (O(log n) rounds) or raise max_iterations explicitly.
-        raise ValueError(
-            f"connected_components(label) did not converge in "
-            f"{max_iterations} rounds — the graph diameter exceeds the "
-            f"cap; use algorithm='star' or raise max_iterations"
-        )
-    return labels
+    """Return (id, component) with component = min vertex id reachable.
 
-
-def _cc_star(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    max_iterations: int,
-    stats: dict | None,
-    driver_finish_max_edges: int = 0,
-) -> DataFrame:
-    """Large-star/small-star contraction (Kiveris et al., SoCC'14).
+    ``edges`` is an undirected pair list (each pair once, either order).
+    If ``stats`` is a dict, ``stats["rounds"]`` records the number of
+    contraction rounds executed and ``stats["driver_finish_edges"]`` the
+    residual edge count handed to the union-find finish (absent when the
+    distributed fixed point completed first).
+    ``driver_finish_max_edges`` gates the bounded driver finish (None ->
+    ``DRIVER_FINISH_MAX_EDGES``; 0 disables).
 
     Edges are kept canonically pointing DOWN (u > v). One round =
     large-star (every neighbor larger than the center rewires to the
@@ -235,12 +104,17 @@ def _cc_star(
     down-neighbor). The edge set is a fixed point iff it is a union of
     stars rooted at each component's min vertex.
     """
+    if driver_finish_max_edges is None:
+        driver_finish_max_edges = DRIVER_FINISH_MAX_EDGES
+    # Self-loops are dropped by round 1's large-star (v > u) and by the
+    # driver finish, not by a plan filter: Catalyst pushes an x != y
+    # filter into the caller's pair-join condition AHEAD of the join's
+    # own cheap predicates, so the semantic-dedup cosine ran on every
+    # block pair, not half of them (1.8 s -> 3.0 s per build at sf0.1).
     e = (
-        edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
-        .filter(F.col("x") != F.col("y"))
-        .select(
-            F.greatest(F.col("x"), F.col("y")).alias("u"),
-            F.least(F.col("x"), F.col("y")).alias("v"),
+        edges.select(
+            F.greatest(F.col(src), F.col(dst)).alias("u"),
+            F.least(F.col(src), F.col(dst)).alias("v"),
         )
         .distinct()
         .persist()
@@ -257,7 +131,7 @@ def _cc_star(
         if stats is not None:
             stats["rounds"] = rounds
             stats["driver_finish_edges"] = n_edges
-        rows = [(r["u"], r["v"]) for r in cur.collect()]
+        rows = [(r["u"], r["v"]) for r in cur.collect() if r["u"] != r["v"]]
         out = _driver_union_find(
             edges.sparkSession, rows, _id_type(edges, src)
         )
@@ -366,12 +240,12 @@ def _cc_star(
         )
         # No .persist() on top: the localCheckpoint above materializes
         # `small` under the violations job; layering a columnar cache
-        # over the checkpoint RDD would add a per-round cache-build pass
-        # (the label variant has always relied on the checkpoint alone).
-        old = e
-        e = small
-        old.unpersist()  # only the pre-loop persisted edge set
+        # over the checkpoint RDD would add a per-round cache-build pass.
         row = violations.collect()[0]
+        # Only the pre-loop edge set is cached (later rounds are
+        # checkpoints), and round 1 reads it, so release it only now.
+        e.unpersist()
+        e = small
         if (row["n_vio"] or 0) == 0:
             converged = True
             break
@@ -380,13 +254,14 @@ def _cc_star(
     if stats is not None:
         stats["rounds"] = rounds
     if not converged:
-        # Same loud-failure contract as the label path: a capped result
-        # is a WRONG result (non-star residual edges mislabel nodes).
-        # Star needs O(log n) rounds, so 25 covers ~2^25 vertices — if
-        # this fires the graph is astronomically deep or the cap was
-        # lowered; raise max_iterations.
+        # Silent truncation returns WRONG components: non-star residual
+        # edges mislabel nodes (capped min-label rounds once reported 30
+        # DBSCAN clusters at sf0.1 where the true closure has 28). Star
+        # needs O(log n) rounds, so 25 covers ~2^25 vertices — if this
+        # fires the graph is astronomically deep or the cap was lowered;
+        # raise max_iterations.
         raise ValueError(
-            f"connected_components(star) did not converge in "
+            f"connected_components did not converge in "
             f"{max_iterations} rounds; raise max_iterations"
         )
     # Fixed point is a union of stars: non-roots each hold exactly one
@@ -397,23 +272,20 @@ def _cc_star(
         .distinct()
         .withColumn("component", F.col("id"))
     )
-    out = labels.union(roots).distinct()
-    e.unpersist()
-    return out
+    return labels.union(roots).distinct()
 
 
 def duplicate_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    algorithm: str = "label",
 ) -> DataFrame:
     """Candidate pairs -> (component, n_members, canonical_id) clusters.
 
     canonical_id = min member (the component label itself); singleton
     documents (no pair) are not rows here — they are their own canonical.
     """
-    comp = connected_components(pairs, id_a, id_b, algorithm=algorithm)
+    comp = connected_components(pairs, id_a, id_b)
     return comp.groupBy("component").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.min("id").alias("canonical_id"),

@@ -17,8 +17,8 @@ the distributed reformulation here is the standard two-phase shape:
 2. **Cluster = connected components of the core-core graph** (the
    standard distributed-DBSCAN equivalence: density-reachability
    restricted to cores is symmetric), reusing
-   `operators/components.connected_components` — min-label or
-   star-contraction, both lineage-checkpointed. Border points (non-core
+   `operators/components.connected_components` — star contraction,
+   lineage-checkpointed per round. Border points (non-core
    within eps of a core) attach to the MINIMUM adjacent core component
    (deterministic; classic DBSCAN leaves this tie arbitrary). Remaining
    points are noise.
@@ -141,7 +141,6 @@ def dbscan_grid(
     y_col: str,
     eps: int,
     min_pts: int,
-    algorithm: str = "star",
     max_cell_occupancy: int | None = None,
 ) -> DataFrame:
     """DBSCAN over integer-grid 2-D points.
@@ -209,7 +208,7 @@ def dbscan_grid(
         .filter(F.col("a") < F.col("b"))
         .select("a", "b")
     )
-    comp0 = connected_components(edges, "a", "b", algorithm=algorithm)
+    comp0 = connected_components(edges, "a", "b")
     # Isolated cores (no core neighbor) are their own singleton cluster.
     singletons = core.join(
         comp0.select(F.col("id")), "id", "left_anti"

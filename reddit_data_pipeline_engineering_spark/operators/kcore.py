@@ -18,10 +18,11 @@ with deterministic unpersist of the previous generation, at most two
 generations live at once — the round-4 fix for the GC stall the sf1.0
 scaling curve exposed when every round's checkpoint accumulated in the
 single local-mode heap (SCALE.md §9c; 50s -> 12s at sf1.0). Both paths
-run the identical per-round algorithm and return identical rows. Rounds are a FIXED parameter, so the DuckDB oracle
+run the one shared peel step (``_peel``) and return identical rows.
+Rounds are a FIXED parameter, so the DuckDB oracle
 replays the whole peel as unrolled CTEs and the result is engine-exact;
-peeling to fixpoint is the same loop with a convergence check on the
-counts.
+peeling to fixpoint (``kcore_survivors``) runs the same step with a
+convergence check on the counts.
 
 Reference parity: the reference (an OpenAQ ETL) has no graph operator;
 this extends the engine's iterative-algorithm family per SURVEY.md §2's
@@ -42,13 +43,47 @@ from pyspark.sql import functions as F
 BOUNDED_STORAGE_MIN_EDGES = 10_000_000
 
 
+def _peel(
+    edges: DataFrame, k: int, src: str, dst: str, broadcast: bool = False
+) -> tuple[DataFrame, DataFrame]:
+    """One peel round, shared by every k-core loop: (survivor ids as
+    ``__node``, the edges whose endpoints both survive)."""
+    alive = (
+        edges.groupBy(src)
+        .agg(F.count(F.lit(1)).alias("__deg"))
+        .filter(F.col("__deg") >= k)
+        .select(F.col(src).alias("__node"))
+    )
+    if broadcast:
+        alive = F.broadcast(alive)
+    edges = (
+        edges.join(alive, edges[src] == alive["__node"], "left_semi")
+        .join(alive, edges[dst] == alive["__node"], "left_semi")
+    )
+    return alive, edges
+
+
+def _round_stats(r: int, alive: DataFrame, edges: DataFrame) -> DataFrame:
+    """One (round, nodes_alive, edges_alive) row for round ``r``."""
+    return (
+        alive.agg(F.count(F.lit(1)).alias("nodes_alive"))
+        .crossJoin(
+            edges.agg(F.floor(F.count(F.lit(1)) / 2).alias("edges_alive"))
+        )
+        .select(
+            F.lit(r).alias("round"),
+            F.col("nodes_alive").cast("long"),
+            F.col("edges_alive").cast("long"),
+        )
+    )
+
+
 def kcore_peel(
     edges: DataFrame,
     k: int,
     rounds: int,
     src: str = "src",
     dst: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Peel ``rounds`` times; return (round, nodes_alive, edges_alive).
 
@@ -66,26 +101,19 @@ def kcore_peel(
     neighbors died, which the NEXT round's count reflects.
     """
     spark = edges.sparkSession
-    if checkpoint:
-        # Decide the storage path BEFORE materializing anything twice:
-        # persist + count once, then either path runs on the
-        # already-persisted base generation. (An earlier version swapped
-        # the lazy path onto a localCheckpoint here — that paid a full
-        # block COPY of the largest generation for nothing: the
-        # persisted form has identical lifetime semantics, round 1 is
-        # its only consumer either way, and persist keeps lineage so an
-        # evicted block recomputes instead of failing.)
-        edges = edges.persist()
-        if edges.count() >= BOUNDED_STORAGE_MIN_EDGES:
-            return _kcore_peel_bounded(spark, edges, k, rounds, src, dst)
+    # Decide the storage path BEFORE materializing anything twice:
+    # persist + count once, then either path runs on the
+    # already-persisted base generation. (An earlier version swapped
+    # the lazy path onto a localCheckpoint here — that paid a full
+    # block COPY of the largest generation for nothing: the
+    # persisted form has identical lifetime semantics, round 1 is
+    # its only consumer either way, and persist keeps lineage so an
+    # evicted block recomputes instead of failing.)
+    edges = edges.persist()
+    if edges.count() >= BOUNDED_STORAGE_MIN_EDGES:
+        return _kcore_peel_bounded(spark, edges, k, rounds, src, dst)
     stats: list[DataFrame] = []
     for r in range(1, rounds + 1):
-        alive = (
-            edges.groupBy(src)
-            .agg(F.count(F.lit(1)).alias("__deg"))
-            .filter(F.col("__deg") >= k)
-            .select(F.col(src).alias("__node"))
-        )
         # Broadcast the survivor dim (guide §3.1): this lazy path only
         # runs below BOUNDED_STORAGE_MIN_EDGES directed rows, so
         # |alive| <= |V| <= |E| is broadcast-bounded by the gate — but
@@ -96,26 +124,9 @@ def kcore_peel(
         # records at sf0.1). With the hint the edge relation never
         # moves; the groupBy's exchange carries only map-side partial
         # counts. ReuseExchange shares one broadcast across both probes.
-        alive = F.broadcast(alive)
-        edges = (
-            edges.join(alive, edges[src] == alive["__node"], "left_semi")
-            .join(alive, edges[dst] == alive["__node"], "left_semi")
-        )
-        if checkpoint:
-            edges = edges.localCheckpoint(eager=True)
-        stats.append(
-            alive.agg(F.count(F.lit(1)).alias("nodes_alive"))
-            .crossJoin(
-                edges.agg(
-                    F.floor(F.count(F.lit(1)) / 2).alias("edges_alive")
-                )
-            )
-            .select(
-                F.lit(r).alias("round"),
-                F.col("nodes_alive").cast("long"),
-                F.col("edges_alive").cast("long"),
-            )
-        )
+        alive, edges = _peel(edges, k, src, dst, broadcast=True)
+        edges = edges.localCheckpoint(eager=True)
+        stats.append(_round_stats(r, alive, edges))
     return reduce(DataFrame.unionAll, stats).orderBy("round")
 
 
@@ -130,8 +141,8 @@ def _kcore_peel_bounded(
     12s at 10x scale). Lineage is not truncated: cache hits serve
     reads, an evicted block spills to disk, and a FIXED small round
     count keeps the plan shallow. Identical results to the lazy path
-    (same per-round algorithm; equivalence pinned by
-    tests/test_graph.py's BOUNDED_STORAGE_MIN_EDGES=0 monkeypatch).
+    (same peel step; equivalence pinned by tests/test_graph.py's
+    BOUNDED_STORAGE_MIN_EDGES=0 monkeypatch).
 
     Precondition: ``edges`` arrives ALREADY persisted and materialized
     (kcore_peel persists + counts before choosing this path), so the
@@ -139,27 +150,9 @@ def _kcore_peel_bounded(
     prev = edges
     rows: list[tuple[int, int, int]] = []
     for r in range(1, rounds + 1):
-        alive = (
-            edges.groupBy(src)
-            .agg(F.count(F.lit(1)).alias("__deg"))
-            .filter(F.col("__deg") >= k)
-            .select(F.col(src).alias("__node"))
-        )
-        edges = (
-            edges.join(alive, edges[src] == alive["__node"], "left_semi")
-            .join(alive, edges[dst] == alive["__node"], "left_semi")
-            .persist()
-        )
-        stat = (
-            alive.agg(F.count(F.lit(1)).alias("nodes_alive"))
-            .crossJoin(
-                edges.agg(
-                    F.floor(F.count(F.lit(1)) / 2).alias("edges_alive")
-                )
-            )
-            .head()
-        )
-        rows.append((r, stat["nodes_alive"], int(stat["edges_alive"])))
+        alive, edges = _peel(edges, k, src, dst)
+        edges = edges.persist()
+        rows.append(tuple(_round_stats(r, alive, edges).head()))
         prev.unpersist()
         prev = edges
     prev.unpersist()
@@ -177,12 +170,12 @@ def kcore_survivors(
 ) -> tuple[DataFrame, int]:
     """Peel to FIXPOINT: the exact k-core's edge list plus rounds used.
 
-    Same per-round algorithm as :func:`kcore_peel`, always in the
-    bounded-storage mode (the fixpoint loop may run up to ``max_rounds``
-    generations, so deterministic release matters regardless of size);
-    convergence is detected by comparing per-round edge counts (one
-    bounded scalar per round, the same driver-state envelope as the
-    k-means/bisection fits).
+    Same peel step as :func:`kcore_peel`, always in the bounded-storage
+    mode (the fixpoint loop may run up to ``max_rounds`` generations,
+    so deterministic release matters regardless of size); convergence
+    is detected by comparing per-round edge counts (one bounded scalar
+    per round, the same driver-state envelope as the k-means/bisection
+    fits).
     Returns (surviving symmetrized edges, rounds executed); an empty
     DataFrame means the k-core is empty. ``max_rounds`` bounds the
     cascade on adversarial chains (the fixed-round query form is the
@@ -192,17 +185,8 @@ def kcore_survivors(
     prev_n = edges.count()
     prev_df = edges
     for r in range(1, max_rounds + 1):
-        alive = (
-            edges.groupBy(src)
-            .agg(F.count(F.lit(1)).alias("__deg"))
-            .filter(F.col("__deg") >= k)
-            .select(F.col(src).alias("__node"))
-        )
-        edges = (
-            edges.join(alive, edges[src] == alive["__node"], "left_semi")
-            .join(alive, edges[dst] == alive["__node"], "left_semi")
-            .persist()
-        )
+        _, edges = _peel(edges, k, src, dst)
+        edges = edges.persist()
         cur = edges.count()
         # This round is materialized and counted; the previous round's
         # blocks are dead weight from here on — release them instead of

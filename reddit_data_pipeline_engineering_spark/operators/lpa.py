@@ -31,7 +31,8 @@ sorted within partitions ONCE (cached columnar; InMemoryRelation
 preserves both outputPartitioning and outputOrdering), so every round's
 SMJ streams the cached edge run and only the label side — one row per
 node — shuffles and sorts. Same rows either way (equivalence pinned by
-the COLOCATE_MIN_EDGES=0 monkeypatch test).
+the COLOCATE_MIN_EDGES=0 monkeypatch test). On both paths the edge
+cache is released once the last round's labels are checkpointed.
 """
 
 from __future__ import annotations
@@ -51,61 +52,47 @@ def label_propagation(
     rounds: int,
     src: str = "src",
     dst: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """(node, label) after ``rounds`` synchronous LPA updates.
 
     ``edges`` must be symmetrized; the node universe is derived from
     edge endpoints, so every tracked node has at least one neighbor.
     """
-    colocated = False
-    broadcast_labels = False
-    if checkpoint:
-        # Persist (not localCheckpoint) the base: identical cache
-        # semantics for the per-round joins without paying a block COPY
-        # of the edge list (the same regression kcore_peel had, fixed
-        # r05), and lineage survives eviction. On the co-located path
-        # the base cache is dropped once the repartitioned+sorted cache
-        # is materialized, so the largest relation is never retained
-        # twice (the kcore ADVICE r04 issue, applied here too).
-        edges = edges.persist()
-        if edges.count() >= COLOCATE_MIN_EDGES:
-            base = edges
-            edges = (
-                edges.repartition(F.col(src))
-                .sortWithinPartitions(src)
-                .persist()
-            )
-            edges.count()
-            base.unpersist()
-            colocated = True
-        else:
-            # Below the cutover the label vector is |V| <= |E| < 10M
-            # rows — broadcastable by construction — but each round's
-            # labels are a checkpointed LogicalRDD with UNKNOWN stats,
-            # so the planner never picks the broadcast join on its own
-            # (defaultSizeInBytes makes the relation look huge): every
-            # round was shuffling the STATIC edge list plus the labels
-            # (measured 158 MB / 15.8M records over 3 rounds on the
-            # 2.4M-directed-edge bench graph). Pin the scalable shape
-            # instead (guide §2.4/§3.1): partition the edge cache by
-            # ``dst`` ONCE, broadcast the labels each round, and both
-            # per-round aggregates run exchange-free on top of the
-            # broadcast join's preserved edge partitioning —
-            # hashpartitioning(dst→node) satisfies the clustered
-            # distribution of the (node, label) count AND the per-node
-            # argmax. Per-round shuffle: zero.
-            base = edges
-            edges = base.repartition(F.col(dst)).persist()
-            edges.count()
-            base.unpersist()
-            broadcast_labels = True
+    # Persist (not localCheckpoint) the base: identical cache semantics
+    # for the per-round joins without paying a block COPY of the edge
+    # list (the same regression kcore_peel had, fixed r05), and lineage
+    # survives eviction. The base cache is dropped once the
+    # repartitioned cache is materialized, so the largest relation is
+    # never retained twice (the kcore ADVICE r04 finding, applied here
+    # too).
+    base = edges.persist()
+    colocated = base.count() >= COLOCATE_MIN_EDGES
+    if colocated:
+        edges = base.repartition(F.col(src)).sortWithinPartitions(src)
+    else:
+        # Below the cutover the label vector is |V| <= |E| < 10M rows —
+        # broadcastable by construction — but each round's labels are a
+        # checkpointed LogicalRDD with UNKNOWN stats, so the planner
+        # never picks the broadcast join on its own (defaultSizeInBytes
+        # makes the relation look huge): every round was shuffling the
+        # STATIC edge list plus the labels (measured 158 MB / 15.8M
+        # records over 3 rounds on the 2.4M-directed-edge bench graph).
+        # Pin the scalable shape instead (guide §2.4/§3.1): partition
+        # the edge cache by ``dst`` ONCE, broadcast the labels each
+        # round, and both per-round aggregates run exchange-free on top
+        # of the broadcast join's preserved edge partitioning —
+        # hashpartitioning(dst→node) satisfies the clustered
+        # distribution of the (node, label) count AND the per-node
+        # argmax. Per-round shuffle: zero.
+        edges = base.repartition(F.col(dst))
+    edges = edges.persist()
+    edges.count()
+    base.unpersist()
     labels = (
         edges.select(F.col(src).alias("node")).distinct()
         .withColumn("label", F.col("node"))
+        .localCheckpoint(eager=True)
     )
-    if checkpoint:
-        labels = labels.localCheckpoint(eager=True)
     # Deterministic argmax (highest count, then smallest label) as a
     # struct max — label negated so the max picks the smallest on count
     # ties. Aggregates partially map-side; the row_number-window
@@ -114,7 +101,7 @@ def label_propagation(
         F.struct(F.col("c"), (-F.col("label")).alias("neg_label"))
     ).alias("s")
     for _ in range(rounds):
-        lab = F.broadcast(labels) if broadcast_labels else labels
+        lab = labels if colocated else F.broadcast(labels)
         msgs = edges.join(lab, edges[src] == labels["node"]).select(
             F.col(dst).alias("node"), "label"
         )
@@ -136,11 +123,9 @@ def label_propagation(
             counts.groupBy("node")
             .agg(best)
             .select("node", (-F.col("s.neg_label")).alias("label"))
+            .localCheckpoint(eager=True)
         )
-        if checkpoint:
-            labels = labels.localCheckpoint(eager=True)
-    if colocated:
-        # Labels are materialized (eager checkpoint); the co-located
-        # edge cache has no further readers.
-        edges.unpersist()
+    # Labels are materialized (eager checkpoint); the edge cache has no
+    # further readers on either path.
+    edges.unpersist()
     return labels

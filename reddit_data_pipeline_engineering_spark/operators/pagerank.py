@@ -9,8 +9,10 @@ Spark-first shape: each iteration is ONE keyed shuffle — edges join the
 current rank vector on src (both pre-partitioned on the same key after
 the first iteration, so AQE reuses the exchange), contributions aggregate
 on dst with map-side partial sums, and the teleport term is a literal.
-Ranks persist per iteration (the components.py pattern) so lineage stays
-flat and nothing recomputes.
+The rank vector is localCheckpointed per iteration (the components.py
+pattern) so lineage stays flat and nothing recomputes. PageRank and
+personalized PageRank share that one loop: PageRank is the seeded loop
+with every node a seed.
 
 Determinism: ranks live on an integer grid (``scale`` = 10^12 per node),
 per-edge contribution is truncating division ``rank DIV out_degree``, and
@@ -69,70 +71,11 @@ def pagerank(
     ``edges`` is a directed edge list; symmetrize it first if the graph
     is undirected. Nodes = distinct src ∪ dst. A node with no out-edges
     (dangling) keeps only its teleport mass; a node with no in-edges
-    converges to the teleport floor.
+    converges to the teleport floor. This is :func:`personalized_pagerank`
+    with every node a seed: r0 = ``scale`` and the teleport constant on
+    every node, the same integer ranks.
     """
-    # Persist the iteration-invariant relations: every localCheckpoint
-    # action below re-evaluates its inputs, so an unpersisted edge list
-    # would re-run the caller's upstream joins once per iteration.
-    # Out-degree is ITERATION-INVARIANT, so it is attached to the edge
-    # rows once here — each round then does a single edges⋈ranks join
-    # instead of re-joining the degree dim every iteration.
-    base = edges.persist()
-    nodes = (
-        base.select(F.col(src).alias("node"))
-        .union(base.select(F.col(dst).alias("node")))
-        .distinct()
-        .persist()
-    )
-    deg = base.groupBy(src).agg(F.count(F.lit(1)).alias("__deg"))
-    # Pre-partitioned on the per-round join key (r07): each iteration
-    # is its own action (eager rank checkpoint), so a plain cache
-    # re-shuffled the full static edge relation every round — the §9e
-    # probe's per-round movement was dominated by exactly that. The
-    # partitioned cache reports hashpartitioning(src); each round's
-    # edges-side exchange disappears and only ranks move.
-    edges = base.join(deg, src).repartition(F.col(src)).persist()
-    teleport = (scale * (DAMP_DEN - DAMP_NUM)) // DAMP_DEN
-
-    ranks = nodes.withColumn("rank", F.lit(scale).cast("long")).persist()
-    for _ in range(iters):
-        contrib = (
-            # shuffled-hash, not sort-merge (guide §3.1): the rank
-            # vector's per-partition slice is a small hash build, and
-            # SMJ would re-SORT the static partitioned edge relation
-            # every round (repartition colocates but does not sort).
-            edges.join(
-                ranks.hint("shuffle_hash"), edges[src] == ranks["node"]
-            )
-            .select(
-                F.col(dst).alias("node"),
-                F.expr("rank DIV __deg").alias("__c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("__c").alias("__m"))
-        )
-        new_ranks = (
-            nodes.join(contrib.hint("shuffle_hash"), "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(teleport)
-                    + F.expr(
-                        f"({DAMP_NUM} * coalesce(__m, 0L)) DIV {DAMP_DEN}"
-                    )
-                ).cast("long").alias("rank"),
-            )
-            # Cut lineage each round (components.py pattern): without
-            # this the plan tree grows ~5x per iteration and a cache
-            # eviction would trigger exponential recompute.
-            .localCheckpoint(eager=True)
-        )
-        ranks.unpersist()
-        ranks = new_ranks
-    nodes.unpersist()
-    edges.unpersist()
-    base.unpersist()
-    return ranks
+    return _power_iterate(edges, None, src, dst, iters, scale)
 
 
 def personalized_pagerank(
@@ -167,25 +110,46 @@ def personalized_pagerank(
     bound applies with n_seeds in place of n_nodes — tighter at any
     realistic seed-set size.
     """
+    return _power_iterate(edges, seeds, src, dst, iters, scale)
+
+
+def _power_iterate(
+    edges: DataFrame,
+    seeds: DataFrame | None,
+    src: str,
+    dst: str,
+    iters: int,
+    scale: int,
+) -> DataFrame:
+    """The one rank loop; ``seeds=None`` makes every node a seed."""
+    # Persist the iteration-invariant relations: every localCheckpoint
+    # action below re-evaluates its inputs, so an unpersisted edge list
+    # would re-run the caller's upstream joins once per iteration.
     base = edges.persist()
-    seed_flag = F.broadcast(
-        seeds.select(F.col("node"), F.lit(True).alias("__seed")).distinct()
-    )
-    # Seed flag folded into the persisted node relation once — the
-    # per-round teleport term reads a cached boolean, no per-round join
-    # (the node-side twin of the out-degree fold on the edge rows).
     nodes = (
         base.select(F.col(src).alias("node"))
         .union(base.select(F.col(dst).alias("node")))
         .distinct()
-        .join(seed_flag, "node", "left")
-        .select(
+    )
+    if seeds is None:
+        seed = F.lit(True)
+    else:
+        # Seed flag folded into the persisted node relation once — the
+        # per-round teleport term reads a cached boolean, no per-round
+        # join (the node-side twin of the out-degree fold on the edge
+        # rows).
+        seed_flag = F.broadcast(
+            seeds.select(F.col("node"), F.lit(True).alias("__seed"))
+            .distinct()
+        )
+        nodes = nodes.join(seed_flag, "node", "left").select(
             "node", F.coalesce("__seed", F.lit(False)).alias("__seed")
         )
-        .persist()
-    )
-    # Out-degree attached to the edge rows once (iteration-invariant) —
-    # one edges⋈ranks join per round, no per-round degree join.
+        seed = F.col("__seed")
+    nodes = nodes.persist()
+    # Out-degree is ITERATION-INVARIANT, so it is attached to the edge
+    # rows once here — each round then does a single edges⋈ranks join
+    # instead of re-joining the degree dim every iteration.
     deg = base.groupBy(src).agg(F.count(F.lit(1)).alias("__deg"))
     # Pre-partitioned on the per-round join key (r07): each iteration
     # is its own action (eager rank checkpoint), so a plain cache
@@ -196,15 +160,15 @@ def personalized_pagerank(
     edges = base.join(deg, src).repartition(F.col(src)).persist()
     teleport = (scale * (DAMP_DEN - DAMP_NUM)) // DAMP_DEN
 
-    ranks = (
-        nodes.select(
-            "node",
-            F.when(F.col("__seed"), F.lit(scale))
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("rank"),
-        )
-        .persist()
+    # No persist on the rank vector: round 1 reads it once from the
+    # persisted nodes, and every later vector is a localCheckpoint,
+    # which unpersist() would not release anyway.
+    ranks = nodes.select(
+        "node",
+        F.when(seed, F.lit(scale))
+        .otherwise(F.lit(0))
+        .cast("long")
+        .alias("rank"),
     )
     for _ in range(iters):
         contrib = (
@@ -222,22 +186,22 @@ def personalized_pagerank(
             .groupBy("node")
             .agg(F.sum("__c").alias("__m"))
         )
-        new_ranks = (
+        ranks = (
             nodes.join(contrib.hint("shuffle_hash"), "node", "left")
             .select(
                 "node",
                 (
-                    F.when(F.col("__seed"), F.lit(teleport))
-                    .otherwise(F.lit(0))
+                    F.when(seed, F.lit(teleport)).otherwise(F.lit(0))
                     + F.expr(
                         f"({DAMP_NUM} * coalesce(__m, 0L)) DIV {DAMP_DEN}"
                     )
                 ).cast("long").alias("rank"),
             )
+            # Cut lineage each round (components.py pattern): without
+            # this the plan tree grows ~5x per iteration and a cache
+            # eviction would trigger exponential recompute.
             .localCheckpoint(eager=True)
         )
-        ranks.unpersist()
-        ranks = new_ranks
     nodes.unpersist()
     edges.unpersist()
     base.unpersist()

@@ -39,7 +39,7 @@ def random_walks(
     ``path`` is the '->'-joined node sequence, bounded by ``steps``.
     """
     if checkpoint:
-        # Pre-partitioned on the per-step join key (see bfs.bfs_levels,
+        # Pre-partitioned on the per-step join key (see bfs.multi_bfs_levels,
         # r07): each step joins walkers against the static edge list on
         # ``src`` in its own action, so a plain cache re-shuffled all
         # edges per step; the partitioned cache moves only walkers.

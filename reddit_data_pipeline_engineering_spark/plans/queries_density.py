@@ -124,9 +124,8 @@ ORDER BY cluster
     "the 1e-6 integer grid (eps=15000, min_pts=4): map-side x9 cell "
     "replication -> ONE cell equi-join for exact eps-neighbor pairs -> "
     "core election -> core-core connected components (star "
-    "contraction — O(log n) rounds; the dense-blob core graph's "
-    "diameter exceeds what per-round label propagation can afford) "
-    "-> deterministic min-component border "
+    "contraction — O(log n) rounds whatever the core graph's "
+    "diameter) -> deterministic min-component border "
     "attachment; per-cluster core/border counts plus the -1 noise "
     "bucket. Oracle replays the closure as a recursive CTE.",
     tags=("llm", "similarity", "clustering", "iterative", "bench"),

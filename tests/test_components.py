@@ -1,14 +1,14 @@
-"""Connected-components: label-propagation vs large-star/small-star.
+"""Connected components: large-star/small-star against a union-find.
 
-The star variant (Kiveris et al., SoCC'14) must produce identical
-(id, component) labelings and converge in O(log n) rounds where the
-label variant needs diameter rounds — the chain graph makes the gap
-observable.
+The star contraction (Kiveris et al., SoCC'14) must produce the
+(id, component) labeling a plain Python union-find computes on the same
+edges — with the distributed rounds forced (driver finish off), with
+the driver finish taken at the upfront gate, and with it taken
+mid-loop — and converge in O(log n) rounds on a chain, whose diameter
+is n.
 """
 
 import random
-
-from pyspark.sql import functions as F
 
 from reddit_data_pipeline_engineering_spark.operators import components as cc
 
@@ -21,11 +21,27 @@ def _edges_df(spark, pairs):
     return spark.createDataFrame(pairs, "id_a long, id_b long")
 
 
-def _case_star_matches_label_on_random_graphs(spark):
+def _union_find(pairs):
+    """{(node, min node id reachable)} over ``pairs``; self-loops are
+    dropped, as the operator drops them."""
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        if a != b:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(x, find(x)) for x in parent}
+
+
+def _case_star_matches_union_find_on_random_graphs(spark):
     # Three random graphs as ONE disjoint union (node offset 1000 per
-    # trial): components never cross trial boundaries, so the union
-    # equality asserts all three trials with two iterative executions
-    # instead of six.
+    # trial): components never cross trial boundaries, so one iterative
+    # execution checks all three trials.
     rng = random.Random(7)
     pairs = []
     for trial in range(3):
@@ -35,81 +51,63 @@ def _case_star_matches_label_on_random_graphs(spark):
             for _ in range(30 + trial * 10)
         ]
     pairs = [(a, b) for a, b in pairs if a != b]
-    edges = _edges_df(spark, pairs)
-    # The two iterative algorithms are independent executions — run them
-    # concurrently (Spark schedules both job chains across the cores).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        f_lab = ex.submit(
-            lambda: _labels(cc.connected_components(edges, "id_a", "id_b", driver_finish_max_edges=0))
+    star = _labels(
+        cc.connected_components(
+            _edges_df(spark, pairs), "id_a", "id_b", driver_finish_max_edges=0
         )
-        f_star = ex.submit(
-            lambda: _labels(
-                cc.connected_components(edges, "id_a", "id_b", algorithm="star", driver_finish_max_edges=0)
-            )
-        )
-        lab, star = f_lab.result(), f_star.result()
-    assert lab == star
+    )
+    assert star == _union_find(pairs)
 
 
-def _case_star_matches_label_on_disjoint_cliques(spark):
+def _case_star_matches_union_find_on_disjoint_cliques(spark):
     # Three dense clusters (the near-dup shape) + one bridge pair.
     pairs = []
     for base in (0, 100, 200):
         members = [base + i for i in range(5)]
         pairs += [(a, b) for a in members for b in members if a < b]
     pairs.append((4, 104))  # merge first two clusters
-    edges = _edges_df(spark, pairs)
-    lab = _labels(cc.connected_components(edges, "id_a", "id_b", driver_finish_max_edges=0))
     star = _labels(
-        cc.connected_components(edges, "id_a", "id_b", algorithm="star", driver_finish_max_edges=0)
+        cc.connected_components(
+            _edges_df(spark, pairs), "id_a", "id_b", driver_finish_max_edges=0
+        )
     )
-    assert lab == star
+    assert star == _union_find(pairs)
     comps = {c for _, c in star}
     assert comps == {0, 200}
 
 
 def _case_star_fewer_rounds_on_chain(spark):
-    # Chain 0-1-2-...-L: diameter L. Label propagation moves the min one
-    # hop per round (~L rounds); star contraction halves star depth per
-    # round (~log L rounds).
+    # Chain 0-1-2-...-L: diameter L. Min-label propagation would move the
+    # min one hop per round (~L rounds); star contraction halves star
+    # depth per round (~log L rounds).
     L = 16
     edges = _edges_df(spark, [(i, i + 1) for i in range(L)])
-    s_lab, s_star = {}, {}
-    lab = _labels(
+    st = {}
+    star = _labels(
         cc.connected_components(
-            edges, "id_a", "id_b", max_iterations=50, stats=s_lab,
+            edges, "id_a", "id_b", max_iterations=50, stats=st,
             driver_finish_max_edges=0,
         )
     )
-    star = _labels(
-        cc.connected_components(
-            edges, "id_a", "id_b", algorithm="star", max_iterations=50,
-            stats=s_star, driver_finish_max_edges=0,
-        )
-    )
-    assert lab == star == {(i, 0) for i in range(L + 1)}
-    assert s_star["rounds"] < s_lab["rounds"], (s_star, s_lab)
-    assert s_star["rounds"] <= 8  # O(log 16) + convergence check round
-    assert s_lab["rounds"] >= L - 1
+    assert star == {(i, 0) for i in range(L + 1)}
+    assert st["rounds"] <= 8  # O(log 16) + convergence check round
 
 
-def _case_duplicate_clusters_algorithm_passthrough(spark):
+def _case_duplicate_clusters_members_and_canonical(spark):
     pairs = _edges_df(spark, [(1, 2), (2, 3), (10, 11)])
     out = {
         (r.component, r.n_members, r.canonical_id)
-        for r in cc.duplicate_clusters(pairs, algorithm="star").collect()
+        for r in cc.duplicate_clusters(pairs).collect()
     }
     assert out == {(1, 3, 1), (10, 2, 10)}
 
 
-
 def _case_driver_finish_matches_distributed(spark):
     """r11 hybrid: the bounded union-find finish must label identically
-    to the pure-distributed fixed point — at the upfront gate, at a
-    MID-LOOP gate (cap sized so one contraction round runs first), and
-    across both algorithms. Random graphs with chains + cliques."""
+    to the pure-distributed fixed point and to the reference union-find
+    — at the upfront gate and at a MID-LOOP gate (cap sized so one
+    contraction round runs first). Random graphs with chains, cliques
+    and self-loops, which every path drops."""
     rng = random.Random(41)
     pairs = []
     for trial in range(3):
@@ -120,50 +118,50 @@ def _case_driver_finish_matches_distributed(spark):
             for _ in range(45 + 12 * trial)
         ]
         pairs += [(off + 500 + i, off + 501 + i) for i in range(24)]  # chain
-    pairs = [(a, b) for a, b in pairs if a != b]
+        pairs.append((off + 900, off + 900))  # self-loop only: no row
     edges = _edges_df(spark, pairs)
+    expected = _union_find(pairs)
     pure = _labels(
+        cc.connected_components(edges, "id_a", "id_b", driver_finish_max_edges=0)
+    )
+    assert pure == expected
+    up_st = {}
+    up = _labels(
         cc.connected_components(
-            edges, "id_a", "id_b", algorithm="star", driver_finish_max_edges=0
+            edges, "id_a", "id_b", stats=up_st,
+            driver_finish_max_edges=10**6,  # gate fires upfront
         )
     )
-    for algo in ("label", "star"):
-        up = _labels(
-            cc.connected_components(
-                edges, "id_a", "id_b", algorithm=algo,
-                driver_finish_max_edges=10**6,  # gate fires upfront
-            )
-        )
-        assert up == pure, algo
-    # Mid-loop gate: cap below the input edge count but above the
-    # post-round-1 contracted count -> at least one distributed round,
-    # then the driver finish. (Star only: the label variant does not
-    # contract, so its gate is upfront-only by construction.)
-    n_in = edges.distinct().count()
+    assert up == expected
+    assert up_st["rounds"] == 0 and "driver_finish_edges" in up_st
+    # Mid-loop gate: cap one below the canonical (undirected, distinct)
+    # input edge count, which the contracted post-round-1 count is under
+    # -> one distributed round, then the driver finish.
+    n_in = len({(max(a, b), min(a, b)) for a, b in pairs})
     st = {}
     mid = _labels(
         cc.connected_components(
-            edges, "id_a", "id_b", algorithm="star",
-            driver_finish_max_edges=max(1, n_in - 10), stats=st,
+            edges, "id_a", "id_b",
+            driver_finish_max_edges=n_in - 1, stats=st,
         )
     )
-    assert mid == pure
-    assert st["rounds"] >= 1 or "driver_finish_edges" in st
+    assert mid == expected
+    assert st["rounds"] >= 1 and "driver_finish_edges" in st, st
 
 
 # Concurrent execution (VERDICT r06 #7, the parity/streaming fixture
-# pattern): the four cases are independent iterative-kernel executions
-# — a module fixture runs them over a thread pool and the parametrized
-# test re-raises each recorded outcome.
+# pattern): the cases are independent iterative-kernel executions — a
+# module fixture runs them over a thread pool and the parametrized test
+# re-raises each recorded outcome.
 
 import pytest as _pytest
 from concurrent.futures import ThreadPoolExecutor as _TPE
 
 _CC_CASES = {
-    "star_matches_label_on_random_graphs": _case_star_matches_label_on_random_graphs,
-    "star_matches_label_on_disjoint_cliques": _case_star_matches_label_on_disjoint_cliques,
+    "star_matches_union_find_on_random_graphs": _case_star_matches_union_find_on_random_graphs,
+    "star_matches_union_find_on_disjoint_cliques": _case_star_matches_union_find_on_disjoint_cliques,
     "star_fewer_rounds_on_chain": _case_star_fewer_rounds_on_chain,
-    "duplicate_clusters_algorithm_passthrough": _case_duplicate_clusters_algorithm_passthrough,
+    "duplicate_clusters_members_and_canonical": _case_duplicate_clusters_members_and_canonical,
     "driver_finish_matches_distributed": _case_driver_finish_matches_distributed,
 }
 

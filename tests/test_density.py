@@ -132,11 +132,11 @@ def dbscan_outcomes(spark):
              (100_000, 0), (100_010, 0), (100_000, 10), (100_010, 10)],
             50, 4,
         ),
-        # A 40-node chain has diameter 39 > max_iterations=10: the
-        # label path must FAIL LOUDLY, never return silently-split
-        # components (the DBSCAN sf0.1 lesson: capped labels reported
-        # 30 clusters where the true closure has 28). Star contracts
-        # the same chain fine within the default cap.
+        # A 40-node chain is not contracted to stars in one round:
+        # with max_iterations=1 the star loop must FAIL LOUDLY, never
+        # return silently-split components (the DBSCAN sf0.1 lesson:
+        # capped min-label rounds reported 30 clusters where the true
+        # closure has 28). Within the default cap it contracts fine.
         "chain": lambda: _chain_case(spark),
     }
     with _TPE(max_workers=4) as ex:
@@ -150,18 +150,18 @@ def _chain_case(spark):
     )
     try:
         connected_components(
-            edges, "a", "b", max_iterations=10, driver_finish_max_edges=0,
+            edges, "a", "b", max_iterations=1, driver_finish_max_edges=0,
         ).collect()
-        label_raised = False
+        capped_raised = False
     except ValueError as e:
-        label_raised = "did not converge" in str(e)
+        capped_raised = "did not converge" in str(e)
     comps = {
         r["component"]
         for r in connected_components(
-            edges, "a", "b", algorithm="star", driver_finish_max_edges=0
+            edges, "a", "b", driver_finish_max_edges=0
         ).collect()
     }
-    return {"label_raised": label_raised, "star_components": comps}
+    return {"capped_raised": capped_raised, "components": comps}
 
 
 def test_dbscan_semantics_units(dbscan_outcomes):
@@ -179,9 +179,9 @@ def test_dbscan_two_separate_clusters_and_min_labels(dbscan_outcomes):
     }
 
 
-def test_label_cc_raises_loudly_past_diameter_cap(dbscan_outcomes):
-    assert dbscan_outcomes["chain"]["label_raised"] is True
-    assert dbscan_outcomes["chain"]["star_components"] == {0}
+def test_cc_raises_loudly_past_round_cap(dbscan_outcomes):
+    assert dbscan_outcomes["chain"]["capped_raised"] is True
+    assert dbscan_outcomes["chain"]["components"] == {0}
 
 
 def test_kdist_calibration_matches_bruteforce(spark):

@@ -335,6 +335,45 @@ def test_lpa_colocated_path_equivalence(spark, monkeypatch):
     assert res.ok, res.detail
 
 
+def test_eager_graph_kernels_release_their_caches(spark):
+    """Kernels whose result is an eager checkpoint or a driver-built
+    frame must leave no cache entry behind once the result is read:
+    nothing reads their edge caches after the call, so a leftover entry
+    is held until the periodic GC. Runs standalone (the cache manager
+    is shared by every session of the context), after clearing what
+    earlier tests left."""
+    from reddit_data_pipeline_engineering_spark.operators import components as cc
+    from reddit_data_pipeline_engineering_spark.operators import lpa
+
+    und = [(1, 2), (1, 3), (2, 3), (3, 4), (4, 5), (5, 6), (6, 4), (7, 8)]
+    df = spark.createDataFrame(
+        und + [(b, a) for a, b in und], "src long, dst long"
+    )
+    seeds = spark.createDataFrame([(1,)], "node long")
+    kernels = {
+        "pagerank": lambda: pr.pagerank(df),
+        "personalized_pagerank": lambda: pr.personalized_pagerank(df, seeds),
+        "connected_components[driver_finish]": (
+            lambda: cc.connected_components(df, "src", "dst")
+        ),
+        "connected_components[distributed]": (
+            lambda: cc.connected_components(
+                df, "src", "dst", driver_finish_max_edges=0
+            )
+        ),
+        "label_propagation": lambda: lpa.label_propagation(df, rounds=2),
+    }
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    held = []
+    for name, kernel in kernels.items():
+        kernel().collect()
+        if not cache.isEmpty():
+            held.append(name)
+            spark.catalog.clearCache()
+    assert held == []
+
+
 def _case_kcore_fixpoint_is_exact_core(spark):
     """Fixpoint peeling must return exactly the k-core: the 4-clique
     survives k=3 (every member keeps degree 3), everything else—

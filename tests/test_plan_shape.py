@@ -631,9 +631,6 @@ _TWINS_ALLOWED = {
         "percentile_disc fraction; window wins at sf0.1/sf1.0, bisection "
         "at sf10, and no benchmark workload runs either"
     ),
-    frozenset({"dup_clusters", "dup_clusters_star"}): (
-        "only the star contraction converges on long chains"
-    ),
     frozenset({"streaming_pit_enrich", "streaming_pit_enrich_tiled"}): (
         "the tiled arm certifies the large-dimension join plan, which the "
         "broadcast arm never takes at test scale"

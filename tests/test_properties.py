@@ -243,7 +243,8 @@ edges_st = (
 @WIDE
 def _prop_star_components_property(spark, edges):
     """Large-star/small-star labeling == a reference union-find on the
-    same edges, for arbitrary graphs (self-loops dropped)."""
+    same edges, for arbitrary graphs (self-loops dropped). The driver
+    finish is off, so the contraction rounds run on every drawn graph."""
     from reddit_data_pipeline_engineering_spark.operators import components as cc
 
     parent: dict[int, int] = {}
@@ -267,7 +268,7 @@ def _prop_star_components_property(spark, edges):
     got = {
         (r["id"], r["component"])
         for r in cc.connected_components(
-            df, "id_a", "id_b", algorithm="star"
+            df, "id_a", "id_b", driver_finish_max_edges=0
         ).collect()
     }
     assert got == expected
