@@ -29,7 +29,6 @@ def random_walks(
     edges: DataFrame,
     anchors: DataFrame,
     steps: int,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """(walker, node, path) after ``steps`` deterministic-hash hops.
 
@@ -38,12 +37,11 @@ def random_walks(
     starting points; each spawns one walker named by its start node.
     ``path`` is the '->'-joined node sequence, bounded by ``steps``.
     """
-    if checkpoint:
-        # Pre-partitioned on the per-step join key (see bfs.multi_bfs_levels,
-        # r07): each step joins walkers against the static edge list on
-        # ``src`` in its own action, so a plain cache re-shuffled all
-        # edges per step; the partitioned cache moves only walkers.
-        edges = edges.repartition(F.col("src")).persist()
+    # Pre-partitioned on the per-step join key (see bfs.multi_bfs_levels,
+    # r07): each step joins walkers against the static edge list on
+    # ``src`` in its own action, so a plain cache re-shuffled all
+    # edges per step; the partitioned cache moves only walkers.
+    edges = edges.repartition(F.col("src")).persist()
     walks = anchors.select(
         F.col("node").alias("walker"),
         F.col("node"),
@@ -68,6 +66,5 @@ def random_walks(
             F.col("m.dst").alias("node"),
             F.concat_ws("->", F.col("m.path"), F.col("m.dst")).alias("path"),
         )
-        if checkpoint:
-            walks = walks.localCheckpoint(eager=True)
+        walks = walks.localCheckpoint(eager=True)
     return walks

@@ -16,9 +16,14 @@ run jobs of their own. Stage totals cover build and action jobs together:
 an eager checkpoint's shuffle is part of the query's data movement.
 Streaming micro-batches run under their stream's own group, so a
 streaming query's ``build_jobs`` counts only its driver-side jobs.
-``input_bytes`` is Spark's task input metric: it counts cached-block and
-checkpoint reads, but for a parquet scan on Spark 4.1 only a few KB per
-file (3.3 KB for the 2.0 MB sf0.1 ``events`` file).
+
+``compiles`` is the number of Janino compilations during the pass, the
+change in the count of Spark's ``CodegenMetrics.METRIC_COMPILATION_TIME``
+histogram. Unlike the job-group fields, that counter is process-wide: it
+also counts classes that other threads' queries compile meanwhile. After
+``run``'s warm-up a nonzero value on a quiet session means the query's
+own classes do not fit the generated-code cache
+(``session.CODEGEN_CACHE_ENTRIES``).
 
 CLI::
 
@@ -46,7 +51,6 @@ _STAGE_FIELDS = (
     "shuffle_write_bytes",
     "shuffle_write_records",
     "shuffle_read_bytes",
-    "input_bytes",
 )
 
 
@@ -97,7 +101,6 @@ def _stage_totals(spark: SparkSession, job_ids: list[int]) -> dict:
                 out["shuffle_write_bytes"] += st.shuffleWriteBytes()
                 out["shuffle_write_records"] += st.shuffleWriteRecords()
                 out["shuffle_read_bytes"] += st.shuffleReadBytes()
-                out["input_bytes"] += st.inputBytes()
     return out
 
 
@@ -152,12 +155,19 @@ def py4j_round_trips(spark: SparkSession, fn):
     return result, n
 
 
+def _compilations(spark: SparkSession) -> int:
+    """Janino compilations so far in this JVM (all threads)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
 def _timed_pass(spark: SparkSession, name: str, fn, sf_dir: str) -> dict:
     group = f"profile:{name}:{uuid.uuid4().hex[:12]}"
+    compiled = _compilations(spark)
     t0 = time.perf_counter()
     with _job_group(spark, f"{group}/build", group):
         df, build_py4j = py4j_round_trips(spark, lambda: fn(spark, sf_dir))
@@ -165,6 +175,7 @@ def _timed_pass(spark: SparkSession, name: str, fn, sf_dir: str) -> dict:
     with _job_group(spark, f"{group}/action", group):
         _noop(df)
     t2 = time.perf_counter()
+    compiles = _compilations(spark) - compiled
     build = _group_jobs(spark, f"{group}/build")
     action = _group_jobs(spark, f"{group}/action")
     return {
@@ -173,6 +184,7 @@ def _timed_pass(spark: SparkSession, name: str, fn, sf_dir: str) -> dict:
         "build_jobs": len(build),
         "build_py4j": build_py4j,
         "action_jobs": len(action),
+        "compiles": compiles,
         **_stage_totals(spark, build + action),
     }
 

@@ -8,7 +8,10 @@ Scale notes (targets a 1000-executor cluster even though tests run
 partition coalescing; shuffle partitions sized to cores locally (the
 cluster profile would set it to 2-3x total cores); session timezone pinned
 to UTC so ISO-8601 ``+07:00`` inputs normalize identically everywhere
-(reference behavior: ``glue_jobs/process_openaq_raw.py:118-121``).
+(reference behavior: ``glue_jobs/process_openaq_raw.py:118-121``); the
+JVM's generated-code cache sized to the engine's measured working set
+(``CODEGEN_CACHE_ENTRIES``), so a long-lived session that re-runs the same
+queries compiles each generated class once, not once per run.
 """
 
 from __future__ import annotations
@@ -45,9 +48,34 @@ RUNTIME_CONFS = {
 # accumulation.
 PERIODIC_GC_INTERVAL = "90s"
 
+# Entries in Spark's generated-code cache (static conf
+# spark.sql.codegen.cache.maxEntries; Spark's default is 100). The cache is
+# an LRU keyed by the generated source, and a miss is a Janino compilation
+# during the action. Measured working sets, local[4], sf0.001:
+# - one seed-shuffled pass over perfbench's 35 dashboard queries: 384
+#   distinct classes. At 100 entries the cyclic pass evicts each class
+#   before its next use, so every warm pass compiled 405-445 classes; at
+#   1000 a warm pass compiles 0-8;
+# - the ingest workload (backfill, hourly merge_upsert, streaming drain):
+#   649-837 compilations per 30 s at 100 entries, all of them repeats; 0
+#   at 1000;
+# - the iterative kernels (kmeans, pq, bloom) keep their per-iteration
+#   expression tree fixed so that one cached class serves every iteration.
+# 1000 covers the dashboard set 2.6x over. Memory per cached class: its
+# source text, about 9 KB, on the heap, and 7-10 KB of Metaspace (after a
+# full GC at the end of a dashboard pass, Metaspace read 2.2-3.0 MB more
+# at 1000 entries than at 100), so a full cache would hold about 20 MB.
+CODEGEN_CACHE_ENTRIES = "1000"
+
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Apply engine-required runtime-settable confs to an existing session."""
+    """Apply engine-required runtime-settable confs to an existing session.
+
+    Static confs (``CODEGEN_CACHE_ENTRIES``, ``PERIODIC_GC_INTERVAL``) are
+    fixed when the JVM's SparkContext starts, so a session the engine did
+    not build keeps Spark's defaults for them: 100 cached generated
+    classes, which a dashboard pass overflows.
+    """
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
@@ -203,6 +231,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("RDPE_DRIVER_MEMORY", "8g"))
         .config("spark.local.dir", local_dir)
         .config("spark.cleaner.periodicGC.interval", PERIODIC_GC_INTERVAL)
+        .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -28,6 +28,7 @@ def test_measure_attributes_stages(spark):
     assert z == dict.fromkeys(z, 0)
 
 
+# Not ``compiles``: the JVM's compilation counter is process-wide.
 _OWN_WORK = (
     "build_jobs",
     "build_py4j",
@@ -74,3 +75,50 @@ def test_concurrent_runs_count_only_their_own_work(spark):
         assert {k: both[n][k] for k in _OWN_WORK} == {
             k: solo[n][k] for k in _OWN_WORK
         }, n
+
+
+# Cheap dashboard queries whose repeat passes compile nothing once their
+# classes are cached (marts_kernel, supplier_blame_exists and
+# waiting_suppliers sometimes generate a few new classes per pass).
+_CODEGEN_SET = (
+    "running_sum", "lag_lead_delta", "forward_fill", "sessionize", "set_ops",
+    "time_bucket_rollup", "market_share", "large_volume_customers",
+    "local_supplier_volume", "minmax_profile",
+)
+
+
+def _flush_codegen_cache(spark):
+    """Empty Spark's generated-code cache (a private JVM field), so the
+    next pass compiles each distinct class exactly once."""
+    jvm = spark._jvm
+    cls = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    )
+    field = cls.getDeclaredField("cache")
+    field.setAccessible(True)
+    field.get(cls.getField("MODULE$").get(None)).invalidateAll()
+
+
+def test_repeat_pass_compiles_nothing(spark):
+    """A working set of generated classes larger than Spark's default
+    cache (100 entries) stays cached: after one pass compiles each of the
+    set's distinct classes (170 on Spark 4.1.2), a second identical pass
+    compiles none. With 100 entries the cyclic pass evicts every class
+    before its reuse, and the second pass recompiled 169."""
+    from reddit_data_pipeline_engineering_spark.plans.queries import (
+        REGISTRY,
+        queries,
+    )
+
+    queries()
+
+    def compiles_per_pass():
+        return sum(
+            profile._timed_pass(spark, n, REGISTRY[n].fn, SF_SMALL)["compiles"]
+            for n in _CODEGEN_SET
+        )
+
+    _flush_codegen_cache(spark)
+    distinct = compiles_per_pass()
+    assert distinct > 100
+    assert compiles_per_pass() == 0
