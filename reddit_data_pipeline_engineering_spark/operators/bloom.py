@@ -4,8 +4,8 @@ No reference counterpart (the reference's joins are plain Glue joins —
 SURVEY.md §2.3); this is the pattern Spark's runtime row-level filtering
 applies internally for selective joins, made explicit, tunable, and
 verifiable: build a compact bit-array over the small side's join keys,
-broadcast it as a LITERAL (model state, like the k-means centroids), and
-pre-filter the big side BEFORE the shuffle/join. At 100 TB the win is
+broadcast it as a one-row relation (model state, like the k-means
+centroids), and pre-filter the big side BEFORE the shuffle/join. At 100 TB the win is
 that the filter is O(m_bits/8) bytes regardless of key count — a 100M-key
 dim fits in a few MB of bits where the key set itself would not
 broadcast — and the fact-side pre-filter is a map-side expression fused
@@ -95,15 +95,19 @@ def bloom_filter_rows(
     m_bits: int,
     k_hashes: int,
 ) -> DataFrame:
-    """Filter ``df`` to rows whose key might be in the filter, carrying
-    the word array as a ONE-ROW BROADCAST RELATION instead of the
-    :func:`bloom_might_contain` literal (r11): embedding m_bits/64 long
-    literals k times in the predicate made codegen/planning the dominant
-    cost at bench scale (measured 3.75 s -> 2.13 s for the identical
-    65536-bit filter over 600k rows), and a literal also caps the filter
-    size well below the broadcast path (same device as the k-means
-    centroid relation — the expression tree is filter-invariant, so the
-    codegen cache serves every build)."""
+    """Filter ``df`` to rows whose key might be in the filter: k array
+    lookups + bit tests per row, map-side, before any exchange. True for
+    every inserted key; false positives at the standard
+    ``(1 - e^(-kn/m))^k`` rate.
+
+    The word array travels as a ONE-ROW BROADCAST RELATION, not an
+    expression literal: embedding m_bits/64 long literals k times in the
+    predicate made codegen/planning the dominant cost at bench scale
+    (measured 3.75 s -> 2.13 s for the identical 65536-bit filter over
+    600k rows), and a literal also caps the filter size well below the
+    broadcast path (same device as the k-means model row — the
+    expression tree is filter-invariant, so the codegen cache serves
+    every build)."""
     wdf = df.sparkSession.createDataFrame(
         [(list(map(int, words)),)], "__bloom array<bigint>"
     )
@@ -115,20 +119,3 @@ def bloom_filter_rows(
         test = word.bitwiseAND(_shl1((p % WORD_BITS).cast("int"))) != 0
         cond = test if cond is None else cond & test
     return df.crossJoin(F.broadcast(wdf)).filter(cond).drop("__bloom")
-
-
-def bloom_might_contain(
-    key: Column, words: list[int], m_bits: int, k_hashes: int
-) -> Column:
-    """Membership test as a pure JVM expression over the literal word
-    array: k array lookups + bit tests, fused into the scan (map-side,
-    before any exchange). True for every inserted key; false positives
-    at the standard ``(1 - e^(-kn/m))^k`` rate."""
-    cond = None
-    lit_words = F.lit(words)
-    for p in bloom_positions(key, m_bits, k_hashes):
-        word = F.element_at(lit_words, (p / WORD_BITS).cast("int") + 1)
-        bit = _shl1((p % WORD_BITS).cast("int"))
-        test = word.bitwiseAND(bit) != 0
-        cond = test if cond is None else cond & test
-    return cond

@@ -1,41 +1,56 @@
-"""Deterministic k-means coarse quantizer for IVF-style ANN.
+"""Deterministic integer-grid vector quantizers for ANN: k-means and
+product quantization as ONE Lloyd fit over subspace partitions.
 
-LLM-data-pipeline extension (no reference counterpart): the missing
-piece the round-1 review called out — IVF blocking previously rode a
-pre-existing ``label`` column; a real 100 TB ANN index computes its own
-coarse centroids. This module is DataFrame-native Lloyd iteration:
+LLM-data-pipeline extension (no reference counterpart): a real 100 TB
+ANN index computes its own coarse centroids and compression codebooks
+instead of riding a pre-existing ``label`` column. A *partition* splits
+the D-dim vector into ``m`` equal subspaces and learns one codebook of
+up to ``k`` centroids per subspace. ``m = 1`` is the k-means coarse
+quantizer of an IVF index, ``m = 4`` is product quantization (scored by
+operators/pq.py), and the IVF-PQ index fits both partitions together.
+:func:`lloyd_fit` takes the partitions as a tuple of subspace counts —
+``(1,)``, ``(4,)`` or ``(1, 4)`` — and fits every codebook in one loop:
 
-- **assignment** is a map-side fold against broadcast centroid literals
-  (k x dim values — model state, not data — so shipping them to the
-  driver between iterations is O(k*dim), independent of corpus size);
-- **update** is one hash aggregate per iteration (partial aggregation
-  map-side, one shuffle keyed on the cluster id).
+- **assignment** is a map-side fold against ONE broadcast model row
+  (every codebook as array data — model state, not data, so shipping it
+  to the driver between iterations is O(books*k*subdim), independent of
+  corpus size);
+- **update** is ONE hash aggregate per iteration keyed on (book, code,
+  dimension) over the posexploded vector: map-side partial aggregation
+  collapses each partition to <= books*k*subdim rows before the single
+  shuffle, however many partitions and subspaces are fit.
 
 Determinism device: Lloyd's algorithm on floats is not reproducible
-across engines (summation order), so the quantizer runs on
-integer-quantized vectors — ``qx_i = floor(x_i * 16384)`` — and keeps
+across engines (summation order), so the quantizers run on
+integer-quantized vectors — ``qx_i = floor(x_i * 16384)`` — and keep
 centroids on an integer grid (``c_i = floor(64 * sum(qx_i) / n)``).
 Every distance is then EXACT 64-bit integer arithmetic (bounded by
 64 * (2^19)^2 < 2^53, so even a double-typed fold is exact), which makes
-cluster assignments bit-identical in any engine and any partitioning —
-the DuckDB oracle can replay the whole fit. Production would swap the
-grid for float Lloyd; the plan shape (broadcast centroids -> map fold ->
-one keyed shuffle per iteration) is identical. Final candidate SCORING
-stays exact cosine on the original float vectors — quantization only
-affects which coarse cell a vector lands in.
+assignments bit-identical in any engine and any partitioning — the
+DuckDB oracle replays the whole fit. Production would swap the grid for
+float Lloyd; the plan shape (broadcast model -> map fold -> one keyed
+shuffle per iteration) is identical. Final candidate SCORING stays exact
+cosine on the original float vectors — quantization only affects which
+cell or code a vector gets.
 
-Seeding: the k rows with the smallest ``md5(cast(id as string))`` — a
-deterministic pseudo-random sample expressible in SQL (same device as
-the hash-split operators, plans/queries_llm.py).
+Seeding: the k rows with the smallest ``md5(cast(id as string))`` seed
+every codebook (their sub-slices) — a deterministic pseudo-random sample
+expressible in SQL (same device as the hash-split operators,
+plans/queries_llm.py), so one seed scan serves all codebooks and the
+oracle needs a single seeds CTE.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 QUANT_SCALE = 16384  # 2^14: |x| <= ~16 stays overflow-safe (see module doc)
 CENT_SCALE = 64  # centroid grid is 64x finer than the vector grid
+
+Codebooks = list[list[list[int]]]  # [subspace][code][sub-dimension]
 
 
 def quantized(vec: Column | str, scale: int = QUANT_SCALE) -> Column:
@@ -53,22 +68,48 @@ def _seed_order(id_col: str) -> list[Column]:
     ]
 
 
-def nearest_centroid_expr(qv: Column) -> Column:
-    """The argmin-with-tiebreak cluster expression of
-    :func:`assign_clusters`, factored out (r11) so the joint IVF+PQ fit
-    can evaluate it alongside the PQ code expression in ONE projection.
-    Requires the ``__cents``/``__c2s`` broadcast columns in scope."""
+def model_row(spark, books: Codebooks) -> DataFrame:
+    """The one-row broadcastable model relation: every codebook
+    (``__books``) and each centroid's exact ``|c|^2`` (``__b2s``, <=
+    64*(2^20)^2 < 2^53). The centroids travel as DATA, NOT as expression
+    literals: a k x dim literal tree forced a fresh analysis + codegen
+    compile on every Lloyd iteration (the literals change), which
+    dominated iteration wall time; with the model in a broadcast row the
+    expression tree is iteration-invariant, so the codegen cache serves
+    every iteration after the first (measured ~3x faster per iteration
+    at sf0.1)."""
+    return spark.createDataFrame(
+        [(
+            [[[int(v) for v in c] for c in book] for book in books],
+            [[sum(int(v) ** 2 for v in c) for c in book] for book in books],
+        )],
+        "__books array<array<array<bigint>>>, __b2s array<array<bigint>>",
+    )
+
+
+def _nearest(sq: Column, book: int) -> Column:
+    """Nearest centroid of codebook ``book`` to the (sub)vector ``sq``,
+    ties -> lowest code. The per-centroid score is the REDUCED distance
+    ``-128*dot(qx,c) + |c|^2``: expanding ``sum((qx*64 - c_i)^2)`` drops
+    the ``4096*|qx|^2`` term, which is constant per row within a
+    codebook, so the argmin (and every tie) is identical to the full
+    squared distance while the fold does one multiply per dimension.
+    array_min over structs is lexicographic (dist, code) — the same
+    argmin-with-tiebreak the oracle expresses as row_number over ORDER
+    BY dist, code. transform's 2-arg lambda receives (element, index);
+    element_at is 1-based, hence the i + 1."""
+    b2 = F.element_at(F.col("__b2s"), book + 1)
     scored = F.transform(
-        F.col("__cents"),
+        F.element_at(F.col("__books"), book + 1),
         lambda c, i: F.struct(
             (
                 F.lit(-2 * CENT_SCALE)
                 * F.aggregate(
-                    F.zip_with(qv, c, lambda a, b: a * b),
+                    F.zip_with(sq, c, lambda a, b: a * b),
                     F.lit(0).cast("long"),
                     lambda acc, v: acc + v,
                 )
-                + F.element_at(F.col("__c2s"), (i + F.lit(1)).cast("int"))
+                + F.element_at(b2, (i + F.lit(1)).cast("int"))
             ).alias("d"),
             i.cast("int").alias("c"),
         ),
@@ -76,114 +117,138 @@ def nearest_centroid_expr(qv: Column) -> Column:
     return F.array_min(scored)["c"]
 
 
-def centroid_rows_df(spark, centroids: list[list[int]]):
-    """The one-row broadcastable centroid relation used by
-    :func:`assign_clusters` (shared with the joint IVF+PQ fit)."""
-    c2s = [sum(int(v) * int(v) for v in c) for c in centroids]
-    return spark.createDataFrame(
-        [([[int(v) for v in c] for c in centroids], c2s)],
-        "__cents array<array<bigint>>, __c2s array<bigint>",
+def _codes(qv: Column, subspaces: tuple[int, ...], dim: int) -> Column:
+    """``array<int>``: the nearest code in every codebook of every
+    partition, in the model row's (flat) book order."""
+    codes = []
+    for m in subspaces:
+        w = dim // m
+        for s in range(m):
+            sq = qv if m == 1 else F.slice(qv, s * w + 1, w)
+            codes.append(_nearest(sq, len(codes)))
+    return F.array(*codes)
+
+
+def assign_codes(
+    df: DataFrame, vec_col: str, books: Codebooks, out_col: str = "codes"
+) -> DataFrame:
+    """Add an ``array<int>`` of one code per codebook (one per subspace
+    of ``vec_col``): map-only against one broadcast model row."""
+    dim = len(books) * next((len(b[0]) for b in books if b), 0)
+    return (
+        df.crossJoin(F.broadcast(model_row(df.sparkSession, books)))
+        .withColumn(out_col, _codes(quantized(vec_col), (len(books),), dim))
+        .drop("__books", "__b2s")
     )
 
 
 def assign_clusters(
-    df: DataFrame,
-    vec_col: str,
-    centroids: list[list[int]],
+    df: DataFrame, vec_col: str, centroids: list[list[int]],
     out_col: str = "cluster",
-    pre_quantized: bool = False,
 ) -> DataFrame:
-    """Add the nearest-centroid id (ties -> lowest cluster id): map-only,
-    one exact integer fold per centroid against a broadcast centroid row.
-
-    The per-centroid score is the REDUCED distance ``-128*dot(qx,c) +
-    |c|^2``: expanding ``sum((qx*64 - c_i)^2)`` drops the ``4096*|qx|^2``
-    term, which is constant per row across centroids, so the argmin (and
-    every tie) is identical to the full squared distance while the fold
-    does one multiply per dimension instead of two multiplies and a
-    subtract. The centroids travel as DATA in a one-row broadcast
-    relation (array<array<bigint>> + precomputed |c|^2 per cluster, both
-    exact: <= 64*(2^20)^2 < 2^53), NOT as expression literals: a k x dim
-    literal tree forced a fresh analysis + codegen compile on every
-    Lloyd iteration (the literals change), which dominated iteration
-    wall time; with the centroids in a broadcast row the expression tree
-    is iteration-invariant, so the codegen cache serves every iteration
-    after the first (measured ~3x faster per iteration at sf0.1)."""
-    qv = F.col(vec_col) if pre_quantized else quantized(vec_col)
-    cdf = centroid_rows_df(df.sparkSession, centroids)
-    # array_min over structs is lexicographic (dist, cluster) — the same
-    # argmin-with-tiebreak the oracle expresses as row_number over
-    # ORDER BY dist, cluster (equal-tie sets: both scores differ by the
-    # same per-row constant). transform's 2-arg lambda receives
-    # (element, index); element_at is 1-based, hence the i + 1 inside
-    # nearest_centroid_expr.
-    return (
-        df.crossJoin(F.broadcast(cdf))
-        .withColumn(out_col, nearest_centroid_expr(qv))
-        .drop("__cents", "__c2s")
+    """The one-subspace case of :func:`assign_codes`: add the
+    nearest-centroid id (ties -> lowest cluster id) as an int column."""
+    return assign_codes(df, vec_col, [centroids], out_col).withColumn(
+        out_col, F.col(out_col)[0]
     )
 
 
-def kmeans_fit(
+def lloyd_fit(
     df: DataFrame,
     vec_col: str,
     id_col: str,
+    subspaces: tuple[int, ...],
     k: int = 8,
     iters: int = 2,
-) -> list[list[int]]:
-    """Fit k integer-grid centroids with ``iters`` Lloyd iterations.
+) -> list[Codebooks]:
+    """Fit one list of codebooks per entry ``m`` of ``subspaces`` (``m``
+    subspaces of ``dim / m`` dimensions, up to ``k`` centroids each) with
+    ``iters`` Lloyd iterations: ``(1,)`` is k-means, ``(4,)`` is PQ and
+    ``(1, 4)`` fits an IVF-PQ index's coarse and PQ models together.
 
-    Each iteration: map-side assignment against the current broadcast
-    centroids, then ONE hash aggregate keyed on (cluster, dimension) —
-    the vector is posexploded so the update is k*dim narrow groups
-    (map-side partial aggregation collapses each partition to <= k*dim
-    rows before the shuffle) instead of a dim-wide column list, whose
-    per-iteration Catalyst analysis cost dominated wall time at small
-    scale. Only the k*dim aggregated rows come back to the driver.
-    A cluster that loses all members drops out (both engines mirror
-    this), so the result may have fewer than k centroids.
+    One seed collect and one persisted quantized sample serve the whole
+    fit; each iteration is one projection of every codebook's code plus
+    ONE aggregate job keyed on (book, code, dimension). A centroid that
+    loses all members drops out and the remaining codes renumber densely
+    (per codebook, by old code id) — both engines mirror this, so a
+    codebook may hold fewer than ``k`` centroids, and none on an empty
+    frame.
     """
-    seeds = (
-        df.orderBy(*_seed_order(id_col))
+    seeds = [
+        r["q"]
+        for r in df.orderBy(*_seed_order(id_col))
         .limit(k)
         .select(quantized(vec_col).alias("q"))
         .collect()
-    )
-    centroids = [
-        [int(v) * CENT_SCALE for v in r["q"]] for r in seeds
     ]
-    dim = len(seeds[0]["q"]) if seeds else 0
-    import math
-
+    dim = len(seeds[0]) if seeds else 0
+    for m in subspaces:
+        if dim % m:
+            raise ValueError(f"dim {dim} not divisible by m={m}")
+    bases = [sum(subspaces[:p]) for p in range(len(subspaces))]
+    spans = [(s * (dim // m), dim // m) for m in subspaces for s in range(m)]
+    books = [
+        [[int(v) * CENT_SCALE for v in q[a:a + w]] for q in seeds]
+        for a, w in spans
+    ]
+    # Every expression of the iteration's plan is iteration-invariant
+    # (the model travels as data), so each is built once: a PySpark
+    # function call costs ~10 Py4J round trips.
+    codes = _codes(F.col("q"), subspaces, dim).alias("codes")
+    elems = F.posexplode("q").alias("pos", "v")
+    pos = F.col("pos")
+    keys = [
+        F.lit(b) + (pos / (dim // m)).cast("int")
+        for b, m in zip(bases, subspaces)
+    ]
+    if len(keys) == 1:
+        keyed = [keys[0].alias("book"), pos, F.col("v")]
+    else:
+        keyed = [F.inline(F.array(*[
+            F.struct(key.alias("book"), pos, F.col("v")) for key in keys
+        ]))]
+    code = F.element_at("codes", F.col("book") + 1).alias("code")
+    sums = [F.sum("v").alias("s"), F.count(F.lit(1)).alias("n")]
     # One materialization of the quantized vectors serves every Lloyd
     # iteration (and the seed scan already ran) — without it each
     # iteration re-reads and re-quantizes the corpus. At cluster scale
     # this is a MEMORY_AND_DISK persist of one narrow column.
     qdf = df.select(quantized(vec_col).alias("q")).persist()
-    for _ in range(iters):
-        assigned = assign_clusters(
-            qdf, "q", centroids, out_col="cluster", pre_quantized=True
-        )
-        rows = (
-            assigned.select("cluster", F.posexplode("q").alias("pos", "v"))
-            .groupBy("cluster", "pos")
-            .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        by_cluster: dict[int, dict[int, tuple[int, int]]] = {}
-        for r in rows:
-            by_cluster.setdefault(r["cluster"], {})[r["pos"]] = (r["s"], r["n"])
-        # floor((s*64)/n) via DOUBLE division on both sides: s*64 is exact
-        # in double (< 2^33) and the correctly-rounded quotient + floor is
-        # the same IEEE computation the oracle's floor(... / n) performs.
-        # (Exact integer floor-division would NOT mirror SQL: // semantics
-        # differ across engines for negative sums.)
-        centroids = [
-            [
-                int(math.floor((dims[i][0] * float(CENT_SCALE)) / dims[i][1]))
-                for i in range(dim)
+    try:
+        for _ in range(iters):
+            model = F.broadcast(model_row(df.sparkSession, books))
+            # posexplode runs in its own projection: in the same select
+            # as the aliased code expression it fails FIELD_NOT_FOUND.
+            rows = (
+                qdf.crossJoin(model)
+                .select("q", codes)
+                .select("codes", elems)
+                .select("codes", *keyed)
+                .groupBy("book", code, "pos")
+                .agg(*sums)
+                .collect()
+            )
+            state: dict[int, dict[int, dict[int, tuple[int, int]]]] = {}
+            for r in rows:
+                state.setdefault(r["book"], {}).setdefault(r["code"], {})[
+                    r["pos"]
+                ] = (r["s"], r["n"])
+            # floor((s*64)/n) via DOUBLE division on both sides: s*64 is
+            # exact in double (< 2^33) and the correctly-rounded quotient
+            # + floor is the same IEEE computation the oracle's
+            # floor(... / n) performs. (Exact integer floor-division would
+            # NOT mirror SQL: // semantics differ across engines for
+            # negative sums.)
+            books = [
+                [
+                    [
+                        int(math.floor((s * float(CENT_SCALE)) / n))
+                        for s, n in (dims[p] for p in range(a, a + w))
+                    ]
+                    for _, dims in sorted(state.get(b, {}).items())
+                ]
+                for b, (a, w) in enumerate(spans)
             ]
-            for _, dims in sorted(by_cluster.items())
-        ]
-    qdf.unpersist()
-    return centroids
+    finally:
+        qdf.unpersist()
+    return [books[b:b + m] for b, m in zip(bases, subspaces)]

@@ -1,24 +1,20 @@
-"""Product quantization (PQ) for memory-bounded ANN at corpus scale.
+"""Product quantization (PQ) scoring for memory-bounded ANN at corpus
+scale.
 
 LLM-data-pipeline extension (no reference counterpart — the reference's
-data plane stops at SQL aggregation, see SURVEY.md §2). IVF (operators/
-kmeans.py) prunes WHICH vectors to score; PQ compresses HOW each vector
-is stored and scored: a D-dim float vector becomes ``m`` small codes
-(one per D/m-dim subspace), and query scoring reads an ``m * k``
-distance table instead of the raw floats. At 100 TB the embedding
-column is the dominant byte cost — 64 floats/row vs ``m`` bytes/row is
-the difference between a scan that fits in page cache and one that
-doesn't.
+data plane stops at SQL aggregation, see SURVEY.md §2). IVF prunes WHICH
+vectors to score; PQ compresses HOW each vector is stored and scored: a
+D-dim float vector becomes ``m`` small codes (one per D/m-dim subspace),
+and query scoring reads an ``m * k`` distance table instead of the raw
+floats. At 100 TB the embedding column is the dominant byte cost — 64
+floats/row vs ``m`` bytes/row is the difference between a scan that fits
+in page cache and one that doesn't.
 
-Spark-first design:
+The codebooks are fit by ``kmeans.lloyd_fit(..., (m,))`` — all ``m``
+sub-codebooks in one Lloyd loop, one shuffle per iteration regardless of
+``m`` — and rows are encoded by ``kmeans.assign_codes`` (map-only against
+one broadcast model row). This module scores the codes:
 
-- **One fit, not m fits.** All ``m`` sub-codebooks are learned
-  simultaneously: assignment is a map-side fold against ONE broadcast
-  codebook row (same codegen-cache device as kmeans.assign_clusters),
-  and the Lloyd update is ONE hash aggregate keyed on (subspace, code,
-  dimension) over the posexploded vector — a single shuffle per
-  iteration regardless of ``m``, returning only ``m * k * subdim``
-  aggregated rows to the driver (model state, not data).
 - **ADC scoring is expression-only.** The query-to-centroid distance
   table is ``m * k`` integers (model-sized), inlined as a literal; the
   per-row approximate distance is ``m`` array lookups + adds, no
@@ -27,337 +23,32 @@ Spark-first design:
   TakeOrderedAndProject) is re-scored with exact cosine on the original
   floats, so compression affects candidate selection only.
 
-Determinism: identical device to operators/kmeans.py — vectors live on
-the ``floor(x * 16384)`` integer grid, centroids on a 64x finer grid,
-every distance is exact 64-bit integer arithmetic, seeds are the ``k``
-rows with the smallest ``md5(id)``. A SQL engine can replay the entire
-fit + encode + ADC pipeline bit-identically (see the generated oracle
-in plans/queries_llm.py).
+Determinism: the integer grid of operators/kmeans.py — every distance is
+exact 64-bit integer arithmetic, so a SQL engine can replay the entire
+fit + encode + ADC pipeline bit-identically (see the generated oracle in
+plans/queries_llm.py).
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from reddit_data_pipeline_engineering_spark.operators.kmeans import (
     CENT_SCALE,
     QUANT_SCALE,
-    _seed_order,
-    quantized,
+    Codebooks,
+    assign_codes,
 )
-
-Codebooks = list[list[list[int]]]  # [subspace][code][sub-dimension]
-
-
-def _codebook_df(spark, codebooks: Codebooks):
-    """One-row broadcastable relation carrying the codebooks as DATA
-    (iteration-invariant expression tree -> codegen cache reuse; see
-    kmeans.assign_clusters for the measurement)."""
-    c2s = [
-        [sum(int(v) * int(v) for v in c) for c in book] for book in codebooks
-    ]
-    return spark.createDataFrame(
-        [([[list(map(int, c)) for c in book] for book in codebooks], c2s)],
-        "__books array<array<array<bigint>>>, __b2s array<array<bigint>>",
-    )
-
-
-def _code_expr(qv: Column, sub: int, subdim: int) -> Column:
-    """Nearest sub-centroid id for one subspace: reduced distance
-    ``-128*dot + |c|^2`` (the ``4096*|qx_sub|^2`` term is constant per
-    row within a subspace, so argmin and ties match the full squared
-    distance), ties -> lowest code via lexicographic array_min."""
-    sq = F.slice(qv, sub * subdim + 1, subdim)
-    book = F.element_at(F.col("__books"), sub + 1)
-    b2 = F.element_at(F.col("__b2s"), sub + 1)
-    scored = F.transform(
-        book,
-        lambda c, i: F.struct(
-            (
-                F.lit(-2 * CENT_SCALE)
-                * F.aggregate(
-                    F.zip_with(sq, c, lambda a, b: a * b),
-                    F.lit(0).cast("long"),
-                    lambda acc, v: acc + v,
-                )
-                + F.element_at(b2, (i + F.lit(1)).cast("int"))
-            ).alias("d"),
-            i.cast("int").alias("c"),
-        ),
-    )
-    return F.array_min(scored)["c"]
-
-
-def pq_assign(
-    df: DataFrame,
-    vec_col: str,
-    codebooks: Codebooks,
-    out_col: str = "codes",
-    pre_quantized: bool = False,
-) -> DataFrame:
-    """Add an ``array<int>`` of ``m`` sub-codes: map-only against one
-    broadcast codebook row."""
-    subdim = len(codebooks[0][0])
-    qv = F.col(vec_col) if pre_quantized else quantized(vec_col)
-    cdf = _codebook_df(df.sparkSession, codebooks)
-    return (
-        df.crossJoin(F.broadcast(cdf))
-        .withColumn(
-            out_col,
-            F.array(*[
-                _code_expr(qv, sub, subdim) for sub in range(len(codebooks))
-            ]),
-        )
-        .drop("__books", "__b2s")
-    )
-
-
-def pq_fit(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    m: int = 4,
-    k: int = 8,
-    iters: int = 2,
-) -> Codebooks:
-    """Fit ``m`` sub-codebooks of ``k`` centroids each, all subspaces in
-    the same pass: one broadcast-assignment projection + ONE shuffle
-    keyed on (subspace, code, dimension) per Lloyd iteration.
-
-    Seeding: the ``k`` smallest-``md5(id)`` rows seed EVERY subspace
-    (their sub-slices), so one seed scan serves all codebooks and the
-    oracle needs a single seeds CTE. A sub-cluster that loses all
-    members drops out and the remaining codes renumber densely (per
-    subspace, by old code id) — both engines mirror this.
-    """
-    seeds = (
-        df.orderBy(*_seed_order(id_col))
-        .limit(k)
-        .select(quantized(vec_col).alias("q"))
-        .collect()
-    )
-    dim = len(seeds[0]["q"]) if seeds else 0
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    subdim = dim // m
-    codebooks: Codebooks = [
-        [
-            [int(v) * CENT_SCALE for v in r["q"][s * subdim:(s + 1) * subdim]]
-            for r in seeds
-        ]
-        for s in range(m)
-    ]
-    qdf = df.select(quantized(vec_col).alias("q")).persist()
-    try:
-        for _ in range(iters):
-            assigned = pq_assign(qdf, "q", codebooks, pre_quantized=True)
-            sub = (F.col("pos") / subdim).cast("int")
-            rows = (
-                assigned.select("codes", F.posexplode("q").alias("pos", "v"))
-                .select(
-                    sub.alias("sub"),
-                    F.element_at(F.col("codes"), sub + 1).alias("code"),
-                    "pos",
-                    "v",
-                )
-                .groupBy("sub", "code", "pos")
-                .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-            state: dict[int, dict[int, dict[int, tuple[int, int]]]] = {}
-            for r in rows:
-                state.setdefault(r["sub"], {}).setdefault(r["code"], {})[
-                    r["pos"]
-                ] = (r["s"], r["n"])
-            codebooks = [
-                [
-                    [
-                        # floor via double division on both sides — the
-                        # IEEE computation the SQL replay performs (see
-                        # kmeans.kmeans_fit for why not integer //).
-                        int(
-                            math.floor(
-                                (dims[s * subdim + j][0] * float(CENT_SCALE))
-                                / dims[s * subdim + j][1]
-                            )
-                        )
-                        for j in range(subdim)
-                    ]
-                    for _, dims in sorted(state.get(s, {}).items())
-                ]
-                for s in range(m)
-            ]
-    finally:
-        qdf.unpersist()
-    return codebooks
-
-
-def ivfpq_joint_fit(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    km_k: int = 8,
-    m: int = 4,
-    k: int = 8,
-    iters: int = 2,
-) -> tuple[list[list[int]], Codebooks]:
-    """Fit the IVF coarse centroids AND the PQ sub-codebooks together
-    (r11): the two fits are independent per-row assignments over the
-    SAME quantized sample with the SAME md5-seed scan, so one seed
-    collect, one persisted sample and ONE aggregate job per Lloyd
-    iteration serve both models — half the driver actions of running
-    :func:`kmeans.kmeans_fit` + :func:`pq_fit` back to back (each fit
-    action costs ~0.85 s of fixed plan/job latency at bench scale).
-    Keys are disjoint in the shared aggregate: the coarse model's rows
-    carry ``sub = -1``; subspace ``s`` carries ``sub = s``. Updates
-    replay each fit's arithmetic verbatim, so the returned models are
-    bit-identical to the separate fits (differential-tested).
-
-    Requires ``km_k == k`` and equal iteration counts (the registry
-    shape); callers with different shapes use the separate fits.
-    """
-    if km_k != k:
-        raise ValueError("joint fit requires km_k == k (shared seed scan)")
-    from reddit_data_pipeline_engineering_spark.operators.kmeans import (
-        nearest_centroid_expr,
-    )
-
-    seeds = (
-        df.orderBy(*_seed_order(id_col))
-        .limit(k)
-        .select(quantized(vec_col).alias("q"))
-        .collect()
-    )
-    dim = len(seeds[0]["q"]) if seeds else 0
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    subdim = dim // m
-    centroids = [[int(v) * CENT_SCALE for v in r["q"]] for r in seeds]
-    codebooks: Codebooks = [
-        [
-            [int(v) * CENT_SCALE for v in r["q"][s * subdim:(s + 1) * subdim]]
-            for r in seeds
-        ]
-        for s in range(m)
-    ]
-    qdf = df.select(quantized(vec_col).alias("q")).persist()
-    try:
-        for _ in range(iters):
-            # ONE single-row relation carrying both models: a crossJoin
-            # of the two helper relations would be a CartesianProduct of
-            # two 32-partition local relations (createDataFrame slices a
-            # 1-row list across defaultParallelism) — 1024 tasks per
-            # iteration for one row.
-            c2s = [sum(int(v) * int(v) for v in c) for c in centroids]
-            b2s = [
-                [sum(int(v) * int(v) for v in c) for c in book]
-                for book in codebooks
-            ]
-            cdf = df.sparkSession.createDataFrame(
-                [(
-                    [[int(v) for v in c] for c in centroids],
-                    c2s,
-                    [[list(map(int, c)) for c in book] for book in codebooks],
-                    b2s,
-                )],
-                "__cents array<array<bigint>>, __c2s array<bigint>, "
-                "__books array<array<array<bigint>>>, "
-                "__b2s array<array<bigint>>",
-            )
-            assigned = (
-                qdf.crossJoin(F.broadcast(cdf))
-                .select(
-                    "q",
-                    nearest_centroid_expr(F.col("q")).alias("cluster"),
-                    F.array(*[
-                        _code_expr(F.col("q"), sub, subdim)
-                        for sub in range(m)
-                    ]).alias("codes"),
-                )
-            )
-            sub = (F.col("pos") / subdim).cast("int")
-            rows = (
-                assigned.select(
-                    "cluster", "codes", F.posexplode("q").alias("pos", "v")
-                )
-                .select(
-                    F.explode(
-                        F.array(
-                            F.struct(
-                                F.lit(-1).alias("sub"),
-                                F.col("cluster").cast("int").alias("code"),
-                                F.col("pos"),
-                                F.col("v"),
-                            ),
-                            F.struct(
-                                sub.alias("sub"),
-                                F.element_at(F.col("codes"), sub + 1).alias(
-                                    "code"
-                                ),
-                                F.col("pos"),
-                                F.col("v"),
-                            ),
-                        )
-                    ).alias("r")
-                )
-                .select("r.sub", "r.code", "r.pos", "r.v")
-                .groupBy("sub", "code", "pos")
-                .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-            km_state: dict[int, dict[int, tuple[int, int]]] = {}
-            pq_state: dict[int, dict[int, dict[int, tuple[int, int]]]] = {}
-            for r in rows:
-                if r["sub"] == -1:
-                    km_state.setdefault(r["code"], {})[r["pos"]] = (
-                        r["s"],
-                        r["n"],
-                    )
-                else:
-                    pq_state.setdefault(r["sub"], {}).setdefault(
-                        r["code"], {}
-                    )[r["pos"]] = (r["s"], r["n"])
-            # Same floor-via-double-division updates as the separate fits
-            # (see kmeans.kmeans_fit / pq_fit for why not integer //).
-            centroids = [
-                [
-                    int(
-                        math.floor(
-                            (dims[i][0] * float(CENT_SCALE)) / dims[i][1]
-                        )
-                    )
-                    for i in range(dim)
-                ]
-                for _, dims in sorted(km_state.items())
-            ]
-            codebooks = [
-                [
-                    [
-                        int(
-                            math.floor(
-                                (dims[s * subdim + j][0] * float(CENT_SCALE))
-                                / dims[s * subdim + j][1]
-                            )
-                        )
-                        for j in range(subdim)
-                    ]
-                    for _, dims in sorted(pq_state.get(s, {}).items())
-                ]
-                for s in range(m)
-            ]
-    finally:
-        qdf.unpersist()
-    return centroids, codebooks
 
 
 def adc_table(codebooks: Codebooks, qvec: list[float]) -> list[list[int]]:
     """Asymmetric-distance table for one query: exact integer squared
     distance from each query sub-slice to each sub-centroid — pure
     Python over ``m * k`` model values, not a data-sized loop."""
-    subdim = len(codebooks[0][0])
+    subdim = len(qvec) // len(codebooks)
     qx = [math.floor(float(x) * QUANT_SCALE) for x in qvec]
     return [
         [
@@ -391,7 +82,7 @@ def pq_adc_topk(
     from reddit_data_pipeline_engineering_spark.functions.vectors import cosine
 
     dtab = adc_table(codebooks, qvec)
-    coded = pq_assign(df, vec_col, codebooks)
+    coded = assign_codes(df, vec_col, codebooks)
     approx = None
     for s, row in enumerate(dtab):
         table = F.lit([int(d) for d in row]).cast("array<bigint>")

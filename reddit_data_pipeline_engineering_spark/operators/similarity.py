@@ -1,11 +1,16 @@
 """Similarity search over embedding columns (array<float>).
 
-LLM-data-pipeline extension (no reference counterpart). Three tiers:
+LLM-data-pipeline extension (no reference counterpart). Four tiers:
 
 - ``cosine_topk``          — brute-force scan vs one query vector: the
-  correctness baseline. Map-only + TakeOrderedAndProject; at 100 TB it is
-  one pass over the embedding column (still the right tool for one-off
-  queries).
+  correctness baseline, and the one score/round/order/limit path that
+  ``ivf_probe_topk`` and the k-means IVF queries reuse. Map-only +
+  TakeOrderedAndProject; at 100 TB it is one pass over the embedding
+  column (still the right tool for one-off queries).
+- ``ivf_probe_topk``       — ``cosine_topk`` over the query's coarse
+  block only: the block predicate pushes into the scan, so the candidate
+  set shrinks before any vector math (computed coarse cells:
+  operators/kmeans.py).
 - ``blocked_neardup_pairs`` — IVF-style: pairs compared only within a
   coarse block (here: the `label` column; in production: a k-means coarse
   centroid id). Turns O(n²) into sum of per-block O(b²) and shuffles only
@@ -140,45 +145,6 @@ def blocked_neardup_pairs(
     return pairs
 
 
-def cosine_topk_pandas(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    query,
-    k: int = 10,
-) -> DataFrame:
-    """Vectorized brute-force cosine top-k via Arrow-batched mapInPandas.
-
-    The numpy path: each Arrow batch becomes one matrix-vector product
-    (BLAS) instead of per-row interpreted folds — the throughput choice at
-    100 TB. Scores differ from the fold version only by float summation
-    order (~1 ulp), so the oracle-exact ``cosine_topk`` stays the
-    correctness baseline and this is the scale variant (equivalence is
-    asserted within tolerance in tests/test_scale_ops.py).
-    """
-    import numpy as np
-    import pandas as pd
-
-    q = np.asarray(list(query), dtype=np.float64)
-    qn = float(np.sqrt((q * q).sum()))
-
-    def score_batches(batches):
-        for pdf in batches:
-            mat = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            dots = mat @ q
-            norms = np.sqrt((mat * mat).sum(axis=1))
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "cosine": dots / (norms * qn)}
-            )
-
-    scored = df.select(id_col, vec_col).mapInPandas(
-        score_batches, f"{id_col} long, cosine double"
-    )
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
-
-
 def ivf_probe_topk(
     df: DataFrame,
     vec_col: str,
@@ -205,15 +171,7 @@ def ivf_probe_topk(
     probe = df.filter(
         (F.col(block_col) == qblock) & (F.col(id_col) != query_id)
     )
-    q = F.lit([float(x) for x in qvec]).cast("array<double>")
-    score = cosine(F.col(vec_col), q)
-    if score_decimals is not None:
-        score = F.round(score, score_decimals)
-    return (
-        probe.select(F.col(id_col), score.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return cosine_topk(probe, vec_col, id_col, qvec, k, score_decimals)
 
 
 # Fixed coordinate-projection planes: each bit is sign(e[i0]+e[i1]-e[i2]-e[i3]).

@@ -70,6 +70,10 @@ def _davg(col, dec: str):
     return _dsum(col, dec) / F.count(col)
 
 
+def _dec(col) -> F.Column:
+    return col.cast("decimal(38,0)")
+
+
 # --------------------------------------------------------------------------
 # Relational core (reference SURVEY.md §2 operators)
 # --------------------------------------------------------------------------

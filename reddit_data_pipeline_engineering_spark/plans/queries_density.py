@@ -410,21 +410,16 @@ def q_kmeans_silhouette_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = kmeans.kmeans_fit(
-        _fit_sample(emb), "embedding", "vec_id", k=_KM_K, iters=_KM_ITERS
+    [[cents]] = kmeans.lloyd_fit(
+        _fit_sample(emb), "embedding", "vec_id", (1,), k=_KM_K, iters=_KM_ITERS
     )
-    spark_ = emb.sparkSession
-    c2s = [sum(int(v) * int(v) for v in c) for c in cents]
-    cdf = spark_.createDataFrame(
-        [([[int(v) for v in c] for c in cents], c2s)],
-        "__cents array<array<bigint>>, __c2s array<bigint>",
-    )
+    cdf = kmeans.model_row(emb.sparkSession, [cents])
     qv = kmeans.quantized("embedding")
     # Full squared distance per centroid (not the reduced form: the
     # ratio denominator needs the true d2): sum((qx*64 - c)^2) via one
     # zip_with fold per centroid against the broadcast model.
     scored = F.transform(
-        F.col("__cents"),
+        F.element_at(F.col("__books"), 1),
         lambda c, i: F.struct(
             F.aggregate(
                 F.zip_with(

@@ -1248,8 +1248,8 @@ def q_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from reddit_data_pipeline_engineering_spark.operators import kmeans
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = kmeans.kmeans_fit(
-        _fit_sample(emb), "embedding", "vec_id", k=_KM_K, iters=_KM_ITERS
+    [[cents]] = kmeans.lloyd_fit(
+        _fit_sample(emb), "embedding", "vec_id", (1,), k=_KM_K, iters=_KM_ITERS
     )
     qvec = _query_vector(emb)
     probes = _kmeans_probe_clusters(cents, qvec, _KM_NPROBE)
@@ -1295,8 +1295,8 @@ def q_kmeans_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     from reddit_data_pipeline_engineering_spark.operators import kmeans
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = kmeans.kmeans_fit(
-        _fit_sample(emb), "embedding", "vec_id", k=_KM_K, iters=_KM_ITERS
+    [[cents]] = kmeans.lloyd_fit(
+        _fit_sample(emb), "embedding", "vec_id", (1,), k=_KM_K, iters=_KM_ITERS
     )
     qvec = _query_vector(emb)
     probes = _kmeans_probe_clusters(cents, qvec, _KM_NPROBE)
@@ -1447,11 +1447,12 @@ LIMIT 20
     tags=("llm", "similarity", "bench"),
 )
 def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from reddit_data_pipeline_engineering_spark.operators import pq
+    from reddit_data_pipeline_engineering_spark.operators import kmeans, pq
 
     emb = load_table(spark, sf_dir, "embeddings")
-    books = pq.pq_fit(
-        _fit_sample(emb), "embedding", "vec_id", m=_PQ_M, k=_PQ_K, iters=_PQ_ITERS
+    [books] = kmeans.lloyd_fit(
+        _fit_sample(emb), "embedding", "vec_id", (_PQ_M,), k=_PQ_K,
+        iters=_PQ_ITERS,
     )
     qvec = _query_vector(emb)
     return pq.pq_adc_topk(
@@ -1497,11 +1498,12 @@ SELECT 20 AS k,
     tags=("llm", "similarity", "eval"),
 )
 def q_pq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from reddit_data_pipeline_engineering_spark.operators import pq
+    from reddit_data_pipeline_engineering_spark.operators import kmeans, pq
 
     emb = load_table(spark, sf_dir, "embeddings")
-    books = pq.pq_fit(
-        _fit_sample(emb), "embedding", "vec_id", m=_PQ_M, k=_PQ_K, iters=_PQ_ITERS
+    [books] = kmeans.lloyd_fit(
+        _fit_sample(emb), "embedding", "vec_id", (_PQ_M,), k=_PQ_K,
+        iters=_PQ_ITERS,
     )
     qvec = _query_vector(emb)
     rest = emb.filter(F.col("vec_id") != 0)
@@ -1566,14 +1568,14 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from reddit_data_pipeline_engineering_spark.operators import kmeans, pq
 
     emb = load_table(spark, sf_dir, "embeddings")
-    fit = _fit_sample(emb)
-    # Joint fit (r11): one seed scan + one aggregate job per Lloyd
-    # iteration serves BOTH models — bit-identical to the separate
-    # kmeans_fit + pq_fit (pq.ivfpq_joint_fit, differential-tested),
-    # at half the fixed per-action cost (_KM_ITERS == _PQ_ITERS == 2).
-    cents, books = pq.ivfpq_joint_fit(
-        fit, "embedding", "vec_id",
-        km_k=_KM_K, m=_PQ_M, k=_PQ_K, iters=_KM_ITERS,
+    # Both partitions in one fit: one seed scan + one aggregate job per
+    # Lloyd iteration serves the coarse and the PQ models, each
+    # bit-identical to its single-partition fit (differential-tested),
+    # at half the driver actions of two fits. One k and one iteration
+    # count serve both (_KM_K == _PQ_K, _KM_ITERS == _PQ_ITERS).
+    [cents], books = kmeans.lloyd_fit(
+        _fit_sample(emb), "embedding", "vec_id", (1, _PQ_M), k=_PQ_K,
+        iters=_PQ_ITERS,
     )
     qvec = _query_vector(emb)
     probes = _kmeans_probe_clusters(cents, qvec, _KM_NPROBE)
@@ -1622,14 +1624,14 @@ def q_ivfpq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     from reddit_data_pipeline_engineering_spark.operators import kmeans, pq
 
     emb = load_table(spark, sf_dir, "embeddings")
-    fit = _fit_sample(emb)
-    # Joint fit (r11): one seed scan + one aggregate job per Lloyd
-    # iteration serves BOTH models — bit-identical to the separate
-    # kmeans_fit + pq_fit (pq.ivfpq_joint_fit, differential-tested),
-    # at half the fixed per-action cost (_KM_ITERS == _PQ_ITERS == 2).
-    cents, books = pq.ivfpq_joint_fit(
-        fit, "embedding", "vec_id",
-        km_k=_KM_K, m=_PQ_M, k=_PQ_K, iters=_KM_ITERS,
+    # Both partitions in one fit: one seed scan + one aggregate job per
+    # Lloyd iteration serves the coarse and the PQ models, each
+    # bit-identical to its single-partition fit (differential-tested),
+    # at half the driver actions of two fits. One k and one iteration
+    # count serve both (_KM_K == _PQ_K, _KM_ITERS == _PQ_ITERS).
+    [cents], books = kmeans.lloyd_fit(
+        _fit_sample(emb), "embedding", "vec_id", (1, _PQ_M), k=_PQ_K,
+        iters=_PQ_ITERS,
     )
     qvec = _query_vector(emb)
     probes = _kmeans_probe_clusters(cents, qvec, _KM_NPROBE)

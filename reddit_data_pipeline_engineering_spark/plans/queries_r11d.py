@@ -38,14 +38,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from reddit_data_pipeline_engineering_spark.operators import bfs, triangles as tri
-from reddit_data_pipeline_engineering_spark.plans.queries import REGISTRY, query
+from reddit_data_pipeline_engineering_spark.plans.queries import REGISTRY, _dec, query
 from reddit_data_pipeline_engineering_spark.sources.tables import load_table
 
 __all__ = ["REGISTRY"]
-
-
-def _dec(col) -> F.Column:
-    return col.cast("decimal(38,0)")
 
 
 # --------------------------------------------------------------------------

@@ -32,17 +32,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from reddit_data_pipeline_engineering_spark.functions import text as tx
-from reddit_data_pipeline_engineering_spark.plans.queries import REGISTRY, query
+from reddit_data_pipeline_engineering_spark.plans.queries import REGISTRY, _dec, query
 from reddit_data_pipeline_engineering_spark.sources.tables import load_table, spread
 
 __all__ = ["REGISTRY"]
 
 # DuckDB mirror of functions/text.tokens (same literal as queries_llm._TOKS).
 _TOKS2 = r"list_filter(string_split_regex(trim(text), '\s+'), t -> t <> '')"
-
-
-def _dec(col) -> F.Column:
-    return col.cast("decimal(38,0)")
 
 
 # --------------------------------------------------------------------------

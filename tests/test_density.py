@@ -260,12 +260,10 @@ def test_kmeans_silhouette_matches_numpy(spark):
     # (the fit itself is covered by the kmeans suite and the unrolled-
     # CTE oracle): numpy exact integer distances on the same grid.
     emb = load_table(spark, SF_SMALL, "embeddings")
-    cents = np.array(
-        kmeans.kmeans_fit(
-            _fit_sample(emb), "embedding", "vec_id", k=_KM_K, iters=_KM_ITERS
-        ),
-        dtype=np.int64,
+    [[cents]] = kmeans.lloyd_fit(
+        _fit_sample(emb), "embedding", "vec_id", (1,), k=_KM_K, iters=_KM_ITERS
     )
+    cents = np.array(cents, dtype=np.int64)
     rows = duckdb.sql(
         f"SELECT vec_id, embedding FROM '{SF_SMALL}/embeddings.parquet' "
         f"ORDER BY vec_id"

@@ -247,29 +247,29 @@ def test_expectations_one_pass_and_results(spark):
 
 
 def test_ivfpq_joint_fit_matches_separate_fits(spark):
-    """r11: the fused IVF+PQ fit must return bit-identical models to
-    kmeans_fit + pq_fit run separately (same seeds, same per-iteration
-    aggregate arithmetic, disjoint keys in the shared job)."""
+    """Each partition of a joint (1, 4) Lloyd fit must be bit-identical
+    to its single-partition fit: same seeds, same per-iteration
+    aggregate arithmetic, disjoint book keys in the shared job."""
     import random
 
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from reddit_data_pipeline_engineering_spark.operators import kmeans, pq
+    from reddit_data_pipeline_engineering_spark.operators import kmeans
 
     rng = random.Random(13)
     rows = [
         (i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(180)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents_sep = kmeans.kmeans_fit(df, "embedding", "vec_id", k=4, iters=2)
-    books_sep = pq.pq_fit(df, "embedding", "vec_id", m=4, k=4, iters=2)
-    cents_j, books_j = pq.ivfpq_joint_fit(
-        df, "embedding", "vec_id", km_k=4, m=4, k=4, iters=2
-    )
-    assert cents_j == cents_sep
-    assert books_j == books_sep
-    with __import__("pytest").raises(ValueError):
-        pq.ivfpq_joint_fit(df, "embedding", "vec_id", km_k=2, m=4, k=4)
+
+    def fit(subspaces):
+        return kmeans.lloyd_fit(
+            df, "embedding", "vec_id", subspaces, k=4, iters=2
+        )
+
+    cents_j, books_j = fit((1, 4))
+    assert [cents_j] == fit((1,))
+    assert [books_j] == fit((4,))
+    with pytest.raises(ValueError):  # dim 16 % m
+        fit((1, 3))
 
 
 def test_minhash_signature_from_shared_shingle_arrays_identical(spark):

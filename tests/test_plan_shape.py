@@ -525,11 +525,11 @@ def test_pq_adc_topk_broadcast_and_no_shuffle(spark):
     approx distance is table lookups, and BOTH the shortlist and the
     re-ranked top-k are TakeOrderedAndProject — zero shuffle exchanges
     between the scan and the result."""
-    from reddit_data_pipeline_engineering_spark.operators import pq
+    from reddit_data_pipeline_engineering_spark.operators import kmeans, pq
     from reddit_data_pipeline_engineering_spark.sources.tables import load_table
 
     emb = load_table(spark, SF_SMALL, "embeddings")
-    books = pq.pq_fit(emb, "embedding", "vec_id", m=4, k=4, iters=1)
+    [books] = kmeans.lloyd_fit(emb, "embedding", "vec_id", (4,), k=4, iters=1)
     qvec = [float(x) for x in emb.limit(1).select("embedding").head()[0]]
     plan = plan_of(
         pq.pq_adc_topk(emb, "embedding", "vec_id", books, qvec)

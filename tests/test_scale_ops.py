@@ -1,7 +1,6 @@
 """Scale-path operators: salted joins/aggregates equal their plain forms,
 bucketed tables join without a shuffle, range audits count correctly."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from reddit_data_pipeline_engineering_spark import catalog as cat
@@ -82,25 +81,6 @@ def test_bucketed_join_has_no_shuffle(spark):
         spark.sql("DROP TABLE IF EXISTS cust_bucketed")
 
 
-def test_cosine_topk_pandas_matches_fold(spark):
-    """The vectorized (BLAS) ANN path must agree with the oracle-exact
-    fold implementation up to float summation order."""
-    from reddit_data_pipeline_engineering_spark.operators.similarity import (
-        cosine_topk,
-        cosine_topk_pandas,
-    )
-
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()["embedding"]]
-    exact = {r["vec_id"]: r["cosine"] for r in cosine_topk(
-        emb, "embedding", "vec_id", qvec, k=20, score_decimals=None).collect()}
-    fast = {r["vec_id"]: r["cosine"] for r in cosine_topk_pandas(
-        emb, "embedding", "vec_id", qvec, k=20).collect()}
-    assert set(fast) == set(exact)
-    for vid, c in fast.items():
-        assert c == pytest.approx(exact[vid], abs=1e-9)
-
-
 def test_cluster_profile_shape():
     from reddit_data_pipeline_engineering_spark.session import cluster_profile
 
@@ -124,87 +104,43 @@ def test_range_violations(spark):
 def test_kmeans_fit_matches_reference(spark):
     """The DataFrame Lloyd fit must equal an independent pure-Python
     replay exactly: integer-grid determinism means no tolerance, any
-    partitioning, any engine."""
+    partitioning, any engine. Degenerate inputs ride along: duplicate
+    vectors (4 seeds over 3 distinct vectors, so a seed cluster loses
+    every member and the remaining ids renumber densely), k > rows and
+    an empty frame."""
     import hashlib
     import math
 
     from reddit_data_pipeline_engineering_spark.operators import kmeans
 
-    vecs = [
+    base = [
         (i, [((i * 37 + d * 11) % 200 - 100) / 97.0 for d in range(8)])
         for i in range(40)
     ]
-    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-
-    k, iters = 4, 2
-    got = kmeans.kmeans_fit(df, "embedding", "vec_id", k=k, iters=iters)
-
-    # Independent replay (no Spark, no operator code paths).
-    qx = {i: [math.floor(x * 16384.0) for x in v] for i, v in vecs}
-    seed_ids = sorted(
-        qx, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i)
-    )[:k]
-    cents = [[v * 64 for v in qx[i]] for i in seed_ids]
-    for _ in range(iters):
-        members = {}
-        for i, q in qx.items():
-            d = min(
-                (sum((a * 64 - b) ** 2 for a, b in zip(q, c)), ci)
-                for ci, c in enumerate(cents)
-            )
-            members.setdefault(d[1], []).append(q)
-        cents = [
-            [
-                int(math.floor((sum(col) * 64.0) / len(qs)))
-                for col in zip(*qs)
-            ]
-            for _, qs in sorted(members.items())
-        ]
-    assert got == cents
-
-    # Assignment operator agrees with the reference argmin too.
-    assigned = {
-        r["vec_id"]: r["cluster"]
-        for r in kmeans.assign_clusters(df, "embedding", got).collect()
+    cases = {
+        "base": (base, 4),
+        "duplicates": ([(i, base[i % 3][1]) for i in range(12)], 4),
+        "k_over_rows": (base[:3], 5),
+        "empty": ([], 4),
     }
-    for i, q in qx.items():
-        ref = min(
-            (sum((a * 64 - b) ** 2 for a, b in zip(q, c)), ci)
-            for ci, c in enumerate(got)
-        )[1]
-        assert assigned[i] == ref, i
+    iters = 2
+    for name, (vecs, k) in cases.items():
+        df = spark.createDataFrame(
+            vecs, "vec_id long, embedding array<double>"
+        )
+        [[got]] = kmeans.lloyd_fit(
+            df, "embedding", "vec_id", (1,), k=k, iters=iters
+        )
 
-
-def test_pq_fit_assign_adc_match_reference(spark):
-    """The one-shuffle-per-iteration multi-subspace PQ fit must equal an
-    independent pure-Python replay exactly (integer-grid determinism),
-    and the ADC shortlist must rank by the true integer table distances."""
-    import hashlib
-    import math
-
-    from reddit_data_pipeline_engineering_spark.operators import pq
-
-    dim, m, k, iters = 8, 2, 3, 2
-    subdim = dim // m
-    vecs = [
-        (i, [((i * 29 + d * 13) % 210 - 105) / 101.0 for d in range(dim)])
-        for i in range(30)
-    ]
-    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    got = pq.pq_fit(df, "embedding", "vec_id", m=m, k=k, iters=iters)
-
-    # Independent replay: per-subspace Lloyd on the shared seed rows.
-    qx = {i: [math.floor(x * 16384.0) for x in v] for i, v in vecs}
-    seed_ids = sorted(
-        qx, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i)
-    )[:k]
-    books = []
-    for s in range(m):
-        sub = {i: q[s * subdim:(s + 1) * subdim] for i, q in qx.items()}
-        cents = [[v * 64 for v in sub[i]] for i in seed_ids]
+        # Independent replay (no Spark, no operator code paths).
+        qx = {i: [math.floor(x * 16384.0) for x in v] for i, v in vecs}
+        seed_ids = sorted(
+            qx, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i)
+        )[:k]
+        cents = [[v * 64 for v in qx[i]] for i in seed_ids]
         for _ in range(iters):
             members = {}
-            for i, q in sub.items():
+            for i, q in qx.items():
                 d = min(
                     (sum((a * 64 - b) ** 2 for a, b in zip(q, c)), ci)
                     for ci, c in enumerate(cents)
@@ -217,38 +153,116 @@ def test_pq_fit_assign_adc_match_reference(spark):
                 ]
                 for _, qs in sorted(members.items())
             ]
-        books.append(cents)
-    assert got == books
+        assert got == cents, name
+        if name == "duplicates":
+            assert len(got) < k  # the case really drops a cluster
 
-    # Encoding agrees with the per-subspace reference argmin.
-    coded = {
-        r["vec_id"]: list(r["codes"])
-        for r in pq.pq_assign(df, "embedding", got).collect()
-    }
-    for i, q in qx.items():
-        for s in range(m):
-            sq = q[s * subdim:(s + 1) * subdim]
+        # Assignment operator agrees with the reference argmin too.
+        assigned = {
+            r["vec_id"]: r["cluster"]
+            for r in kmeans.assign_clusters(df, "embedding", got).collect()
+        }
+        for i, q in qx.items():
             ref = min(
-                (sum((a * 64 - b) ** 2 for a, b in zip(sq, c)), ci)
-                for ci, c in enumerate(got[s])
+                (sum((a * 64 - b) ** 2 for a, b in zip(q, c)), ci)
+                for ci, c in enumerate(got)
             )[1]
-            assert coded[i][s] == ref, (i, s)
+            assert assigned[i] == ref, (name, i)
 
-    # ADC: every emitted approx_dist equals the table sum for that row's
-    # codes, and the shortlist is the true bottom-|short| of those sums.
-    qvec = vecs[0][1]
-    dtab = pq.adc_table(got, qvec)
-    out = pq.pq_adc_topk(
-        df, "embedding", "vec_id", got, qvec, shortlist=10, k=10
-    ).collect()
-    truth = sorted(
-        (sum(dtab[s][coded[i][s]] for s in range(m)), i) for i in coded
-    )[:10]
-    assert {r["vec_id"] for r in out} == {i for _, i in truth}
-    for r in out:
-        assert r["approx_dist"] == sum(
-            dtab[s][coded[r["vec_id"]][s]] for s in range(m)
+
+def test_pq_fit_assign_adc_match_reference(spark):
+    """The one-shuffle-per-iteration multi-subspace PQ fit must equal an
+    independent pure-Python replay exactly (integer-grid determinism),
+    and the ADC shortlist must rank by the true integer table distances.
+    Degenerate inputs ride along: duplicate vectors (3 seeds over 2
+    distinct vectors, so every subspace drops a code and renumbers
+    densely), k > rows and an empty frame (empty codebooks)."""
+    import hashlib
+    import math
+
+    from reddit_data_pipeline_engineering_spark.operators import kmeans, pq
+
+    dim, m, iters = 8, 2, 2
+    subdim = dim // m
+    base = [
+        (i, [((i * 29 + d * 13) % 210 - 105) / 101.0 for d in range(dim)])
+        for i in range(30)
+    ]
+    cases = {
+        "base": (base, 3),
+        "duplicates": ([(i, base[i % 2][1]) for i in range(10)], 3),
+        "k_over_rows": (base[:2], 3),
+        "empty": ([], 3),
+    }
+    for name, (vecs, k) in cases.items():
+        df = spark.createDataFrame(
+            vecs, "vec_id long, embedding array<double>"
         )
+        [got] = kmeans.lloyd_fit(
+            df, "embedding", "vec_id", (m,), k=k, iters=iters
+        )
+
+        # Independent replay: per-subspace Lloyd on the shared seed rows.
+        qx = {i: [math.floor(x * 16384.0) for x in v] for i, v in vecs}
+        seed_ids = sorted(
+            qx, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i)
+        )[:k]
+        books = []
+        for s in range(m):
+            sub = {i: q[s * subdim:(s + 1) * subdim] for i, q in qx.items()}
+            cents = [[v * 64 for v in sub[i]] for i in seed_ids]
+            for _ in range(iters):
+                members = {}
+                for i, q in sub.items():
+                    d = min(
+                        (sum((a * 64 - b) ** 2 for a, b in zip(q, c)), ci)
+                        for ci, c in enumerate(cents)
+                    )
+                    members.setdefault(d[1], []).append(q)
+                cents = [
+                    [
+                        int(math.floor((sum(col) * 64.0) / len(qs)))
+                        for col in zip(*qs)
+                    ]
+                    for _, qs in sorted(members.items())
+                ]
+            books.append(cents)
+        assert got == books, name
+        if name == "duplicates":
+            assert all(len(book) < k for book in got)
+
+        # Encoding agrees with the per-subspace reference argmin.
+        coded = {
+            r["vec_id"]: list(r["codes"])
+            for r in kmeans.assign_codes(df, "embedding", got).collect()
+        }
+        for i, q in qx.items():
+            for s in range(m):
+                sq = q[s * subdim:(s + 1) * subdim]
+                ref = min(
+                    (sum((a * 64 - b) ** 2 for a, b in zip(sq, c)), ci)
+                    for ci, c in enumerate(got[s])
+                )[1]
+                assert coded[i][s] == ref, (name, i, s)
+        if not vecs:
+            continue
+
+        # ADC: every emitted approx_dist equals the table sum for that
+        # row's codes, and the shortlist is the true bottom-|short| of
+        # those sums.
+        qvec = vecs[0][1]
+        dtab = pq.adc_table(got, qvec)
+        out = pq.pq_adc_topk(
+            df, "embedding", "vec_id", got, qvec, shortlist=10, k=10
+        ).collect()
+        truth = sorted(
+            (sum(dtab[s][coded[i][s]] for s in range(m)), i) for i in coded
+        )[:10]
+        assert {r["vec_id"] for r in out} == {i for _, i in truth}, name
+        for r in out:
+            assert r["approx_dist"] == sum(
+                dtab[s][coded[r["vec_id"]][s]] for s in range(m)
+            )
 
 
 def test_aqe_splits_skewed_join_partition(spark):

@@ -111,9 +111,7 @@ def test_bloom_no_false_negatives_and_reduces(spark):
     words = bloom.bloom_build(keys, "k", m_bits=4096, k_hashes=3)
     assert len(words) == 64
     probe = spark.range(0, 5000).select(F.col("id").alias("k"))
-    passed = probe.filter(
-        bloom.bloom_might_contain(F.col("k"), words, 4096, 3)
-    )
+    passed = bloom.bloom_filter_rows(probe, F.col("k"), words, 4096, 3)
     got = {r.k for r in passed.collect()}
     # No false negatives: every inserted key passes.
     assert set(range(200)) <= got
@@ -647,8 +645,11 @@ def test_kmv_jaccard_matches_python_replay(spark):
 
 
 def test_bloom_filter_rows_matches_literal_form(spark):
-    """r11: the broadcast-relation membership test must keep EXACTLY the
-    rows the literal-expression form keeps (same positions, same words)."""
+    """The broadcast-relation membership test must keep EXACTLY the rows
+    an independent replay keeps: bit positions from Python's hashlib.md5
+    (the bloom_positions formula), tested against the built words."""
+    import hashlib
+
     from pyspark.sql import functions as F
 
     from reddit_data_pipeline_engineering_spark.operators import bloom
@@ -656,12 +657,16 @@ def test_bloom_filter_rows_matches_literal_form(spark):
     keys = spark.range(0, 200, 3).select(F.col("id").alias("k"))
     words = bloom.bloom_build(keys, "k", m_bits=4096, k_hashes=3)
     probe = spark.range(0, 400).select(F.col("id").alias("k"))
-    lit_rows = {
-        r["k"]
-        for r in probe.filter(
-            bloom.bloom_might_contain(F.col("k"), words, 4096, 3)
-        ).collect()
-    }
+
+    def might_contain(key: int) -> bool:
+        for i in range(3):
+            h = hashlib.md5(f"{key}#{i}".encode()).hexdigest()
+            pos = int(h[:8], 16) % 4096
+            if not (words[pos // 64] >> (pos % 64)) & 1:
+                return False
+        return True
+
+    lit_rows = {k for k in range(400) if might_contain(k)}
     rel_rows = {
         r["k"]
         for r in bloom.bloom_filter_rows(
