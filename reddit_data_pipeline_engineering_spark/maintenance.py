@@ -26,6 +26,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from reddit_data_pipeline_engineering_spark.blocks import checkpoint
 from reddit_data_pipeline_engineering_spark.schemas import LEDGER, RAW_MEASUREMENT
 
 _INFER_KEY = "spark.sql.sources.partitionColumnTypeInference.enabled"
@@ -320,7 +321,7 @@ def incremental_rollup(
                     F.sum("sum_value").cast("decimal(30,4)").alias("sum_value"),
                 )
             )
-            merged = merged.localCheckpoint()  # cut lineage off the files
+            merged = checkpoint(merged, eager=True)  # cut lineage off the files
         out_rows = merged.count()
         (
             merged.repartition(*[F.col(c) for c in (partition_col,)])
@@ -404,7 +405,7 @@ def incremental_join_view(
         )
     else:
         new_rows = delta_left.join(delta_right, keys)
-    new_rows = new_rows.localCheckpoint(eager=True)  # pin before appends
+    new_rows = checkpoint(new_rows, eager=True)  # pin before appends
     n = new_rows.count()
     delta_left.write.mode("append").parquet(left_path)
     delta_right.write.mode("append").parquet(right_path)

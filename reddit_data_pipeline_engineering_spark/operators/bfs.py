@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import cache, checkpoint
+
 
 def bfs_levels(edges: DataFrame, source: int, rounds: int) -> DataFrame:
     """(node, dist) for every node within ``rounds`` hops of ``source``.
@@ -55,7 +57,7 @@ def sssp_distances(edges: DataFrame, source: int, rounds: int) -> DataFrame:
     """
     spark = edges.sparkSession
     # Pre-partitioned on the per-round join key — see multi_bfs_levels.
-    edges = edges.repartition(F.col("src")).persist()
+    edges = cache(edges.repartition(F.col("src")))
     dist = spark.createDataFrame([(source, 0)], "node long, dist long")
     frontier = dist
     for t in range(1, rounds + 1):
@@ -67,11 +69,10 @@ def sssp_distances(edges: DataFrame, source: int, rounds: int) -> DataFrame:
                 (F.col("dist") + F.col("w")).alias("dist"),
             )
         )
-        merged = (
+        merged = checkpoint(
             dist.unionAll(cand)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
         )
         if t < rounds:  # the last round's frontier is never expanded
             prev = dist.select("node", F.col("dist").alias("old"))
@@ -107,10 +108,7 @@ def multi_bfs_levels(
     # 4-round probe at sf0.1). The cached InMemoryTableScan reports
     # hashpartitioning(src), so every round's join satisfies its
     # distribution exchange-free; only the (small) frontier moves.
-    # persist (not localCheckpoint): lineage survives eviction. The
-    # visited set IS checkpointed per round: that's where lineage
-    # truncation matters.
-    edges = edges.repartition(F.col("src")).persist()
+    edges = cache(edges.repartition(F.col("src")))
     levels = spark.createDataFrame(
         [(s, s, 0) for s in sources], "seed long, node long, dist int"
     )
@@ -121,10 +119,9 @@ def multi_bfs_levels(
         cand = frontier.join(edges, "src").select(
             "seed", F.col("dst").alias("node"), F.lit(t).alias("dist")
         )
-        levels = (
+        levels = checkpoint(
             levels.unionAll(cand)
             .groupBy("seed", "node")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
         )
     return levels

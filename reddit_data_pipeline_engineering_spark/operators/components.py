@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import cache, checkpoint, release
+
 # r11 optimization: once the (possibly already contracted) edge relation
 # is at most this many rows, the remaining rounds are replaced by ONE
 # bounded collect + driver-side union-find with min-id roots — the same
@@ -111,13 +113,12 @@ def connected_components(
     # filter into the caller's pair-join condition AHEAD of the join's
     # own cheap predicates, so the semantic-dedup cosine ran on every
     # block pair, not half of them (1.8 s -> 3.0 s per build at sf0.1).
-    e = (
+    e = cache(
         edges.select(
             F.greatest(F.col(src), F.col(dst)).alias("u"),
             F.least(F.col(src), F.col(dst)).alias("v"),
         )
         .distinct()
-        .persist()
     )
     rounds = 0
     converged = False
@@ -135,7 +136,7 @@ def connected_components(
         out = _driver_union_find(
             edges.sparkSession, rows, _id_type(edges, src)
         )
-        cur.unpersist()
+        release(cur)
         return out
 
     if driver_finish_max_edges:
@@ -168,22 +169,21 @@ def connected_components(
         )
         # Small-star: `large` edges all point down (v < u).
         smins = large.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
+        # Lazy checkpoint (r11): the violations aggregate below is a
+        # FULL pass over `small`, so letting it trigger the local-
+        # checkpoint materialization folds the former eager
+        # materialization job into the convergence-check job — one
+        # driver action per round instead of two. Lineage is cut
+        # identically (LocalRDDCheckpointData fills any partition a
+        # partial job missed at job end; the violations agg computes
+        # them all anyway).
+        small = checkpoint(
             large.join(smins, "u")
             .select(F.col("v").alias("node"), F.col("m"))
             .union(smins.select(F.col("u").alias("node"), F.col("m")))
             .filter(F.col("node") != F.col("m"))
             .select(F.col("node").alias("u"), F.col("m").alias("v"))
             .distinct()
-            # Lazy checkpoint (r11): the violations aggregate below is a
-            # FULL pass over `small`, so letting it trigger the local-
-            # checkpoint materialization folds the former eager
-            # materialization job into the convergence-check job — one
-            # driver action per round instead of two. Lineage is cut
-            # identically (LocalRDDCheckpointData fills any partition a
-            # partial job missed at job end; the violations agg computes
-            # them all anyway).
-            .localCheckpoint(eager=False)
         )
         # Fixed-point test WITHOUT materializing another round: a
         # down-pointing distinct edge set is invariant under the
@@ -238,13 +238,13 @@ def connected_components(
                 F.sum("nu").alias("n_edges"),
             )
         )
-        # No .persist() on top: the localCheckpoint above materializes
-        # `small` under the violations job; layering a columnar cache
-        # over the checkpoint RDD would add a per-round cache-build pass.
+        # No cache on top: the checkpoint above materializes `small`
+        # under the violations job; layering a columnar cache over the
+        # checkpoint RDD would add a per-round cache-build pass.
         row = violations.collect()[0]
-        # Only the pre-loop edge set is cached (later rounds are
-        # checkpoints), and round 1 reads it, so release it only now.
-        e.unpersist()
+        # This round read `e` (the pre-loop cache, then the previous
+        # round's checkpoint); `small` is materialized now.
+        release(e)
         e = small
         if (row["n_vio"] or 0) == 0:
             converged = True

@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import checkpoint
 from reddit_data_pipeline_engineering_spark.operators.components import (
     connected_components,
 )
@@ -187,12 +188,12 @@ def dbscan_grid(
     # base fans out to the replicated side, the probe side, the core
     # flagging and the noise count — store the scan + cell derivation
     # once. Stored rows = input points (one pass, columnar).
-    base = base.localCheckpoint(eager=False)
+    base = checkpoint(base)
     pairs = neighbor_pairs(base, eps).select("a", "b")
     # pairs feeds neighbor counts, core-core edges AND border
     # assignment; materialize the cell join once. Stored rows are the
     # true eps-neighbor pairs — density-bounded, never cells^2.
-    pairs = pairs.localCheckpoint(eager=False)
+    pairs = checkpoint(pairs)
 
     nb = pairs.groupBy("a").agg(F.count(F.lit(1)).alias("c"))
     core = (
@@ -200,7 +201,7 @@ def dbscan_grid(
         .filter(F.coalesce(F.col("c"), F.lit(0)) + 1 >= min_pts)
         .select("id")
     )
-    core = core.localCheckpoint(eager=False)
+    core = checkpoint(core)
 
     edges = (
         pairs.join(core.select(F.col("id").alias("a")), "a")
@@ -214,7 +215,7 @@ def dbscan_grid(
         comp0.select(F.col("id")), "id", "left_anti"
     ).select("id", F.col("id").alias("component"))
     comp = comp0.select("id", "component").unionByName(singletons)
-    comp = comp.localCheckpoint(eager=False)
+    comp = checkpoint(comp)
 
     border = (
         pairs.join(core.select(F.col("id").alias("a")), "a", "left_anti")
@@ -223,7 +224,7 @@ def dbscan_grid(
         .groupBy("a")
         .agg(F.min("component").alias("component"))
     )
-    border = border.localCheckpoint(eager=False)
+    border = checkpoint(border)
 
     n_core = comp.groupBy("component").agg(
         F.count(F.lit(1)).cast("long").alias("n_core")

@@ -36,6 +36,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import cache, checkpoint, release
+
 # Edge lists at or above this directed-row count peel with bounded
 # storage (eager per-round stats + persist/unpersist-previous); smaller
 # graphs keep the lazy accumulate-localCheckpoint path, whose per-round
@@ -101,15 +103,7 @@ def kcore_peel(
     neighbors died, which the NEXT round's count reflects.
     """
     spark = edges.sparkSession
-    # Decide the storage path BEFORE materializing anything twice:
-    # persist + count once, then either path runs on the
-    # already-persisted base generation. (An earlier version swapped
-    # the lazy path onto a localCheckpoint here — that paid a full
-    # block COPY of the largest generation for nothing: the
-    # persisted form has identical lifetime semantics, round 1 is
-    # its only consumer either way, and persist keeps lineage so an
-    # evicted block recomputes instead of failing.)
-    edges = edges.persist()
+    edges = cache(edges)
     if edges.count() >= BOUNDED_STORAGE_MIN_EDGES:
         return _kcore_peel_bounded(spark, edges, k, rounds, src, dst)
     stats: list[DataFrame] = []
@@ -125,7 +119,7 @@ def kcore_peel(
         # moves; the groupBy's exchange carries only map-side partial
         # counts. ReuseExchange shares one broadcast across both probes.
         alive, edges = _peel(edges, k, src, dst, broadcast=True)
-        edges = edges.localCheckpoint(eager=True)
+        edges = checkpoint(edges, eager=True)
         stats.append(_round_stats(r, alive, edges))
     return reduce(DataFrame.unionAll, stats).orderBy("round")
 
@@ -151,11 +145,11 @@ def _kcore_peel_bounded(
     rows: list[tuple[int, int, int]] = []
     for r in range(1, rounds + 1):
         alive, edges = _peel(edges, k, src, dst)
-        edges = edges.persist()
+        edges = cache(edges)
         rows.append(tuple(_round_stats(r, alive, edges).head()))
-        prev.unpersist()
+        release(prev)
         prev = edges
-    prev.unpersist()
+    release(prev)
     return spark.createDataFrame(
         rows, "round int, nodes_alive long, edges_alive long"
     ).orderBy("round")
@@ -181,18 +175,18 @@ def kcore_survivors(
     cascade on adversarial chains (the fixed-round query form is the
     oracle-verified one — fixpoint rounds are data-dependent).
     """
-    edges = edges.persist()
+    edges = cache(edges)
     prev_n = edges.count()
     prev_df = edges
     for r in range(1, max_rounds + 1):
         _, edges = _peel(edges, k, src, dst)
-        edges = edges.persist()
+        edges = cache(edges)
         cur = edges.count()
         # This round is materialized and counted; the previous round's
         # blocks are dead weight from here on — release them instead of
         # letting up to max_rounds edge generations pile up in the block
         # manager (the sf1.0 GC-stall class, SCALE.md 9c).
-        prev_df.unpersist()
+        release(prev_df)
         prev_df = edges
         if cur == prev_n:
             return edges, r

@@ -47,6 +47,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import cache, release
+
 QUANT_SCALE = 16384  # 2^14: |x| <= ~16 stays overflow-safe (see module doc)
 CENT_SCALE = 64  # centroid grid is 64x finer than the vector grid
 
@@ -213,7 +215,7 @@ def lloyd_fit(
     # iteration (and the seed scan already ran) — without it each
     # iteration re-reads and re-quantizes the corpus. At cluster scale
     # this is a MEMORY_AND_DISK persist of one narrow column.
-    qdf = df.select(quantized(vec_col).alias("q")).persist()
+    qdf = cache(df.select(quantized(vec_col).alias("q")))
     try:
         for _ in range(iters):
             model = F.broadcast(model_row(df.sparkSession, books))
@@ -250,5 +252,5 @@ def lloyd_fit(
                 for b, (a, w) in enumerate(spans)
             ]
     finally:
-        qdf.unpersist()
+        release(qdf)
     return [books[b:b + m] for b, m in zip(bases, subspaces)]

@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import cache, checkpoint, release
+
 # At or above this many directed edges, pre-partition + pre-sort the
 # edge list once so per-round joins never move it (the label side may
 # exceed the broadcast threshold there). Below it, broadcast joins are
@@ -58,14 +60,7 @@ def label_propagation(
     ``edges`` must be symmetrized; the node universe is derived from
     edge endpoints, so every tracked node has at least one neighbor.
     """
-    # Persist (not localCheckpoint) the base: identical cache semantics
-    # for the per-round joins without paying a block COPY of the edge
-    # list (the same regression kcore_peel had, fixed r05), and lineage
-    # survives eviction. The base cache is dropped once the
-    # repartitioned cache is materialized, so the largest relation is
-    # never retained twice (the kcore ADVICE r04 finding, applied here
-    # too).
-    base = edges.persist()
+    base = cache(edges)
     colocated = base.count() >= COLOCATE_MIN_EDGES
     if colocated:
         edges = base.repartition(F.col(src)).sortWithinPartitions(src)
@@ -85,13 +80,13 @@ def label_propagation(
         # distribution of the (node, label) count AND the per-node
         # argmax. Per-round shuffle: zero.
         edges = base.repartition(F.col(dst))
-    edges = edges.persist()
+    edges = cache(edges)
     edges.count()
-    base.unpersist()
-    labels = (
+    release(base)
+    labels = checkpoint(
         edges.select(F.col(src).alias("node")).distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
+        .withColumn("label", F.col("node")),
+        eager=True,
     )
     # Deterministic argmax (highest count, then smallest label) as a
     # struct max — label negated so the max picks the smallest on count
@@ -119,13 +114,13 @@ def label_propagation(
         counts = msgs.groupBy("node", "label").agg(
             F.count(F.lit(1)).alias("c")
         )
-        labels = (
+        labels = checkpoint(
             counts.groupBy("node")
             .agg(best)
-            .select("node", (-F.col("s.neg_label")).alias("label"))
-            .localCheckpoint(eager=True)
+            .select("node", (-F.col("s.neg_label")).alias("label")),
+            eager=True,
         )
     # Labels are materialized (eager checkpoint); the edge cache has no
     # further readers on either path.
-    edges.unpersist()
+    release(edges)
     return labels

@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import cache, checkpoint, release
+
 SCALE = 10**12
 DAMP_NUM = 85   # damping 0.85 as a ratio of integers
 DAMP_DEN = 100
@@ -125,7 +127,7 @@ def _power_iterate(
     # Persist the iteration-invariant relations: every localCheckpoint
     # action below re-evaluates its inputs, so an unpersisted edge list
     # would re-run the caller's upstream joins once per iteration.
-    base = edges.persist()
+    base = cache(edges)
     nodes = (
         base.select(F.col(src).alias("node"))
         .union(base.select(F.col(dst).alias("node")))
@@ -146,7 +148,7 @@ def _power_iterate(
             "node", F.coalesce("__seed", F.lit(False)).alias("__seed")
         )
         seed = F.col("__seed")
-    nodes = nodes.persist()
+    nodes = cache(nodes)
     # Out-degree is ITERATION-INVARIANT, so it is attached to the edge
     # rows once here — each round then does a single edges⋈ranks join
     # instead of re-joining the degree dim every iteration.
@@ -157,12 +159,8 @@ def _power_iterate(
     # probe's per-round movement was dominated by exactly that. The
     # partitioned cache reports hashpartitioning(src); each round's
     # edges-side exchange disappears and only ranks move.
-    edges = base.join(deg, src).repartition(F.col(src)).persist()
+    edges = cache(base.join(deg, src).repartition(F.col(src)))
     teleport = (scale * (DAMP_DEN - DAMP_NUM)) // DAMP_DEN
-
-    # No persist on the rank vector: round 1 reads it once from the
-    # persisted nodes, and every later vector is a localCheckpoint,
-    # which unpersist() would not release anyway.
     ranks = nodes.select(
         "node",
         F.when(seed, F.lit(scale))
@@ -186,7 +184,9 @@ def _power_iterate(
             .groupBy("node")
             .agg(F.sum("__c").alias("__m"))
         )
-        ranks = (
+        # Cut lineage each round (components.py pattern): without this
+        # the plan tree grows ~5x per iteration.
+        ranks = checkpoint(
             nodes.join(contrib.hint("shuffle_hash"), "node", "left")
             .select(
                 "node",
@@ -196,13 +196,10 @@ def _power_iterate(
                         f"({DAMP_NUM} * coalesce(__m, 0L)) DIV {DAMP_DEN}"
                     )
                 ).cast("long").alias("rank"),
-            )
-            # Cut lineage each round (components.py pattern): without
-            # this the plan tree grows ~5x per iteration and a cache
-            # eviction would trigger exponential recompute.
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
-    nodes.unpersist()
-    edges.unpersist()
-    base.unpersist()
+    release(nodes)
+    release(edges)
+    release(base)
     return ranks

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import checkpoint
+
 
 def with_global_position(
     df: DataFrame,
@@ -51,7 +53,7 @@ def with_global_position(
     # Pin the (sampled) range split points: the count pass and the
     # ranking pass must see the IDENTICAL partitioning, so materialize
     # the exchange once instead of re-running the sample per action.
-    ranged = ranged.localCheckpoint(eager=False)
+    ranged = checkpoint(ranged)
     counts = {
         r["_pid"]: r["c"]
         for r in ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("c")).collect()
@@ -116,7 +118,7 @@ def with_global_prefix_sum(
     )
     ranged = df.repartitionByRange(n_part, *[F.col(c) for c in order_cols])
     ranged = ranged.withColumn("_pid", F.spark_partition_id())
-    ranged = ranged.localCheckpoint(eager=False)
+    ranged = checkpoint(ranged)
     partials = {
         r["_pid"]: r["s"]
         for r in ranged.groupBy("_pid").agg(F.sum(sum_col).alias("s")).collect()

@@ -51,6 +51,8 @@ from collections import Counter
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import cache, release
+
 BUCKETS = 1024
 MAX_ROUNDS = 8
 # A bracket whose chosen bucket holds at most this many ROWS retires to
@@ -360,10 +362,9 @@ def _select_ranks(
 
 
 def _profile(df: DataFrame, group_col: str, value_col: str) -> tuple:
-    src = (
+    src = cache(
         df.select(F.col(group_col).alias("g"), F.col(value_col).alias("v"))
         .filter(F.col("v").isNotNull())
-        .persist()
     )
     prof = {
         r["g"]: (r["n"], float(r["lo"]), float(r["hi"]))
@@ -455,13 +456,12 @@ def ntile_boundary_pairs(
             for m in metric_cols
         ]
     )
-    src = (
+    src = cache(
         df.select(
             F.col(tie_col).cast("double").alias("t"),
             F.explode(stacked).alias("x"),
         )
         .select("x.g", "x.v", "t")
-        .persist()
     )
 
     def _semi(names):
@@ -626,7 +626,7 @@ def ntile_boundary_pairs(
             for m in metric_cols
         }
     finally:
-        src.unpersist()
+        release(src)
 
 
 def equi_depth_edges(
@@ -661,5 +661,5 @@ def equi_depth_edges(
     resolved = _select_ranks(
         src, {"x": sorted(set(ranks))}, prof, buckets, max_rounds
     )
-    src.unpersist()
+    release(src)
     return [resolved[("x", r)] for r in ranks]

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import checkpoint
 from reddit_data_pipeline_engineering_spark.functions.text import shingles_of, tokens
 
 
@@ -43,7 +44,7 @@ def _shingle_arrays(
     verification intersect the two arrays directly instead of
     re-joining the exploded relation twice and re-counting."""
     toked = docs.select(F.col(id_col), tokens(text_col).alias("__toks"))
-    return (
+    return checkpoint(
         toked.select(
             id_col,
             F.array_distinct(shingles_of("__toks", shingle_len)).alias(
@@ -53,8 +54,8 @@ def _shingle_arrays(
         # cast: size() is INT where the old per-doc count() was LONG —
         # na*nb and the squared-cosine arithmetic downstream must not
         # overflow 32 bits for large shingle sets.
-        .withColumn("n", F.size("__arr").cast("long"))
-        .localCheckpoint(eager=True)
+        .withColumn("n", F.size("__arr").cast("long")),
+        eager=True,
     )
 
 

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import checkpoint
+
 # Wedge-closure Bloom prefilter sizing (guide §3.2): a single hash at
 # ~8 bits/edge gives ~12% false positives — false positives only
 # re-enter the exact closure join, never the result, so k=1 trades a
@@ -335,7 +337,7 @@ def per_node_triangles(
             ["v", "w"],
         )
     # 3 corner branches share one pass
-    closed = closed.localCheckpoint(eager=False)
+    closed = checkpoint(closed)
     corners = (
         closed.select(F.col("src").alias("node"))
         .unionAll(closed.select(F.col("v").alias("node")))

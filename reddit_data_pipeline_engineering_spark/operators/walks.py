@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import cache, checkpoint
+
 
 def random_walks(
     edges: DataFrame,
@@ -41,7 +43,7 @@ def random_walks(
     # r07): each step joins walkers against the static edge list on
     # ``src`` in its own action, so a plain cache re-shuffled all
     # edges per step; the partitioned cache moves only walkers.
-    edges = edges.repartition(F.col("src")).persist()
+    edges = cache(edges.repartition(F.col("src")))
     walks = anchors.select(
         F.col("node").alias("walker"),
         F.col("node"),
@@ -66,5 +68,5 @@ def random_walks(
             F.col("m.dst").alias("node"),
             F.concat_ws("->", F.col("m.path"), F.col("m.dst")).alias("path"),
         )
-        walks = walks.localCheckpoint(eager=True)
+        walks = checkpoint(walks, eager=True)
     return walks

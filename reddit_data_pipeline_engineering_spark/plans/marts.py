@@ -121,7 +121,8 @@ def write_marts(
     """Partitioned parquet sink (reference S8, process_openaq_raw.py:249-256).
 
     Uses dynamic partition overwrite for idempotent re-runs (the
-    reference's ``append`` double-counts on retry — SURVEY.md §7.3) and
+    reference's ``append`` double-counts on retry — SURVEY.md §7.3), as a
+    writer option, so the session's overwrite mode stays as it was, and
     repartitions by the partition columns so each Hive partition is written
     by one task (avoids the reference's repartition("location_id") small-
     file explosion, GLUE_JOBS_GUIDE.md:404-407).
@@ -131,9 +132,12 @@ def write_marts(
     filters on ``location_id`` then skip row groups, the light-weight
     cousin of Z-ordering (single-column case).
     """
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     out = df.repartition(*[F.col(c) for c in partition_cols])
     if sort_cols:
         out = out.sortWithinPartitions(*[F.col(c) for c in sort_cols])
-    out.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    (
+        out.write.mode(mode)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )

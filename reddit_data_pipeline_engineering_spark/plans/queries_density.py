@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import checkpoint
 from reddit_data_pipeline_engineering_spark.operators import density
 from reddit_data_pipeline_engineering_spark.plans.queries import query
 from reddit_data_pipeline_engineering_spark.sources.tables import load_table
@@ -293,19 +294,18 @@ def q_kdist_eps_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     base = density.grid_cells(pts, "vec_id", "x", "y", _KD_R)
-    base = base.localCheckpoint(eager=False)
+    base = checkpoint(base)
     thr = base.agg(F.count(F.lit(1)).alias("n")).select(
         F.least(
             F.lit(_KD_BUCKETS // 4),
             F.expr(f"({_KD_MAX_ANCHORS} * {_KD_BUCKETS} + n - 1) div n"),
         ).alias("thr")
     )
-    anchors = (
+    # anchors feeds the pair LEFT side and the censored-count total.
+    anchors = checkpoint(
         base.crossJoin(F.broadcast(thr))
         .filter(md5_bucket("id", _KD_BUCKETS) < F.col("thr"))
         .drop("thr")
-        # anchors feeds the pair LEFT side and the censored-count total.
-        .localCheckpoint(eager=False)
     )
     pairs = density.neighbor_pairs(base, _KD_R, anchors=anchors)
     w = Window.partitionBy("a").orderBy("d2", "b")
@@ -315,7 +315,7 @@ def q_kdist_eps_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("a", F.col("d2").alias("kd2"))
     )
     # kth feeds the histogram AND the censored count; bounded by points.
-    kth = kth.localCheckpoint(eager=False)
+    kth = checkpoint(kth)
     bucket = F.expr("CASE " + " ".join(
         f"WHEN kd2 * 100 <= {_KD_R * _KD_R * i * i} THEN {i}"
         for i in range(1, 11)

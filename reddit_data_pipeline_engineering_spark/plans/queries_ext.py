@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import release
 from reddit_data_pipeline_engineering_spark.plans.queries import (
     DEC_PRICE,
     REGISTRY,
@@ -2848,7 +2849,7 @@ def q_winsorized_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
         for g, (n, _, _) in prof.items()
     }
     got = sel._select_ranks(src, targets, prof, sel.BUCKETS, sel.MAX_ROUNDS)
-    src.unpersist()
+    release(src)
     rows = [
         (g, got[(g, targets[g][0])], got[(g, targets[g][1])])
         for g in sorted(prof)

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import checkpoint
 from reddit_data_pipeline_engineering_spark.operators import pagerank as pr
 from reddit_data_pipeline_engineering_spark.operators import bfs
 from reddit_data_pipeline_engineering_spark.operators import kcore
@@ -205,8 +206,8 @@ def q_triangle_count_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materializes each once — same device as pagerank/kmeans — instead
     # of replaying the basket self-join per branch (30% at sf0.1, and
     # the recompute would dominate at corpus scale).
-    edges = tri.copurchase_edges(li).localCheckpoint(eager=True)
-    sampled = tri.sample_edges(edges, _TRI_PCT).localCheckpoint(eager=True)
+    edges = checkpoint(tri.copurchase_edges(li), eager=True)
+    sampled = checkpoint(tri.sample_edges(edges, _TRI_PCT), eager=True)
     counts = tri.triangle_count(sampled)
     n_edges = edges.agg(F.count(F.lit(1)).alias("n_edges"))
     n_sampled = sampled.agg(F.count(F.lit(1)).alias("n_sampled"))
@@ -792,7 +793,7 @@ def q_hits_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # duplicated edge-build stage pairs at sf0.1). Lazy localCheckpoint
     # runs it once; stored volume is the distinct (c, s) edge list —
     # the relation every consumer was already re-shuffling.
-    pairs = pairs.localCheckpoint(eager=False)
+    pairs = checkpoint(pairs)
     r = _HITS_RESCALE
     a1 = pairs.groupBy("s").agg(
         F.expr(f"count(1) div {r}").alias("a")

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import checkpoint
 from reddit_data_pipeline_engineering_spark.operators import corpus as corpus_ops
 from reddit_data_pipeline_engineering_spark.plans.queries import REGISTRY, query
 from reddit_data_pipeline_engineering_spark.sources.tables import load_table, spread
@@ -884,7 +885,7 @@ def q_bpe_encode_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents"))
     # docs feeds the global vocab AND the per-source counts — store the
     # scan once (rows = input docs).
-    docs = docs.localCheckpoint(eager=False)
+    docs = checkpoint(docs)
     vocab = (
         docs.select(F.explode(F.split("text", " ")).alias("word"))
         .groupBy("word")
@@ -900,10 +901,10 @@ def q_bpe_encode_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Each round's spelled relation feeds BOTH the pair argmax and the
     # rewrite; a lazy checkpoint per round stores the vocabulary-bounded
     # spellings once instead of replaying the merge chain per consumer.
-    spelled = spelled.localCheckpoint(eager=False)
+    spelled = checkpoint(spelled)
     for _ in range(_BPE_ITERS):
         best = _bpe_best(spelled)
-        spelled = _bpe_apply(spelled, best).localCheckpoint(eager=False)
+        spelled = checkpoint(_bpe_apply(spelled, best))
     enc = spelled.select(
         "word",
         F.size(F.split("spelled", " ")).cast("long").alias("n_sym"),
@@ -989,7 +990,7 @@ def q_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = F.md5(F.array_join(F.slice(F.split("text", " "), 1, 10), " "))
     fps = docs.select(fp.alias("h"), "source").distinct()
     # fps feeds the per-source counts and BOTH self-join sides.
-    fps = fps.localCheckpoint(eager=False)
+    fps = checkpoint(fps)
     counts = fps.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
@@ -1123,7 +1124,7 @@ def q_incremental_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (corpus_ops.md5_bucket("doc_id", 100) >= 80).alias("is_new"),
     )
     # tagged feeds the partner-flag join and the per-source rollup.
-    tagged = tagged.localCheckpoint(eager=False)
+    tagged = checkpoint(tagged)
     sigs = text_dedup.minhash_signature(
         docs, "text", "doc_id", num_hashes=8, shingle_len=2
     )
@@ -1239,12 +1240,12 @@ def q_balanced_class_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("priority"),
     )
-    ranked = pr.select(
+    ranked = checkpoint(pr.select(
         "lang", "doc_id",
         F.row_number()
         .over(Window.partitionBy("lang").orderBy("priority", "doc_id"))
         .alias("rn"),
-    ).localCheckpoint(eager=False)  # class sizes + target + kept rollup
+    ))  # class sizes + target + kept rollup
     class_sizes = ranked.groupBy("lang").agg(
         F.max("rn").cast("long").alias("n_before")
     )

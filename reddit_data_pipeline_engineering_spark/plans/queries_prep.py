@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import checkpoint
 from reddit_data_pipeline_engineering_spark.functions import text as tx
 from reddit_data_pipeline_engineering_spark.operators import corpus, salt
 from reddit_data_pipeline_engineering_spark.plans.queries import (
@@ -634,7 +635,7 @@ def q_neyman_allocation_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(tx.tokens("text")).cast("long").alias("x"),
     )
     # lens feeds the strata aggregate AND the draw pass.
-    lens = lens.localCheckpoint(eager=False)
+    lens = checkpoint(lens)
     strata = lens.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         (
@@ -651,7 +652,7 @@ def q_neyman_allocation_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # wts is sources-bounded; checkpoint so the scalar total and the
     # allocation read it once.
-    wts = wts.localCheckpoint(eager=False)
+    wts = checkpoint(wts)
     tot = wts.agg(F.sum("w").alias("w_tot"))
     alloc = wts.crossJoin(F.broadcast(tot)).select(
         "source",

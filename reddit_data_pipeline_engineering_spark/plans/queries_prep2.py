@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import checkpoint
 from reddit_data_pipeline_engineering_spark.plans.queries import REGISTRY, query
 from reddit_data_pipeline_engineering_spark.sources.tables import load_table
 
@@ -131,9 +132,9 @@ def _h48(col) -> F.Column:
 def q_kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     k, space = _KMV_K, _KMV_SPACE
     ev = load_table(spark, sf_dir, "events")
-    du = ev.select(
+    du = checkpoint(ev.select(
         "event_type", _h48("user_id").alias("h")
-    ).distinct().localCheckpoint(eager=False)
+    ).distinct())
     n = du.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("exact_distinct")
     )
@@ -147,7 +148,7 @@ def q_kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = cand.withColumn(
         "rn", F.row_number().over(Window.partitionBy("event_type").orderBy("h"))
     ).filter(F.col("rn") <= k)
-    ranked = ranked.localCheckpoint(eager=False)
+    ranked = checkpoint(ranked)
     est = F.when(
         F.col("exact_distinct") <= k, F.col("exact_distinct")
     ).otherwise(
@@ -465,7 +466,7 @@ ORDER BY q.event_type
     tags=("relational", "stats", "sampling", "bench"),
 )
 def q_split_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = (
+    ev = checkpoint(
         load_table(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull())
         .select(
@@ -491,7 +492,7 @@ def q_split_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 % 2
             ).alias("half"),
         )
-    ).localCheckpoint(eager=False)
+    )
     mu = (
         ev.filter(F.col("half") == 0)
         .groupBy("event_type")
@@ -657,10 +658,10 @@ ORDER BY i.ta, i.tb
 def q_kmv_jaccard_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = _KJ_K
     ev = load_table(spark, sf_dir, "events").filter(F.col("value") > 90)
-    du = ev.select(
+    du = checkpoint(ev.select(
         "event_type", "user_id", _h48("user_id").alias("h")
-    ).distinct().localCheckpoint(eager=False)
-    kept = (
+    ).distinct())
+    kept = checkpoint(
         du.withColumn(
             "rn",
             F.row_number().over(
@@ -669,7 +670,6 @@ def q_kmv_jaccard_types(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("rn") <= k)
         .select("event_type", "h")
-        .localCheckpoint(eager=False)
     )
     types = du.select("event_type").distinct()
     pairs = (

@@ -55,6 +55,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import checkpoint
 from reddit_data_pipeline_engineering_spark.plans.queries import REGISTRY, query
 from reddit_data_pipeline_engineering_spark.sources.tables import load_table
 
@@ -203,13 +204,12 @@ def q_quantile_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CASE WHEN v4 < 16 THEN v4 ELSE shiftleft(shiftright(v4, "
         "length(bin(v4)) - 4), length(bin(v4)) - 4) END"
     )
-    bucketed = (
+    # two consumers (per-type + merged ALL): materialize the
+    # histogram once — it is the sketch, tiny by construction
+    bucketed = checkpoint(
         vals.select("event_type", lo_expr.alias("lo"))
         .groupBy("event_type", "lo")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        # two consumers (per-type + merged ALL): materialize the
-        # histogram once — it is the sketch, tiny by construction
-        .localCheckpoint(eager=False)
     )
     merged_all = bucketed.groupBy("lo").agg(
         F.sum("c").cast("long").alias("c")
@@ -328,11 +328,11 @@ def q_page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ph = dev.select("d", "t", F.sum("dv").over(w_cum).alias("ph_t"))
     w_tcum = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-    gap = ph.select(
+    gap = checkpoint(ph.select(
         "t",
         "ph_t",
         (F.col("ph_t") - F.min("ph_t").over(w_tcum)).alias("gap_t"),
-    ).localCheckpoint(eager=False)  # summary agg + max-t scalar both read it
+    ))  # summary agg + max-t scalar both read it
     last_t = gap.agg(F.max("t").alias("t_last"))
     alarm = F.col("gap_t") >= _PH_LAMBDA_E6
     return gap.crossJoin(F.broadcast(last_t)).agg(
@@ -423,7 +423,7 @@ GROUP BY base.n_users, base.base_mean_cents
 )
 def q_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    per_user = (
+    per_user = checkpoint(
         ev.filter(
             (F.col("event_type") == "purchase") & F.col("value").isNotNull()
         )
@@ -435,8 +435,7 @@ def q_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("spend_cents")
         )
-        .localCheckpoint(eager=False)  # replicate explode + base both read it
-    )
+    )  # replicate explode + base both read it
     reps = per_user.select(
         F.explode(F.sequence(F.lit(0), F.lit(_N_REPS - 1))).alias("r"),
         "user_id",
@@ -687,23 +686,21 @@ def q_freq_itemset_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_partkey"
     )
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    items = (
+    items = checkpoint(
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .select("l_orderkey", "p_brand")
         .distinct()
-        .localCheckpoint(eager=False)  # basket count + freq1 + pruning
-    )
+    )  # basket count + freq1 + pruning
     nb = items.agg(
         F.countDistinct("l_orderkey").cast("long").alias("n_baskets")
     ).withColumn("ms", F.expr("CAST((n_baskets + 99) div 100 AS BIGINT)"))
-    freq1 = (
+    freq1 = checkpoint(
         items.groupBy("p_brand")
         .agg(F.count(F.lit(1)).cast("long").alias("c1"))
         .crossJoin(F.broadcast(nb))
         .filter(F.col("c1") >= F.col("ms"))
         .select("p_brand", "c1")
-        .localCheckpoint(eager=False)  # prune + two confidence joins
-    )
+    )  # prune + two confidence joins
     pruned = items.join(
         F.broadcast(freq1.select("p_brand")), "p_brand", "left_semi"
     )
@@ -871,9 +868,9 @@ def q_durbin_watson_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("x")
     )
     w = Window.orderBy("d")
-    lagged = daily.select(
+    lagged = checkpoint(daily.select(
         "d", "x", F.lag("x").over(w).alias("xp")
-    ).localCheckpoint(eager=False)  # calendar-bounded series, two readers
+    ))  # calendar-bounded series, two readers
     tot = lagged.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("x").cast("long").alias("s"),
@@ -948,13 +945,13 @@ def q_theil_u_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("x")
     )
     w = Window.orderBy("d")
-    lagged = daily.select(
+    lagged = checkpoint(daily.select(
         "d",
         "x",
         F.lag("x", 1).over(w).alias("x1"),
         F.lag("x", 7).over(w).alias("x7"),
         F.row_number().over(w).alias("t"),
-    ).localCheckpoint(eager=False)  # calendar-bounded series
+    ))  # calendar-bounded series
     return lagged.filter(F.col("t") >= 8).agg(
         F.count(F.lit(1)).cast("long").alias("n_eval"),
         F.expr("CAST(SUM((x - x7) * (x - x7)) AS BIGINT)").alias(
@@ -1028,13 +1025,13 @@ def q_ngram_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread(load_table(spark, sf_dir, "documents"))
     toked = docs.select("doc_id", "source", tokens("text").alias("__toks"))
-    sh = toked.select(
+    sh = checkpoint(toked.select(
         "doc_id",
         "source",
         F.explode(F.array_distinct(shingles_of("__toks", 3))).alias(
             "shingle"
         ),
-    ).localCheckpoint(eager=False)  # firsts + the join both read it
+    ))  # firsts + the join both read it
     firsts = sh.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
     novel = F.when(F.col("first_doc") == F.col("doc_id"), 1).otherwise(0)
     return (
@@ -1183,7 +1180,7 @@ ORDER BY cohort_idx, cv.age_wk
     tags=("relational", "warehouse", "window", "bench"),
 )
 def q_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").select(
+    ev = checkpoint(load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_type",
         F.expr("CAST(CAST(value AS DECIMAL(14,4)) * 100 AS BIGINT)").alias(
@@ -1193,9 +1190,9 @@ def q_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00',"
             f" ts) div {_WEEK_US}"
         ).alias("wk"),
-    ).localCheckpoint(eager=False)  # cohort pass + revenue pass
+    ))  # cohort pass + revenue pass
     cohort = ev.groupBy("user_id").agg(F.min("wk").alias("cohort_wk"))
-    cohort = cohort.localCheckpoint(eager=False)  # sizes + join + min
+    cohort = checkpoint(cohort)  # sizes + join + min
     sizes = cohort.groupBy("cohort_wk").agg(
         F.count(F.lit(1)).cast("long").alias("n_users")
     )
@@ -1387,7 +1384,7 @@ FROM stats ORDER BY col_name
     tags=("relational", "warehouse", "layout", "audit", "bench"),
 )
 def q_storage_layout_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").localCheckpoint(eager=False)
+    ev = checkpoint(load_table(spark, sf_dir, "events"))
 
     def col_stats(col: str):
         return ev.agg(
@@ -1508,10 +1505,10 @@ def q_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.when(md5_bucket("user_id", 2) == 0, 1).otherwise(0).alias("is_a"),
     )
-    hist = purch.groupBy("cents").agg(
+    hist = checkpoint(purch.groupBy("cents").agg(
         F.sum("is_a").cast("long").alias("ca"),
         F.sum(1 - F.col("is_a")).cast("long").alias("cb"),
-    ).localCheckpoint(eager=False)  # median scan + cell fold both read it
+    ))  # median scan + cell fold both read it
     w_cum = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, 0)
     w_all = Window.partitionBy()
     cum = hist.select(
@@ -1621,12 +1618,12 @@ def q_ljung_box_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("x")
     )
     w = Window.orderBy("d")
-    led = daily.select(
+    led = checkpoint(daily.select(
         "d",
         "x",
         *[F.lead("x", k).over(w).alias(f"x{k}")
           for k in range(1, _LB_LAGS + 1)],
-    ).localCheckpoint(eager=False)  # calendar-bounded series
+    ))  # calendar-bounded series
     tot = led.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("x").cast("long").alias("s"),
@@ -1715,9 +1712,9 @@ def q_hapax_legomena_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "source", F.explode(tokens("text")).alias("tok")
     )
-    per_src = toks.groupBy("source", "tok").agg(
+    per_src = checkpoint(toks.groupBy("source", "tok").agg(
         F.count(F.lit(1)).cast("long").alias("c")
-    ).localCheckpoint(eager=False)  # source rollup + token re-agg
+    ))  # source rollup + token re-agg
     src_stats = per_src.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("vocab"),
         F.sum(F.when(F.col("c") == 1, 1).otherwise(0))

@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import checkpoint
 from reddit_data_pipeline_engineering_spark.plans.queries import REGISTRY, query
 from reddit_data_pipeline_engineering_spark.sources.tables import load_table
 
@@ -133,11 +134,11 @@ def q_pacf_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("x")
     )
     w = Window.orderBy("d")
-    led = daily.select(
+    led = checkpoint(daily.select(
         "d",
         "x",
         *[F.lead("x", k).over(w).alias(f"x{k}") for k in (1, 2, 3)],
-    ).localCheckpoint(eager=False)  # calendar-bounded series
+    ))  # calendar-bounded series
     tot = led.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("x").cast("long").alias("s"),
@@ -251,16 +252,16 @@ def q_levenshtein_blocked_pairs(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
-    named = part.select(
+    named = checkpoint(part.select(
         "p_partkey",
         "p_brand",
         "p_name",
         F.split_part(F.col("p_name"), F.lit(" "), F.lit(1)).alias("tok0"),
-    ).localCheckpoint(eager=False)  # block sizing + pairing both read it
+    ))  # block sizing + pairing both read it
     keys = ["p_brand", "tok0"]
-    sized = named.groupBy(*keys).agg(
+    sized = checkpoint(named.groupBy(*keys).agg(
         F.count(F.lit(1)).cast("long").alias("bs")
-    ).localCheckpoint(eager=False)  # block audit + admission filter
+    ))  # block audit + admission filter
     kept = named.join(
         F.broadcast(sized.filter(F.col("bs") <= _LEV_CAP).select(*keys)),
         keys,
@@ -375,9 +376,9 @@ def q_chao1_vocab_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread(load_table(spark, sf_dir, "documents"))
     toks = docs.select("source", F.explode(tokens("text")).alias("tok"))
-    per_src = toks.groupBy("source", "tok").agg(
+    per_src = checkpoint(toks.groupBy("source", "tok").agg(
         F.count(F.lit(1)).cast("long").alias("c")
-    ).localCheckpoint(eager=False)  # source rollup + token re-agg
+    ))  # source rollup + token re-agg
     f1 = F.sum(F.when(F.col("c") == 1, 1).otherwise(0)).cast("long")
     f2 = F.sum(F.when(F.col("c") == 2, 1).otherwise(0)).cast("long")
     src_stats = per_src.groupBy("source").agg(
@@ -515,7 +516,7 @@ def q_calibration_ece_temporal(
             "CASE WHEN wk <= (w0 + w1) div 2 THEN 1 ELSE 0 END"
         ).alias("early"),
     )
-    per_user = (
+    per_user = checkpoint(
         tagged.groupBy("user_id")
         .agg(
             F.sum("early").cast("long").alias("ev_early"),
@@ -535,13 +536,12 @@ def q_calibration_ece_temporal(
             ).cast("long").alias("p_late"),
         )
         .filter(F.col("ev_early") > 0)
-        .localCheckpoint(eager=False)  # activity scalars + bin rollup
-    )
+    )  # activity scalars + bin rollup
     act = per_user.agg(
         F.count(F.lit(1)).cast("long").alias("nu"),
         F.sum("ev_early").cast("long").alias("te"),
     )
-    binned = (
+    binned = checkpoint(
         per_user.crossJoin(F.broadcast(act))
         .groupBy(
             F.expr(
@@ -554,8 +554,7 @@ def q_calibration_ece_temporal(
             F.sum("p_early").cast("long").alias("conf_users"),
             F.sum("p_late").cast("long").alias("acc_users"),
         )
-        .localCheckpoint(eager=False)  # per-bin rows + the ALL fold
-    )
+    )  # per-bin rows + the ALL fold
     per_bin = binned.select(
         "bin",
         "n_users",
@@ -706,7 +705,7 @@ def q_jt_trend_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("band", "pri")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    grid = (
+    grid = checkpoint(
         cells.groupBy("band")
         .agg(
             *[
@@ -716,8 +715,7 @@ def q_jt_trend_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for i in (1, 2, 3, 4, 5)
             ]
         )
-        .localCheckpoint(eager=False)  # band-bounded grid: cum + totals
-    )
+    )  # band-bounded grid: cum + totals
     w = Window.orderBy("band").rowsBetween(Window.unboundedPreceding, -1)
     cum = grid.select(
         "band",
@@ -951,9 +949,9 @@ FROM d
 def q_cronbach_alpha_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     dec = "decimal(38,0)"
-    ut = ev.groupBy("user_id", "event_type").agg(
+    ut = checkpoint(ev.groupBy("user_id", "event_type").agg(
         F.count(F.lit(1)).cast("long").alias("x")
-    ).localCheckpoint(eager=False)  # item sums + user re-agg + n
+    ))  # item sums + user re-agg + n
     n_users = ut.agg(
         F.expr(f"CAST(COUNT(DISTINCT user_id) AS {dec})").alias("n")
     )
@@ -1088,7 +1086,7 @@ FROM parts
 )
 def q_brown_forsythe_var(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    cells = (
+    cells = checkpoint(
         orders.select(
             F.expr("CAST(substr(o_orderpriority, 1, 1) AS BIGINT)").alias(
                 "pri"
@@ -1100,8 +1098,7 @@ def q_brown_forsythe_var(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("pri", "band")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint(eager=False)  # median scan + z fold both read it
-    )
+    )  # median scan + z fold both read it
     w_cum = (
         Window.partitionBy("pri")
         .orderBy("band")

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import checkpoint
 from reddit_data_pipeline_engineering_spark.plans.queries import DEC_PRICE, REGISTRY, _dec, query
 from reddit_data_pipeline_engineering_spark.sources.tables import load_table
 
@@ -219,7 +220,7 @@ FROM m CROSS JOIN s CROSS JOIN ties t
 )
 def q_kendall_w_concordance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    cells = (
+    cells = checkpoint(
         ev.select(
             "event_type",
             F.expr(
@@ -228,17 +229,15 @@ def q_kendall_w_concordance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("event_type", "dow")
         .agg(F.count(F.lit(1)).cast("long").alias("x"))
-        .localCheckpoint(eager=False)
     )
     types = cells.select("event_type").distinct()
     dows = spark.range(1, 8).select(F.col("id").alias("dow"))
-    scaffold = (
+    scaffold = checkpoint(
         types.crossJoin(F.broadcast(dows))
         .join(F.broadcast(cells), ["event_type", "dow"], "left")
         .select(
             "event_type", "dow", F.coalesce("x", F.lit(0)).alias("x")
         )
-        .localCheckpoint(eager=False)
     )
     w_rank = Window.partitionBy("event_type").orderBy("x")
     w_tie = Window.partitionBy("event_type", "x")
@@ -345,9 +344,9 @@ ORDER BY source
 )
 def q_moment_shape_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    raw = docs.select(
+    raw = checkpoint(docs.select(
         "source", F.col("n_chars").cast("long").alias("x")
-    ).localCheckpoint(eager=False)
+    ))
     base = raw.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("x").cast("long").alias("s"),
@@ -558,10 +557,9 @@ ORDER BY dau.d
 )
 def q_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    ud = (
+    ud = checkpoint(
         ev.select("user_id", F.col("ts").cast("date").alias("d0"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     days = ud.select(F.col("d0").alias("d")).distinct()
     expanded = ud.select(

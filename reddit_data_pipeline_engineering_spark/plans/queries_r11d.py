@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import checkpoint
 from reddit_data_pipeline_engineering_spark.operators import bfs, triangles as tri
 from reddit_data_pipeline_engineering_spark.plans.queries import REGISTRY, _dec, query
 from reddit_data_pipeline_engineering_spark.sources.tables import load_table
@@ -222,16 +223,16 @@ GROUP BY band ORDER BY band
 )
 def q_local_clustering_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    edges = tri.copurchase_edges(li).localCheckpoint(eager=True)
+    edges = checkpoint(tri.copurchase_edges(li), eager=True)
     # |V|-sized degree table, materialized once and shared by the
     # orientation broadcasts inside per_node_triangles AND the final
     # lcc join (was recomputed from the edge union three extra times).
-    deg = (
+    deg = checkpoint(
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    ).localCheckpoint(eager=False)
+    )
     t = tri.per_node_triangles(edges, deg=deg)
     lcc = (
         deg.filter(F.col("d") >= 2)
@@ -326,10 +327,10 @@ def q_ad_two_sample_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.when(md5_bucket("user_id", 2) == 0, 1).otherwise(0).alias("is_a"),
     )
-    hist = purch.groupBy("cents").agg(
+    hist = checkpoint(purch.groupBy("cents").agg(
         _dec(F.sum("is_a")).alias("ca"),
         _dec(F.sum(1 - F.col("is_a"))).alias("cb"),
-    ).localCheckpoint(eager=False)  # cum window + totals both read it
+    ))  # cum window + totals both read it
     w_cum = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, 0)
     cum = hist.select(
         "ca", "cb",
@@ -519,10 +520,10 @@ def q_roc_auc_propensity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ELSE 0 END), 0) >= 60000 THEN 1 ELSE 0 END"
         ).alias("label"),
     )
-    grid = users.groupBy("score").agg(
+    grid = checkpoint(users.groupBy("score").agg(
         _dec(F.sum("label")).alias("n1_g"),
         _dec(F.sum(1 - F.col("label"))).alias("n0_g"),
-    ).localCheckpoint(eager=False)  # cum window + totals both read it
+    ))  # cum window + totals both read it
     w_cum = Window.orderBy("score").rowsBetween(Window.unboundedPreceding, 0)
     cum = grid.select(
         "n1_g", "n0_g",

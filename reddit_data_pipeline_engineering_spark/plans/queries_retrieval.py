@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import checkpoint
 from reddit_data_pipeline_engineering_spark.functions.vectors import cosine, dot, sql_dot
 from reddit_data_pipeline_engineering_spark.plans.queries import REGISTRY, query
 from reddit_data_pipeline_engineering_spark.plans.queries_llm import (
@@ -519,7 +520,7 @@ def q_chisq_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is the (source, word) count relation — vocabulary-bounded (Heaps'
     # law), the same volume one of the duplicated exchanges was already
     # re-shuffling.
-    cnt = cnt.localCheckpoint(eager=False)
+    cnt = checkpoint(cnt)
     tot = cnt.groupBy("source").agg(F.sum("c").cast("long").alias("n"))
     corpus = cnt.groupBy("word").agg(F.sum("c").cast("long").alias("cw"))
     nall = cnt.agg(F.sum("c").cast("long").alias("nn"))
@@ -1213,10 +1214,10 @@ def q_prf_expansion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = tok.select(
         "doc_id", F.size("t").alias("l"), F.explode("t").alias("word")
     )
-    scal = tok.agg(
+    scal = checkpoint(tok.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size("t")).cast("long").alias("w_total"),
-    ).localCheckpoint(eager=False)
+    ))
     term_score = (
         "((n_docs * 10000) div df)"
         " * ((22000 * tf * w_total)"
@@ -1227,7 +1228,7 @@ def q_prf_expansion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("l").alias("l"), F.count(F.lit(1)).alias("tf")
     )
     df1 = tf1.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
-    fb = (
+    fb = checkpoint(
         tf1.join(F.broadcast(df1), "word")
         .crossJoin(F.broadcast(scal))
         .withColumn("term_score", F.expr(term_score))
@@ -1236,25 +1237,21 @@ def q_prf_expansion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("s1"), "doc_id")
         .limit(_PRF_FB_K)
         .select("doc_id")
-        .localCheckpoint(eager=False)
     )
     # r11 pass-count cut (guide §1.2 — the tokenize+explode stream was
     # re-built from the raw scan by FOUR full-corpus consumers; the
     # checkpointed-arrays alternative measured WORSE, row-serializing
-    # the whole corpus, and persist() is inadmissible in a query path —
-    # CacheManager would match the identical plan across bench
-    # invocations, i.e. cross-run intermediate caching):
+    # the whole corpus):
     # (a) the feedback-term mine tokenizes only the 10 feedback docs —
     #     join the BROADCAST doc dim BEFORE split/explode, not after;
     fbwords = (
         docs.join(F.broadcast(fb), "doc_id")
         .select(F.explode(F.split("text", " ")).alias("word"))
     )
-    cand = (
+    cand = checkpoint(
         fbwords.filter(~F.col("word").isin(*_BM25_TERMS))
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("fbtf"))
-        .localCheckpoint(eager=False)
     )
     # (b) ONE term-pruned per-(doc, word) tf pass is shared by the
     #     global-df dim AND round 2 (its checkpointed volume is the
@@ -1268,7 +1265,7 @@ def q_prf_expansion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(t).alias("word"), F.lit(2).alias("wgt")
         )
         seeds = r if seeds is None else seeds.unionByName(r)
-    tfc = (
+    tfc = checkpoint(
         words.join(
             F.broadcast(
                 cand.select("word").unionByName(seeds.select("word"))
@@ -1277,14 +1274,13 @@ def q_prf_expansion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("doc_id", "word")
         .agg(F.max("l").alias("l"), F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
     )
     # tfc holds one row per (doc, word-with-hit): counting rows per word
     # IS the distinct-doc df the old dedicated full pass computed.
     gdf = tfc.groupBy("word").agg(
         F.count(F.lit(1)).cast("long").alias("df")
     )
-    exp = (
+    exp = checkpoint(
         cand.join(F.broadcast(gdf), "word")
         .crossJoin(F.broadcast(scal))
         .filter(F.col("df") >= 2)
@@ -1294,7 +1290,6 @@ def q_prf_expansion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .limit(_PRF_EXP_K)
         .select("word")
-        .localCheckpoint(eager=False)
     )
     qterms = seeds.unionByName(exp.withColumn("wgt", F.lit(1)))
     # Round 2 reads the shared tf relation (tfc already IS the

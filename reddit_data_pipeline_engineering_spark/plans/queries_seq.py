@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import checkpoint
 from reddit_data_pipeline_engineering_spark.plans.queries import query
 from reddit_data_pipeline_engineering_spark.sources.tables import load_table
 
@@ -92,7 +93,7 @@ def _conversion_durations(
         .cast("long")
         .alias("t")
     )
-    return j.select(*extra_cols.keys(), dur).localCheckpoint(eager=False)
+    return checkpoint(j.select(*extra_cols.keys(), dur))
 
 # --------------------------------------------------------------------------
 # Pareto skyline over part: minimize price, maximize size. A part point
@@ -758,7 +759,7 @@ def q_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("bucket"),
     )
     # bp feeds the anchor aggregate and the scored selection.
-    bp = bp.localCheckpoint(eager=False)
+    bp = checkpoint(bp)
     anchors = bp.groupBy("event_type", "bucket").agg(
         F.expr("CAST(sum(t) div count(1) AS BIGINT)").alias("ta"),
         F.expr("CAST(sum(v) div count(1) AS BIGINT)").alias("va"),
@@ -1358,7 +1359,7 @@ def q_markov_stationary_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00',"
         " ts) div 604800000000"
     )
-    uw = (
+    uw = checkpoint(
         ev.groupBy("user_id", wk.alias("wk"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
@@ -1366,7 +1367,6 @@ def q_markov_stationary_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "wk",
             F.expr(_mkv_state_sql("n")).cast("long").alias("s"),
         )
-        .localCheckpoint(eager=False)
     )
     a = uw.select("user_id", "wk", F.col("s").alias("sf"))
     b = uw.select(

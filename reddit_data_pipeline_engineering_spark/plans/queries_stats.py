@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import checkpoint
 from reddit_data_pipeline_engineering_spark.functions import text as tx
 from reddit_data_pipeline_engineering_spark.plans.queries import query
 from reddit_data_pipeline_engineering_spark.sources.tables import load_table, spread
@@ -713,7 +714,7 @@ def ks_drift_from_counts(cnt: DataFrame) -> DataFrame:
     # materializing twice — the dominant movement). What is stored is
     # grid-bounded — distinct (source, l) pairs, sources x max doc
     # length — never corpus-sized, at any scale.
-    cnt = cnt.localCheckpoint(eager=False)
+    cnt = checkpoint(cnt)
     srcs = cnt.groupBy("source").agg(F.sum("c").alias("n_src_d"))
     vals = cnt.select("l").distinct()
     tot = srcs.agg(F.sum("n_src_d").alias("n_all_d"))
@@ -874,7 +875,7 @@ def q_ab_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # arms (2 rows) fans out to the A side, the B side, and both metric
     # branches — store it once so the user-keyed aggregate runs once.
-    arms = arms.localCheckpoint(eager=False)
+    arms = checkpoint(arms)
     a = arms.filter(F.col("variant") == "A").select(
         F.col("n").alias("n_a"),
         *[F.col(f"conv_{m}").alias(f"ca_{m}") for m in _AB_METRICS],
@@ -1029,7 +1030,7 @@ def q_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"n * p_{n1}_{n2} - s_{n1} * s_{n2} AS num_{n1}_{n2}"
             )
     m = base.selectExpr(*m_cols)
-    m = m.localCheckpoint(eager=False)  # 1 row, feeds all 6 pair rows
+    m = checkpoint(m)  # 1 row, feeds all 6 pair rows
     outs = []
     for i, (n1, _) in enumerate(_CORR_COLS):
         for n2, _ in _CORR_COLS[i + 1:]:
@@ -1160,7 +1161,7 @@ def _rank_grid(cnt: DataFrame):
     cnt = cnt.select(
         "source", "l", F.col("c").cast("decimal(38,0)").alias("c")
     )
-    cnt = cnt.localCheckpoint(eager=False)
+    cnt = checkpoint(cnt)
     srcs = cnt.groupBy("source").agg(F.sum("c").alias("n_src_d"))
     vals = cnt.select("l").distinct()
     tot = srcs.agg(F.sum("n_src_d").alias("n_all_d"))
@@ -1739,7 +1740,7 @@ def q_wilson_conversion_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             for m in metrics
         ],
     )
-    arms = arms.localCheckpoint(eager=False)
+    arms = checkpoint(arms)
     rows = None
     for m in metrics:
         r = arms.select(
@@ -1888,10 +1889,10 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # strength folded into the edge rows ONCE (pagerank's loop-invariant
     # pattern); the vocab-bounded relation persists across rounds.
     strength = edges.groupBy("src").agg(F.sum("w").cast("long").alias("s"))
-    ew = edges.join(strength, "src").localCheckpoint(eager=False)
-    ranks = strength.select(
+    ew = checkpoint(edges.join(strength, "src"))
+    ranks = checkpoint(strength.select(
         F.col("src").alias("word"), F.lit(_pr.SCALE).cast("long").alias("rank")
-    ).localCheckpoint(eager=False)
+    ))
     nodes = ranks.select("word")
     for _ in range(_TR_ITERS):
         contrib = (
@@ -1903,7 +1904,7 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("dst")
             .agg(F.sum("cpart").cast("long").alias("m"))
         )
-        ranks = (
+        ranks = checkpoint(
             nodes.join(contrib, nodes["word"] == contrib["dst"], "left")
             .select(
                 "word",
@@ -1912,7 +1913,6 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"coalesce(m, 0L)) DIV {_pr.DAMP_DEN} as long)"
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=False)
         )
     return (
         ranks.orderBy(F.col("rank").desc(), F.col("word").asc())
@@ -2130,14 +2130,14 @@ def q_cuped_variance_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    arms = per_user.groupBy("variant").agg(
+    arms = checkpoint(per_user.groupBy("variant").agg(
         dec(F.count(F.lit(1))).alias("n"),
         dec(F.sum("x")).alias("sx"),
         dec(F.sum("y")).alias("sy"),
         F.sum(dec(F.col("x")) * F.col("y")).alias("sxy"),
         F.sum(dec(F.col("x")) * F.col("x")).alias("sxx"),
         F.sum(dec(F.col("y")) * F.col("y")).alias("syy"),
-    ).localCheckpoint(eager=False)
+    ))
     pooled = arms.agg(
         F.sum("n").cast("double").alias("nn"),
         F.sum("sx").cast("double").alias("px"),
@@ -2348,14 +2348,13 @@ def q_bh_fdr_nation_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint the 25-row flagged relation: both consumers (the k
     # scalar and the output join) would otherwise replay the whole
     # upstream subtree
-    flagged = (
+    flagged = checkpoint(
         ranked.join(F.broadcast(thr), "i")
         .withColumn(
             "hit_i",
             F.when(F.col("z2_bp") >= F.col("thr_bp"), F.col("i"))
             .otherwise(0),
         )
-        .localCheckpoint(eager=False)
     )
     k = flagged.agg(F.max("hit_i").alias("k"))
     return (
@@ -2474,14 +2473,13 @@ def q_eb_shrunk_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("conv")
         )
     )
-    nat = (
+    nat = checkpoint(
         per_user.groupBy("c_nationkey")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             F.sum("conv").cast("long").alias("c"),
         )
         .withColumn("r6", F.expr("c * 1000000 DIV n"))
-        .localCheckpoint(eager=False)
     )
     prior = nat.agg(
         F.count(F.lit(1)).cast("long").alias("k"),
@@ -2636,13 +2634,13 @@ def q_did_spend_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    arms = per_user.groupBy("variant").agg(
+    arms = checkpoint(per_user.groupBy("variant").agg(
         dec(F.count(F.lit(1))).alias("n"),
         dec(F.sum("x")).alias("sx"),
         dec(F.sum("y")).alias("sy"),
         F.sum(dec(F.col("x")) * F.col("x")).alias("sxx"),
         F.sum(dec(F.col("y")) * F.col("y")).alias("syy"),
-    ).localCheckpoint(eager=False)
+    ))
     a = arms.filter(F.col("variant") == "A").select(
         F.col("n").alias("na"), F.col("sx").alias("axs"),
         F.col("sy").alias("ays"), F.col("sxx").alias("axx"),

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import checkpoint
 from reddit_data_pipeline_engineering_spark.functions import text as tx
 from reddit_data_pipeline_engineering_spark.plans.queries import REGISTRY, _dec, query
 from reddit_data_pipeline_engineering_spark.sources.tables import load_table, spread
@@ -86,12 +87,11 @@ def _cs_graph(spark: SparkSession, sf_dir: str):
 
     # One-pass symmetrize: union(up, down) would evaluate the
     # orders ⋈ lineitem pair join once per branch at materialization.
-    edges = _sym_bipartite(pairs).localCheckpoint(eager=False)
-    deg = (
+    edges = checkpoint(_sym_bipartite(pairs))
+    deg = checkpoint(
         edges.groupBy("src")
         .agg(_dec(F.count(F.lit(1))).alias("d"))
         .withColumnRenamed("src", "node")
-        .localCheckpoint(eager=False)
     )
     ed = (
         edges.join(
@@ -456,7 +456,7 @@ def q_cramers_v_association(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = docs.groupBy("lang", "source").agg(
         _dec(F.count(F.lit(1))).alias("o")
     )
-    cells = cells.localCheckpoint(eager=False)
+    cells = checkpoint(cells)
     rowm = cells.groupBy("lang").agg(F.sum("o").alias("r"))
     colm = cells.groupBy("source").agg(F.sum("o").alias("c"))
     tot = cells.agg(
@@ -872,7 +872,7 @@ def q_rich_club_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
             for k in _RICH_KS
         ]
     )
-    both = e_row.crossJoin(F.broadcast(n_row)).localCheckpoint(eager=False)
+    both = checkpoint(e_row.crossJoin(F.broadcast(n_row)))
     out = None
     for k in _RICH_KS:
         r = both.select(
@@ -956,7 +956,7 @@ def q_jackknife_se_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         _dec(F.count(F.lit(1))).alias("n"),
         F.sum(_dec(F.col("x"))).alias("s"),
     )
-    g = g.localCheckpoint(eager=False)
+    g = checkpoint(g)
     tot = g.agg(
         F.sum("n").alias("nn"),
         F.sum("s").alias("ss"),
@@ -1408,15 +1408,17 @@ def q_permutation_test_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("decimal(38,0)")
         .alias("b"),
     )
-    diffs = cells.filter((F.col("n1") > 0) & (F.col("n2") > 0)).select(
-        "sid",
-        F.expr(
-            "(case when a * n2 - b * n1 >= 0 then 1 else -1 end)"
-            " * ((abs(a * n2 - b * n1) * 1000000) div (n1 * n2))"
-        ).alias("d_e6"),
-        "n1",
-        "n2",
-    ).localCheckpoint(eager=False)
+    diffs = checkpoint(
+        cells.filter((F.col("n1") > 0) & (F.col("n2") > 0)).select(
+            "sid",
+            F.expr(
+                "(case when a * n2 - b * n1 >= 0 then 1 else -1 end)"
+                " * ((abs(a * n2 - b * n1) * 1000000) div (n1 * n2))"
+            ).alias("d_e6"),
+            "n1",
+            "n2",
+        )
+    )
     obs = diffs.filter(F.col("sid") == 0).select(
         F.col("d_e6").alias("od"),
         F.col("n1").alias("on1"),

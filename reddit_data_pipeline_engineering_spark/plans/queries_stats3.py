@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import checkpoint
 from reddit_data_pipeline_engineering_spark.plans.queries import REGISTRY, _dec, query
 from reddit_data_pipeline_engineering_spark.sources.tables import load_table
 
@@ -114,15 +115,14 @@ FROM pairs, nd
 )
 def q_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    daily = (
+    # two consumers (both sides of the self-join): checkpoint so the
+    # orders scan + aggregate runs once
+    daily = checkpoint(
         orders.groupBy(F.col("o_orderdate").cast("date").alias("d"))
         .agg(
             F.sum(F.col("o_totalprice").cast("decimal(12,2)")).alias("rev"),
             F.count(F.lit(1)).cast("long").alias("n"),
         )
-        # two consumers (both sides of the self-join): checkpoint so the
-        # orders scan + aggregate runs once
-        .localCheckpoint(eager=False)
     )
     a, b = daily.alias("a"), daily.alias("b")
     pairs = a.join(F.broadcast(b), F.col("a.d") < F.col("b.d"))
@@ -317,12 +317,11 @@ def q_cohen_kappa_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     from reddit_data_pipeline_engineering_spark.plans.queries_llm import q_lang_id
 
     scored = q_lang_id(spark, sf_dir)
-    cells = (
+    # three consumers (totals, row marginals, col marginals) of a
+    # |langs|^2-bounded relation
+    cells = checkpoint(
         scored.groupBy("lang", "pred_lang")
         .agg(_dec(F.count(F.lit(1))).alias("n"))
-        # three consumers (totals, row marginals, col marginals) of a
-        # |langs|^2-bounded relation
-        .localCheckpoint(eager=False)
     )
     tot = cells.agg(
         F.sum("n").alias("nn"),
@@ -395,7 +394,7 @@ FROM tot, pairs
 )
 def q_goodman_kruskal_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    cells = (
+    cells = checkpoint(
         orders.select(
             F.substring("o_orderpriority", 1, 1).cast("int").alias("x"),
             F.expr(
@@ -405,8 +404,7 @@ def q_goodman_kruskal_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("x", "y")
         .agg(_dec(F.count(F.lit(1))).alias("n"))
-        .localCheckpoint(eager=False)  # both sides of the cell-pair join
-    )
+    )  # both sides of the cell-pair join
     a, b = cells.alias("a"), cells.alias("b")
     pairs = (
         a.join(F.broadcast(b), F.col("a.x") < F.col("b.x"))
@@ -734,12 +732,11 @@ def q_obf_sequential_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.when(F.expr(f"fp_us <= {bk}"), 1).otherwise(0))
             ).alias(f"c_{k}")
         )
-    arms = (
+    # both look branches (A side, B side) read the 2-row relation
+    arms = checkpoint(
         per_user.crossJoin(F.broadcast(bounds))
         .groupBy("variant")
         .agg(*aggs)
-        # both look branches (A side, B side) read the 2-row relation
-        .localCheckpoint(eager=False)
     )
     stack_args = ", ".join(
         f"{k}, n_{k}, c_{k}" for k in range(1, _OBF_LOOKS + 1)
@@ -833,7 +830,7 @@ ORDER BY s.event_type
 )
 def q_friedman_test_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    cells = (
+    cells = checkpoint(
         ev.filter(F.col("value").isNotNull())
         .groupBy(
             F.col("ts").cast("date").alias("d"),
@@ -844,8 +841,7 @@ def q_friedman_test_types(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("CAST(CAST(value AS DECIMAL(14,4)) * 10000 AS BIGINT)")
             ).alias("m")
         )
-        .localCheckpoint(eager=False)  # scaffold + both distinct dims
-    )
+    )  # scaffold + both distinct dims
     days = cells.select("d").distinct()
     types = cells.select("event_type").distinct()
     scaffold = (
@@ -860,9 +856,9 @@ def q_friedman_test_types(spark: SparkSession, sf_dir: str) -> DataFrame:
         (2 * F.rank().over(w_rank) + F.count(F.lit(1)).over(w_tie) - 1)
         .alias("r2"),
     )
-    sums = ranked.groupBy("event_type").agg(
+    sums = checkpoint(ranked.groupBy("event_type").agg(
         _dec(F.sum("r2")).alias("rank2_sum")
-    ).localCheckpoint(eager=False)
+    ))
     dims = scaffold.agg(
         _dec(F.countDistinct("d")).alias("n"),
         _dec(F.countDistinct("event_type")).alias("k"),
@@ -1042,7 +1038,7 @@ def q_page_trend_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (days + 3) div 7 buckets Mon-Sun ISO weeks and (days + 3) % 7 + 1
     # maps to ISO dow 1..7 (Thu -> 4) — pure integers; the oracle
     # mirrors via DuckDB's date-difference days.
-    keyed = daily.select(
+    keyed = checkpoint(daily.select(
         F.expr(
             "(CAST(unix_date(d) AS BIGINT) + 3) div 7"
         ).alias("wk"),
@@ -1050,7 +1046,7 @@ def q_page_trend_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
             "(CAST(unix_date(d) AS BIGINT) + 3) % 7 + 1"
         ).alias("dow"),
         "rev_c",
-    ).localCheckpoint(eager=False)
+    ))
     bounds = keyed.agg(F.min("wk").alias("lo"), F.max("wk").alias("hi"))
     interior = (
         keyed.select("wk")
@@ -1072,10 +1068,10 @@ def q_page_trend_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
         (2 * F.rank().over(w_rank) + F.count(F.lit(1)).over(w_tie) - 1)
         .alias("r2"),
     )
-    sums = ranked.groupBy("dow").agg(
+    sums = checkpoint(ranked.groupBy("dow").agg(
         _dec(F.sum("r2")).alias("rank2_sum"),
         _dec(F.count(F.lit(1))).alias("n"),
-    ).localCheckpoint(eager=False)
+    ))
     stat = sums.agg(
         F.sum(F.col("dow") * F.col("rank2_sum")).alias("l2"),
         F.max("n").alias("nw"),
@@ -1164,10 +1160,10 @@ def q_cvm_two_sample_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.when(md5_bucket("user_id", 2) == 0, 1).otherwise(0).alias("is_a"),
     )
-    hist = purch.groupBy("cents").agg(
+    hist = checkpoint(purch.groupBy("cents").agg(
         _dec(F.sum("is_a")).alias("ca"),
         _dec(F.sum(1 - F.col("is_a"))).alias("cb"),
-    ).localCheckpoint(eager=False)  # cum window + totals both read it
+    ))  # cum window + totals both read it
     w_cum = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, 0)
     cum = hist.select(
         "ca", "cb",

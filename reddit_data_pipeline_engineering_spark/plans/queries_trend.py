@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import checkpoint
 from reddit_data_pipeline_engineering_spark.functions import text as tx
 from reddit_data_pipeline_engineering_spark.plans.queries import query
 from reddit_data_pipeline_engineering_spark.sources.tables import load_table, spread
@@ -176,7 +177,7 @@ def mann_kendall_from_daily(daily: DataFrame) -> DataFrame:
     # the tie term); a lazy localCheckpoint materializes its corpus-
     # sized count shuffle ONCE. What is stored is calendar-bounded —
     # priorities x days — never corpus-sized, at any scale.
-    daily = daily.localCheckpoint(eager=False)
+    daily = checkpoint(daily)
     pairs = _ordered_pairs(daily).select(
         "priority",
         F.when(F.col("x2") > F.col("x1"), F.lit(1))
@@ -293,7 +294,7 @@ def theil_sen_from_daily(daily: DataFrame) -> DataFrame:
     """Theil-Sen lower-median slope over a ``(priority, day, x)`` series."""
     # Same checkpoint rationale as mann_kendall_from_daily: both pair
     # sides read the calendar-bounded daily aggregate; store it once.
-    daily = daily.localCheckpoint(eager=False)
+    daily = checkpoint(daily)
     slopes = _ordered_pairs(daily).select(
         "priority",
         (
@@ -412,13 +413,12 @@ def q_unigram_tv_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "source", F.explode(tx.tokens("text")).alias("w")
     )
-    cnt = (
+    # Fans out to the per-source totals and the window branch; the
+    # checkpoint stores only distinct (source, word) pairs —
+    # vocabulary-bounded at any corpus size.
+    cnt = checkpoint(
         tok.groupBy("source", "w")
         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("c"))
-        # Fans out to the per-source totals and the window branch; the
-        # checkpoint stores only distinct (source, word) pairs —
-        # vocabulary-bounded at any corpus size.
-        .localCheckpoint(eager=False)
     )
     srcs = cnt.groupBy("source").agg(F.sum("c").alias("n_src_d"))
     tot = srcs.agg(F.sum("n_src_d").alias("n_all_d"))
@@ -550,7 +550,7 @@ def q_embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # ld fans out to the per-label means and the global rollup; what is
     # stored is labels x dims rows — bounded at any corpus size.
-    ld = ld.localCheckpoint(eager=False)
+    ld = checkpoint(ld)
     lm = ld.select(
         "label",
         "dim",
@@ -661,7 +661,7 @@ def q_isotonic_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("x")
     )
     wday = Window.orderBy("day")
-    idx = daily.select(
+    idx = checkpoint(daily.select(
         "day",
         "x",
         F.row_number().over(wday).cast("long").alias("i"),
@@ -669,7 +669,7 @@ def q_isotonic_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(wday.rowsBetween(Window.unboundedPreceding, Window.currentRow))
         .cast("long")
         .alias("p"),
-    ).localCheckpoint(eager=False)
+    ))
     a = idx.select(
         F.col("i").alias("j"), F.col("x").alias("xa"), F.col("p").alias("pa")
     )
@@ -981,11 +981,12 @@ FROM joined
 )
 def q_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
+    d = F.col("o_orderdate").cast("date").alias("d")
+    daily = checkpoint(orders.groupBy(d).agg(
         F.sum(
             F.expr("CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)")
         ).alias("rev_c")
-    ).localCheckpoint(eager=False)  # both sides of the lag-7 self-join
+    ))  # both sides of the lag-7 self-join
     a = daily.select(F.col("d").alias("da"), F.col("rev_c").alias("actual_c"))
     f = daily.select(
         F.date_add(F.col("d"), 7).alias("df"), F.col("rev_c").alias("forecast_c")

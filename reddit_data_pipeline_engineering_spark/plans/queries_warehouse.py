@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.blocks import checkpoint
 from reddit_data_pipeline_engineering_spark.operators import bloom
 from reddit_data_pipeline_engineering_spark.operators.layout import (
     hilbert_key_2d,
@@ -1308,7 +1309,7 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # cust feeds the scalar max, the boundary selection passes (each a
     # mergeable conditional aggregate) and the final scoring pass.
-    cust = cust.localCheckpoint(eager=False)
+    cust = checkpoint(cust)
     mx = cust.agg(F.max("last_day").alias("maxd"))
     bnds = ntile_boundary_pairs(cust, ["ld", "f", "m_cents"], "custkey", 4)
 
@@ -1636,7 +1637,7 @@ def q_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = rows_.groupBy("nat", "seg", "b").agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("c")
     )
-    cells = cells.localCheckpoint(eager=False)
+    cells = checkpoint(cells)
     cls = cells.groupBy("nat", "seg").agg(F.sum("c").alias("n"))
     glob = cells.groupBy("b").agg(F.sum("c").alias("g"))
     tot = cells.agg(
@@ -1820,7 +1821,7 @@ def q_scd2_interval_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_open_not_last"),
     )
-    agg = per_key.agg(
+    agg = checkpoint(per_key.agg(
         F.count(F.lit(1)).cast("long").alias("n_keys"),
         F.sum("n_versions").cast("long").alias("n_versions"),
         F.sum(F.when(F.col("n_open") != 1, 1).otherwise(0))
@@ -1836,7 +1837,7 @@ def q_scd2_interval_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("v3"),
         F.sum("n_open_not_last").cast("long").alias("v4"),
-    ).localCheckpoint(eager=False)
+    ))
     rules = (
         ("one_current_per_key", "v1"),
         ("no_version_holes", "v2"),

@@ -25,6 +25,11 @@ also counts classes that other threads' queries compile meanwhile. After
 own classes do not fit the generated-code cache
 (``session.CODEGEN_CACHE_ENTRIES``).
 
+``blocks`` is the number of caches and checkpoints the pass made
+(``blocks.cache``/``blocks.checkpoint``). Each pass, and the warm-up,
+runs in its own ``blocks.scope()``, which releases them when the pass
+ends, so every pass builds its own and none outlives the run.
+
 CLI::
 
     python -m reddit_data_pipeline_engineering_spark.profile \\
@@ -44,6 +49,8 @@ import time
 import uuid
 
 from pyspark.sql import SparkSession
+
+from . import blocks
 
 _STAGE_FIELDS = (
     "stages",
@@ -168,13 +175,16 @@ def _noop(df) -> None:
 def _timed_pass(spark: SparkSession, name: str, fn, sf_dir: str) -> dict:
     group = f"profile:{name}:{uuid.uuid4().hex[:12]}"
     compiled = _compilations(spark)
-    t0 = time.perf_counter()
-    with _job_group(spark, f"{group}/build", group):
-        df, build_py4j = py4j_round_trips(spark, lambda: fn(spark, sf_dir))
-    t1 = time.perf_counter()
-    with _job_group(spark, f"{group}/action", group):
-        _noop(df)
-    t2 = time.perf_counter()
+    with blocks.scope() as made:
+        t0 = time.perf_counter()
+        with _job_group(spark, f"{group}/build", group):
+            df, build_py4j = py4j_round_trips(
+                spark, lambda: fn(spark, sf_dir)
+            )
+        t1 = time.perf_counter()
+        with _job_group(spark, f"{group}/action", group):
+            _noop(df)
+        t2 = time.perf_counter()
     compiles = _compilations(spark) - compiled
     build = _group_jobs(spark, f"{group}/build")
     action = _group_jobs(spark, f"{group}/action")
@@ -185,6 +195,7 @@ def _timed_pass(spark: SparkSession, name: str, fn, sf_dir: str) -> dict:
         "build_py4j": build_py4j,
         "action_jobs": len(action),
         "compiles": compiles,
+        "blocks": len(made),
         **_stage_totals(spark, build + action),
     }
 
@@ -194,15 +205,19 @@ def run(spark: SparkSession, name: str, sf_dir: str, runs: int = 2) -> dict:
     ``runs`` timed build-plus-noop-write passes after one untimed warm-up.
 
     A single pass can absorb a long stop-the-world GC pause, so the best
-    of two is the default. A JVM ``System.gc()`` after the query, outside
-    the timed region, lets the ContextCleaner release the shuffle files
-    and blocks of the passes before the next query starts.
+    of two is the default. The warm-up and each pass run in their own
+    ``blocks.scope()``, so the caches and checkpoints a pass made are
+    released when it ends and the next pass builds its own. A JVM
+    ``System.gc()`` after the query, outside the timed region, lets the
+    ContextCleaner remove the passes' shuffle files before the next
+    query starts.
     """
     from .plans.queries import REGISTRY, queries
 
     queries()
     fn = REGISTRY[name].fn
-    _noop(fn(spark, sf_dir))
+    with blocks.scope():
+        _noop(fn(spark, sf_dir))
     best = min(
         (_timed_pass(spark, name, fn, sf_dir) for _ in range(runs)),
         key=lambda rec: rec["wall_s"],

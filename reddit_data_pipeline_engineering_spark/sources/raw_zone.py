@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.types import StructType
 
+from reddit_data_pipeline_engineering_spark.blocks import cache
 from reddit_data_pipeline_engineering_spark.schemas import RAW_MEASUREMENT
 
 
@@ -66,7 +67,7 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN), and both halves
     read the same parse anyway.
     """
-    df = df.cache()
+    df = cache(df)
     corrupt = df.filter(F.col(CORRUPT_COL).isNotNull()).select(CORRUPT_COL)
     clean = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     return clean, corrupt

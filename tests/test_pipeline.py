@@ -17,6 +17,7 @@ from reddit_data_pipeline_engineering_spark import catalog as cat
 from reddit_data_pipeline_engineering_spark import query as q
 from reddit_data_pipeline_engineering_spark.config import POLLUTANTS
 from reddit_data_pipeline_engineering_spark.pipeline import run_pipeline, transform_raw
+from reddit_data_pipeline_engineering_spark.plans.marts import write_marts
 from reddit_data_pipeline_engineering_spark.schemas import MARTS
 from reddit_data_pipeline_engineering_spark.sources.raw_zone import (
     read_raw_zone,
@@ -110,6 +111,33 @@ def test_pipeline_end_to_end_and_idempotency(spark, raw_dir, tmp_path):
     )
     assert pdf["pm25"].tolist() == [35.5]
     assert q.validate_connection(spark)
+
+
+def test_write_marts_leaves_the_session_overwrite_mode(spark, raw_dir, tmp_path):
+    """Dynamic partition overwrite is scoped to the marts write: the
+    session's mode is unchanged afterwards (a later partitioned overwrite
+    elsewhere still truncates), and a rewrite of one day's partition
+    leaves the other day's partition in place."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        out = str(tmp_path / "marts")
+        wide = transform_raw(read_raw_zone(spark, raw_dir))
+        write_marts(wide, out)
+        assert spark.conf.get(key) == "static"
+        write_marts(
+            wide.filter(F.col("day") == "15").withColumn("pm25", F.lit(1.0)),
+            out,
+        )
+        assert spark.conf.get(key) == "static"
+        got = {
+            (r["location_id"], r["pm25"])
+            for r in spark.read.parquet(out).collect()
+        }
+        assert got == {("101", 1.0), ("202", None)}
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_compact_partitions(spark, tmp_path):

@@ -4,6 +4,8 @@ exactly its own query's work, also while another thread runs a query."""
 
 import threading
 
+import pytest
+
 from reddit_data_pipeline_engineering_spark import profile
 
 from .conftest import SF_SMALL
@@ -122,3 +124,39 @@ def test_repeat_pass_compiles_nothing(spark):
     distinct = compiles_per_pass()
     assert distinct > 100
     assert compiles_per_pass() == 0
+
+
+def _session_blocks(spark):
+    """(persisted RDD ids, identities of the cache manager's entries) of
+    the shared test session."""
+    ids = spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+    cached = spark._jsparkSession.sharedState().cacheManager().cachedData()
+    ident = spark._jvm.System.identityHashCode
+    return {int(i) for i in ids}, {
+        ident(cached.apply(i)) for i in range(cached.size())
+    }
+
+
+@pytest.mark.parametrize("name", ["bfs_reachability", "kcore_peel_counts"])
+def test_run_releases_what_its_passes_made(spark, name):
+    """A run leaves no persisted RDD and no cache entry behind, and its
+    timed pass builds its own edge caches: without the per-pass scope the
+    warm-up's caches served the timed pass, which then recorded fewer
+    build jobs than a cold pass. Compared against the session's state
+    before the run, because other tests' DataFrames hold blocks of their
+    own."""
+    from reddit_data_pipeline_engineering_spark.plans.queries import (
+        REGISTRY,
+        queries,
+    )
+
+    queries()
+    rdds, plans = _session_blocks(spark)
+    cold = profile._timed_pass(spark, name, REGISTRY[name].fn, SF_SMALL)
+    rec = profile.run(spark, name, SF_SMALL, runs=1)
+    after_rdds, after_plans = _session_blocks(spark)
+    assert after_rdds - rdds == set()
+    assert after_plans - plans == set()
+    assert cold["blocks"] > 0
+    assert rec["blocks"] == cold["blocks"]
+    assert rec["build_jobs"] == cold["build_jobs"]
