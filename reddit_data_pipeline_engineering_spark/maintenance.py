@@ -1,32 +1,34 @@
-"""Table maintenance: small-file compaction and key-level merge/upsert.
+"""Table maintenance: small-file compaction, key-level merge/upsert,
+incremental rollups and join views, and the raw-zone source ledger.
 
-The reference's own guidance flags the problem (50-200 KB files written
-per partition vs a 128-256 MB target — ``doc/GLUE_JOBS_GUIDE.md:311,
-404-407``) but ships no remediation; its ``repartition("location_id")``
-before a date-partitioned write actually multiplies small files
-(SURVEY.md §4 anti-pattern).
+The reference's own guidance flags the small-file problem (50-200 KB
+files written per partition vs a 128-256 MB target —
+``doc/GLUE_JOBS_GUIDE.md:311, 404-407``) but ships no remediation; its
+``repartition("location_id")`` before a date-partitioned write actually
+multiplies small files (SURVEY.md §4 anti-pattern).
 
-``compact_partitions`` rewrites a partitioned parquet dataset with files
-sized toward a target: rows are repartitioned BY THE PARTITION COLUMNS
-(each Hive partition written by as few tasks as its size needs) and the
-rewrite goes through a temp location + atomic-ish swap so readers never
-see a half-compacted table. At 100 TB this runs per-partition-predicate
-(compact only yesterday's partitions), which the ``predicate`` arg
-expresses.
+Every partition rewrite here (``compact_partitions``, ``merge_upsert``,
+``incremental_rollup``) goes through ``plans.marts.write_marts``, the one
+dynamic-overwrite writer, straight over the path its own plan reads:
+rows are repartitioned BY THE PARTITION COLUMNS, so each Hive partition
+is written by one task, and dynamic overwrite swaps the written
+partitions in only at job commit, after every task has finished reading,
+so a failed rewrite leaves the table as it was. At 100 TB
+compaction runs per-partition-predicate (compact only yesterday's
+partitions), which its ``predicate`` arg expresses.
 """
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 from collections.abc import Sequence
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from reddit_data_pipeline_engineering_spark.blocks import checkpoint
+from reddit_data_pipeline_engineering_spark.plans.marts import write_marts
 from reddit_data_pipeline_engineering_spark.schemas import LEDGER, RAW_MEASUREMENT
 
 _INFER_KEY = "spark.sql.sources.partitionColumnTypeInference.enabled"
@@ -77,71 +79,43 @@ def _has_data_files(spark: SparkSession, path: str) -> bool:
     return next(_data_files(spark, path), None) is not None
 
 
+def _write_counted(df, path: str, partition_cols, sort_cols) -> int:
+    """``write_marts`` that returns the number of rows written, observed
+    on the write itself (no count job). A plan the optimizer reduced to
+    no input partitions never runs its observer and reports no metrics:
+    that write wrote 0 rows."""
+    written = Observation()
+    write_marts(
+        df.observe(written, F.count(F.lit(1)).alias("rows")),
+        path,
+        partition_cols,
+        sort_cols,
+    )
+    row = written._jo.getRow()
+    return row.getLong(0) if row.length() else 0
+
+
 def compact_partitions(
     spark: SparkSession,
     path: str,
     partition_cols: Sequence[str],
     predicate: str | None = None,
-    target_rows_per_file: int | None = None,
 ) -> int:
-    """Rewrite (a filtered subset of) a partitioned parquet dir with
-    consolidated files. Returns the number of rows rewritten.
+    """Rewrite (a filtered subset of) a partitioned parquet dir with one
+    file per partition. Returns the number of rows rewritten.
 
     With ``predicate`` (e.g. ``"year = 2025 AND month = '01'"``) only the
     matching partitions are rewritten via dynamic partition overwrite —
-    untouched partitions keep their files.
+    untouched partitions keep their files. The rows go through
+    ``write_marts`` straight back over ``path``: they are hashed on the
+    partition columns, so each partition lands in one task and leaves one
+    file, and the count is observed on that write (no count job).
     """
     with _no_partition_type_inference(spark):
-        return _compact(
-            spark, path, partition_cols, predicate, target_rows_per_file
-        )
-
-
-def _compact(
-    spark: SparkSession,
-    path: str,
-    partition_cols: Sequence[str],
-    predicate: str | None,
-    target_rows_per_file: int | None,
-) -> int:
-    df = spark.read.parquet(path)
-    if predicate:
-        df = df.filter(predicate)
-    n_rows = df.count()
-    if n_rows == 0:
-        return 0
-
-    # One task per partition unless the caller sizes by rows. The task
-    # count is EXPLICIT: an unnumbered repartition(cols) lets AQE's skew
-    # rebalance split a partition's rows across tasks, re-fragmenting the
-    # very files we're consolidating.
-    parts = [F.col(c) for c in partition_cols]
-    if target_rows_per_file:
-        n_tasks = max(1, n_rows // target_rows_per_file)
-    else:
-        n_tasks = max(1, df.select(*partition_cols).distinct().count())
-    compacted = df.repartition(n_tasks, *parts)
-
-    tmp = tempfile.mkdtemp(prefix="rdpe_compact_")
-    (
-        compacted.write.mode("overwrite")
-        .partitionBy(*partition_cols)
-        .parquet(tmp)
-    )
-    # Swap through the temp location: dynamic overwrite replaces exactly
-    # the rewritten partitions; reading tmp (1 file per partition, none
-    # split across scan tasks) preserves the consolidated layout. The
-    # overwrite mode is scoped to THIS write via the writer option so the
-    # shared session's truncate-overwrite semantics are never changed.
-    (
-        spark.read.parquet(tmp)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .parquet(path)
-    )
-    shutil.rmtree(tmp, ignore_errors=True)
-    return n_rows
+        df = spark.read.parquet(path)
+        if predicate:
+            df = df.filter(predicate)
+        return _write_counted(df, path, partition_cols, ())
 
 
 def merge_upsert(
@@ -175,11 +149,13 @@ def merge_upsert(
     degrading to "no existing rows" — that would overwrite the touched
     partitions with the update rows alone.
 
-    The staging read is pinned to the survivors' schema and the returned
-    count is observed on the final write: the only jobs are the
+    The survivors are written by ``write_marts`` straight over ``path``,
+    the table their own plan reads, clustered by ``keys`` inside each
+    file; a write that fails leaves the table as it was. The returned
+    count is observed on that write: the only jobs are the
     touched-partition collect, the existing table's schema inference
     (left inferred so ``unionByName`` fails loudly on a column the batch
-    lacks) and the two writes.
+    lacks) and the write.
     """
     with _no_partition_type_inference(spark):
         return _merge_upsert(
@@ -214,8 +190,6 @@ def _merge_upsert(
     else:
         merged = upd
 
-    from pyspark.sql import Observation, Window
-
     order = [F.col("__prec").desc()]
     if order_col is not None:
         order.append(F.col(order_col).desc())
@@ -225,31 +199,7 @@ def _merge_upsert(
         .filter(F.col("__rn") == 1)
         .drop("__rn", "__prec")
     )
-    # Stage through a temp dir: the survivor plan READS ``path``, so
-    # writing straight back would be an overwrite-while-reading (same
-    # reason _compact swaps through tmp).
-    tmp = tempfile.mkdtemp(prefix="rdpe_merge_")
-    try:
-        (
-            survivors.repartition(*[F.col(c) for c in partition_cols])
-            .write.mode("overwrite")
-            .partitionBy(*partition_cols)
-            .parquet(tmp)
-        )
-        written = Observation()
-        (
-            spark.read.schema(survivors.schema)
-            .parquet(tmp)
-            .observe(written, F.count(F.lit(1)).alias("rows"))
-            .repartition(*[F.col(c) for c in partition_cols])
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return written.get["rows"]
+    return _write_counted(survivors, path, partition_cols, keys)
 
 
 def incremental_rollup(
@@ -274,11 +224,12 @@ def incremental_rollup(
 
     At 100 TB: each increment shuffles only the NEW batch (grouped on the
     same key as the stored table), reads back only the touched date
-    partitions, and dynamic-overwrites only those — the table's history is
-    never rewritten. Returns the number of aggregate rows written.
+    partitions, and dynamic-overwrites only those, through ``write_marts``
+    straight over ``agg_path`` — the table's history is never rewritten.
+    Returns the number of aggregate rows written, observed on the write.
+    An ``agg_path`` holding no data files yet (missing, or left by empty
+    batches) is an empty table.
     """
-    import os
-
     keys = list(key_cols)
     bucket = F.date_trunc("hour", F.col(ts_col)).alias("bucket_hour")
     partial = (
@@ -302,44 +253,26 @@ def incremental_rollup(
         )
     )
     group_cols = ["bucket_hour", *keys, partition_col]
-    if os.path.isdir(agg_path):
-        with _no_partition_type_inference(spark):
-            existing = spark.read.parquet(agg_path)
+    state = partial.select(*group_cols, "n_values", "sum_value")
+    with _no_partition_type_inference(spark):
+        if _has_data_files(spark, agg_path):
             touched = [
                 r[0]
                 for r in partial.select(partition_col).distinct().collect()
             ]
-            relevant = existing.filter(F.col(partition_col).isin(touched))
-            merged = (
+            relevant = spark.read.parquet(agg_path).filter(
+                F.col(partition_col).isin(touched)
+            )
+            state = (
                 relevant.select(*group_cols, "n_values", "sum_value")
-                .unionByName(
-                    partial.select(*group_cols, "n_values", "sum_value")
-                )
+                .unionByName(state)
                 .groupBy(*group_cols)
                 .agg(
                     F.sum("n_values").alias("n_values"),
                     F.sum("sum_value").cast("decimal(30,4)").alias("sum_value"),
                 )
             )
-            merged = checkpoint(merged, eager=True)  # cut lineage off the files
-        out_rows = merged.count()
-        (
-            merged.repartition(*[F.col(c) for c in (partition_col,)])
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(agg_path)
-        )
-        return out_rows
-    out_rows = partial.count()
-    (
-        partial.select(*group_cols, "n_values", "sum_value")
-        .repartition(F.col(partition_col))
-        .write.mode("overwrite")
-        .partitionBy(partition_col)
-        .parquet(agg_path)
-    )
-    return out_rows
+        return _write_counted(state, agg_path, (partition_col,), keys)
 
 
 def read_rollup(spark: SparkSession, agg_path: str):

@@ -115,10 +115,12 @@ def write_marts(
     df: DataFrame,
     path: str,
     partition_cols: Sequence[str] = ("year", "month", "day"),
-    mode: str = "overwrite",
     sort_cols: Sequence[str] = ("location_id",),
 ) -> None:
-    """Partitioned parquet sink (reference S8, process_openaq_raw.py:249-256).
+    """Partitioned parquet sink (reference S8, process_openaq_raw.py:249-256)
+    and the engine's only partitioned-overwrite writer: the backfill, the
+    merges, compaction, the rollups and the streaming upsert sink all
+    write through it.
 
     Uses dynamic partition overwrite for idempotent re-runs (the
     reference's ``append`` double-counts on retry — SURVEY.md §7.3), as a
@@ -127,16 +129,26 @@ def write_marts(
     by one task (avoids the reference's repartition("location_id") small-
     file explosion, GLUE_JOBS_GUIDE.md:404-407).
 
+    ``df`` may read ``path`` itself (a merge or a compaction rewriting its
+    own partitions): dynamic overwrite stages task output under
+    ``<path>/.spark-staging-<job>`` and swaps the written partitions in
+    only at job commit, after every task has finished reading, and a
+    failed job leaves the table as it was.
+
     ``sort_cols`` clusters rows inside each file so parquet row-group
     min/max statistics become selective for those columns — point/range
     filters on ``location_id`` then skip row groups, the light-weight
-    cousin of Z-ordering (single-column case).
+    cousin of Z-ordering (single-column case). The partition columns lead
+    the sort: the planned write sorts each task's rows by them itself, and
+    a bare ``sort_cols`` sort beneath that one is removed by the optimizer
+    whenever the partition values are computed, so only a sort that
+    already satisfies the write's ordering reaches the files.
     """
-    out = df.repartition(*[F.col(c) for c in partition_cols])
-    if sort_cols:
-        out = out.sortWithinPartitions(*[F.col(c) for c in sort_cols])
+    parts = [F.col(c) for c in partition_cols]
     (
-        out.write.mode(mode)
+        df.repartition(*parts)
+        .sortWithinPartitions(*parts, *[F.col(c) for c in sort_cols])
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*partition_cols)
         .parquet(path)

@@ -17,8 +17,8 @@ The streaming reformulation is a strict improvement, per SURVEY.md §2.9:
   batch kernel already uses the static form, plans/marts.py);
 - dimension enrichment is a stream-static broadcast join (re-resolved per
   micro-batch, so a refreshed dim table is picked up);
-- the sink is a partitioned parquet ``writeStream`` with checkpointing —
-  exactly-once file output replaces the reference's double-counting append.
+- the sink is a parquet ``writeStream`` with checkpointing — exactly-once
+  file output replaces the reference's double-counting append.
 
 Scale: state size = (entities x parameters) within the watermark horizon
 for dedup plus open aggregation windows; both are bounded by the watermark,
@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from reddit_data_pipeline_engineering_spark.maintenance import merge_upsert
 from reddit_data_pipeline_engineering_spark.operators.pivot import pivot_conditional
 
 
@@ -196,29 +197,19 @@ def stream_stream_interval_join(
     return lw.join(rw, cond, how)
 
 
-def write_marts_stream(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    partition_cols: Sequence[str] = (),
-    output_mode: str = "append",
-    available_now: bool = True,
-):
-    """Partitioned parquet streaming sink with checkpointing (S8's streaming
-    form). ``available_now=True`` processes everything currently in the
-    source then stops — the incremental-batch trigger that replaces the
-    reference's Airflow-cron reprocessing."""
-    writer = (
+def write_marts_stream(df: DataFrame, path: str, checkpoint: str):
+    """Parquet streaming sink with checkpointing (S8's streaming form), in
+    append mode under the availableNow trigger: it processes everything
+    currently in the source then stops — the incremental-batch trigger
+    that replaces the reference's Airflow-cron reprocessing."""
+    return (
         df.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
-        .outputMode(output_mode)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def write_stream_upsert(
@@ -226,61 +217,36 @@ def write_stream_upsert(
     path: str,
     checkpoint: str,
     partition_cols: Sequence[str],
-    available_now: bool = True,
-    keys: Sequence[str] | None = None,
+    keys: Sequence[str],
 ):
     """foreachBatch sink that upserts each micro-batch into a partitioned
-    parquet table instead of appending.
+    parquet table instead of appending, under the availableNow trigger.
 
-    Two modes, chosen by whether ``keys`` is given:
-
-    - ``keys=None`` — partition REPLACE: dynamic partition overwrite swaps
-      the touched partitions with the batch's rows. Correct ONLY when
-      ``partition_cols`` is the full re-emittable output grain (update
-      mode re-emits individual changed rows, so a partition holding
-      several windows would lose the windows absent from this batch).
-    - ``keys=(...)`` — key-level MERGE: the batch's rows replace existing
-      rows with the same keys and new keys are inserted
-      (``maintenance.merge_upsert`` inside foreachBatch), so a partition
-      may hold many re-emittable units without data loss.
-
-    Failed batches replay idempotently in both modes: the same input
-    batch produces the same partition contents. The overwrite mode is
-    scoped per-write (writer option), never set on the shared session.
+    Each batch is a key-level MERGE (``maintenance.merge_upsert``, which
+    writes through ``plans.marts.write_marts``): the batch's rows replace
+    existing rows with the same ``keys`` and new keys are inserted, so a
+    partition may hold many re-emittable units (update mode re-emits only
+    the changed ones) without data loss. Failed batches replay
+    idempotently: the same input batch produces the same partition
+    contents, and an empty batch writes nothing.
     """
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if keys is not None:
-            from reddit_data_pipeline_engineering_spark.maintenance import (
-                merge_upsert,
-            )
+        merge_upsert(
+            batch_df.sparkSession,
+            path,
+            batch_df,
+            keys=keys,
+            partition_cols=partition_cols,
+        )
 
-            merge_upsert(
-                batch_df.sparkSession,
-                path,
-                batch_df,
-                keys=keys,
-                partition_cols=partition_cols,
-            )
-        else:
-            (
-                batch_df.repartition(*[F.col(c) for c in partition_cols])
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*partition_cols)
-                .parquet(path)
-            )
-
-    writer = (
+    return (
         df.writeStream.foreachBatch(upsert)
         .option("checkpointLocation", checkpoint)
         .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_stream_to_completion(query, timeout_s: float = 120.0) -> None:

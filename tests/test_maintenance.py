@@ -2,9 +2,10 @@
 
 The driver-side listing and manifest reach the JVM as Arrow tables
 (LocalTableScan, no Python-worker task), the ledger is read through its
-pinned schema, and ``merge_upsert`` neither infers its staging schema nor
-runs a separate count job. Job counts are pinned exactly: a regression
-that adds an inference or Python-worker job fails here.
+pinned schema, and ``merge_upsert`` writes straight over its table (no
+staging write, no read-back) and runs no separate count job. Job counts
+are pinned exactly: a regression that adds an inference or Python-worker
+job fails here.
 """
 
 import json
@@ -12,8 +13,9 @@ import os
 
 import pytest
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
-from reddit_data_pipeline_engineering_spark import schemas
+from reddit_data_pipeline_engineering_spark import maintenance, schemas
 from reddit_data_pipeline_engineering_spark.maintenance import (
     commit_processed,
     merge_upsert,
@@ -23,9 +25,11 @@ from reddit_data_pipeline_engineering_spark.profile import jobs_launched
 
 # Jobs per call on the fixtures below. Before the Arrow listing and the
 # pinned ledger schema, new_raw_files launched 3; before the pinned
-# staging read and the observed count, merge_upsert launched 11.
+# staging read and the observed count, merge_upsert launched 11, and
+# before it wrote straight over its table (no temp-dir staging write and
+# read-back), 8.
 NEW_RAW_FILES_JOBS = 2
-MERGE_UPSERT_JOBS = 8
+MERGE_UPSERT_JOBS = 6
 
 
 def _land(zone, name, n):
@@ -175,3 +179,40 @@ def test_merge_upsert_corrupt_partition_raises(spark, tmp_path):
             spark, out, _updates(spark, [(2, 99.0, 2025)]), keys=("key",), partition_cols=("year",)
         )
     assert _tree(out) == before
+
+
+def test_merge_upsert_failed_write_leaves_the_table(spark, tmp_path):
+    """A merge whose write fails (one update row raises) leaves every file
+    and row of the table as it was: the touched partition is swapped in
+    only when the whole write commits."""
+    out = str(tmp_path / "marts")
+    _base_table(spark, out)
+    before = _tree(out)
+    rows_before = sorted(map(tuple, spark.read.parquet(out).collect()))
+    updates = _updates(spark, [(2, 99.0, 2025), (4, 40.0, 2025)]).withColumn(
+        "value",
+        F.when(F.col("key") == 4, F.raise_error(F.lit("bad update row"))).otherwise(
+            F.col("value")
+        ),
+    )
+    with pytest.raises(Exception, match="bad update row"):
+        merge_upsert(spark, out, updates, keys=("key",), partition_cols=("year",))
+    assert _tree(out) == before
+    assert sorted(map(tuple, spark.read.parquet(out).collect())) == rows_before
+
+
+def test_one_partition_overwrite_writer():
+    """Regrowth guard: ``plans/marts.py`` (``write_marts``) holds the
+    package's only dynamic-overwrite write, and the maintenance rewrites
+    stage nothing through a temp dir."""
+    pkg = os.path.dirname(maintenance.__file__)
+    writers = []
+    for d, _, names in os.walk(pkg):
+        for n in names:
+            if n.endswith(".py"):
+                with open(os.path.join(d, n)) as f:
+                    if "partitionOverwriteMode" in f.read():
+                        writers.append(os.path.relpath(os.path.join(d, n), pkg))
+    assert writers == [os.path.join("plans", "marts.py")]
+    with open(maintenance.__file__) as f:
+        assert "mkdtemp" not in f.read()

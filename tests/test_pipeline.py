@@ -9,6 +9,7 @@ double-counts, SURVEY.md §7.3).
 
 import json
 import os
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -140,6 +141,75 @@ def test_write_marts_leaves_the_session_overwrite_mode(spark, raw_dir, tmp_path)
         spark.conf.set(key, before)
 
 
+def _station_hour(path, hour, loc_ids):
+    """Land one NDJSON file: a pm25 reading from each station in
+    ``loc_ids``, in that order, for UTC ``hour`` of 2025-01-15."""
+    with open(path, "w") as f:
+        for loc in loc_ids:
+            f.write(json.dumps({
+                "sensor_id": loc, "datetime": f"2025-01-15T{hour + 7:02d}:00:00+07:00",
+                "value": float(loc % 97), "parameter": "pm25", "unit": "µg/m³",
+                "extracted_at": "2025-01-15T00:00:00", "location_id": loc,
+                "location_name": f"Station {loc}", "city": "Hanoi",
+                "timezone": "Asia/Bangkok", "country": "VN",
+                "latitude": 21.03, "longitude": 105.85,
+            }) + "\n")
+
+
+def _assert_clustered_by_location(out):
+    import pyarrow.parquet as pq
+
+    files = [
+        os.path.join(d, n)
+        for d, _, names in os.walk(out)
+        for n in names
+        if n.endswith(".parquet")
+    ]
+    assert files
+    for path in files:
+        ids = pq.read_table(path, columns=["location_id"]).column(0).to_pylist()
+        assert ids == sorted(ids), path
+
+
+def test_marts_files_are_clustered_by_location(spark, tmp_path):
+    """The backfill and a merge both leave every partition file sorted by
+    ``location_id`` (row-group statistics stay selective), whatever order
+    the stations arrive in. The merge runs without AQE partition
+    coalescing, so its survivors reach the write from several tasks."""
+    from reddit_data_pipeline_engineering_spark.maintenance import merge_upsert
+
+    rng = random.Random(7)
+    ids = list(range(1000, 1200))
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    for hour in range(3):
+        rng.shuffle(ids)
+        _station_hour(raw / f"raw_h{hour:02d}.json", hour, ids)
+    out = str(tmp_path / "marts")
+    run_pipeline(spark, str(raw), out)
+    _assert_clustered_by_location(out)
+
+    inc = tmp_path / "inc"
+    inc.mkdir()
+    rng.shuffle(ids)
+    _station_hour(inc / "raw_h03.json", 3, ids)
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        merge_upsert(
+            spark,
+            out,
+            transform_raw(read_raw_zone(spark, str(inc))),
+            keys=("location_id", "datetime"),
+            partition_cols=("year", "month", "day"),
+        )
+    finally:
+        spark.conf.set(key, old)
+    assert spark.read.parquet(out).count() == 4 * len(ids)
+    _assert_clustered_by_location(out)
+
+
 def test_compact_partitions(spark, tmp_path):
     from reddit_data_pipeline_engineering_spark.maintenance import compact_partitions
 
@@ -165,6 +235,43 @@ def test_compact_partitions(spark, tmp_path):
     assert len(files_in("day=15")) == 1  # one file per partition now
     after = sorted(r["id"] for r in spark.read.parquet(out).collect())
     assert after == before  # content identical
+
+
+def test_empty_rewrites_write_nothing(spark, tmp_path):
+    """A compaction predicate that matches no partition, and a rollup
+    batch with no rows, count 0 rows and leave every file as it was
+    (their plans read no input partition, so no write metrics arrive);
+    a rollup whose first batch was empty still takes the next one."""
+    from reddit_data_pipeline_engineering_spark.maintenance import (
+        compact_partitions,
+        incremental_rollup,
+    )
+
+    def tree(path):
+        return {
+            os.path.join(d, n): os.stat(os.path.join(d, n)).st_mtime_ns
+            for d, _, names in os.walk(path)
+            for n in names
+        }
+
+    out = str(tmp_path / "frag")
+    spark.range(10).select(
+        "id", F.lit(2025).alias("year"), F.lit("01").alias("month")
+    ).write.partitionBy("year", "month").parquet(out)
+    before = tree(out)
+    assert compact_partitions(spark, out, ("year", "month"), "month = '02'") == 0
+    assert tree(out) == before
+
+    ev = spark.createDataFrame(
+        [(1, "2025-01-01 10:00:00", 1.5), (1, "2025-01-01 10:30:00", 2.5)],
+        "user_id long, ts string, value double",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    inc = str(tmp_path / "inc")
+    assert incremental_rollup(spark, inc, ev.limit(0), ["user_id"], "ts", "value") == 0
+    assert incremental_rollup(spark, inc, ev, ["user_id"], "ts", "value") == 1
+    before = tree(inc)
+    assert incremental_rollup(spark, inc, ev.limit(0), ["user_id"], "ts", "value") == 0
+    assert tree(inc) == before
 
 
 def test_merge_upsert(spark, tmp_path):

@@ -215,8 +215,8 @@ def _case_checkpoint_incremental_restart(spark, tmp):
 
 
 def _case_foreach_batch_upsert(spark, tmp):
-    """Update-mode aggregation through the partition-upsert sink: a window
-    re-emitted with more data REPLACES its partition (no duplicate rows) —
+    """Update-mode aggregation through the keyed upsert sink: a window
+    re-emitted with more data REPLACES its row (no duplicate rows) —
     parquet-level MERGE semantics."""
     from reddit_data_pipeline_engineering_spark.streaming.kernel import (
         write_stream_upsert,
@@ -247,7 +247,11 @@ def _case_foreach_batch_upsert(spark, tmp):
             )
         )
         q = write_stream_upsert(
-            agg, out, ckpt, partition_cols=("location_id",)
+            agg,
+            out,
+            ckpt,
+            partition_cols=("location_id",),
+            keys=("location_id", "window_start"),
         )
         run_stream_to_completion(q)
 
