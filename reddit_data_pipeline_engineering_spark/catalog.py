@@ -36,25 +36,25 @@ def save_bucketed_table(
     bucket_cols: tuple[str, ...],
     n_buckets: int,
     sort_cols: tuple[str, ...] = (),
-    mode: str = "overwrite",
 ) -> None:
     """Bucketed managed table for co-located joins (scale extension).
 
     Two tables bucketed on the same keys with the same bucket count join
     WITHOUT a shuffle on either side (Exchange-free sort-merge join) —
     the standard Spark answer to repeated large-x-large joins at 100 TB.
-    Amortizes one shuffle at write time across every future join.
+    Amortizes one shuffle at write time across every future join. An
+    existing table of the same name is replaced.
     """
-    writer = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
+    writer = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)
 
 
-def list_tables(spark: SparkSession, database: str | None = None) -> list[str]:
-    """Table names in a database (reference ``list_tables`` via
+def list_tables(spark: SparkSession) -> list[str]:
+    """Table names in the current database (reference ``list_tables`` via
     information_schema, utils/athena_utils.py:206-232)."""
-    return [t.name for t in spark.catalog.listTables(database)]
+    return [t.name for t in spark.catalog.listTables()]
 
 
 def get_table_count(spark: SparkSession, table: str) -> int:

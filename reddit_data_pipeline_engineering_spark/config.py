@@ -14,13 +14,12 @@ from __future__ import annotations
 # the marts wide table has one double column per entry.
 POLLUTANTS: tuple[str, ...] = ("pm25", "pm10", "no2", "so2", "o3", "co", "bc")
 
-# Active-sensor lookback (reference constants.py:149: 7 days) and default
-# extraction window (24 h).
+# Active-sensor lookback (reference constants.py:149: 7 days).
 ACTIVE_LOOKBACK_DAYS = 7
-DEFAULT_LOOKBACK_HOURS = 24
 
-# API paging defaults (reference constants.py:153-154) — kept for the
-# source-connector surface.
+# API paging defaults (reference constants.py:153-154): the ``openaq``
+# source's page size and per-sensor measurement limit when its options
+# leave them unset.
 LOCATIONS_PAGE_SIZE = 100
 MEASUREMENTS_LIMIT = 1000
 

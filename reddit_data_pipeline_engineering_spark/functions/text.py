@@ -48,9 +48,9 @@ def distinct_token_count(col: Column | str) -> Column:
     return F.size(F.array_distinct(tokens(col)))
 
 
-def stopword_count(col: Column | str, stopwords=STOPWORDS) -> Column:
+def stopword_count(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
-    pattern = r"\b(" + "|".join(stopwords) + r")\b"
+    pattern = r"\b(" + "|".join(STOPWORDS) + r")\b"
     return F.size(F.regexp_extract_all(c, F.lit(pattern), F.lit(0)))
 
 

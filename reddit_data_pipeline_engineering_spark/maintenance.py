@@ -124,7 +124,6 @@ def merge_upsert(
     updates,
     keys: Sequence[str],
     partition_cols: Sequence[str],
-    order_col: str | None = None,
 ) -> int:
     """MERGE-style upsert into a partitioned parquet table: rows in
     ``updates`` replace existing rows with the same ``keys``; new keys are
@@ -133,10 +132,10 @@ def merge_upsert(
     The plain-parquet equivalent of Delta/Iceberg MERGE, scoped to stay
     scalable: only partitions TOUCHED by the update batch are read and
     rewritten (dynamic partition overwrite), so cost is O(touched
-    partitions), not O(table). Within a touched partition, survivor choice
-    is deterministic — updates beat existing rows, and ``order_col``
-    (e.g. an ``extracted_at`` stamp) breaks ties among duplicate update
-    rows; without it, max precedence wins.
+    partitions), not O(table). The update batch holds one row per key, as
+    every caller's batch does (a drained stream, one hourly increment), so
+    survivor choice is deterministic: an update row beats the existing row
+    with its key.
 
     Idempotent: replaying the same update batch rewrites the same
     partitions to the same contents (the reference's append-mode job
@@ -158,9 +157,7 @@ def merge_upsert(
     lacks) and the write.
     """
     with _no_partition_type_inference(spark):
-        return _merge_upsert(
-            spark, path, updates, keys, partition_cols, order_col
-        )
+        return _merge_upsert(spark, path, updates, keys, partition_cols)
 
 
 def _merge_upsert(
@@ -169,7 +166,6 @@ def _merge_upsert(
     updates,
     keys: Sequence[str],
     partition_cols: Sequence[str],
-    order_col: str | None,
 ) -> int:
     touched = [
         tuple(r) for r in updates.select(*partition_cols).distinct().collect()
@@ -190,10 +186,9 @@ def _merge_upsert(
     else:
         merged = upd
 
-    order = [F.col("__prec").desc()]
-    if order_col is not None:
-        order.append(F.col(order_col).desc())
-    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(*order)
+    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(
+        F.col("__prec").desc()
+    )
     survivors = (
         merged.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -209,8 +204,6 @@ def incremental_rollup(
     key_cols: Sequence[str],
     ts_col: str,
     value_col: str,
-    partition_col: str = "agg_date",
-    value_decimal: str = "14,4",
 ) -> int:
     """Continuous-aggregate maintenance (hypertable-rollup shape): fold a
     new batch of raw events into a persisted per-(key, hour) aggregate
@@ -220,7 +213,9 @@ def incremental_rollup(
     decimal-exact so merge order never changes results; ``avg`` is derived
     at read time as ``sum / n``. Incremental maintenance is therefore
     idempotent-by-construction against a full recompute: any split of the
-    input into batches converges to the identical table.
+    input into batches converges to the identical table. Values are summed
+    as ``decimal(14,4)``; the table is partitioned by ``agg_date``, the
+    bucket's ``yyyy-MM-dd``.
 
     At 100 TB: each increment shuffles only the NEW batch (grouped on the
     same key as the stored table), reads back only the touched date
@@ -236,7 +231,7 @@ def incremental_rollup(
         new_df.select(
             bucket,
             *[F.col(k) for k in keys],
-            F.col(value_col).cast(f"decimal({value_decimal})").alias("__v"),
+            F.col(value_col).cast("decimal(14,4)").alias("__v"),
         )
         .groupBy("bucket_hour", *keys)
         .agg(
@@ -248,20 +243,18 @@ def incremental_rollup(
             # any realistic per-bucket sum.
             F.sum("__v").cast("decimal(30,4)").alias("sum_value"),
         )
-        .withColumn(
-            partition_col, F.date_format("bucket_hour", "yyyy-MM-dd")
-        )
+        .withColumn("agg_date", F.date_format("bucket_hour", "yyyy-MM-dd"))
     )
-    group_cols = ["bucket_hour", *keys, partition_col]
+    group_cols = ["bucket_hour", *keys, "agg_date"]
     state = partial.select(*group_cols, "n_values", "sum_value")
     with _no_partition_type_inference(spark):
         if _has_data_files(spark, agg_path):
             touched = [
                 r[0]
-                for r in partial.select(partition_col).distinct().collect()
+                for r in partial.select("agg_date").distinct().collect()
             ]
             relevant = spark.read.parquet(agg_path).filter(
-                F.col(partition_col).isin(touched)
+                F.col("agg_date").isin(touched)
             )
             state = (
                 relevant.select(*group_cols, "n_values", "sum_value")
@@ -272,7 +265,7 @@ def incremental_rollup(
                     F.sum("sum_value").cast("decimal(30,4)").alias("sum_value"),
                 )
             )
-        return _write_counted(state, agg_path, (partition_col,), keys)
+        return _write_counted(state, agg_path, ("agg_date",), keys)
 
 
 def read_rollup(spark: SparkSession, agg_path: str):
@@ -492,7 +485,6 @@ def read_raw_zone_incremental(
     spark: SparkSession,
     path: str,
     ledger_path: str,
-    schema=None,
 ):
     """Bookmark-scoped raw-zone read: (df, files, commit).
 
@@ -500,16 +492,15 @@ def read_raw_zone_incremental(
     DataFrame when nothing is new); ``commit(n_rows, batch_id)`` appends
     the manifest — call it only after the downstream write succeeds.
     """
-    schema = schema or RAW_MEASUREMENT
     files = new_raw_files(spark, path, ledger_path)
     if files:
         df = (
             spark.read.format("json")
-            .schema(schema)
+            .schema(RAW_MEASUREMENT)
             .load([f["path"] for f in files])
         )
     else:
-        df = _local_frame(spark, [], schema)
+        df = _local_frame(spark, [], RAW_MEASUREMENT)
 
     def commit(n_rows: int, batch_id: str) -> None:
         commit_processed(spark, ledger_path, files, n_rows, batch_id)

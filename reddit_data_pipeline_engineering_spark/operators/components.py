@@ -275,17 +275,14 @@ def connected_components(
     return labels.union(roots).distinct()
 
 
-def duplicate_clusters(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
-    """Candidate pairs -> (component, n_members, canonical_id) clusters.
+def duplicate_clusters(pairs: DataFrame) -> DataFrame:
+    """Candidate ``(id_a, id_b)`` pairs -> (component, n_members,
+    canonical_id) clusters.
 
     canonical_id = min member (the component label itself); singleton
     documents (no pair) are not rows here — they are their own canonical.
     """
-    comp = connected_components(pairs, id_a, id_b)
+    comp = connected_components(pairs, "id_a", "id_b")
     return comp.groupBy("component").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.min("id").alias("canonical_id"),

@@ -111,25 +111,24 @@ def pack_sequences(
     )
 
 
-def source_mix_plan(
-    df: DataFrame, group_col: str, count_alias: str = "n_docs"
-) -> DataFrame:
-    """Per-source uniform-mixture plan: quota = ceil(total / n_sources).
+def source_mix_plan(df: DataFrame, group_col: str) -> DataFrame:
+    """Per-source uniform-mixture plan: quota = ceil(total / n_sources),
+    next to each source's document count ``n_docs``.
 
     The window below is unpartitioned, which is normally a scale bug — here
     it runs over the S-row per-source aggregate (S = distinct sources), not
     the corpus, so the single task holds S rows regardless of data size.
     """
-    counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias(count_alias))
+    counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("n_docs"))
     w = Window.partitionBy()
-    total = F.sum(count_alias).over(w).cast("double")
+    total = F.sum("n_docs").over(w).cast("double")
     n_groups = F.count(F.lit(1)).over(w)
     quota = F.ceil(total / n_groups).cast("bigint")
     return counts.select(
         group_col,
-        F.col(count_alias),
+        F.col("n_docs"),
         quota.alias("quota"),
-        F.least(F.lit(1.0), quota / F.col(count_alias)).alias("keep_rate"),
+        F.least(F.lit(1.0), quota / F.col("n_docs")).alias("keep_rate"),
     )
 
 

@@ -46,21 +46,21 @@ BOUNDED_STORAGE_MIN_EDGES = 10_000_000
 
 
 def _peel(
-    edges: DataFrame, k: int, src: str, dst: str, broadcast: bool = False
+    edges: DataFrame, k: int, broadcast: bool = False
 ) -> tuple[DataFrame, DataFrame]:
     """One peel round, shared by every k-core loop: (survivor ids as
     ``__node``, the edges whose endpoints both survive)."""
     alive = (
-        edges.groupBy(src)
+        edges.groupBy("src")
         .agg(F.count(F.lit(1)).alias("__deg"))
         .filter(F.col("__deg") >= k)
-        .select(F.col(src).alias("__node"))
+        .select(F.col("src").alias("__node"))
     )
     if broadcast:
         alive = F.broadcast(alive)
     edges = (
-        edges.join(alive, edges[src] == alive["__node"], "left_semi")
-        .join(alive, edges[dst] == alive["__node"], "left_semi")
+        edges.join(alive, edges["src"] == alive["__node"], "left_semi")
+        .join(alive, edges["dst"] == alive["__node"], "left_semi")
     )
     return alive, edges
 
@@ -80,19 +80,14 @@ def _round_stats(r: int, alive: DataFrame, edges: DataFrame) -> DataFrame:
     )
 
 
-def kcore_peel(
-    edges: DataFrame,
-    k: int,
-    rounds: int,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     """Peel ``rounds`` times; return (round, nodes_alive, edges_alive).
 
-    ``edges`` must be SYMMETRIZED (each undirected edge present in both
-    directions) AND DEDUPLICATED (no repeated (src, dst) pairs): degree
-    is computed as a raw row count per ``src``, so multi-edges would
-    silently inflate degrees (same implicit contract as ``lpa.py``,
+    ``edges`` is a ``(src, dst)`` list that must be SYMMETRIZED (each
+    undirected edge present in both directions) AND DEDUPLICATED (no
+    repeated (src, dst) pairs): degree is computed as a raw row count
+    per ``src``, so multi-edges would silently inflate degrees (same
+    implicit contract as ``lpa.py``,
     where duplicate edges would double-weight a neighbor's label).
     Callers pass DISTINCT pairs (``copurchase_edges`` aggregates by
     pair). ``edges_alive`` counts undirected edges (directed count
@@ -105,7 +100,7 @@ def kcore_peel(
     spark = edges.sparkSession
     edges = cache(edges)
     if edges.count() >= BOUNDED_STORAGE_MIN_EDGES:
-        return _kcore_peel_bounded(spark, edges, k, rounds, src, dst)
+        return _kcore_peel_bounded(spark, edges, k, rounds)
     stats: list[DataFrame] = []
     for r in range(1, rounds + 1):
         # Broadcast the survivor dim (guide §3.1): this lazy path only
@@ -118,15 +113,13 @@ def kcore_peel(
         # records at sf0.1). With the hint the edge relation never
         # moves; the groupBy's exchange carries only map-side partial
         # counts. ReuseExchange shares one broadcast across both probes.
-        alive, edges = _peel(edges, k, src, dst, broadcast=True)
+        alive, edges = _peel(edges, k, broadcast=True)
         edges = checkpoint(edges, eager=True)
         stats.append(_round_stats(r, alive, edges))
     return reduce(DataFrame.unionAll, stats).orderBy("round")
 
 
-def _kcore_peel_bounded(
-    spark, edges: DataFrame, k: int, rounds: int, src: str, dst: str
-) -> DataFrame:
+def _kcore_peel_bounded(spark, edges: DataFrame, k: int, rounds: int) -> DataFrame:
     """Bounded-storage peel for LARGE edge lists (the sf1.0 GC-stall
     fix, SCALE.md 9c): per-round stats are one scalar row collected
     eagerly, which makes it safe to persist each edge generation as
@@ -144,7 +137,7 @@ def _kcore_peel_bounded(
     prev = edges
     rows: list[tuple[int, int, int]] = []
     for r in range(1, rounds + 1):
-        alive, edges = _peel(edges, k, src, dst)
+        alive, edges = _peel(edges, k)
         edges = cache(edges)
         rows.append(tuple(_round_stats(r, alive, edges).head()))
         release(prev)
@@ -159,8 +152,6 @@ def kcore_survivors(
     edges: DataFrame,
     k: int,
     max_rounds: int = 50,
-    src: str = "src",
-    dst: str = "dst",
 ) -> tuple[DataFrame, int]:
     """Peel to FIXPOINT: the exact k-core's edge list plus rounds used.
 
@@ -179,7 +170,7 @@ def kcore_survivors(
     prev_n = edges.count()
     prev_df = edges
     for r in range(1, max_rounds + 1):
-        _, edges = _peel(edges, k, src, dst)
+        _, edges = _peel(edges, k)
         edges = cache(edges)
         cur = edges.count()
         # This round is materialized and counted; the previous round's

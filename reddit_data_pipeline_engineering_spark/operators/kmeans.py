@@ -55,11 +55,11 @@ CENT_SCALE = 64  # centroid grid is 64x finer than the vector grid
 Codebooks = list[list[list[int]]]  # [subspace][code][sub-dimension]
 
 
-def quantized(vec: Column | str, scale: int = QUANT_SCALE) -> Column:
+def quantized(vec: Column | str) -> Column:
     """array<float> -> array<long> on the deterministic integer grid."""
     vec = F.col(vec) if isinstance(vec, str) else vec
     return F.transform(
-        vec, lambda x: F.floor(x.cast("double") * F.lit(float(scale)))
+        vec, lambda x: F.floor(x.cast("double") * F.lit(float(QUANT_SCALE)))
     )
 
 
@@ -145,13 +145,13 @@ def assign_codes(
 
 
 def assign_clusters(
-    df: DataFrame, vec_col: str, centroids: list[list[int]],
-    out_col: str = "cluster",
+    df: DataFrame, vec_col: str, centroids: list[list[int]]
 ) -> DataFrame:
     """The one-subspace case of :func:`assign_codes`: add the
-    nearest-centroid id (ties -> lowest cluster id) as an int column."""
-    return assign_codes(df, vec_col, [centroids], out_col).withColumn(
-        out_col, F.col(out_col)[0]
+    nearest-centroid id (ties -> lowest cluster id) as the int column
+    ``cluster``."""
+    return assign_codes(df, vec_col, [centroids], "cluster").withColumn(
+        "cluster", F.col("cluster")[0]
     )
 
 

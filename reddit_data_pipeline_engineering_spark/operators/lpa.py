@@ -49,21 +49,17 @@ from reddit_data_pipeline_engineering_spark.blocks import cache, checkpoint, rel
 COLOCATE_MIN_EDGES = 10_000_000
 
 
-def label_propagation(
-    edges: DataFrame,
-    rounds: int,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def label_propagation(edges: DataFrame, rounds: int) -> DataFrame:
     """(node, label) after ``rounds`` synchronous LPA updates.
 
-    ``edges`` must be symmetrized; the node universe is derived from
-    edge endpoints, so every tracked node has at least one neighbor.
+    ``edges`` is a ``(src, dst)`` list and must be symmetrized; the node
+    universe is derived from edge endpoints, so every tracked node has at
+    least one neighbor.
     """
     base = cache(edges)
     colocated = base.count() >= COLOCATE_MIN_EDGES
     if colocated:
-        edges = base.repartition(F.col(src)).sortWithinPartitions(src)
+        edges = base.repartition(F.col("src")).sortWithinPartitions("src")
     else:
         # Below the cutover the label vector is |V| <= |E| < 10M rows —
         # broadcastable by construction — but each round's labels are a
@@ -79,12 +75,12 @@ def label_propagation(
         # hashpartitioning(dst→node) satisfies the clustered
         # distribution of the (node, label) count AND the per-node
         # argmax. Per-round shuffle: zero.
-        edges = base.repartition(F.col(dst))
+        edges = base.repartition(F.col("dst"))
     edges = cache(edges)
     edges.count()
     release(base)
     labels = checkpoint(
-        edges.select(F.col(src).alias("node")).distinct()
+        edges.select(F.col("src").alias("node")).distinct()
         .withColumn("label", F.col("node")),
         eager=True,
     )
@@ -97,8 +93,8 @@ def label_propagation(
     ).alias("s")
     for _ in range(rounds):
         lab = labels if colocated else F.broadcast(labels)
-        msgs = edges.join(lab, edges[src] == labels["node"]).select(
-            F.col(dst).alias("node"), "label"
+        msgs = edges.join(lab, edges["src"] == labels["node"]).select(
+            F.col("dst").alias("node"), "label"
         )
         if colocated:
             # One explicit transpose exchange on node: hash-partitioning

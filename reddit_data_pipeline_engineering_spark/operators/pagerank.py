@@ -14,26 +14,26 @@ pattern) so lineage stays flat and nothing recomputes. PageRank and
 personalized PageRank share that one loop: PageRank is the seeded loop
 with every node a seed.
 
-Determinism: ranks live on an integer grid (``scale`` = 10^12 per node),
+Determinism: ranks live on an integer grid (``SCALE`` = 10^12 per node),
 per-edge contribution is truncating division ``rank DIV out_degree``, and
 the damping update is ``(85 * sum) DIV 100`` — every operation is exact
 64-bit integer arithmetic, order-independent under summation, so any SQL
 engine replays the whole iteration bit-identically (unlike float
 PageRank, where summation order perturbs low bits). The deliberate cost:
 each division truncates up to 1 grid unit of mass (lost to rounding, not
-redistributed) — at scale=10^12 that is a ~1e-12 relative artifact, far
+redistributed) — at SCALE=10^12 that is a ~1e-12 relative artifact, far
 below any ranking-relevant signal.
 
 Overflow bound: the damping update computes ``DAMP_NUM * __m`` where
 ``__m`` is one node's summed in-contributions. Total mass is conserved
-at ~n_nodes * scale, so the worst case (every node pointing at one hub)
-needs ``85 * n_nodes * scale < 2^63`` — at the default scale=10^12 that
+at ~n_nodes * SCALE, so the worst case (every node pointing at one hub)
+needs ``85 * n_nodes * SCALE < 2^63`` — at SCALE=10^12 that
 is safe to ~10^5 nodes in the pathological star and to ~10^7+ nodes for
 any graph whose max in-mass stays under ~10^17 (realistic webs: hub
 in-mass ≈ in_degree * avg_rank ≪ total mass). Spark in non-ANSI mode
 would WRAP silently past the bound while DuckDB errors, breaking the
-bit-identical-replay claim — so for graphs beyond it, pass a smaller
-``scale`` (e.g. 10^9 keeps the star-graph bound at ~10^8 nodes; the
+bit-identical-replay claim — so graphs beyond it need a smaller
+``SCALE`` (e.g. 10^9 keeps the star-graph bound at ~10^8 nodes; the
 truncation artifact grows to ~1e-9 relative, still ranking-irrelevant).
 """
 
@@ -61,39 +61,30 @@ DAMP_DEN = 100
 # for 10x data, reproducibly, from a per-round SMJ edge re-sort).
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iters: int = 3,
-    scale: int = SCALE,
-) -> DataFrame:
+def pagerank(edges: DataFrame, iters: int = 3) -> DataFrame:
     """Ranks after ``iters`` exact-integer power iterations.
 
-    ``edges`` is a directed edge list; symmetrize it first if the graph
-    is undirected. Nodes = distinct src ∪ dst. A node with no out-edges
-    (dangling) keeps only its teleport mass; a node with no in-edges
-    converges to the teleport floor. This is :func:`personalized_pagerank`
-    with every node a seed: r0 = ``scale`` and the teleport constant on
+    ``edges`` is a directed ``(src, dst)`` edge list; symmetrize it first
+    if the graph is undirected. Nodes = distinct src ∪ dst. A node with no
+    out-edges (dangling) keeps only its teleport mass; a node with no
+    in-edges converges to the teleport floor. This is :func:`personalized_pagerank`
+    with every node a seed: r0 = ``SCALE`` and the teleport constant on
     every node, the same integer ranks.
     """
-    return _power_iterate(edges, None, src, dst, iters, scale)
+    return _power_iterate(edges, None, iters)
 
 
 def personalized_pagerank(
     edges: DataFrame,
     seeds: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     iters: int = 3,
-    scale: int = SCALE,
 ) -> DataFrame:
     """Personalized PageRank: restart mass lands ONLY on ``seeds``.
 
     Same integer grid and iteration shape as :func:`pagerank` (one keyed
     shuffle per round, truncating per-edge division, exact 64-bit
     arithmetic → bit-identical SQL replay), with the teleport vector
-    concentrated on the seed set instead of uniform: r0 = ``scale`` on
+    concentrated on the seed set instead of uniform: r0 = ``SCALE`` on
     seeds / 0 elsewhere, and each round adds the per-seed teleport
     constant only to seed rows. The result ranks every node by its
     proximity to the seed set under the random-walk-with-restart model
@@ -107,21 +98,18 @@ def personalized_pagerank(
     the edge rows): each round's teleport term reads a cached boolean
     column, no per-round seed join at all.
 
-    Overflow: total mass is bounded by n_seeds * scale (strictly less
-    than the uniform variant's n_nodes * scale), so the §module-header
+    Overflow: total mass is bounded by n_seeds * SCALE (strictly less
+    than the uniform variant's n_nodes * SCALE), so the §module-header
     bound applies with n_seeds in place of n_nodes — tighter at any
     realistic seed-set size.
     """
-    return _power_iterate(edges, seeds, src, dst, iters, scale)
+    return _power_iterate(edges, seeds, iters)
 
 
 def _power_iterate(
     edges: DataFrame,
     seeds: DataFrame | None,
-    src: str,
-    dst: str,
     iters: int,
-    scale: int,
 ) -> DataFrame:
     """The one rank loop; ``seeds=None`` makes every node a seed."""
     # Persist the iteration-invariant relations: every localCheckpoint
@@ -129,8 +117,8 @@ def _power_iterate(
     # would re-run the caller's upstream joins once per iteration.
     base = cache(edges)
     nodes = (
-        base.select(F.col(src).alias("node"))
-        .union(base.select(F.col(dst).alias("node")))
+        base.select(F.col("src").alias("node"))
+        .union(base.select(F.col("dst").alias("node")))
         .distinct()
     )
     if seeds is None:
@@ -152,18 +140,18 @@ def _power_iterate(
     # Out-degree is ITERATION-INVARIANT, so it is attached to the edge
     # rows once here — each round then does a single edges⋈ranks join
     # instead of re-joining the degree dim every iteration.
-    deg = base.groupBy(src).agg(F.count(F.lit(1)).alias("__deg"))
+    deg = base.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
     # Pre-partitioned on the per-round join key (r07): each iteration
     # is its own action (eager rank checkpoint), so a plain cache
     # re-shuffled the full static edge relation every round — the §9e
     # probe's per-round movement was dominated by exactly that. The
     # partitioned cache reports hashpartitioning(src); each round's
     # edges-side exchange disappears and only ranks move.
-    edges = cache(base.join(deg, src).repartition(F.col(src)))
-    teleport = (scale * (DAMP_DEN - DAMP_NUM)) // DAMP_DEN
+    edges = cache(base.join(deg, "src").repartition(F.col("src")))
+    teleport = (SCALE * (DAMP_DEN - DAMP_NUM)) // DAMP_DEN
     ranks = nodes.select(
         "node",
-        F.when(seed, F.lit(scale))
+        F.when(seed, F.lit(SCALE))
         .otherwise(F.lit(0))
         .cast("long")
         .alias("rank"),
@@ -175,10 +163,10 @@ def _power_iterate(
             # SMJ would re-SORT the static partitioned edge relation
             # every round (repartition colocates but does not sort).
             edges.join(
-                ranks.hint("shuffle_hash"), edges[src] == ranks["node"]
+                ranks.hint("shuffle_hash"), edges["src"] == ranks["node"]
             )
             .select(
-                F.col(dst).alias("node"),
+                F.col("dst").alias("node"),
                 F.expr("rank DIV __deg").alias("__c"),
             )
             .groupBy("node")

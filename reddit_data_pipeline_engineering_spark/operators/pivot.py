@@ -64,14 +64,13 @@ def pivot_dynamic(
     group_keys: Sequence[str],
     pivot_col: str,
     value_col: str,
-    agg: str = "avg",
 ) -> DataFrame:
-    """Reference-style dynamic pivot (runtime column discovery)."""
-    fn = getattr(F, agg)
+    """Reference-style dynamic pivot (runtime column discovery) of the
+    mean of ``value_col``."""
     return (
         df.groupBy(*[F.col(k) for k in group_keys])
         .pivot(pivot_col)
-        .agg(fn(F.col(value_col)))
+        .agg(F.avg(F.col(value_col)))
     )
 
 
@@ -80,12 +79,12 @@ def unpivot(
     id_cols: Sequence[str],
     value_cols: Sequence[str],
     var_name: str = "parameter",
-    value_name: str = "value",
 ) -> DataFrame:
-    """Wide-to-long inverse (melt), via the built-in unpivot operator."""
+    """Wide-to-long inverse (melt), via the built-in unpivot operator;
+    the values land in ``value``."""
     return df.unpivot(
         [F.col(c) for c in id_cols],
         [F.col(c) for c in value_cols],
         var_name,
-        value_name,
+        "value",
     )

@@ -61,12 +61,12 @@ def jl_project(
     df: DataFrame,
     vec_col: str,
     signs: list[list[int]],
-    out_col: str = "proj",
 ) -> DataFrame:
-    """Map-only projection: out[j] = fold_i(v[i] * sign[i][j])."""
+    """Map-only projection into the column ``proj``:
+    proj[j] = fold_i(v[i] * sign[i][j])."""
     dim_out = len(signs[0])
     return df.withColumn(
-        out_col,
+        "proj",
         F.array(*[_proj_dim(F.col(vec_col), signs, j) for j in range(dim_out)]),
     )
 

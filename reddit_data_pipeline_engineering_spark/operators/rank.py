@@ -95,7 +95,6 @@ def with_global_prefix_sum(
     order_cols: list[str],
     sum_col: str,
     cum_col: str = "cum_sum",
-    num_partitions: int | None = None,
     with_total: bool = False,
 ):
     """Add the exact running total of ``sum_col`` under ``ORDER BY
@@ -110,12 +109,11 @@ def with_global_prefix_sum(
     offsets back, and let each partition compute a LOCAL keyed
     cumulative window plus its offset. ``sum_col`` should already be
     an exact type (DECIMAL/BIGINT); the per-partition partials reuse
-    it unchanged, so no precision is lost in the offset pass.
+    it unchanged, so no precision is lost in the offset pass. There is
+    one range per shuffle partition.
     """
     spark = df.sparkSession
-    n_part = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     ranged = df.repartitionByRange(n_part, *[F.col(c) for c in order_cols])
     ranged = ranged.withColumn("_pid", F.spark_partition_id())
     ranged = checkpoint(ranged)

@@ -46,9 +46,8 @@ def salted_join(
     on: str | Sequence[str],
     big_unique: Sequence[str],
     n: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skew-resistant equi-join: hot keys spread over ``n`` tasks.
+    """Skew-resistant inner equi-join: hot keys spread over ``n`` tasks.
 
     ``big_unique`` must functionally determine a row of ``big`` (e.g. its
     primary key) so the salt is uniform within each join key. The small
@@ -58,7 +57,7 @@ def salted_join(
     on = [on] if isinstance(on, str) else list(on)
     b = with_salt(big, big_unique, n)
     s = replicate_salted(small, n)
-    return b.join(s, on=on + [SALT_COL], how=how).drop(SALT_COL)
+    return b.join(s, on=on + [SALT_COL], how="inner").drop(SALT_COL)
 
 
 def salted_count_distinct(

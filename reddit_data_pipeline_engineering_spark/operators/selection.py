@@ -406,8 +406,6 @@ def ntile_boundary_pairs(
     metric_cols: list[str],
     tie_col: str,
     n_buckets: int = 4,
-    buckets: int = BUCKETS,
-    max_rounds: int = MAX_ROUNDS,
     hist_max_distinct: int = HIST_MAX_DISTINCT,
 ) -> dict[str, list[tuple[float, float]]]:
     """Exact ``NTILE(n) OVER (ORDER BY metric, tie)`` bucket boundaries
@@ -509,7 +507,7 @@ def ntile_boundary_pairs(
             vals.update(
                 _select_ranks(
                     _semi(large).select("g", "v"), want, prof,
-                    buckets, max_rounds,
+                    BUCKETS, MAX_ROUNDS,
                 )
             )
         if small:
@@ -616,7 +614,7 @@ def ntile_boundary_pairs(
             }
             tie_want = {g2: [j] for g2, (_, _, j) in deep.items()}
             tie_vals = _select_ranks(
-                tie_src, tie_want, tie_prof, buckets, max_rounds
+                tie_src, tie_want, tie_prof, BUCKETS, MAX_ROUNDS
             )
             for g2, (key, _, j) in deep.items():
                 ties[key] = tie_vals[(g2, j)]
@@ -629,13 +627,7 @@ def ntile_boundary_pairs(
         release(src)
 
 
-def equi_depth_edges(
-    df: DataFrame,
-    value_col: str,
-    n_buckets: int,
-    buckets: int = BUCKETS,
-    max_rounds: int = MAX_ROUNDS,
-) -> list[float]:
+def equi_depth_edges(df: DataFrame, value_col: str, n_buckets: int) -> list[float]:
     """Exact equi-depth bucket edges without a global sort: edge k is
     the ``(k*n) // n_buckets``-th smallest value (1-based, multiset
     order statistic) for k = 1..n_buckets-1, resolved by the bucket-
@@ -659,7 +651,7 @@ def equi_depth_edges(
         r for r in ((k * n) // n_buckets for k in range(1, n_buckets)) if r >= 1
     ]
     resolved = _select_ranks(
-        src, {"x": sorted(set(ranks))}, prof, buckets, max_rounds
+        src, {"x": sorted(set(ranks))}, prof, BUCKETS, MAX_ROUNDS
     )
     release(src)
     return [resolved[("x", r)] for r in ranks]

@@ -38,13 +38,11 @@ def cosine_topk(
     id_col: str,
     query: Sequence[float],
     k: int = 10,
-    score_decimals: int | None = 6,
 ) -> DataFrame:
-    """Brute-force cosine top-k against a literal query vector."""
+    """Brute-force cosine top-k against a literal query vector; scores
+    are rounded to 6 decimals."""
     q = F.lit([float(x) for x in query]).cast("array<double>")
-    score = cosine(F.col(vec_col), q)
-    if score_decimals is not None:
-        score = F.round(score, score_decimals)
+    score = F.round(cosine(F.col(vec_col), q), 6)
     return (
         df.select(F.col(id_col), score.alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
@@ -58,14 +56,14 @@ def blocked_neardup_pairs(
     id_col: str,
     block_col: str,
     threshold: float,
-    score_decimals: int | None = 6,
     per_block_topk: int | None = None,
     salt: int | None = None,
 ) -> DataFrame:
     """Embedding near-duplicate pairs within coarse blocks (IVF-style).
 
-    Per-vector norms are staged BEFORE the pair join, so each pair costs
-    one dot-product fold instead of three (norms recomputed per pair were
+    Scores are cosines rounded to 6 decimals. Per-vector norms are
+    staged BEFORE the pair join, so each pair costs one dot-product fold
+    instead of three (norms recomputed per pair were
     ~3x the bench time). Numerically identical: sqrt/multiply are the same
     IEEE ops either side of the join.
 
@@ -120,9 +118,9 @@ def blocked_neardup_pairs(
         a = a.repartition(
             df.sparkSession.sparkContext.defaultParallelism, *join_keys
         )
-    score = dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    if score_decimals is not None:
-        score = F.round(score, score_decimals)
+    score = F.round(
+        dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
+    )
     pairs = (
         a.join(b, join_keys)
         .filter(F.col("id_a") < F.col("id_b"))
@@ -152,7 +150,6 @@ def ivf_probe_topk(
     block_col: str,
     query_id: int,
     k: int = 10,
-    score_decimals: int | None = 6,
 ) -> DataFrame:
     """IVF-style probed ANN search: restrict the scan to the query's coarse
     block, then exact cosine top-k within it.
@@ -171,20 +168,20 @@ def ivf_probe_topk(
     probe = df.filter(
         (F.col(block_col) == qblock) & (F.col(id_col) != query_id)
     )
-    return cosine_topk(probe, vec_col, id_col, qvec, k, score_decimals)
+    return cosine_topk(probe, vec_col, id_col, qvec, k)
 
 
 # Fixed coordinate-projection planes: each bit is sign(e[i0]+e[i1]-e[i2]-e[i3]).
 # Deterministic, SQL-mirrorable; dims chosen to cover the 64-dim vector.
-DEFAULT_PLANES: tuple[tuple[int, int, int, int], ...] = tuple(
+LSH_PLANES: tuple[tuple[int, int, int, int], ...] = tuple(
     (p, p + 8, p + 16, p + 24) for p in range(8)
 )
 
 
-def lsh_bucket(vec: Column, planes=DEFAULT_PLANES) -> Column:
-    """Sign-projection LSH bucket code (integer in [0, 2^len(planes)))."""
+def lsh_bucket(vec: Column) -> Column:
+    """Sign-projection LSH bucket code (integer in [0, 2^8))."""
     code: Column | None = None
-    for i, (a, b, c, d) in enumerate(planes):
+    for i, (a, b, c, d) in enumerate(LSH_PLANES):
         proj = (
             vec[a].cast("double")
             + vec[b].cast("double")
@@ -196,10 +193,10 @@ def lsh_bucket(vec: Column, planes=DEFAULT_PLANES) -> Column:
     return code.cast("int")
 
 
-def sql_lsh_bucket(vec_expr: str, planes=DEFAULT_PLANES) -> str:
+def sql_lsh_bucket(vec_expr: str) -> str:
     """DuckDB mirror of :func:`lsh_bucket` (1-based list indexing)."""
     terms = []
-    for i, (a, b, c, d) in enumerate(planes):
+    for i, (a, b, c, d) in enumerate(LSH_PLANES):
         proj = (
             f"CAST({vec_expr}[{a + 1}] AS DOUBLE) + CAST({vec_expr}[{b + 1}] AS DOUBLE)"
             f" - CAST({vec_expr}[{c + 1}] AS DOUBLE) - CAST({vec_expr}[{d + 1}] AS DOUBLE)"

@@ -274,7 +274,6 @@ def simhash(
 def simhash_hamming_pairs(
     signatures: DataFrame,
     id_col: str,
-    sig_col: str = "simhash",
     bits: int = 48,
     bands: int = 4,
     max_hamming: int = 3,
@@ -316,7 +315,7 @@ def simhash_hamming_pairs(
     band_structs = [
         F.struct(
             F.lit(b).alias("band_id"),
-            F.shiftright(F.col(sig_col), b * width)
+            F.shiftright(F.col("simhash"), b * width)
             .bitwiseAND(F.lit(mask))
             .alias("bucket"),
         )
@@ -324,14 +323,14 @@ def simhash_hamming_pairs(
     ]
     buckets = signatures.select(
         F.col(id_col),
-        F.col(sig_col),
+        F.col("simhash"),
         F.explode(F.array(*band_structs)).alias("band"),
-    ).select(id_col, sig_col, "band.band_id", "band.bucket")
+    ).select(id_col, "simhash", "band.band_id", "band.bucket")
     grouped = buckets.groupBy("band_id", "bucket").agg(
         F.sort_array(
             F.collect_list(
                 F.struct(
-                    F.col(id_col).alias("id"), F.col(sig_col).alias("sig")
+                    F.col(id_col).alias("id"), F.col("simhash").alias("sig")
                 )
             )
         ).alias("members")

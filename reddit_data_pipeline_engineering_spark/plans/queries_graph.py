@@ -52,7 +52,7 @@ def _sym_bipartite(pairs, weight: str | None = None):
 # where a fixed offset would collide once custkeys outgrow it.
 
 
-def _pr_ctes(iters: int = _PR_ITERS) -> str:
+def _pr_ctes() -> str:
     teleport = (pr.SCALE * (pr.DAMP_DEN - pr.DAMP_NUM)) // pr.DAMP_DEN
     parts = [
         f"""pairs AS MATERIALIZED (
@@ -75,7 +75,7 @@ def _pr_ctes(iters: int = _PR_ITERS) -> str:
   SELECT node, CAST({pr.SCALE} AS BIGINT) AS rank FROM nodes
 )""",
     ]
-    for t in range(1, iters + 1):
+    for t in range(1, _PR_ITERS + 1):
         parts.append(f"""c{t} AS MATERIALIZED (
   SELECT e.dst AS node, SUM(r.rank // d.d) AS m
   FROM edges e
@@ -239,7 +239,7 @@ _BFS_ROUNDS = 4
 _BFS_SOURCE = 0  # customer node custkey=0 -> tagged id 0
 
 
-def _bfs_ctes(rounds: int = _BFS_ROUNDS) -> str:
+def _bfs_ctes() -> str:
     parts = [
         """pairs AS MATERIALIZED (
   SELECT DISTINCT o_custkey AS c, l_suppkey AS s
@@ -254,7 +254,7 @@ def _bfs_ctes(rounds: int = _BFS_ROUNDS) -> str:
   SELECT CAST({_BFS_SOURCE} AS BIGINT) AS node, 0 AS dist
 )""",
     ]
-    for t in range(1, rounds + 1):
+    for t in range(1, _BFS_ROUNDS + 1):
         parts.append(f"""l{t} AS MATERIALIZED (
   SELECT node, MIN(dist) AS dist FROM (
     SELECT node, dist FROM l{t - 1}
@@ -316,7 +316,7 @@ _KCORE_K = 90
 _KCORE_ROUNDS = 3
 
 
-def _kcore_ctes(rounds: int = _KCORE_ROUNDS) -> str:
+def _kcore_ctes() -> str:
     parts = [
         """pairs AS MATERIALIZED (
   SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
@@ -327,7 +327,7 @@ def _kcore_ctes(rounds: int = _KCORE_ROUNDS) -> str:
   SELECT u AS src, v AS dst FROM pairs UNION ALL SELECT v, u FROM pairs
 )""",
     ]
-    for r in range(1, rounds + 1):
+    for r in range(1, _KCORE_ROUNDS + 1):
         parts.append(f"""a{r} AS MATERIALIZED (
   SELECT src AS node
   FROM (SELECT src, COUNT(*) AS deg FROM e{r - 1} GROUP BY src)
@@ -392,7 +392,7 @@ def q_kcore_peel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LPA_ROUNDS = 3
 
 
-def _lpa_ctes(rounds: int = _LPA_ROUNDS) -> str:
+def _lpa_ctes() -> str:
     parts = [
         """lpairs AS MATERIALIZED (
   SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
@@ -407,7 +407,7 @@ def _lpa_ctes(rounds: int = _LPA_ROUNDS) -> str:
     SELECT DISTINCT src AS node FROM le)
 )""",
     ]
-    for r in range(1, rounds + 1):
+    for r in range(1, _LPA_ROUNDS + 1):
         parts.append(f"""lc{r} AS MATERIALIZED (
   SELECT e.dst AS node, l.label, COUNT(*) AS c
   FROM le e JOIN l{r - 1} l ON e.src = l.node
@@ -483,7 +483,7 @@ _SSSP_ROUNDS = 4
 _SSSP_SOURCE = 0  # customer node custkey=0 -> tagged id 0
 
 
-def _sssp_ctes(rounds: int = _SSSP_ROUNDS) -> str:
+def _sssp_ctes() -> str:
     parts = [
         """wpairs AS MATERIALIZED (
   SELECT o_custkey AS c, l_suppkey AS s,
@@ -500,7 +500,7 @@ def _sssp_ctes(rounds: int = _SSSP_ROUNDS) -> str:
   SELECT CAST({_SSSP_SOURCE} AS BIGINT) AS node, CAST(0 AS BIGINT) AS dist
 )""",
     ]
-    for t in range(1, rounds + 1):
+    for t in range(1, _SSSP_ROUNDS + 1):
         parts.append(f"""d{t} AS MATERIALIZED (
   SELECT node, MIN(dist) AS dist FROM (
     SELECT node, dist FROM d{t - 1}
@@ -563,7 +563,7 @@ _WALK_STEPS = 3
 _WALK_MAX_NODE = 80  # customer tag ids are even; custkey < 40 -> node < 80
 
 
-def _walk_ctes(steps: int = _WALK_STEPS) -> str:
+def _walk_ctes() -> str:
     parts = [
         """wkpairs AS MATERIALIZED (
   SELECT DISTINCT o_custkey AS c, l_suppkey AS s
@@ -580,7 +580,7 @@ def _walk_ctes(steps: int = _WALK_STEPS) -> str:
         WHERE src % 2 = 0 AND src < {_WALK_MAX_NODE})
 )""",
     ]
-    for t in range(1, steps + 1):
+    for t in range(1, _WALK_STEPS + 1):
         parts.append(f"""w{t} AS MATERIALIZED (
   SELECT walker, node, path FROM (
     SELECT w.walker, e.dst AS node,
@@ -850,7 +850,7 @@ def q_hits_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _ppr_ctes(iters: int = _PR_ITERS) -> str:
+def _ppr_ctes() -> str:
     teleport = (pr.SCALE * (pr.DAMP_DEN - pr.DAMP_NUM)) // pr.DAMP_DEN
     parts = [
         """pairs AS MATERIALIZED (
@@ -882,7 +882,7 @@ def _ppr_ctes(iters: int = _PR_ITERS) -> str:
   FROM nodes n LEFT JOIN seeds s USING (node)
 )""",
     ]
-    for t in range(1, iters + 1):
+    for t in range(1, _PR_ITERS + 1):
         parts.append(f"""c{t} AS MATERIALIZED (
   SELECT e.dst AS node, SUM(r.rank // d.d) AS m
   FROM edges e

@@ -49,7 +49,7 @@ _PCA_ITERS = 8
 _VS = 1_000_000  # iteration vector scale AND coordinate grid scale
 
 
-def _pca_iter_ctes(iters: int = _PCA_ITERS) -> str:
+def _pca_iter_ctes() -> str:
     parts = [
         """vals AS MATERIALIZED (
   SELECT vec_id, t.i - 1 AS i,
@@ -72,7 +72,7 @@ def _pca_iter_ctes(iters: int = _PCA_ITERS) -> str:
 )""",
         f"v0 AS (SELECT i, CAST({_VS} AS HUGEINT) AS v FROM moms)",
     ]
-    for t in range(1, iters + 1):
+    for t in range(1, _PCA_ITERS + 1):
         parts.append(
             f"""w{t} AS MATERIALIZED (
   SELECT c.i, SUM(c.c * v.v) AS w
@@ -87,7 +87,7 @@ def _pca_iter_ctes(iters: int = _PCA_ITERS) -> str:
   FROM w{t}
 )"""
         )
-    last = f"v{iters}"
+    last = f"v{_PCA_ITERS}"
     parts.append(
         f"""wf AS (
   SELECT c.i, SUM(c.c * v.v) AS w

@@ -1203,9 +1203,10 @@ def _kmeans_core_parts(k: int, iters: int, nprobe: int) -> list[str]:
     return parts
 
 
-def _kmeans_ctes(k: int = _KM_K, iters: int = _KM_ITERS,
-                 nprobe: int = _KM_NPROBE) -> str:
-    return ",\n".join(_shared_parts(k) + _kmeans_core_parts(k, iters, nprobe))
+def _kmeans_ctes() -> str:
+    return ",\n".join(
+        _shared_parts(_KM_K) + _kmeans_core_parts(_KM_K, _KM_ITERS, _KM_NPROBE)
+    )
 
 
 _KMEANS_TOPK_ORACLE = f"""
@@ -1418,9 +1419,10 @@ def _pq_core_parts(m: int, iters: int, shortlist: int,
     return parts
 
 
-def _pq_ctes(m: int = _PQ_M, k: int = _PQ_K, iters: int = _PQ_ITERS,
-             shortlist: int = _PQ_SHORTLIST) -> str:
-    return ",\n".join(_shared_parts(k) + _pq_core_parts(m, iters, shortlist))
+def _pq_ctes() -> str:
+    return ",\n".join(
+        _shared_parts(_PQ_K) + _pq_core_parts(_PQ_M, _PQ_ITERS, _PQ_SHORTLIST)
+    )
 
 
 _PQ_TOPK_ORACLE = f"""

@@ -62,7 +62,7 @@ _CLOSE_SEEDS = [0, 2, 4, 6]  # customers 0..3
 _CLOSE_ROUNDS = 3
 
 
-def _close_ctes(rounds: int = _CLOSE_ROUNDS) -> str:
+def _close_ctes() -> str:
     seed_rows = ", ".join(f"({s})" for s in _CLOSE_SEEDS)
     parts = [
         """pairs AS MATERIALIZED (
@@ -80,7 +80,7 @@ def _close_ctes(rounds: int = _CLOSE_ROUNDS) -> str:
   FROM (VALUES {seed_rows}) t(seed)
 )""",
     ]
-    for t in range(1, rounds + 1):
+    for t in range(1, _CLOSE_ROUNDS + 1):
         parts.append(f"""l{t} AS MATERIALIZED (
   SELECT seed, node, MIN(dist) AS dist FROM (
     SELECT seed, node, dist FROM l{t - 1}

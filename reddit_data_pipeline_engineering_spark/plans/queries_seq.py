@@ -1283,7 +1283,7 @@ def _mkv_state_sql(col: str) -> str:
     )
 
 
-def _mkv_ctes(iters: int = _MKV_ITERS) -> str:
+def _mkv_ctes() -> str:
     parts = [
         f"""uw AS MATERIALIZED (
   SELECT user_id,
@@ -1304,7 +1304,7 @@ def _mkv_ctes(iters: int = _MKV_ITERS) -> str:
   FROM states
 )""",
     ]
-    for t in range(1, iters + 1):
+    for t in range(1, _MKV_ITERS + 1):
         parts.append(
             f"""w{t} AS MATERIALIZED (
   SELECT tr.st AS s, SUM((v.v * tr.c * 1000000) // rr.r) AS w

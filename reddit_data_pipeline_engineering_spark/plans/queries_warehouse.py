@@ -411,8 +411,8 @@ def q_sliding_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HILBERT_BITS = 4
 
 
-def _hilbert_ctes(bits: int = _HILBERT_BITS) -> "tuple[str, int]":
-    n = 2**bits
+def _hilbert_ctes() -> "tuple[str, int]":
+    n = 2**_HILBERT_BITS
     parts = [
         f"""r0 AS (
   SELECT o_totalprice, CAST(o_orderdate AS TIMESTAMP) AS o_orderdate,

@@ -36,21 +36,68 @@ RAW_MEASUREMENT = T.StructType(
     ]
 )
 
-# Location dimension — data/mock_locations_vn.json flattened per
-# extract_api.py:374-404.
-LOCATION_DIM = T.StructType(
+# Nested location shape at the API boundary (data/mock_locations_vn.json):
+# coordinates / country structs and a sensors array of (id, parameter).
+API_LOCATION = T.StructType(
     [
         T.StructField("id", T.LongType(), False),
         T.StructField("name", T.StringType(), True),
         T.StructField("locality", T.StringType(), True),
         T.StructField("timezone", T.StringType(), True),
-        T.StructField("country_code", T.StringType(), True),
-        T.StructField("latitude", T.DoubleType(), True),
-        T.StructField("longitude", T.DoubleType(), True),
-        T.StructField("datetime_last", T.StringType(), True),
-        T.StructField("sensor_ids", T.ArrayType(T.LongType()), True),
+        T.StructField(
+            "coordinates",
+            T.StructType(
+                [
+                    T.StructField("latitude", T.DoubleType(), True),
+                    T.StructField("longitude", T.DoubleType(), True),
+                ]
+            ),
+            True,
+        ),
+        T.StructField(
+            "country",
+            T.StructType(
+                [
+                    T.StructField("id", T.LongType(), True),
+                    T.StructField("code", T.StringType(), True),
+                    T.StructField("name", T.StringType(), True),
+                ]
+            ),
+            True,
+        ),
+        T.StructField(
+            "datetimeLast",
+            T.StructType([T.StructField("utc", T.StringType(), True)]),
+            True,
+        ),
+        T.StructField(
+            "sensors",
+            T.ArrayType(
+                T.StructType(
+                    [
+                        T.StructField("id", T.LongType(), True),
+                        T.StructField(
+                            "parameter",
+                            T.StructType(
+                                [
+                                    T.StructField("id", T.LongType(), True),
+                                    T.StructField("name", T.StringType(), True),
+                                    T.StructField("units", T.StringType(), True),
+                                ]
+                            ),
+                            True,
+                        ),
+                    ]
+                )
+            ),
+            True,
+        ),
     ]
 )
+
+# One measurement as the ``openaq`` source returns it (long format,
+# extract_api.py:240-258): the first five fields of RAW_MEASUREMENT.
+MEASUREMENT_SCHEMA = T.StructType(RAW_MEASUREMENT.fields[:5])
 
 # Wide marts contract — 15 columns, verbatim from
 # tests/test_glue_output_schema.py:44-60 plus the 7th pollutant `bc`

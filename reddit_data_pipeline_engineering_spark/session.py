@@ -5,8 +5,8 @@ Athena Presto — SURVEY.md §3) with one local/cluster SparkSession profile.
 
 Scale notes (targets a 1000-executor cluster even though tests run
 ``local[N]``): AQE on for runtime re-planning / skew-join handling /
-partition coalescing; shuffle partitions sized to cores locally (the
-cluster profile would set it to 2-3x total cores); session timezone pinned
+partition coalescing; shuffle partitions sized to cores locally (a
+cluster sets them to 2-3x total cores, SCALE.md); session timezone pinned
 to UTC so ISO-8601 ``+07:00`` inputs normalize identically everywhere
 (reference behavior: ``glue_jobs/process_openaq_raw.py:118-121``); the
 JVM's generated-code cache sized to the engine's measured working set
@@ -96,31 +96,6 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def cluster_profile(total_cores: int, target_partition_mb: int = 192) -> dict[str, str]:
-    """Recommended conf overrides for a real multi-executor deployment
-    (e.g. 1000 executors x 4 cores). Local tests don't use this; it
-    documents how the same code is tuned at 100 TB:
-
-    - shuffle partitions ~2-3x total cores so every core gets work even
-      with stragglers, while AQE coalesces small post-filter stages;
-    - maxPartitionBytes targets 128-256 MB scan tasks (the reference's own
-      file-size guidance, GLUE_JOBS_GUIDE.md:404-407);
-    - advisory partition size keeps AQE-coalesced shuffle partitions near
-      the same target so reducers neither spill nor starve.
-    """
-    return {
-        "spark.sql.shuffle.partitions": str(total_cores * 3),
-        "spark.sql.files.maxPartitionBytes": f"{target_partition_mb}m",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": f"{target_partition_mb // 3}m",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.autoBroadcastJoinThreshold": "64m",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.session.timeZone": "UTC",
-    }
-
-
 def _tree_idle_for(path: str) -> float:
     """Seconds since ANY entry in the tree was touched (recursive max
     mtime, not the top-level dir's — Spark stamps the per-pid dir at
@@ -195,7 +170,8 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (driver contract);
     ``shuffle_partitions`` defaults to the local core count — the Spark
     default of 200 over-parallelizes local runs and under-parallelizes
-    large clusters (set explicitly per deployment).
+    large clusters (set explicitly per deployment). ``RUNTIME_CONFS`` go
+    into the builder too; ``extra_conf`` entries win over them.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
@@ -220,12 +196,8 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("RDPE_DRIVER_MEMORY", "8g"))
@@ -233,7 +205,7 @@ def get_spark(
         .config("spark.cleaner.periodicGC.interval", PERIODIC_GC_INTERVAL)
         .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**RUNTIME_CONFS, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

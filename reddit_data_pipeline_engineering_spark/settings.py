@@ -6,12 +6,13 @@ a ``configparser`` file with section/key getters and fallbacks (:7-20,
 reference's Lambda path skips the file when ``PIPELINE_ENV`` is set,
 :14-20). The engine folds both into one precedence chain:
 
-    env var RDPE_<SECTION>_<KEY>  >  config file  >  code default
+    env var RDPE_<SECTION>_<KEY>  >  config file  >  no value
 
-so the same ``Settings`` object serves a laptop (file), a cluster
-submit (file + targeted env overrides), and a container (env only).
-Code defaults come from ``config.py`` — the file layer never forks the
-constants, it overrides them.
+for the three keys the pipeline CLI reads (``pipeline.main``):
+``[file_paths] input_path``, ``[file_paths] output_path`` and
+``[catalog] table``. Command-line flags beat all three. Extraction is
+configured through the ``openaq`` source's options
+(``sources/datasource.py``), not here.
 """
 
 from __future__ import annotations
@@ -19,12 +20,6 @@ from __future__ import annotations
 import configparser
 import os
 from collections.abc import Mapping
-
-from reddit_data_pipeline_engineering_spark import config as defaults
-from reddit_data_pipeline_engineering_spark.sources.http_client import (
-    DEFAULT_BASE_URL,
-    DEFAULT_TIMEOUT_S,
-)
 
 ENV_PREFIX = "RDPE"
 
@@ -46,61 +41,7 @@ class Settings:
             return self._env[env_key]
         return self._parser.get(section, key, fallback=fallback)
 
-    def get_int(self, section: str, key: str, fallback: int | None = None):
-        v = self.get(section, key, fallback=None)
-        return int(v) if v is not None else fallback
-
-    def get_float(self, section: str, key: str, fallback: float | None = None):
-        v = self.get(section, key, fallback=None)
-        return float(v) if v is not None else fallback
-
-    def get_list(
-        self, section: str, key: str, fallback: tuple[str, ...] = ()
-    ) -> tuple[str, ...]:
-        v = self.get(section, key, fallback=None)
-        if v is None:
-            return tuple(fallback)
-        return tuple(s.strip() for s in v.split(",") if s.strip())
-
-    # ---- typed views over the engine's own sections -----------------
-
-    @property
-    def api_key(self) -> str:
-        return self.get("api", "api_key", fallback="") or ""
-
-    @property
-    def api_base_url(self) -> str:
-        return self.get("api", "base_url", fallback=DEFAULT_BASE_URL)
-
-    @property
-    def api_timeout_s(self) -> float:
-        return self.get_float("api", "timeout_s", fallback=DEFAULT_TIMEOUT_S)
-
-    @property
-    def locations_page_size(self) -> int:
-        return self.get_int(
-            "api", "locations_page_size", fallback=defaults.LOCATIONS_PAGE_SIZE
-        )
-
-    @property
-    def measurements_limit(self) -> int:
-        return self.get_int(
-            "api", "measurements_limit", fallback=defaults.MEASUREMENTS_LIMIT
-        )
-
-    @property
-    def active_lookback_days(self) -> int:
-        return self.get_int(
-            "pipeline",
-            "active_lookback_days",
-            fallback=defaults.ACTIVE_LOOKBACK_DAYS,
-        )
-
-    @property
-    def pollutants(self) -> tuple[str, ...]:
-        return self.get_list(
-            "pipeline", "pollutants", fallback=defaults.POLLUTANTS
-        )
+    # ---- typed views over the keys pipeline.main reads ---------------
 
     @property
     def input_path(self) -> str | None:

@@ -1,4 +1,4 @@
-"""Paginated-API extraction adapters (reference S1/S2/P2/P8).
+"""OpenAQ extraction operators (reference S1/S2/P2/P8).
 
 The reference's Lambda fetches OpenAQ REST pages driver-side
 (``lambda_functions/openaq_fetcher/extract_api.py``): S1 pages all
@@ -7,121 +7,26 @@ the required parameters (:111-186), S2 pulls time-ranged measurements per
 sensor and flattens the nested JSON (:193-268), and P8 validates the
 trigger payload (handler.py:104-134).
 
-Engine shape: the HTTP layer is a pluggable ``fetch`` callable (tests
-inject fixtures; production injects a requests-based client), the page
-loop here stays driver-side (sufficient at the reference scale of ~53
-locations / ~150 sensors, SURVEY.md §4), and everything after
-``createDataFrame`` is Spark: nested structs are flattened with
-dot-path projections (F7) and the active-sensor filter is expressed as
-Spark filters so the same predicate serves any source.
-
-As of r07 the executor-side form also exists:
-``sources/datasource.py`` registers a Python Data Source
-(``spark.read.format("openaq")``) that runs the SAME page/per-sensor
-loops as partitioned scans with Catalyst sensor_id filter pushdown —
-use it when the sensor population outgrows a driver loop. The
-operators below (flatten, active filter, enrichment) consume either
-path unchanged.
+Engine shape: the page loop (S1) and the per-sensor measurement fetch (S2)
+run on the executors as the ``openaq`` Python Data Source
+(``sources/datasource.py``: ``spark.read.format("openaq")`` and
+``readStream``). This module holds what comes after the scan, all of it
+Spark: nested structs are flattened with dot-path projections (F7), the
+active-sensor filter is expressed as Spark filters, the sensor dimension
+joins the measurements as a broadcast, and the trigger payload is checked
+in plain Python.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable, Sequence
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from reddit_data_pipeline_engineering_spark.config import (
     ACTIVE_LOOKBACK_DAYS,
-    LOCATIONS_PAGE_SIZE,
     POLLUTANTS,
 )
 from reddit_data_pipeline_engineering_spark.functions.text import normalize_token
-
-# A page-fetch callable: (page_number, page_size) -> list of result dicts
-# (empty list = no more pages, the reference's stop condition :94-104).
-PageFetcher = Callable[[int, int], list[dict]]
-
-# Nested location shape at the API boundary (data/mock_locations_vn.json):
-# coordinates / country structs and a sensors array of (id, parameter).
-API_LOCATION = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("name", T.StringType(), True),
-        T.StructField("locality", T.StringType(), True),
-        T.StructField("timezone", T.StringType(), True),
-        T.StructField(
-            "coordinates",
-            T.StructType(
-                [
-                    T.StructField("latitude", T.DoubleType(), True),
-                    T.StructField("longitude", T.DoubleType(), True),
-                ]
-            ),
-            True,
-        ),
-        T.StructField(
-            "country",
-            T.StructType(
-                [
-                    T.StructField("id", T.LongType(), True),
-                    T.StructField("code", T.StringType(), True),
-                    T.StructField("name", T.StringType(), True),
-                ]
-            ),
-            True,
-        ),
-        T.StructField(
-            "datetimeLast",
-            T.StructType([T.StructField("utc", T.StringType(), True)]),
-            True,
-        ),
-        T.StructField(
-            "sensors",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("id", T.LongType(), True),
-                        T.StructField(
-                            "parameter",
-                            T.StructType(
-                                [
-                                    T.StructField("id", T.LongType(), True),
-                                    T.StructField("name", T.StringType(), True),
-                                    T.StructField("units", T.StringType(), True),
-                                ]
-                            ),
-                            True,
-                        ),
-                    ]
-                )
-            ),
-            True,
-        ),
-    ]
-)
-
-
-def fetch_all_locations(
-    spark: SparkSession,
-    fetch: PageFetcher,
-    page_size: int = LOCATIONS_PAGE_SIZE,
-    max_pages: int = 1000,
-) -> DataFrame:
-    """S1: page loop until empty page -> one locations DataFrame.
-
-    The union-of-pages (reference U1, ``all_locations.extend``) is a single
-    ``createDataFrame`` over the accumulated pages — rows at this boundary
-    are small dimension metadata, not fact data.
-    """
-    rows: list[dict] = []
-    for page in range(1, max_pages + 1):
-        batch = fetch(page, page_size)
-        if not batch:
-            break
-        rows.extend(batch)
-    return spark.createDataFrame(rows, API_LOCATION)
 
 
 def flatten_locations(locations: DataFrame) -> DataFrame:
@@ -140,14 +45,10 @@ def flatten_locations(locations: DataFrame) -> DataFrame:
     )
 
 
-def active_sensors(
-    locations: DataFrame,
-    now_utc: str,
-    required_parameters: Sequence[str] = POLLUTANTS,
-    lookback_days: int = ACTIVE_LOOKBACK_DAYS,
-) -> DataFrame:
-    """P2: sensors of recently-reporting locations whose parameter (after
-    lower/strip-dot normalization, F4) is in the required set.
+def active_sensors(locations: DataFrame, now_utc: str) -> DataFrame:
+    """P2: sensors of locations that reported in the last
+    ``ACTIVE_LOOKBACK_DAYS`` whose parameter (after lower/strip-dot
+    normalization, F4) is one of ``POLLUTANTS``.
 
     One explode + two filters — the semi-join semantics SURVEY §2.3 calls
     for, with the parameter normalization fix of extract_api.py:168-179
@@ -155,7 +56,7 @@ def active_sensors(
     """
     flat = flatten_locations(locations)
     cutoff = F.lit(now_utc).cast("timestamp") - F.expr(
-        f"INTERVAL {int(lookback_days)} DAYS"
+        f"INTERVAL {ACTIVE_LOOKBACK_DAYS} DAYS"
     )
     recent = flat.filter(F.col("datetime_last") >= cutoff)
     sensors = recent.select(
@@ -179,53 +80,12 @@ def active_sensors(
         "latitude",
         "longitude",
     )
-    return sensors.filter(
-        F.col("parameter").isin([normalize_token_py(p) for p in required_parameters])
-    )
+    return sensors.filter(F.col("parameter").isin(list(POLLUTANTS)))
 
 
 def normalize_token_py(p: str) -> str:
     """Python twin of functions.text.normalize_token for literal lists."""
     return p.lower().replace(".", "")
-
-
-# Measurement fetch callable: (sensor_id, date_from, date_to, limit) ->
-# list of measurement dicts in the flattened long format.
-MeasurementFetcher = Callable[[int, str, str, int], list[dict]]
-
-
-def extract_measurements(
-    spark: SparkSession,
-    fetch: MeasurementFetcher,
-    sensor_ids: Iterable[int],
-    date_from: str,
-    date_to: str,
-    limit: int = 1000,
-    extracted_at: str | None = None,
-) -> DataFrame:
-    """S2: time-ranged measurement scan per sensor -> long DataFrame.
-
-    The time-range predicate is pushed INTO the fetch call (the
-    reference's API-side pushdown, SURVEY §4); ``extracted_at`` stamps the
-    batch (F6) — passed in, not now(), so runs are reproducible.
-    """
-    rows: list[dict] = []
-    for sid in sensor_ids:
-        batch = fetch(int(sid), date_from, date_to, limit)
-        rows.extend(batch)
-    schema = T.StructType(
-        [
-            T.StructField("sensor_id", T.LongType(), True),
-            T.StructField("datetime", T.StringType(), True),
-            T.StructField("value", T.DoubleType(), True),
-            T.StructField("parameter", T.StringType(), True),
-            T.StructField("unit", T.StringType(), True),
-        ]
-    )
-    df = spark.createDataFrame(rows, schema)
-    if extracted_at is not None:
-        df = df.withColumn("extracted_at", F.lit(extracted_at))
-    return df
 
 
 def enrich_measurements(measurements: DataFrame, sensors: DataFrame) -> DataFrame:

@@ -5,9 +5,8 @@ S5; Glue sinks S6/S8). The engine keeps those canonical and adds the other
 formats Spark ships natively — CSV and ORC — behind the same
 schema-pinned contract as the raw zone:
 
-- **writes** take an explicit compression choice (parquet: zstd default —
-  best scan-cost/byte trade at 100 TB; snappy available for
-  write-throughput-bound stages);
+- **writes** overwrite the target; parquet is zstd-compressed (the best
+  scan-cost/byte trade at 100 TB);
 - **reads** always pass an explicit schema (never inference — a schema
   pass over 100 TB is a full extra scan, and CSV/JSON inference can fork
   types between reruns);
@@ -47,16 +46,12 @@ def write_table(
     df: DataFrame,
     path: str,
     fmt: str = "parquet",
-    mode: str = "overwrite",
-    compression: str | None = None,
     partition_by: list[str] | None = None,
 ) -> None:
     """Write ``df`` in any supported format with sane large-scale defaults."""
-    writer = df.write.format(fmt).mode(mode)
+    writer = df.write.format(fmt).mode("overwrite")
     if fmt == "parquet":
-        writer = writer.option("compression", compression or PARQUET_CODEC)
-    elif compression:
-        writer = writer.option("compression", compression)
+        writer = writer.option("compression", PARQUET_CODEC)
     if fmt == "csv":
         for k, v in _CSV_WRITE_OPTS.items():
             writer = writer.option(k, v)

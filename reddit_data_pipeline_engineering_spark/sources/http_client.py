@@ -1,10 +1,7 @@
-"""Default HTTP transport for the paginated-API source (reference S1/S2).
+"""HTTP client behind the ``openaq`` Data Source (reference S1/S2).
 
-Round-1 review gap #1: ``sources/api.py`` exposes pluggable ``fetch``
-callables but shipped no concrete client — anyone pointing the engine at
-a live OpenAQ-style API had to write their own transport. This module is
-that default: a small requests-based client with the reference's
-behaviors (``lambda_functions/openaq_fetcher/extract_api.py``):
+A small requests-based client with the reference's behaviors
+(``lambda_functions/openaq_fetcher/extract_api.py``):
 
 - header auth dict (``connect_openaq`` :21-31);
 - 30 s request timeout (``utils/constants.py:160``);
@@ -18,8 +15,8 @@ behaviors (``lambda_functions/openaq_fetcher/extract_api.py``):
 Engine-grade additions the reference lacks: 429-aware backoff honoring
 ``Retry-After`` (exponential fallback), bounded retries on 5xx, and an
 injectable transport + sleep so tests run against fakes with no network.
-The page loops themselves stay in ``sources/api.py`` — this module only
-supplies the ``PageFetcher`` / ``MeasurementFetcher`` callables.
+The page loop and the per-sensor loop run in ``sources/datasource.py``'s
+readers — this module only supplies the two fetch callables they call.
 """
 
 from __future__ import annotations
@@ -59,7 +56,7 @@ class ApiError(RuntimeError):
 
 
 class OpenAQClient:
-    """Requests-based client producing the source-layer fetch callables.
+    """Requests-based client producing the Data Source's fetch callables.
 
     ``transport`` and ``sleep`` are injectable for tests (fake transport,
     no real waiting); production uses the defaults.
@@ -109,8 +106,8 @@ class OpenAQClient:
             raise ApiError(status, url)
 
     def locations_page_fetcher(self, countries_id: int = 56):
-        """``PageFetcher`` for ``api.fetch_all_locations``: one API page
-        of location dicts; [] ends pagination (extract_api.py:66-94)."""
+        """``(page, page_size) -> list[dict]``: one API page of location
+        dicts; [] ends pagination (extract_api.py:66-94)."""
 
         def fetch(page: int, page_size: int) -> list[dict]:
             body = self._get(
@@ -126,7 +123,7 @@ class OpenAQClient:
         return fetch
 
     def measurements_fetcher(self):
-        """``MeasurementFetcher`` for ``api.extract_measurements``: one
+        """``(sensor_id, date_from, date_to, limit) -> list[dict]``: one
         sensor's time-ranged rows flattened to the long format
         (extract_api.py:240-258); a failing sensor returns [] so the
         batch continues (:216-267)."""

@@ -29,10 +29,7 @@ CORRUPT_COL = "_corrupt_record"
 
 
 def read_raw_zone(
-    spark: SparkSession,
-    path: str,
-    schema: StructType = RAW_MEASUREMENT,
-    keep_corrupt: bool = False,
+    spark: SparkSession, path: str, keep_corrupt: bool = False
 ) -> DataFrame:
     """Recursive NDJSON scan with a pinned schema (S7).
 
@@ -44,6 +41,7 @@ def read_raw_zone(
     malformed lines can be counted/quarantined instead of silently nulled —
     at ingest scale, bad rows are a metric, not a crash.
     """
+    schema = RAW_MEASUREMENT
     if keep_corrupt:
         schema = StructType(
             [*schema.fields, T.StructField(CORRUPT_COL, T.StringType(), True)]
@@ -73,37 +71,27 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     return clean, corrupt
 
 
-def write_raw_zone(
-    df: DataFrame,
-    path: str,
-    ts_col: str = "datetime",
-    mode: str = "append",
-) -> None:
+def write_raw_zone(df: DataFrame, path: str) -> None:
     """NDJSON raw-zone sink with hour-grain partition layout (S3/F9).
 
     The reference's f-string path templating (s3_uploader.py:127-131)
     becomes ``partitionBy(year, month, day, hour)`` — identical layout
     semantics, but written in parallel by executors and prunable on read.
+    Each call appends one batch.
     """
-    ts = F.col(ts_col).cast("timestamp")
+    ts = F.col("datetime").cast("timestamp")
     (
         df.withColumn("year", F.year(ts))
         .withColumn("month", F.lpad(F.month(ts).cast("string"), 2, "0"))
         .withColumn("day", F.lpad(F.dayofmonth(ts).cast("string"), 2, "0"))
         .withColumn("hour", F.lpad(F.hour(ts).cast("string"), 2, "0"))
-        .write.mode(mode)
+        .write.mode("append")
         .partitionBy("year", "month", "day", "hour")
         .json(path)
     )
 
 
-def write_wrapped_json(
-    df: DataFrame,
-    path: str,
-    extracted_at: str,
-    source_name: str = "openaq-api",
-    source_url: str = "https://api.openaq.org/v3",
-) -> None:
+def write_wrapped_json(df: DataFrame, path: str, extracted_at: str) -> None:
     """S4: the reference's wrapped-JSON archive format — ONE JSON object
     ``{meta: {name, website, found, extracted_at}, results: [...]}`` per
     extraction batch (pipelines/openaq_pipeline.py:140-166).
@@ -119,8 +107,8 @@ def write_wrapped_json(
         df.agg(F.collect_list(F.struct(*df.columns)).alias("results"))
         .select(
             F.struct(
-                F.lit(source_name).alias("name"),
-                F.lit(source_url).alias("website"),
+                F.lit("openaq-api").alias("name"),
+                F.lit("https://api.openaq.org/v3").alias("website"),
                 F.size("results").alias("found"),
                 F.lit(extracted_at).alias("extracted_at"),
             ).alias("meta"),

@@ -35,7 +35,7 @@ def register_views(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> None:
         load_table(spark, sf_dir, n).createOrReplaceTempView(n)
 
 
-def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition a too-narrow input before CPU-heavy map work.
 
     A parquet file is splittable only at row-group boundaries, so a
@@ -48,8 +48,9 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     It is a no-op when the scan already has enough partitions — the 100 TB
     case, where input files outnumber cores — so operators using it keep
     their shuffle budget at scale. (The check reads partition metadata
-    only; nothing is executed.)"""
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    only; nothing is executed.) The floor is the context's default
+    parallelism, its core count."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)

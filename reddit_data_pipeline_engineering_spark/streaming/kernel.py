@@ -249,11 +249,12 @@ def write_stream_upsert(
     )
 
 
-def run_stream_to_completion(query, timeout_s: float = 120.0) -> None:
-    """Block until an availableNow query drains (test/pipeline helper)."""
-    if not query.awaitTermination(timeout_s):
+def run_stream_to_completion(query) -> None:
+    """Block until an availableNow query drains (test/pipeline helper);
+    a query still running after 120 s is stopped."""
+    if not query.awaitTermination(120.0):
         query.stop()
-        raise TimeoutError(f"stream did not finish within {timeout_s}s")
+        raise TimeoutError("stream did not finish within 120s")
 
 
 # Staged bytes per stateful-shuffle partition (see below).
@@ -287,11 +288,11 @@ def scaled_state_partition_count(
       shape where per-partition fixed cost exceeds the
       compute-parallelism gain; callers pass ``target_bytes`` to tune it
       (at a real horizon volume the cap, not the target, binds).
-    - the cap is 3x ``defaultParallelism`` — the same multiple the
-      cluster profile uses for batch shuffle partitions
-      (session.cluster_profile), so at 100 TB this degrades to the
-      standard sizing rather than a local constant; it also scales with
-      the driver's lower-core bench legs automatically.
+    - the cap is 3x ``defaultParallelism`` — the usual cluster sizing of
+      batch shuffle partitions at 2-3x total cores (SCALE.md), so at
+      100 TB this degrades to the standard sizing rather than a local
+      constant; it also scales with the driver's lower-core bench legs
+      automatically.
     """
     target = target_bytes or STATE_TARGET_BYTES
     staged = 0
@@ -309,7 +310,6 @@ def run_scaled_drain(
     spark: SparkSession,
     staged_path: str,
     start_query,
-    timeout_s: float = 120.0,
     target_bytes: int | None = None,
 ) -> None:
     """Start + drain an availableNow stream under a stateful-shuffle
@@ -336,6 +336,6 @@ def run_scaled_drain(
             str(scaled_state_partition_count(spark, staged_path, target_bytes)),
         )
         try:
-            run_stream_to_completion(start_query(), timeout_s)
+            run_stream_to_completion(start_query())
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)

@@ -58,9 +58,9 @@ def tile_scd2(
     horizon_start: str,
     horizon_end: str,
     bucket_seconds: int,
-    bucket_col: str = "__pit_bucket",
 ) -> DataFrame:
-    """Explode SCD2 versions into half-open (key, epoch-bucket) tiles.
+    """Explode SCD2 versions into half-open (key, epoch-bucket) tiles;
+    the bucket lands in ``__pit_bucket``.
 
     ``horizon_start`` / ``horizon_end`` are columns ON ``dim`` bounding
     the stream's event-time range (attach them as in-plan broadcast
@@ -77,7 +77,7 @@ def tile_scd2(
         .withColumn("__t_end", end)
         .where(F.col("__t_end") > F.col("__t_start"))
         .withColumn(
-            bucket_col,
+            "__pit_bucket",
             F.explode(
                 F.sequence(
                     F.expr(f"__t_start div {b}"),

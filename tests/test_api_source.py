@@ -1,9 +1,19 @@
-"""API extraction adapter tests (S1/S2/P2/P8) with fixture fetchers —
-the reference's Lambda extraction flow, fixture-driven and Spark-side."""
+"""Extraction operator tests (S1/S2/P2/P8): the active-sensor filter on
+a fixture locations frame, and extract-then-enrich through the ``openaq``
+source's synthetic transport — the reference's Lambda extraction flow,
+Spark-side."""
 
 import pytest
+from pyspark.sql import functions as F
 
+from reddit_data_pipeline_engineering_spark.schemas import (
+    API_LOCATION,
+    RAW_MEASUREMENT,
+)
 from reddit_data_pipeline_engineering_spark.sources import api
+from reddit_data_pipeline_engineering_spark.sources.datasource import (
+    OpenAQDataSource,
+)
 
 LOCS = [
     {  # active, pm25+pm10 sensors
@@ -31,31 +41,23 @@ LOCS = [
 ]
 
 
-def page_fetch(page, page_size):
-    return LOCS if page == 1 else []
-
-
-def measurement_fetch(sensor_id, date_from, date_to, limit):
-    # Respects the pushed time range: one in-range row per sensor + one
-    # out-of-range row the fetcher itself excludes.
-    return [
-        {
-            "sensor_id": sensor_id,
-            "datetime": "2025-01-15T01:00:00+00:00",
-            "value": 10.0 * sensor_id,
-            "parameter": "pm25" if sensor_id == 1 else "pm10",
-            "unit": "µg/m³",
-        }
-    ]
+def openaq(spark, **options):
+    """``spark.read.format("openaq")`` over the synthetic transport: 7
+    locations (ids 1-7, locality ``city{id % 3}``), each with a pm25
+    sensor ``id*10`` and a pm10 sensor ``id*10 + 1``, last reported
+    2025-06-01."""
+    spark.dataSource.register(OpenAQDataSource)
+    reader = spark.read.format("openaq").option("transport", "synthetic")
+    return reader.options(**options).load()
 
 
 def test_fetch_and_active_filter(spark):
-    locs = api.fetch_all_locations(spark, page_fetch)
+    locs = spark.createDataFrame(LOCS, API_LOCATION)
     assert locs.count() == 2
     sensors = api.active_sensors(locs, now_utc="2025-01-15 00:00:00")
     rows = {r["sensor_id"]: r.asDict() for r in sensors.collect()}
-    # Stale location dropped (P2 lookback); non-required parameter dropped;
-    # 'PM2.5' normalized to pm25 (F4).
+    # Stale location dropped (P2 lookback); non-required parameter
+    # (temperature, sensor 3) dropped; 'PM2.5' normalized to pm25 (F4).
     assert set(rows) == {1, 2}
     assert rows[1]["parameter"] == "pm25"
     assert rows[2]["parameter"] == "pm10"
@@ -63,23 +65,28 @@ def test_fetch_and_active_filter(spark):
 
 
 def test_extract_and_enrich(spark):
-    locs = api.fetch_all_locations(spark, page_fetch)
-    sensors = api.active_sensors(locs, now_utc="2025-01-15 00:00:00")
+    locs = openaq(spark, table="locations")
+    sensors = api.active_sensors(locs, now_utc="2025-06-01 00:00:00")
     ids = sorted(r["sensor_id"] for r in sensors.select("sensor_id").collect())
-    meas = api.extract_measurements(
-        spark, measurement_fetch, ids,
-        "2025-01-14T00:00:00", "2025-01-15T00:00:00",
-        extracted_at="2025-01-15T02:00:00",
-    )
-    assert meas.count() == 2
+    assert ids == [i * 10 + k for i in range(1, 8) for k in (0, 1)]
+    meas = openaq(
+        spark,
+        table="measurements",
+        sensor_ids=",".join(map(str, ids)),
+        date_from="2025-06-01T00:00:00Z",
+        date_to="2025-06-01T02:00:00Z",
+    ).withColumn("extracted_at", F.lit("2025-06-01T03:00:00Z"))
+    assert meas.count() == 2 * len(ids)  # 2 hours per sensor
     enriched = api.enrich_measurements(meas, sensors)
-    rows = {r["sensor_id"]: r.asDict() for r in enriched.collect()}
-    assert rows[1]["city"] == "Hanoi"
-    assert rows[1]["country"] == "VN"
-    assert rows[1]["extracted_at"] == "2025-01-15T02:00:00"
+    rows = {
+        (r["sensor_id"], r["datetime"]): r.asDict() for r in enriched.collect()
+    }
+    row = rows[(31, "2025-06-01T01:00:00Z")]
+    assert row["location_id"] == 3
+    assert row["city"] == "city0"
+    assert row["country"] == "VN"
+    assert row["extracted_at"] == "2025-06-01T03:00:00Z"
     # Schema feeds the raw zone: same long-format field set.
-    from reddit_data_pipeline_engineering_spark.schemas import RAW_MEASUREMENT
-
     assert set(enriched.columns) == {f.name for f in RAW_MEASUREMENT.fields}
 
 

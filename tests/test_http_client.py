@@ -7,7 +7,6 @@ additions (429 Retry-After backoff, bounded 5xx retries).
 
 import pytest
 
-from reddit_data_pipeline_engineering_spark.sources import api
 from reddit_data_pipeline_engineering_spark.sources.http_client import (
     ApiError,
     OpenAQClient,
@@ -49,15 +48,6 @@ def test_page_fetcher_params_and_auth():
     assert call["params"] == {"countries_id": 56, "limit": 100, "page": 3}
     assert call["headers"] == {"X-API-Key": "k"}  # extract_api.py:21-31
     assert call["timeout"] == 30.0  # constants.py:160
-
-
-def test_page_fetcher_wires_through_fetch_all_locations(spark):
-    # Page 1 -> LOCS, page 2 -> empty (ends pagination, extract_api.py:79-94)
-    tr = FakeTransport([(200, {"results": LOCS}, {}), (200, {"results": []}, {})])
-    client, _ = make_client(tr)
-    locs = api.fetch_all_locations(spark, client.locations_page_fetcher())
-    assert locs.count() == len(LOCS)
-    assert [c["params"]["page"] for c in tr.calls] == [1, 2]
 
 
 def test_429_honors_retry_after_then_succeeds():

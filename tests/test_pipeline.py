@@ -15,8 +15,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from reddit_data_pipeline_engineering_spark import catalog as cat
-from reddit_data_pipeline_engineering_spark import query as q
-from reddit_data_pipeline_engineering_spark.config import POLLUTANTS
 from reddit_data_pipeline_engineering_spark.pipeline import run_pipeline, transform_raw
 from reddit_data_pipeline_engineering_spark.plans.marts import write_marts
 from reddit_data_pipeline_engineering_spark.schemas import MARTS
@@ -105,13 +103,12 @@ def test_pipeline_end_to_end_and_idempotency(spark, raw_dir, tmp_path):
     # Catalog + query surface (S9/S10).
     assert "marts_vietnam" in cat.list_tables(spark)
     assert cat.get_table_count(spark, "marts_vietnam") == 2
-    pdf = q.query_to_dataframe(
-        spark,
+    pdf = spark.sql(
         "SELECT location_id, pm25 FROM marts_vietnam "
-        "WHERE year = 2025 AND month = '01' AND day = '15'",
-    )
+        "WHERE year = 2025 AND month = '01' AND day = '15'"
+    ).toPandas()
     assert pdf["pm25"].tolist() == [35.5]
-    assert q.validate_connection(spark)
+    assert spark.sql("SELECT 1 AS ok").collect()[0][0] == 1
 
 
 def test_write_marts_leaves_the_session_overwrite_mode(spark, raw_dir, tmp_path):

@@ -81,14 +81,6 @@ def test_bucketed_join_has_no_shuffle(spark):
         spark.sql("DROP TABLE IF EXISTS cust_bucketed")
 
 
-def test_cluster_profile_shape():
-    from reddit_data_pipeline_engineering_spark.session import cluster_profile
-
-    conf = cluster_profile(4000)
-    assert conf["spark.sql.shuffle.partitions"] == "12000"
-    assert conf["spark.sql.files.maxPartitionBytes"] == "192m"
-
-
 def test_range_violations(spark):
     df = spark.createDataFrame(
         [(91.0, 10.0, 5.0), (45.0, -200.0, -1.0), (None, 0.0, 2.0)],

@@ -1,41 +1,37 @@
-"""Config-file layer: precedence chain env > file > code default, and the
+"""Config-file layer: precedence chain env > file > default, and the
 CLI wired through it (reference utils/constants.py parity)."""
 
-import os
-
-from reddit_data_pipeline_engineering_spark import config as defaults
 from reddit_data_pipeline_engineering_spark.settings import load_settings
 
 
 def test_defaults_without_file_or_env():
     s = load_settings(None, env={})
-    assert s.locations_page_size == defaults.LOCATIONS_PAGE_SIZE
-    assert s.pollutants == defaults.POLLUTANTS
-    assert s.api_timeout_s == 30.0
     assert s.input_path is None
+    assert s.output_path is None
+    assert s.table is None
+    assert s.get("file_paths", "input_path", fallback="d") == "d"
 
 
 def test_file_overrides_defaults(tmp_path):
     conf = tmp_path / "settings.conf"
     conf.write_text(
-        "[api]\napi_key = sekrit\nlocations_page_size = 25\n"
-        "[pipeline]\npollutants = pm25, o3\n"
         "[file_paths]\ninput_path = /data/raw\n"
+        "[catalog]\ntable = marts\n"
     )
     s = load_settings(str(conf), env={})
-    assert s.api_key == "sekrit"
-    assert s.locations_page_size == 25
-    assert s.pollutants == ("pm25", "o3")
     assert s.input_path == "/data/raw"
-    assert s.measurements_limit == defaults.MEASUREMENTS_LIMIT  # untouched
+    assert s.table == "marts"
+    assert s.output_path is None  # untouched
 
 
 def test_env_beats_file(tmp_path):
     conf = tmp_path / "settings.conf"
-    conf.write_text("[api]\nlocations_page_size = 25\n")
-    env = {"RDPE_API_LOCATIONS_PAGE_SIZE": "7", "RDPE_CATALOG_TABLE": "m"}
+    conf.write_text(
+        "[file_paths]\ninput_path = /data/raw\n[catalog]\ntable = marts\n"
+    )
+    env = {"RDPE_FILE_PATHS_INPUT_PATH": "/env/raw", "RDPE_CATALOG_TABLE": "m"}
     s = load_settings(str(conf), env=env)
-    assert s.locations_page_size == 7
+    assert s.input_path == "/env/raw"
     assert s.table == "m"
 
 
